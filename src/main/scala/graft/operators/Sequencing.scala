@@ -83,13 +83,19 @@ object Sequencing {
   def orderCols(seqNoParts: Seq[Column]): Seq[Column] =
     seqNoParts.map(sortKey)
 
+  /** The three window columns go in ONE `select`, so they share one
+    * Window operator and one exchange. Chained `withColumn(... over(w))`
+    * calls would each extract computed partition/order expressions
+    * under a fresh `_w0` alias, which Catalyst cannot match across
+    * Window operators, so per-key chains over computed key columns
+    * would shuffle the same rows once per column. */
   private def chain(df: DataFrame, partitionCols: Seq[Column],
       seqNoParts: Seq[Column], idCol: Column): DataFrame = {
     val w = Window.partitionBy(partitionCols: _*)
       .orderBy(seqNoParts :+ idCol: _*)
-    df.withColumn("seq_rn", row_number().over(w))
-      .withColumn("prev_id", lag(idCol, 1).over(w))
-      .withColumn("next_id", lead(idCol, 1).over(w))
+    df.select(col("*"), row_number().over(w).as("seq_rn"),
+        lag(idCol, 1).over(w).as("prev_id"),
+        lead(idCol, 1).over(w).as("next_id"))
       .withColumn("is_first_to_process", col("seq_rn") === 1)
   }
 

@@ -24,11 +24,13 @@ import org.apache.spark.sql.types.StructType
 object StateStore {
 
   /** S3 — MERGE: rows of `updates` replace same-key rows of `existing`;
-    * unmatched existing rows survive. */
+    * unmatched existing rows survive. The update keys are not
+    * de-duplicated first: a left-anti join's output does not depend on
+    * how often a key repeats on the right, so a `distinct()` there is
+    * only an extra shuffle. */
   def upsert(existing: DataFrame, updates: DataFrame,
       keys: Seq[String]): DataFrame =
-    existing.join(updates.select(keys.map(updates(_)): _*).distinct(),
-        keys, "left_anti")
+    existing.join(updates.select(keys.map(updates(_)): _*), keys, "left_anti")
       .unionByName(updates)
 
   /** S2 — load prior state; an absent table is an empty state, not an

@@ -1,8 +1,9 @@
 package graft.streaming
 
+import scala.collection.mutable
 import scala.util.Try
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -74,6 +75,29 @@ object ConsumerPipeline {
     * matching, `test/persisting.test.js:17-21`): a replay that re-keys
     * eventIDs but redelivers the same payloads still resumes.
     *
+    * Each intermediate result is cached once per delivery (decoded
+    * records, the sequenced messages, the resolved prior state, the
+    * chain fold's outcomes and the dead letters) and released when the
+    * delivery ends, normally or not. One delivery runs these Spark
+    * actions, in order:
+    *
+    *  1. only on the default event-seqNo path with required sequencing:
+    *     the heterogeneous-seqNo check in [[Identify.sequence]] (a
+    *     collect);
+    *  1. only with `processAll`: the master-task cogroup (a collect);
+    *  1. the tally: one collect that counts every [[BatchResult]] field
+    *     and the new dead letters. It is the first action over the
+    *     caches, so the task trees run inside it;
+    *  1. only when there are new dead letters: one append from the
+    *     cached letters;
+    *  1. the state save: the upsert written to a sibling directory,
+    *     then swapped in.
+    *
+    * With AQE each shuffle or broadcast stage and each cache is a job
+    * of its own; `ConsumerPipelineSpec` pins the total at 16 jobs for a
+    * clean batch, 17 for a first delivery that writes DR and DM letters
+    * and 18 for a replay.
+    *
     * @param cfg        consumer configuration (sequencing mode, retry cap)
     * @param tasks      processOne task definitions (non-empty registry)
     * @param statePath  batch-state table (S2/S3)
@@ -97,270 +121,332 @@ object ConsumerPipeline {
     val spark = batch.sparkSession
     import spark.implicits._
 
-    // ----- initiate: decode → identify → sequence -----
-    val scid = Batching.streamConsumerId(lit(cfg.streamName),
-      lit(cfg.consumerId))
-    val soid = Batching.shardOrEventID(cfg, col("shardId"), col("eventID"))
-    val recordJson = to_json(struct(col("eventID"), col("shardId"),
-      col("partitionKey"), col("data")))
-    // decoded feeds identify, the unusable split, markers AND counts —
-    // cache it so the decode work runs once per micro-batch, not per
-    // downstream action.
-    val decoded = Decode.extractJsonMessages(batch, col("data"))
-      .withColumn("streamConsumerId", scid)
-      .withColumn("shardOrEventID", soid)
-      .cache()
-    val identified = Identify.idsKeysSeqNos(cfg, decoded, col("message"),
-      lit(null).cast("string"), recordJson, col("eventID"),
-      lit(null).cast("int"))
-    val usable = identified.filter(col("reason_unusable").isNull &&
-      col("reason_rejected").isNull)
-    // F2 — messages the identify phase rejected (unresolvable keys /
-    // seqNos): they skip task execution entirely and are discarded to
-    // the DMQ with their REAL reasonRejected during finalise
-    // (`/root/reference/kinesis-processing.js:708-724` discarding
-    // `batch.rejectedMessages`).
-    val rejectedMsgs = identified.filter(col("reason_unusable").isNull &&
-      col("reason_rejected").isNotNull)
-    // BFK state identity: resolvable ids ⇒ `B|id|key|seqNo|md5(msg)`,
-    // else the eventID (toMessageBFK fallback). The md5 tiebreak mirrors
-    // the reference's BFK carrying the message md5s alongside id/key/
-    // seqNo (`test/persisting.test.json` messageStates): two DISTINCT
-    // messages that happen to share business id|key|seqNo must get
-    // distinct state rows, while a replay that re-keys eventIDs but
-    // redelivers the same payload still matches its prior row. The
-    // all-ids-resolved test is a plain non-null conjunction over the
-    // id property values (codegen'd — no interpreted `forall` in the
-    // per-batch hot path). Unusable records never reach here, so their
-    // markers stay keyed by eventID below.
-    val idSources = Seq(col("message"), lit(null).cast("string"), recordJson)
-    val stateKey =
-      if (cfg.idPropertyNames.isEmpty) col("eventID")
-      else when(cfg.idPropertyNames
-            .map(n => Identify.propertyValue(n, idSources).isNotNull)
-            .reduce(_ && _),
-          concat_ws("|", lit("B"), col("id"), col("key"), col("seqNo"),
-            md5(col("message").cast("binary"))))
-        .otherwise(col("eventID"))
-    val sequenced = Identify.sequence(cfg, usable, col("shardOrEventID"),
-        col("message"), lit(null).cast("string"), recordJson, col("eventID"),
-        col("eventID"))
-      .withColumn("stateKey", stateKey)
-      .cache()
-    val chainKeyCol =
-      if (cfg.sequencingPerKey) concat_ws("|", col("shardOrEventID"), col("key"))
-      else col("shardOrEventID")
+    // Every frame cached below is released in the `finally`, whatever
+    // the delivery does: a task that throws, a failed letters append or
+    // a failed state save must not leave cache entries behind for every
+    // later plan to look up.
+    val cached = mutable.ArrayBuffer.empty[Dataset[_]]
+    def keep[T](ds: Dataset[T]): Dataset[T] = { cached += ds; ds.cache() }
+    try {
+      // ----- initiate: decode → identify → sequence -----
+      val scid = Batching.streamConsumerId(lit(cfg.streamName),
+        lit(cfg.consumerId))
+      val soid = Batching.shardOrEventID(cfg, col("shardId"), col("eventID"))
+      val recordJson = to_json(struct(col("eventID"), col("shardId"),
+        col("partitionKey"), col("data")))
+      // decoded feeds sequencing, the dead letters, the state markers and
+      // the counts, each read in a different action — cached so decode
+      // runs once per delivery.
+      val decoded = keep(Decode.extractJsonMessages(batch, col("data"))
+        .withColumn("streamConsumerId", scid)
+        .withColumn("shardOrEventID", soid))
+      val identified = Identify.idsKeysSeqNos(cfg, decoded, col("message"),
+        lit(null).cast("string"), recordJson, col("eventID"),
+        lit(null).cast("int"))
+      val usable = identified.filter(col("reason_unusable").isNull &&
+        col("reason_rejected").isNull)
+      val unusableRecs = decoded.filter(col("reason_unusable").isNotNull)
+      // F2 — messages the identify phase rejected (unresolvable keys /
+      // seqNos): they skip task execution entirely and are discarded to
+      // the DMQ with their REAL reasonRejected during finalise
+      // (the reference's `kinesis-processing.js:708-724` discarding
+      // `batch.rejectedMessages`).
+      val rejectedMsgs = identified.filter(col("reason_unusable").isNull &&
+        col("reason_rejected").isNotNull)
+      // BFK state identity: resolvable ids ⇒ `B|id|key|seqNo|md5(msg)`,
+      // else the eventID (toMessageBFK fallback). The md5 tiebreak mirrors
+      // the reference's BFK carrying the message md5s alongside id/key/
+      // seqNo (`test/persisting.test.json` messageStates): two DISTINCT
+      // messages that happen to share business id|key|seqNo must get
+      // distinct state rows, while a replay that re-keys eventIDs but
+      // redelivers the same payload still matches its prior row. The
+      // all-ids-resolved test is a plain non-null conjunction over the
+      // id property values (codegen'd — no interpreted `forall` in the
+      // per-batch hot path). Unusable records never reach here, so their
+      // markers stay keyed by eventID below.
+      val idSources = Seq(col("message"), lit(null).cast("string"), recordJson)
+      val stateKey =
+        if (cfg.idPropertyNames.isEmpty) col("eventID")
+        else when(cfg.idPropertyNames
+              .map(n => Identify.propertyValue(n, idSources).isNotNull)
+              .reduce(_ && _),
+            concat_ws("|", lit("B"), col("id"), col("key"), col("seqNo"),
+              md5(col("message").cast("binary"))))
+          .otherwise(col("eventID"))
+      val sequenced = keep(Identify.sequence(cfg, usable,
+          col("shardOrEventID"), col("message"), lit(null).cast("string"),
+          recordJson, col("eventID"), col("eventID"))
+        .withColumn("stateKey", stateKey))
+      val chainKeyCol =
+        if (cfg.sequencingPerKey)
+          concat_ws("|", col("shardOrEventID"), col("key"))
+        else col("shardOrEventID")
 
-    val msgs = sequenced.select(
-        chainKeyCol.as("chainKey"), col("stateKey").as("msgId"),
-        col("seq_rn").cast("long").as("seqNo"),
-        col("message").as("payload"))
-      .as[StreamMsg]
+      val msgs = sequenced.select(
+          chainKeyCol.as("chainKey"), col("stateKey").as("msgId"),
+          col("seq_rn").cast("long").as("seqNo"),
+          col("message").as("payload"), col("shardOrEventID"))
+        .as[ChainMsg]
 
-    // ----- load prior state + process: resumable ordered execution -----
-    val stateSchema = StructType(Seq(
-      StructField("chainKey", StringType), StructField("msgId", StringType),
-      StructField("task", StringType),
-      StructField("state", StringType), StructField("attempts", IntegerType),
-      StructField("reason", StringType)))
-    // Schema migration: a state table written before the `task` column
-    // existed (single-task era) loads `task = null`; coalesce to the
-    // implicit single task so `priorTasks.get(path)` still matches and
-    // attempts/budgets survive the upgrade. `reason` is nullable, so
-    // pre-reason tables need no special casing.
-    val loaded = StateStore.load(spark, statePath, stateSchema)
-      .withColumn("task", coalesce(col("task"), lit("processOne")))
-    // Key-format migration: rows written before the md5 tiebreak carry
-    // `B|id|key|seqNo` — the md5-stripped PREFIX of today's keys. Match
-    // legacy rows by EQUALITY against this batch's computed legacy keys
-    // so in-flight attempts and already-discarded markers survive the
-    // upgrade (the redelivered payload recomputes the new key; the
-    // prefix is the whole legacy key). Equality is the safe
-    // classification: a regex "does it end in the 32-hex md5 suffix"
-    // test would misread a legacy key whose trailing property VALUE
-    // happens to end in `|` + 32 lowercase hex chars and never migrate
-    // it, whereas a current-format key can never EQUAL the md5-stripped
-    // prefix of a different key without an md5-level collision. Two
-    // current messages sharing a legacy prefix each inherit the one
-    // legacy row — exactly the shared-row semantics the old format had.
-    // Rows whose message is not in this batch stay on the legacy key
-    // and migrate whenever it is next redelivered; the re-keyed rows
-    // flow through the upsert below, so migration is one-time per key.
-    // The mapping is one row per B|-keyed message of the current
-    // micro-batch — always broadcastable — and the join is a plain
-    // broadcast-hash equality probe on the msgId column the state load
-    // scans anyway. Once a deployment knows all legacy rows are gone it
-    // sets `migrateLegacyStateKeys = false` and the join disappears
-    // from the plan entirely.
-    val prior = resolvePriorState(loaded, sequenced,
-      cfg.migrateLegacyStateKeys).as[TaskRun]
+      // ----- load prior state + process: resumable ordered execution -----
+      val stateSchema = StructType(Seq(
+        StructField("chainKey", StringType), StructField("msgId", StringType),
+        StructField("task", StringType),
+        StructField("state", StringType), StructField("attempts", IntegerType),
+        StructField("reason", StringType)))
+      // Schema migration: a state table written before the `task` column
+      // existed (single-task era) loads `task = null`; coalesce to the
+      // implicit single task so `priorTasks.get(path)` still matches and
+      // attempts/budgets survive the upgrade. `reason` is nullable, so
+      // pre-reason tables need no special casing.
+      val loaded = StateStore.load(spark, statePath, stateSchema)
+        .withColumn("task", coalesce(col("task"), lit("processOne")))
+      // Key-format migration: rows written before the md5 tiebreak carry
+      // `B|id|key|seqNo` — the md5-stripped PREFIX of today's keys. Match
+      // legacy rows by EQUALITY against this batch's computed legacy keys
+      // so in-flight attempts and already-discarded markers survive the
+      // upgrade (the redelivered payload recomputes the new key; the
+      // prefix is the whole legacy key). Equality is the safe
+      // classification: a regex "does it end in the 32-hex md5 suffix"
+      // test would misread a legacy key whose trailing property VALUE
+      // happens to end in `|` + 32 lowercase hex chars and never migrate
+      // it, whereas a current-format key can never EQUAL the md5-stripped
+      // prefix of a different key without an md5-level collision. Two
+      // current messages sharing a legacy prefix each inherit the one
+      // legacy row — exactly the shared-row semantics the old format had.
+      // Rows whose message is not in this batch stay on the legacy key
+      // and migrate whenever it is next redelivered; the re-keyed rows
+      // flow through the upsert below, so migration is one-time per key.
+      // The mapping is one row per B|-keyed message of the current
+      // micro-batch — always broadcastable — and the join is a plain
+      // broadcast-hash equality probe on the msgId column the state load
+      // scans anyway. Once a deployment knows all legacy rows are gone it
+      // sets `migrateLegacyStateKeys = false` and the join disappears
+      // from the plan entirely. Cached: the chain fold, the once-only
+      // guard, processAll and the upsert all read it, and the state scan
+      // plus the migration join should run once per delivery.
+      val prior = keep(resolvePriorState(loaded, sequenced,
+        cfg.migrateLegacyStateKeys)).as[TaskRun]
 
-    val registry = tasks
-    val maxAttempts = cfg.maxNumberOfAttempts
-    // `ms.toSeq` materializes one CHAIN at a time — inherent to ordered
-    // chain execution (later links see earlier outcomes). Memory is
-    // bounded by chain cardinality (messages per shard/key, SURVEY
-    // §7.4), never by corpus size: more data means more chains, not
-    // longer ones.
-    val outcomes = msgs.groupByKey(_.chainKey)(Encoders.STRING)
-      .cogroup(prior.groupByKey(_.chainKey)(Encoders.STRING)) {
-        (_, ms, ps) =>
-          val priorByMsg = ps.toSeq.groupBy(_.msgId)
-            .map { case (id, rs) => id -> rs.map(r => r.task -> r).toMap }
-          ResumableConsumer.executeChainTasks(priorByMsg, ms.toSeq,
-            registry, maxAttempts).iterator
-      }.cache()
+      val registry = tasks
+      val maxAttempts = cfg.maxNumberOfAttempts
+      // `ms.toSeq` materializes one CHAIN at a time — inherent to ordered
+      // chain execution (later links see earlier outcomes). Memory is
+      // bounded by chain cardinality (messages per shard/key, SURVEY
+      // §7.4), never by corpus size: more data means more chains, not
+      // longer ones. The fold also settles each message's verdict and
+      // once-only DMQ decision, since the group already holds every node
+      // row of the message and every prior row of its chain.
+      val outcomes = keep(msgs.groupByKey(_.chainKey)(Encoders.STRING)
+        .cogroup(prior.groupByKey(_.chainKey)(Encoders.STRING)) {
+          (_, ms, ps) =>
+            foldChain(ps.toSeq, ms.toSeq, registry, maxAttempts).iterator
+        })
+      val nodes = outcomes.filter(col("node").isNotNull).select("node.*")
+      val verdicts = outcomes.filter(col("msg").isNotNull).select("msg.*")
 
-    // Message-level verdicts over the per-node task states (replay /
-    // DMQ decisions happen at the message level), with the first
-    // rejected node's reason carried for the DMQ envelope.
-    val verdicts = outcomes
-      .groupByKey(r => (r.chainKey, r.msgId))(
-        Encoders.product[(String, String)])
-      .mapGroups { (key, it) =>
-        val rs = it.toSeq
-        (key._1, key._2,
-          ResumableConsumer.messageVerdict(rs.map(_.state)),
-          ResumableConsumer.findReasonRejected(rs).orNull)
-      }(Encoders.product[(String, String, String, String)])
-      .toDF("chainKey", "msgId", "state", "reason")
-      .cache()
-
-    // T4 — processAll master task, once per batch group, resumable:
-    // a master finalised in prior state is skipped on replay; a failed
-    // master forces the batch to replay exactly like a failed chain.
-    val masterOutcomes: Seq[TaskRun] = processAll match {
-      case None => Nil
-      case Some(runAll) =>
-        val fn = runAll
-        val max = cfg.maxNumberOfAttempts
-        val groups = sequenced
-          .select(col("shardOrEventID"), col("message"))
-          .as[(String, String)]
-        val priorMaster = prior
-          .filter(_.chainKey.startsWith(MasterKeyPrefix))
-        groups.groupByKey(_._1)(Encoders.STRING)
-          .cogroup(priorMaster
-            .groupByKey(_.chainKey.stripPrefix(MasterKeyPrefix))(
-              Encoders.STRING)) { (soid, ms, ps) =>
-            val prev = ps.toSeq.headOption
-            val attempts = prev.map(_.attempts).getOrElse(0)
-            val state = prev.map(_.state)
-              .getOrElse(TaskStatus.Unstarted)
-            val key = MasterKeyPrefix + soid
-            if (TaskStatus.isFinalised(state)) prev.iterator
-            else if (attempts >= max)
-              Iterator(TaskRun(key, "processAll", "processAll",
-                TaskStatus.Discarded, attempts))
-            else fn(soid, ms.map(_._2).toSeq) match {
-              case scala.util.Success(_) =>
+      // T4 — processAll master task, once per batch group, resumable:
+      // a master finalised in prior state is skipped on replay; a failed
+      // master forces the batch to replay exactly like a failed chain.
+      val masterOutcomes: Seq[TaskRun] = processAll match {
+        case None => Nil
+        case Some(runAll) =>
+          val fn = runAll
+          val max = cfg.maxNumberOfAttempts
+          val groups = sequenced
+            .select(col("shardOrEventID"), col("message"))
+            .as[(String, String)]
+          val priorMaster = prior
+            .filter(_.chainKey.startsWith(MasterKeyPrefix))
+          groups.groupByKey(_._1)(Encoders.STRING)
+            .cogroup(priorMaster
+              .groupByKey(_.chainKey.stripPrefix(MasterKeyPrefix))(
+                Encoders.STRING)) { (soid, ms, ps) =>
+              val prev = ps.toSeq.headOption
+              val attempts = prev.map(_.attempts).getOrElse(0)
+              val state = prev.map(_.state)
+                .getOrElse(TaskStatus.Unstarted)
+              val key = MasterKeyPrefix + soid
+              if (TaskStatus.isFinalised(state)) prev.iterator
+              else if (attempts >= max)
                 Iterator(TaskRun(key, "processAll", "processAll",
-                  TaskStatus.Completed, attempts + 1))
-              case scala.util.Failure(_) =>
-                Iterator(TaskRun(key, "processAll", "processAll",
-                  TaskStatus.Failed, attempts + 1))
-            }
-          }.collect().toSeq
-    }
+                  TaskStatus.Discarded, attempts))
+              else fn(soid, ms.map(_._2).toSeq) match {
+                case scala.util.Success(_) =>
+                  Iterator(TaskRun(key, "processAll", "processAll",
+                    TaskStatus.Completed, attempts + 1))
+                case scala.util.Failure(_) =>
+                  Iterator(TaskRun(key, "processAll", "processAll",
+                    TaskStatus.Failed, attempts + 1))
+              }
+            }.collect().toSeq
+      }
 
-    // ----- finalise: dead letters, state upsert, replay verdict -----
-    // Dead letters are written ONCE per record/message: the prior state
-    // remembers what was already discarded, so a replayed batch does not
-    // re-route the same envelope (mirrors the reference's persisted
-    // unusableRecordStates/rejectedMessageStates —
-    // test/persisting.test.js:339-398).
-    val at = date_format(current_timestamp(),
-      "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
-    val priorIds = prior.toDF().select(col("msgId")).distinct()
-    val unusableRecs = decoded.filter(col("reason_unusable").isNotNull)
-    val newDeadRecords =
-      onceOnly(unusableRecs, unusableRecs("eventID"), priorIds)
-        .select(lit("DR").as("kind"), DeadLetters.deadRecordEnvelope(
-          col("streamConsumerId"), col("shardOrEventID"), recordJson,
-          col("reason_unusable"), at).as("envelope"))
-    // Identify-rejected messages → DMQ with their REAL reasonRejected,
-    // once-only across replays (the state marker below remembers them).
-    val newRejectedLetters =
-      onceOnly(rejectedMsgs, rejectedMsgs("eventID"), priorIds)
+      // ----- finalise: dead letters, state upsert, replay verdict -----
+      // Dead letters are written ONCE per record/message: the prior state
+      // remembers what was already discarded, so a replayed batch does not
+      // re-route the same envelope (mirrors the reference's persisted
+      // unusableRecordStates/rejectedMessageStates —
+      // test/persisting.test.js:339-398). Unusable records (DR) and
+      // identify-rejected messages (DM, with their REAL reasonRejected)
+      // share one anti-join against the prior ids.
+      val at = date_format(current_timestamp(),
+        "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
+      val priorIds = prior.select(col("msgId"))
+      val badRows = unusableRecs.select(col("eventID"), lit("DR").as("kind"),
+          DeadLetters.deadRecordEnvelope(col("streamConsumerId"),
+            col("shardOrEventID"), recordJson, col("reason_unusable"), at)
+            .as("envelope"))
+        .unionByName(rejectedMsgs.select(col("eventID"),
+          lit("DM").as("kind"), DeadLetters.deadMessageEnvelope(
+            col("streamConsumerId"), col("shardOrEventID"), col("message"),
+            col("reason_rejected"), at).as("envelope")))
+      // A message is discarded (→ DMQ) only when ALL its task nodes
+      // finalised with at least one rejected — never while a sibling
+      // task still has retry budget; the fold flags the delivery that
+      // discards it. The envelope's reasonRejected is the first rejected
+      // node's recorded failure cause, not a generic literal (reference
+      // `batch.findReasonRejected`). Each delivered record of the message
+      // in the discarding chain gets one envelope, so a payload delivered
+      // in two chains (batches keyed on eventID) writes one per chain.
+      val deadMessages = verdicts.filter(col("newlyDiscarded"))
         .select(lit("DM").as("kind"), DeadLetters.deadMessageEnvelope(
-          col("streamConsumerId"), col("shardOrEventID"), col("message"),
-          col("reason_rejected"), at).as("envelope"))
-    // A message is discarded (→ DMQ) only when ALL its task nodes
-    // finalised with at least one rejected — never while a sibling
-    // task still has retry budget. The envelope's reasonRejected is the
-    // first rejected node's recorded failure cause, not a generic
-    // literal (reference `batch.findReasonRejected`).
-    val priorDiscarded = prior
-      .filter(!_.chainKey.startsWith(MasterKeyPrefix))
-      .groupByKey(_.msgId)(Encoders.STRING)
-      .mapGroups { (id, rs) =>
-        (id, ResumableConsumer.messageVerdict(rs.map(_.state).toSeq))
-      }.filter(_._2 == TaskStatus.Discarded)
-      .map(_._1)(Encoders.STRING).toDF("msgId")
-    val newlyDiscarded = verdicts
-      .filter(col("state") === TaskStatus.Discarded)
-      .select(col("msgId"), col("reason"))
-      .join(priorDiscarded, Seq("msgId"), "left_anti")
-    val deadMessages = sequenced
-      .join(newlyDiscarded, col("stateKey") === col("msgId"))
-      .select(lit("DM").as("kind"), DeadLetters.deadMessageEnvelope(
-        col("streamConsumerId"), col("shardOrEventID"), col("message"),
-        coalesce(col("reason"), lit("Discarded after max attempts")),
-        at).as("envelope"))
-    val letters = newDeadRecords.unionByName(newRejectedLetters)
-      .unionByName(deadMessages)
-    if (!letters.isEmpty)
-      letters.write.mode("append").parquet(deadLetterPath)
+          scid, col("shardOrEventID"), col("payload"),
+          coalesce(col("reasonRejected"), lit("Discarded after max attempts")),
+          at).as("envelope"))
+      val letters = keep(onceOnly(badRows, badRows("eventID"), priorIds)
+        .select("kind", "envelope").unionByName(deadMessages))
 
-    // Unusable records and identify-rejected messages enter the state
-    // table as finalised markers so the DRQ/DMQ writes above stay
-    // once-only across replays.
-    val deadRecordMarkers = unusableRecs.select(
-      col("shardOrEventID").as("chainKey"), col("eventID").as("msgId"),
-      lit("unusableRecord").as("task"),
-      lit(TaskStatus.Discarded).as("state"), lit(0).as("attempts"),
-      col("reason_unusable").as("reason"))
-    val rejectedMarkers = rejectedMsgs.select(
-      col("shardOrEventID").as("chainKey"), col("eventID").as("msgId"),
-      lit("rejectedMessage").as("task"),
-      lit(TaskStatus.Rejected).as("state"), lit(0).as("attempts"),
-      col("reason_rejected").as("reason"))
-    val masterRows = masterOutcomes.toDF()
-    StateStore.save(
-      StateStore.upsert(prior.toDF(),
-        outcomes.toDF().unionByName(deadRecordMarkers)
-          .unionByName(rejectedMarkers).unionByName(masterRows),
-        Seq("chainKey", "msgId", "task")),
-      statePath)
+      // Every count of the result, and the letters gate, in one action
+      // over the cached frames.
+      val tally = verdicts.filter(col("first")).select(col("verdict").as("k"))
+        .unionByName(unusableRecs.select(lit(Unusable).as("k")))
+        .unionByName(rejectedMsgs.select(lit(RejectedMsg).as("k")))
+        .unionByName(letters.select(lit(Letter).as("k")))
+      val counts = countByValue(tally.as[String])
+      def n(k: String) = counts.getOrElse(k, 0L)
 
-    val byState = verdicts.groupBy("state").count()
-      .as[(String, Long)].collect().toMap
-    def n(s: String) = byState.getOrElse(s, 0L)
-    val masterFailed = masterOutcomes
-      .count(s => !TaskStatus.isFinalised(s.state))
-    val result = BatchResult(
-      messages = verdicts.count(),
-      unusable = unusableRecs.count(),
-      completed = n(TaskStatus.Completed),
-      failed = n(TaskStatus.Failed),
-      discarded = n(TaskStatus.Discarded),
-      blocked = n(TaskStatus.Unstarted),
-      replay = n(TaskStatus.Failed) + n(TaskStatus.Unstarted) +
-        masterFailed > 0,
-      processAllCompleted = masterOutcomes
-        .count(_.state == TaskStatus.Completed),
-      processAllFailed = masterFailed,
-      rejected = rejectedMsgs.count())
-    verdicts.unpersist()
-    outcomes.unpersist()
-    sequenced.unpersist()
-    decoded.unpersist()
-    if (result.replay && throwOnReplay)
-      throw new ReplayBatchException(
-        s"batch $batchId incomplete: ${result.failed} failed, " +
-          s"${result.blocked} blocked — replaying")
-    result
+      if (n(Letter) > 0)
+        letters.write.mode("append").parquet(deadLetterPath)
+
+      // Unusable records and identify-rejected messages enter the state
+      // table as finalised markers so the DRQ/DMQ writes above stay
+      // once-only across replays.
+      val deadRecordMarkers = unusableRecs.select(
+        col("shardOrEventID").as("chainKey"), col("eventID").as("msgId"),
+        lit("unusableRecord").as("task"),
+        lit(TaskStatus.Discarded).as("state"), lit(0).as("attempts"),
+        col("reason_unusable").as("reason"))
+      val rejectedMarkers = rejectedMsgs.select(
+        col("shardOrEventID").as("chainKey"), col("eventID").as("msgId"),
+        lit("rejectedMessage").as("task"),
+        lit(TaskStatus.Rejected).as("state"), lit(0).as("attempts"),
+        col("reason_rejected").as("reason"))
+      val masterRows = masterOutcomes.toDF()
+      StateStore.save(
+        StateStore.upsert(prior.toDF(),
+          nodes.unionByName(deadRecordMarkers)
+            .unionByName(rejectedMarkers).unionByName(masterRows),
+          Seq("chainKey", "msgId", "task")),
+        statePath)
+
+      val masterFailed = masterOutcomes
+        .count(s => !TaskStatus.isFinalised(s.state))
+      val result = BatchResult(
+        messages = TaskStatus.all.map(n).sum,
+        unusable = n(Unusable),
+        completed = n(TaskStatus.Completed),
+        failed = n(TaskStatus.Failed),
+        discarded = n(TaskStatus.Discarded),
+        blocked = n(TaskStatus.Unstarted),
+        replay = n(TaskStatus.Failed) + n(TaskStatus.Unstarted) +
+          masterFailed > 0,
+        processAllCompleted = masterOutcomes
+          .count(_.state == TaskStatus.Completed),
+        processAllFailed = masterFailed,
+        rejected = n(RejectedMsg))
+      if (result.replay && throwOnReplay)
+        throw new ReplayBatchException(
+          s"batch $batchId incomplete: ${result.failed} failed, " +
+            s"${result.blocked} blocked — replaying")
+      result
+    } finally cached.foreach(_.unpersist())
   }
+
+  /** A delivered message on its way into the chain fold: the
+    * [[StreamMsg]] plus the batch key its dead-message envelope names. */
+  private[graft] final case class ChainMsg(chainKey: String, msgId: String,
+      seqNo: Long, payload: String, shardOrEventID: String) {
+    def msg: StreamMsg = StreamMsg(chainKey, msgId, seqNo, payload)
+  }
+
+  /** A delivered message's outcome, settled inside the chain fold.
+    * `verdict` is [[ResumableConsumer.messageVerdict]] over the message's
+    * task-node rows and `reasonRejected` the first rejected node's
+    * reason, in execution order. `newlyDiscarded` marks the delivery
+    * that discards the message, which writes its one DMQ envelope;
+    * `payload` is kept only then. `first` marks one row per distinct
+    * `(chainKey, msgId)`, the unit the result counts. */
+  private[graft] final case class MsgVerdict(chainKey: String, msgId: String,
+      shardOrEventID: String, payload: String, verdict: String,
+      reasonRejected: String, newlyDiscarded: Boolean, first: Boolean)
+
+  /** One row of the chain fold: a task-node row to persist, or a
+    * delivered message's verdict. */
+  private[graft] final case class ChainOutcome(node: Option[TaskRun],
+      msg: Option[MsgVerdict])
+
+  /** One chain of one delivery: runs the delivered messages' task trees
+    * in order over the chain's prior rows
+    * ([[ResumableConsumer.executeChainTasks]]) and emits every task-node
+    * row plus one [[MsgVerdict]] per delivered message.
+    *
+    * A message is newly discarded when its verdict is Discarded and the
+    * verdict over its prior rows in this chain was not. The guard is
+    * chain-scoped, and it writes the same envelopes as a guard over all
+    * of the message's prior rows in every chain, except that it never
+    * repeats one. If the chain's prior rows C are all finalised but not
+    * Discarded, they are all success-family, and then no node can be
+    * rejected now (a node only turns Discarded from prior attempts at
+    * the cap; fresh nodes start at 0 and `maxNumberOfAttempts >= 1`).
+    * So whenever this guard writes, the all-chains verdict is not
+    * Discarded either, and the all-chains guard writes too. Conversely,
+    * where only the all-chains guard writes, C was already Discarded:
+    * the chain's envelope went out on the delivery that discarded it. */
+  private[graft] def foldChain(prior: Seq[TaskRun], delivered: Seq[ChainMsg],
+      registry: Seq[TaskDef], maxAttempts: Int): Seq[ChainOutcome] = {
+    import ResumableConsumer.{findReasonRejected, messageVerdict}
+    val priorByMsg = prior.groupBy(_.msgId)
+    val runs = ResumableConsumer.executeChainTasks(
+      priorByMsg.map { case (id, rs) => id -> rs.map(r => r.task -> r).toMap },
+      delivered.map(_.msg), registry, maxAttempts)
+    val runsByMsg = runs.groupBy(_.msgId)
+    def wasDiscarded(id: String) = priorByMsg.get(id)
+      .exists(rs => messageVerdict(rs.map(_.state)) == TaskStatus.Discarded)
+    val seen = mutable.Set.empty[String]
+    runs.map(r => ChainOutcome(Some(r), None)) ++ delivered.map { m =>
+      val rs = runsByMsg(m.msgId)
+      val verdict = messageVerdict(rs.map(_.state))
+      val newly = verdict == TaskStatus.Discarded && !wasDiscarded(m.msgId)
+      ChainOutcome(None, Some(MsgVerdict(m.chainKey, m.msgId,
+        m.shardOrEventID, if (newly) m.payload else null, verdict,
+        findReasonRejected(rs).orNull, newly, seen.add(m.msgId))))
+    }
+  }
+
+  // Tally keys next to the message verdicts (never a TaskStatus name).
+  private val Unusable = "unusable record"
+  private val RejectedMsg = "rejected message"
+  private val Letter = "dead letter"
+
+  /** Occurrences of each key: each partition counts its own, and the
+    * collected partial counts are summed. One Spark job, no shuffle. */
+  private def countByValue(keys: Dataset[String]): Map[String, Long] =
+    keys.mapPartitions { it =>
+      it.foldLeft(Map.empty[String, Long])((m, k) =>
+        m.updated(k, m.getOrElse(k, 0L) + 1)).iterator
+    }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+      .collect().groupMapReduce(_._1)(_._2)(_ + _)
 
   /** Once-only guard for DRQ/DMQ writes (S4/S5): rows whose id already
     * appears in prior state are dropped by a LEFT-ANTI equi-join, so a
@@ -380,8 +466,10 @@ object ConsumerPipeline {
     * `migrate = false` — the migration join must be ABSENT from the
     * plan, not just inert (pinned by `PipelineFidelitySpec`'s plan
     * assertion) — else the legacy-prefix broadcast probe documented at
-    * the call site in [[multi]]. Package-visible so the spec can
-    * assert on the plan of exactly the fragment the pipeline runs. */
+    * the call site in [[multi]]. The map is broadcast anyway, so it is
+    * de-duplicated in one partition, with no shuffle before the
+    * broadcast. Package-visible so the spec can assert on the plan of
+    * exactly the fragment the pipeline runs. */
   private[graft] def resolvePriorState(loaded: DataFrame,
       sequenced: DataFrame, migrate: Boolean): DataFrame =
     if (!migrate) loaded else {
@@ -390,7 +478,7 @@ object ConsumerPipeline {
         .select(col("stateKey").as("_newKey"),
           regexp_replace(col("stateKey"), "\\|[0-9a-f]{32}$", "")
             .as("_legacyKey"))
-        .distinct()
+        .coalesce(1).distinct()
       loaded
         .join(broadcast(legacyMap), loaded("msgId") === col("_legacyKey"),
           "left")

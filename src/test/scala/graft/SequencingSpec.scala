@@ -69,4 +69,26 @@ class SequencingSpec extends SparkSpec {
       .select("event_id").as[String].collect().toSeq
     assert(k1 === Seq("e4", "e1", "e2"))
   }
+
+  test("per-key chains over COMPUTED key and seqNo columns plan exactly " +
+      "one shuffle exchange: seq_rn, prev_id and next_id share one " +
+      "Window") {
+    import spark.implicits._
+    val df = Seq(("e1", """{"k":"a","n":2}"""), ("e2", """{"k":"a","n":1}"""),
+      ("e3", """{"k":"b","n":1}""")).toDF("event_id", "json")
+    val out = Sequencing.perKey(df, lit("S|0"),
+      Seq(get_json_object(col("json"), "$.k")),
+      Seq(Sequencing.sortKey(get_json_object(col("json"), "$.n"))),
+      col("event_id"))
+    val plan = out.queryExecution.executedPlan.toString
+    assert("Exchange hashpartitioning".r.findAllIn(plan).length === 1,
+      s"expected one hash exchange shared by the three window columns:" +
+        s"\n$plan")
+    val rows = out.orderBy("event_id")
+      .select("event_id", "seq_rn", "prev_id", "next_id",
+        "is_first_to_process")
+      .as[(String, Int, String, String, Boolean)].collect().toSeq
+    assert(rows === Seq(("e1", 2, "e2", null, false),
+      ("e2", 1, null, "e1", true), ("e3", 1, null, null, true)))
+  }
 }

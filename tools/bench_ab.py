@@ -20,6 +20,7 @@ into tools/bench_snapshots/cmp_r{N-1}_r{N}.txt.
 Usage:
   bench_ab.py <old_ref> <new_ref> --queries q1,q2,...  [options]
   bench_ab.py <old_ref> <new_ref> --snapshots old.json new.json [options]
+  bench_ab.py <old> <new> --perfbench <workload> --pairs N [--seed0 K]
 
 With --snapshots, the N biggest shared movers IN EITHER DIRECTION
 (max of new/old and old/new — the protocol fires on improvements too)
@@ -32,10 +33,24 @@ Worktrees land at /tmp/graft_ab_<ref> and are REUSED if present
 when done. Each (ref, query) runs one fresh JVM (TimeQuery), old/new
 interleaved per query so machine drift cannot masquerade as a code
 delta.
+
+--perfbench runs the repository benchmark (perfbench/run.py, declared
+in BENCHMARK.json) N times on each side, at the run length BENCHMARK.json
+sets (`run_seconds`), in pairs: pair i uses seed
+--seed0 + i on both sides, and the side that runs first alternates
+from pair to pair. <old> and <new> are refs (prepared as worktrees as
+above) or directories holding a checkout, used as they are; run.py
+builds each side itself. For every end-to-end metric it prints each
+side's median and quartiles, the share of pairs the new side wins, and
+whether a claimed gain would hold: new better in at least 9 of 10
+pairs, the medians further apart than the old side's interquartile
+range, and no more failed calls on the new side than on the old.
 """
 import argparse
+import json
 import os
 import re
+import statistics
 import subprocess
 import sys
 
@@ -92,7 +107,7 @@ def worst_movers(old_path, new_path, top):
     return ranked[:top]
 
 
-def prepare_worktree(repo, ref):
+def prepare_worktree(repo, ref, compile_it=True):
     # resolve the ref FIRST (check=True): a typo'd ref must fail here,
     # not masquerade as a stale-worktree complaint below. Peel to the
     # COMMIT (^{commit}): an annotated tag's rev-parse is the tag
@@ -115,7 +130,8 @@ def prepare_worktree(repo, ref):
     # non-empty classes dir left by a compile that died midway would
     # otherwise be trusted and every TimeQuery run would die with
     # NoClassDefFoundError surfaced only as "produced no timings"
-    sh(["sbt", "-batch", "compile"], cwd=wt)
+    if compile_it:
+        sh(["sbt", "-batch", "compile"], cwd=wt)
     return wt
 
 
@@ -153,6 +169,86 @@ def time_query(wt, query, passes, sfdir, full):
     return min(times)
 
 
+def perfbench_run(checkout, workload, seed, seconds):
+    """One perfbench run in `checkout`; returns its result object."""
+    cmd = ["python3", "perfbench/run.py", "--workload", workload,
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+    print(f"+ ({checkout}) {' '.join(cmd)}", file=sys.stderr)
+    r = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
+    lines = [l for l in r.stdout.splitlines() if l.startswith('{"correct"')]
+    if r.returncode != 0 or not lines:
+        print(r.stderr[-2000:], file=sys.stderr)
+        raise SystemExit(f"perfbench run in {checkout} failed "
+                         f"(rc={r.returncode})")
+    res = json.loads(lines[-1])
+    # the settings line carries the host's steal time over the run
+    for l in r.stdout.splitlines():
+        if l.startswith('{"settings"'):
+            res["steal_s"] = json.loads(l)["settings"].get("steal_s")
+    return res
+
+
+def quartiles(xs):
+    """(first quartile, median, third quartile)."""
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, med, q3
+
+
+def perfbench_ab(old_dir, new_dir, workload, pairs, seed0):
+    with open(os.path.join(new_dir, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    metrics, seconds = bench["end_to_end"], bench["run_seconds"]
+    runs = {"old": [], "new": []}
+    for i in range(pairs):
+        order = [("old", old_dir), ("new", new_dir)]
+        if i % 2:
+            order.reverse()
+        for side, d in order:
+            res = perfbench_run(d, workload, seed0 + i, seconds)
+            runs[side].append(res)
+            vals = ", ".join(
+                f"{m['name']} {res['metrics'][m['name']]['value']:.4g}"
+                for m in metrics)
+            print(f"  pair {i + 1} {side}: correct {res['correct']}, "
+                  f"failed {res['failed']}/{res['attempted']}, {vals}, "
+                  f"steal_s {res.get('steal_s')}")
+
+    print(f"\nperfbench A/B, {workload}, {pairs} pairs at --seconds "
+          f"{seconds} (old {old_dir}, new {new_dir}):")
+    print(f"  {'metric':18s} {'old q1':>9s} {'old med':>9s} {'old q3':>9s}"
+          f" {'new q1':>9s} {'new med':>9s} {'new q3':>9s} {'change':>7s}"
+          f" {'wins':>6s}  claim")
+    failed = {side: sum(r["failed"] for r in runs[side])
+              for side in ("old", "new")}
+    for m in metrics:
+        name, lower = m["name"], m["better"] == "lower"
+        old = [r["metrics"][name]["value"] for r in runs["old"]]
+        new = [r["metrics"][name]["value"] for r in runs["new"]]
+        wins = sum((n < o) if lower else (n > o) for o, n in zip(old, new))
+        oq1, omed, oq3 = quartiles(old)
+        nq1, nmed, nq3 = quartiles(new)
+        gain = (omed - nmed) if lower else (nmed - omed)
+        holds = (wins >= 0.9 * pairs and gain > oq3 - oq1
+                 and failed["new"] <= failed["old"])
+        print(f"  {name:18s} {oq1:9.4g} {omed:9.4g} {oq3:9.4g} {nq1:9.4g}"
+              f" {nmed:9.4g} {nq3:9.4g} {nmed / omed - 1:+7.1%}"
+              f" {wins:3d}/{pairs:<2d}  {'holds' if holds else 'no'}")
+    for side in ("old", "new"):
+        tried = sum(r["attempted"] for r in runs[side])
+        print(f"  {side}: {failed[side]}/{tried} calls failed, correct on "
+              f"{sum(r['correct'] for r in runs[side])}/{pairs} runs")
+    return 0
+
+
+def checkout_of(repo, ref):
+    """A directory used as it is, or a ref prepared as a worktree."""
+    if os.path.isdir(ref):
+        return os.path.abspath(ref)
+    return prepare_worktree(repo, ref, compile_it=False)
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("old_ref")
@@ -165,8 +261,15 @@ def main():
     ap.add_argument("--sfdir", default="/root/testdata/sf0.1")
     ap.add_argument("--full", action="store_true")
     ap.add_argument("--repo", default=".")
+    ap.add_argument("--perfbench", metavar="WORKLOAD")
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--seed0", type=int, default=1)
     a = ap.parse_args()
 
+    if a.perfbench:
+        return perfbench_ab(checkout_of(a.repo, a.old_ref),
+                            checkout_of(a.repo, a.new_ref), a.perfbench,
+                            a.pairs, a.seed0)
     if a.queries:
         queries = a.queries.split(",")
     elif a.snapshots:
