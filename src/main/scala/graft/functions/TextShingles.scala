@@ -88,7 +88,7 @@ object TextShingles {
   /** First 60 bits of the md5 digest as an unsigned long — the exact
     * value of `conv(substring(md5(s), 1, 15), 16, 10)` (15 hex chars =
     * bytes 0–6 plus the high nibble of byte 7). */
-  private def hash60(s: String): Long = md5First64(s) >>> 4
+  private[graft] def hash60(s: String): Long = md5First64(s) >>> 4
 
   // Per-thread memo of token → md5First64: simhash hashes every token
   // OCCURRENCE and corpus token frequencies are Zipf-concentrated, so

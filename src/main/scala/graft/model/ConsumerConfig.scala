@@ -29,7 +29,6 @@ package graft.model
   *                             sequencingPerKey / sequencingRequired as
   *                             in the reference)
   * @param maxNumberOfAttempts  retry budget per task (default 10)
-  * @param timeoutAtPercentageOfRemainingTime phase deadline fraction
   * @param migrateLegacyStateKeys re-key state rows written in the
   *                             pre-md5-tiebreak `B|id|key|seqNo` format
   *                             on load (one-time per key). Leave true
@@ -55,7 +54,6 @@ final case class ConsumerConfig(
     strict: Boolean = false,
     migrateLegacyStateKeys: Boolean = true,
     maxNumberOfAttempts: Int = 10,
-    timeoutAtPercentageOfRemainingTime: Double = 0.8,
     batchStateTableName: String = "batch_state",
     deadRecordQueueName: String = "dead_records",
     deadMessageQueueName: String = "dead_messages") {
@@ -68,9 +66,6 @@ final case class ConsumerConfig(
   require(sequencingPerKey || keyPropertyNames.isEmpty,
     "FATAL: keyPropertyNames configured without sequencingPerKey")
   require(maxNumberOfAttempts >= 1, "maxNumberOfAttempts must be >= 1")
-  require(timeoutAtPercentageOfRemainingTime > 0 &&
-    timeoutAtPercentageOfRemainingTime <= 1,
-    "timeoutAtPercentageOfRemainingTime must be in (0, 1]")
 
   /** `K|<streamName>|<consumerId>` — first half of the batch key
     * (reference test/batch.test.js:123-151). */

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.functions.{col, expr, lit, pmod, sum, timestamp_micros, xxhash64}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.functions.{col, sum}
 
 /** Live per-window frequency sketching — the streaming sibling of
   * [[graft.operators.Sketches]]' Count-Min sketch, pairing with
@@ -27,20 +26,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * salted-vs-unsalted parity is spec-pinned, and the same law merges
   * hours with batch sketches.
   *
-  * Emission discipline is [[StreamingDistinct]]'s: cell increments
-  * are commutative, so arrival order inside the watermark horizon is
-  * irrelevant; a closed hour (watermark past hour end) emits each
+  * Emission is the [[ClosedHours]] fold: cell increments are
+  * commutative, so a closed hour (watermark past hour end) emits each
   * group's cell table exactly once — sketch STATE, not estimates, so
   * downstream can merge or point-query any key after the fact — and
   * drops its state. Open hours emit nothing.
   */
 object StreamingCms {
 
+  import ClosedHours.{byKeySalt, bySalt, hashSalt}
+
   /** A sighting of `key` at event time `tsUs` (epoch µs). */
   case class KeyedEvent(key: String, tsUs: Long)
-
-  private[streaming] case class TimedKey(key: String, tsUs: Long,
-      eventTime: java.sql.Timestamp, hourBucket: Long, salt: Long)
 
   /** One (closed hour, salt group) cell: the per-salt partial count
     * of sketch cell (r, c). */
@@ -58,10 +55,6 @@ object StreamingCms {
     * [[StreamingDistinct.KeyedSeen]], KMV: [[StreamingKmv.KeyedSeen]]). */
   case class KeyedSeen(key: String, value: String, tsUs: Long)
 
-  private[streaming] case class TimedKeyed(key: String, value: String,
-      tsUs: Long, eventTime: java.sql.Timestamp, hourBucket: Long,
-      salt: Long)
-
   /** One (key, closed hour, salt group) cell — [[keyedCells]]'
     * output; [[mergeKeyed]] folds the salt axis away into per-(key,
     * hour) cell tables, the `r, c, cnt` shape
@@ -71,7 +64,7 @@ object StreamingCms {
 
   private[streaming] case class CmsState(cells: Map[String, Long])
 
-  val HourUs: Long = 3600000000L
+  val HourUs: Long = ClosedHours.HourUs
 
   /** d=3 × w=256 — cms_bigram_report's shape, so streamed hours are
     * merge- and probe-compatible with batch sketches at these dims. */
@@ -81,64 +74,37 @@ object StreamingCms {
   /** EXACTLY the cell derivation of Sketches.cmsCell (md5 of
     * "r:cms:key" → first 15 hex = 60 bits → mod w), in compiled form
     * for the per-row hot path. */
-  private[graft] def cell(r: Int, key: String, w: Int): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$r:cms:$key"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // first 15 hex chars = first 7 bytes + the high nibble of byte 8
-    var h = 0L
-    var i = 0
-    while (i < 7) { h = (h << 8) | (md(i) & 0xffL); i += 1 }
-    h = (h << 4) | ((md(7) & 0xf0L) >> 4)
-    h % w
-  }
+  private[graft] def cell(r: Int, key: String, w: Int): Long =
+    graft.functions.TextShingles.hash60(s"$r:cms:$key") % w
+
+  private val Empty = CmsState(Map.empty)
+
+  /** Counts one sighting of `key` in each of the D rows' cells. */
+  private def add(s: CmsState, key: String): CmsState =
+    CmsState((0 until D).foldLeft(s.cells) { (m, r) =>
+      val k = s"$r:${cell(r, key, W)}"
+      m.updated(k, m.getOrElse(k, 0L) + 1L)
+    })
+
+  /** The state's `(r, c, cnt)` cells in (r, c) order — a
+    * deterministic emission order. */
+  private def sorted(s: CmsState): Iterator[(Int, Long, Long)] =
+    s.cells.toSeq.map { case (k, cnt) =>
+      val Array(r, c) = k.split(":")
+      (r.toInt, c.toLong, cnt)
+    }.sortBy(rc => (rc._1, rc._2)).iterator
 
   /** Per-(hour, salt) cell tables, exactly once per group at
     * watermark close. `salts` is the ingest-parallelism knob; the
-    * routing salt (xxhash64 — cheap, deterministic) never reaches a
-    * result, because addition merges any assignment back exactly. */
+    * routing salt never reaches a result, because addition merges any
+    * assignment back exactly. */
   def cells(events: Dataset[KeyedEvent], salts: Int = 16,
-      maxDelay: String = "1 hour"): Dataset[SaltedCell] = {
-    require(salts >= 1, s"salts must be >= 1, got $salts")
-    implicit val timedEnc = Encoders.product[TimedKey]
-    implicit val stateEnc = Encoders.product[CmsState]
-    implicit val outEnc = Encoders.product[SaltedCell]
-    events.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", maxDelay)
-      .withColumn("hourBucket", expr(s"tsUs div $HourUs"))
-      .withColumn("salt", pmod(xxhash64(col("key")), lit(salts.toLong)))
-      .as[TimedKey]
-      .groupByKey(e => (e.hourBucket, e.salt))(
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        (hs: (Long, Long), it: Iterator[TimedKey],
-            state: GroupState[CmsState]) =>
-          val (hour, salt) = hs
-          val prior = state.getOption.getOrElse(CmsState(Map.empty))
-          val cellsNow = it.foldLeft(prior.cells) { (m, e) =>
-            (0 until D).foldLeft(m) { (m2, r) =>
-              val k = s"$r:${cell(r, e.key, W)}"
-              m2.updated(k, m2.getOrElse(k, 0L) + 1L)
-            }
-          }
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val hourEndUs = (hour + 1L) * HourUs
-          if (wmUs >= hourEndUs) {
-            state.remove()
-            // deterministic emission order: (r, c) ascending
-            cellsNow.toSeq.map { case (k, cnt) =>
-              val Array(r, c) = k.split(":")
-              SaltedCell(hour, salt, r.toInt, c.toLong, cnt)
-            }.sortBy(sc => (sc.r, sc.c)).iterator
-          } else {
-            state.update(CmsState(cellsNow))
-            state.setTimeoutTimestamp(hourEndUs / 1000L)
-            Iterator.empty
-          }
-      }
-  }
+      maxDelay: String = "1 hour"): Dataset[SaltedCell] =
+    ClosedHours.fold(events, maxDelay,
+      bySalt[KeyedEvent](hashSalt("key", salts)))(Empty)(
+      (s, e) => add(s, e.key)) { case ((hour, salt), s) =>
+      sorted(s).map { case (r, c, cnt) => SaltedCell(hour, salt, r, c, cnt) }
+    }
 
   /** [[cells]] per sketch KEY — live per-SOURCE frequency sketches
     * (r18 verdict task #3, completing the keyed family next to
@@ -151,47 +117,14 @@ object StreamingCms {
     * exactly-once-at-close discipline. State: (keys × salts) × ≤ d×w
     * longs per open hour. */
   def keyedCells(values: Dataset[KeyedSeen], salts: Int = 16,
-      maxDelay: String = "1 hour"): Dataset[KeyedSaltedCell] = {
-    require(salts >= 1, s"salts must be >= 1, got $salts")
-    implicit val timedEnc = Encoders.product[TimedKeyed]
-    implicit val stateEnc = Encoders.product[CmsState]
-    implicit val outEnc = Encoders.product[KeyedSaltedCell]
-    values.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", maxDelay)
-      .withColumn("hourBucket", expr(s"tsUs div $HourUs"))
-      .withColumn("salt", pmod(xxhash64(col("value")), lit(salts.toLong)))
-      .as[TimedKeyed]
-      .groupByKey(v => (v.key, v.hourBucket, v.salt))(
-        Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
-          Encoders.scalaLong))
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        (khs: (String, Long, Long), it: Iterator[TimedKeyed],
-            state: GroupState[CmsState]) =>
-          val (key, hour, salt) = khs
-          val prior = state.getOption.getOrElse(CmsState(Map.empty))
-          val cellsNow = it.foldLeft(prior.cells) { (m, e) =>
-            (0 until D).foldLeft(m) { (m2, r) =>
-              val k = s"$r:${cell(r, e.value, W)}"
-              m2.updated(k, m2.getOrElse(k, 0L) + 1L)
-            }
-          }
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val hourEndUs = (hour + 1L) * HourUs
-          if (wmUs >= hourEndUs) {
-            state.remove()
-            cellsNow.toSeq.map { case (k, cnt) =>
-              val Array(r, c) = k.split(":")
-              KeyedSaltedCell(key, hour, salt, r.toInt, c.toLong, cnt)
-            }.sortBy(sc => (sc.r, sc.c)).iterator
-          } else {
-            state.update(CmsState(cellsNow))
-            state.setTimeoutTimestamp(hourEndUs / 1000L)
-            Iterator.empty
-          }
+      maxDelay: String = "1 hour"): Dataset[KeyedSaltedCell] =
+    ClosedHours.fold(values, maxDelay,
+      byKeySalt[KeyedSeen](hashSalt("value", salts))(_.key))(Empty)(
+      (s, v) => add(s, v.value)) { case ((key, hour, salt), s) =>
+      sorted(s).map { case (r, c, cnt) =>
+        KeyedSaltedCell(key, hour, salt, r, c, cnt)
       }
-  }
+    }
 
   /** Folds [[keyedCells]]' salt axis away: per-(key, hour) cell
     * tables `key, hourBucket, r, c, cnt` (cell-wise addition — the

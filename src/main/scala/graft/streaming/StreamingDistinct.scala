@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.functions.{col, expr, lit, max, pmod, timestamp_micros, xxhash64}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.functions.{col, expr, max}
 
 /** Live per-window DISTINCT counting — the streaming sibling of
   * [[graft.operators.Sketches]]: "how many distinct users/URLs/tokens
@@ -29,11 +28,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (salted-vs-unsalted parity is spec-pinned). State is
   * (open hours × salts) × ≤256 ints; throughput scales with `salts`.
   *
-  * Emission discipline is [[StreamingTopK]]'s: register maxes are
-  * commutative, so arrival order inside the watermark horizon is
-  * irrelevant; a closed hour (watermark past hour end) emits exactly
-  * once per (hour, salt) and drops its state. Open hours emit nothing:
-  * no provisional estimate ever shifts under a dashboard.
+  * Emission is the [[ClosedHours]] fold: register maxes are
+  * commutative, so a closed hour (watermark past hour end) emits
+  * exactly once per (hour, salt) and drops its state; open hours emit
+  * nothing.
   *
   * [[report]] (single hour-global group emitting the folded summary
   * directly) remains as the test-scale audit convenience — its output
@@ -41,11 +39,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingDistinct {
 
+  import ClosedHours.{byHour, byKeySalt, bySalt, hashSalt}
+
   /** A sighting of `value` at event time `tsUs` (epoch µs). */
   case class SeenValue(value: String, tsUs: Long)
-
-  private[streaming] case class TimedValue(value: String, tsUs: Long,
-      eventTime: java.sql.Timestamp, hourBucket: Long, salt: Long)
 
   /** One closed hour's sketch summary: the integer state (v_zero,
     * s_scaled — merge-able, oracle-able) and the raw-HLL estimate. */
@@ -62,10 +59,6 @@ object StreamingDistinct {
     * document came from) — [[keyedCells]]' input. */
   case class KeyedSeen(key: String, value: String, tsUs: Long)
 
-  private[streaming] case class TimedKeyed(key: String, value: String,
-      tsUs: Long, eventTime: java.sql.Timestamp, hourBucket: Long,
-      salt: Long)
-
   /** One (key, closed hour, salt group) register — [[keyedCells]]'
     * output; [[mergeKeyed]] folds the salt axis into per-(key, hour)
     * register tables, the exact `key, register, m` shape
@@ -76,32 +69,18 @@ object StreamingDistinct {
 
   private[streaming] case class RegState(m: Map[Int, Int])
 
-  val HourUs: Long = 3600000000L
+  val HourUs: Long = ClosedHours.HourUs
 
   private val P = 8
   private val M = 1 << P
   private val WBits = 60 - P
   private val Top = WBits + 1
 
-  /** First 15 md5 hex chars as a 60-bit integer — THE engine hash
-    * (`conv(substring(md5(v), 1, 15), 16, 10)` in compiled form),
-    * shared by the HLL register derivation here and the KMV bottom-k
-    * in [[StreamingKmv]]. */
-  private[graft] def hash60(value: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-      .digest(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // first 15 hex chars = first 7 bytes + the high nibble of byte 8
-    var h = 0L
-    var i = 0
-    while (i < 7) { h = (h << 8) | (md(i) & 0xffL); i += 1 }
-    (h << 4) | ((md(7) & 0xf0L) >> 4)
-  }
-
   /** EXACTLY the register derivation of Sketches.hllRegisters (md5 →
     * first 15 hex = 60 bits → top p register bits, remaining-bit
     * leading-zero rank), in compiled form for the per-row hot path. */
   private[graft] def registerAndRho(value: String): (Int, Int) = {
-    val h = hash60(value)
+    val h = graft.functions.TextShingles.hash60(value)
     val reg = (h >>> WBits).toInt
     val w = h & ((1L << WBits) - 1)
     val rho = if (w == 0L) Top
@@ -118,60 +97,27 @@ object StreamingDistinct {
     0.7213 / (1.0 + 1.079 / M) * (M.toDouble * M) *
       (1L << Top).toDouble / sScaled.toDouble
 
-  private def timed(values: Dataset[SeenValue], maxDelay: String,
-      salts: Int): Dataset[TimedValue] = {
-    implicit val timedEnc = Encoders.product[TimedValue]
-    values.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", maxDelay)
-      .withColumn("hourBucket", expr(s"tsUs div $HourUs"))
-      // routing-only salt: xxhash64 is cheap and deterministic, and
-      // ANY assignment of values to salt groups merges back exactly
-      // (element-wise register max) — the salt never reaches a result
-      .withColumn("salt", pmod(xxhash64(col("value")), lit(salts.toLong)))
-      .as[TimedValue]
+  private val NoRegs = RegState(Map.empty)
+
+  private def add(s: RegState, value: String): RegState = {
+    val (r, rho) = registerAndRho(value)
+    if (rho > s.m.getOrElse(r, 0)) RegState(s.m.updated(r, rho)) else s
   }
 
-  private def foldRegs(prior: Map[Int, Int],
-      it: Iterator[TimedValue]): Map[Int, Int] =
-    it.foldLeft(prior) { (m, v) =>
-      val (r, rho) = registerAndRho(v.value)
-      if (rho > m.getOrElse(r, 0)) m.updated(r, rho) else m
-    }
+  private def sorted(s: RegState): Iterator[(Int, Int)] =
+    s.m.toSeq.sortBy(_._1).iterator
 
   /** PRODUCTION path: per-(hour, salt) register tables, exactly once
     * per group at watermark close. `salts` is the ingest-parallelism
     * knob — state stays `salts × ≤256` ints per open hour. Merge the
     * tables with [[merge]] (or any element-wise max downstream). */
   def cells(values: Dataset[SeenValue], salts: Int = 16,
-      maxDelay: String = "1 hour"): Dataset[RegisterCell] = {
-    require(salts >= 1, s"salts must be >= 1, got $salts")
-    implicit val stateEnc = Encoders.product[RegState]
-    implicit val outEnc = Encoders.product[RegisterCell]
-    timed(values, maxDelay, salts)
-      .groupByKey(v => (v.hourBucket, v.salt))(
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        (hs: (Long, Long), it: Iterator[TimedValue],
-            state: GroupState[RegState]) =>
-          val (hour, salt) = hs
-          val regs = foldRegs(
-            state.getOption.getOrElse(RegState(Map.empty)).m, it)
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val hourEndUs = (hour + 1L) * HourUs
-          if (wmUs >= hourEndUs) {
-            state.remove()
-            regs.toSeq.sortBy(_._1).iterator.map { case (r, rho) =>
-              RegisterCell(hour, salt, r, rho)
-            }
-          } else {
-            state.update(RegState(regs))
-            state.setTimeoutTimestamp(hourEndUs / 1000L)
-            Iterator.empty
-          }
-      }
-  }
+      maxDelay: String = "1 hour"): Dataset[RegisterCell] =
+    ClosedHours.fold(values, maxDelay,
+      bySalt[SeenValue](hashSalt("value", salts)))(NoRegs)(
+      (s, v) => add(s, v.value)) { case ((hour, salt), s) =>
+      sorted(s).map { case (r, rho) => RegisterCell(hour, salt, r, rho) }
+    }
 
   /** [[cells]] per sketch KEY — live per-SOURCE registers, the input
     * of the cross-source overlap estimator (hll_pair_estimate's
@@ -184,44 +130,14 @@ object StreamingDistinct {
     * closed-hour registers equal to the batch derivation). State:
     * (keys × salts) × ≤256 ints per open hour. */
   def keyedCells(values: Dataset[KeyedSeen], salts: Int = 16,
-      maxDelay: String = "1 hour"): Dataset[KeyedRegisterCell] = {
-    require(salts >= 1, s"salts must be >= 1, got $salts")
-    implicit val timedEnc = Encoders.product[TimedKeyed]
-    implicit val stateEnc = Encoders.product[RegState]
-    implicit val outEnc = Encoders.product[KeyedRegisterCell]
-    values.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", maxDelay)
-      .withColumn("hourBucket", expr(s"tsUs div $HourUs"))
-      .withColumn("salt", pmod(xxhash64(col("value")), lit(salts.toLong)))
-      .as[TimedKeyed]
-      .groupByKey(v => (v.key, v.hourBucket, v.salt))(
-        Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
-          Encoders.scalaLong))
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        (khs: (String, Long, Long), it: Iterator[TimedKeyed],
-            state: GroupState[RegState]) =>
-          val (key, hour, salt) = khs
-          val regs = it.foldLeft(
-            state.getOption.getOrElse(RegState(Map.empty)).m) { (m, v) =>
-            val (r, rho) = registerAndRho(v.value)
-            if (rho > m.getOrElse(r, 0)) m.updated(r, rho) else m
-          }
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val hourEndUs = (hour + 1L) * HourUs
-          if (wmUs >= hourEndUs) {
-            state.remove()
-            regs.toSeq.sortBy(_._1).iterator.map { case (r, rho) =>
-              KeyedRegisterCell(key, hour, salt, r, rho)
-            }
-          } else {
-            state.update(RegState(regs))
-            state.setTimeoutTimestamp(hourEndUs / 1000L)
-            Iterator.empty
-          }
+      maxDelay: String = "1 hour"): Dataset[KeyedRegisterCell] =
+    ClosedHours.fold(values, maxDelay,
+      byKeySalt[KeyedSeen](hashSalt("value", salts))(_.key))(NoRegs)(
+      (s, v) => add(s, v.value)) { case ((key, hour, salt), s) =>
+      sorted(s).map { case (r, rho) =>
+        KeyedRegisterCell(key, hour, salt, r, rho)
       }
-  }
+    }
 
   /** Folds [[keyedCells]]' salt axis away: per-(key, hour) register
     * tables `key, hourBucket, register, m` (element-wise max — the
@@ -261,31 +177,13 @@ object StreamingDistinct {
     * the test-scale audit convenience (one group ingests the whole
     * hour; use [[cells]] + [[merge]] where throughput matters). */
   def report(values: Dataset[SeenValue],
-      maxDelay: String = "1 hour"): Dataset[DistinctEstimate] = {
-    implicit val stateEnc = Encoders.product[RegState]
-    implicit val outEnc = Encoders.product[DistinctEstimate]
-    timed(values, maxDelay, salts = 1)
-      .groupByKey(_.hourBucket)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        (hour: Long, it: Iterator[TimedValue],
-            state: GroupState[RegState]) =>
-          val regs = foldRegs(
-            state.getOption.getOrElse(RegState(Map.empty)).m, it)
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val hourEndUs = (hour + 1L) * HourUs
-          if (wmUs >= hourEndUs) {
-            state.remove()
-            val vZero = (M - regs.size).toLong
-            val sScaled = vZero * (1L << Top) +
-              regs.valuesIterator.map(rho => 1L << (Top - rho)).sum
-            Iterator.single(
-              DistinctEstimate(hour, vZero, sScaled, estimate(sScaled)))
-          } else {
-            state.update(RegState(regs))
-            state.setTimeoutTimestamp(hourEndUs / 1000L)
-            Iterator.empty
-          }
-      }
-  }
+      maxDelay: String = "1 hour"): Dataset[DistinctEstimate] =
+    ClosedHours.fold(values, maxDelay, byHour[SeenValue])(NoRegs)(
+      (s, v) => add(s, v.value)) { (hour, s) =>
+      val vZero = (M - s.m.size).toLong
+      val sScaled = vZero * (1L << Top) +
+        s.m.valuesIterator.map(rho => 1L << (Top - rho)).sum
+      Iterator.single(
+        DistinctEstimate(hour, vZero, sScaled, estimate(sScaled)))
+    }
 }

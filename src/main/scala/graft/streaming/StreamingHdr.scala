@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.functions.{col, expr, lit, pmod, sum, timestamp_micros, xxhash64}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.functions.{col, sum}
 
 /** Live per-window QUANTILE sketching — the third streaming sketch
   * twin, completing the trio next to [[StreamingDistinct]] (HLL) and
@@ -27,20 +26,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * `foreachBatch`) reproduces the unsalted histogram EXACTLY —
   * salted-vs-unsalted parity is spec-pinned.
   *
-  * Emission discipline is the house one: bucket increments are
-  * commutative, so arrival order inside the watermark horizon is
-  * irrelevant; a closed hour emits each group's bucket table exactly
-  * once — sketch STATE, not quantiles, so downstream picks any p
+  * Emission is the [[ClosedHours]] fold: bucket increments are
+  * commutative, so a closed hour emits each group's bucket table
+  * exactly once — sketch STATE, not quantiles, so downstream picks any p
   * after the fact (`hdr_value_quantiles`' cumulative read) — and
   * drops its state. Open hours emit nothing.
   */
 object StreamingHdr {
 
+  import ClosedHours.{byKeySalt, bySalt, hashSalt}
+
   /** A non-negative measurement at event time `tsUs` (epoch µs). */
   case class Measured(vi: Long, tsUs: Long)
-
-  private[streaming] case class TimedVal(vi: Long, tsUs: Long,
-      eventTime: java.sql.Timestamp, hourBucket: Long, salt: Long)
 
   /** One (closed hour, salt group) bucket: the per-salt partial
     * count of histogram bucket `bucket`. */
@@ -58,10 +55,6 @@ object StreamingHdr {
     * the HDR member of the keyed-streaming family. */
   case class KeyedMeasured(key: String, vi: Long, tsUs: Long)
 
-  private[streaming] case class TimedKeyed(key: String, vi: Long,
-      tsUs: Long, eventTime: java.sql.Timestamp, hourBucket: Long,
-      salt: Long)
-
   /** One (key, closed hour, salt group) bucket — [[keyedCells]]'
     * output; [[mergeKeyed]] folds the salt axis away into per-(key,
     * hour) bucket tables, the `bucket, lo, cnt` histogram shape the
@@ -71,7 +64,7 @@ object StreamingHdr {
 
   private[streaming] case class HdrState(cells: Map[Long, Long])
 
-  val HourUs: Long = 3600000000L
+  val HourUs: Long = ClosedHours.HourUs
 
   /** EXACTLY Sketches.hdrBucketSql's bucket index (values < 32 are
     * their own buckets; above, (exponent − 5)·16 + top-5 bits), with
@@ -84,61 +77,41 @@ object StreamingHdr {
       (len - 5).toLong * 16L + (vi >>> (len - 5))
     }
 
+  /** Inclusive lower bound of bucket `b`: small buckets are their own
+    * value; a larger bucket b holds the top-5-bit pattern 16 + b%16
+    * shifted up by its exponent b/16 - 1. */
+  private def floorOf(b: Long): Long =
+    if (b < 32L) b else (16L + b % 16L) << (b / 16L - 1L)
+
   /** EXACTLY Sketches.hdrBucketLoSql's inclusive bucket lower bound. */
-  private[graft] def bucketLo(vi: Long): Long =
-    if (vi < 32L) vi
-    else {
-      val len = 64 - java.lang.Long.numberOfLeadingZeros(vi)
-      (vi >>> (len - 5)) << (len - 5)
+  private[graft] def bucketLo(vi: Long): Long = floorOf(bucket(vi))
+
+  private val Empty = HdrState(Map.empty)
+
+  private def add(s: HdrState, vi: Long): HdrState = {
+    val b = bucket(vi)
+    HdrState(s.cells.updated(b, s.cells.getOrElse(b, 0L) + 1L))
+  }
+
+  /** The state's `(bucket, lo, cnt)` rows in bucket order. */
+  private def sorted(s: HdrState): Iterator[(Long, Long, Long)] =
+    s.cells.toSeq.sortBy(_._1).iterator.map { case (b, cnt) =>
+      (b, floorOf(b), cnt)
     }
 
   /** Per-(hour, salt) bucket tables, exactly once per group at
     * watermark close. `salts` is the ingest-parallelism knob; the
-    * routing salt (xxhash64 — cheap, deterministic) never reaches a
-    * result, because addition merges any assignment back exactly. */
+    * routing salt never reaches a result, because addition merges any
+    * assignment back exactly. */
   def cells(values: Dataset[Measured], salts: Int = 16,
-      maxDelay: String = "1 hour"): Dataset[SaltedBucket] = {
-    require(salts >= 1, s"salts must be >= 1, got $salts")
-    implicit val timedEnc = Encoders.product[TimedVal]
-    implicit val stateEnc = Encoders.product[HdrState]
-    implicit val outEnc = Encoders.product[SaltedBucket]
-    values.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", maxDelay)
-      .withColumn("hourBucket", expr(s"tsUs div $HourUs"))
-      .withColumn("salt", pmod(xxhash64(col("vi")), lit(salts.toLong)))
-      .as[TimedVal]
-      .groupByKey(e => (e.hourBucket, e.salt))(
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        (hs: (Long, Long), it: Iterator[TimedVal],
-            state: GroupState[HdrState]) =>
-          val (hour, salt) = hs
-          val prior = state.getOption.getOrElse(HdrState(Map.empty))
-          val cellsNow = it.foldLeft(prior.cells) { (m, e) =>
-            val b = bucket(e.vi)
-            m.updated(b, m.getOrElse(b, 0L) + 1L)
-          }
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val hourEndUs = (hour + 1L) * HourUs
-          if (wmUs >= hourEndUs) {
-            state.remove()
-            cellsNow.toSeq.sortBy(_._1).map { case (b, cnt) =>
-              // lo re-derives from any member value's bucket floor;
-              // bucket → lo is closed-form: small buckets are their
-              // own value, larger ones are (16 + b%16) << (b/16 - 1)
-              val lo = if (b < 32L) b
-                else (16L + b % 16L) << (b / 16L - 1L)
-              SaltedBucket(hour, salt, b, lo, cnt)
-            }.iterator
-          } else {
-            state.update(HdrState(cellsNow))
-            state.setTimeoutTimestamp(hourEndUs / 1000L)
-            Iterator.empty
-          }
+      maxDelay: String = "1 hour"): Dataset[SaltedBucket] =
+    ClosedHours.fold(values, maxDelay,
+      bySalt[Measured](hashSalt("vi", salts)))(Empty)(
+      (s, e) => add(s, e.vi)) { case ((hour, salt), s) =>
+      sorted(s).map { case (b, lo, cnt) =>
+        SaltedBucket(hour, salt, b, lo, cnt)
       }
-  }
+    }
 
   /** [[cells]] per sketch KEY — live per-SOURCE quantile sketches
     * (r18 verdict task #3, completing the keyed family next to
@@ -151,46 +124,14 @@ object StreamingHdr {
     * exactly-once-at-close discipline. State: (keys × salts) × ≤960
     * longs per open hour. */
   def keyedCells(values: Dataset[KeyedMeasured], salts: Int = 16,
-      maxDelay: String = "1 hour"): Dataset[KeyedSaltedBucket] = {
-    require(salts >= 1, s"salts must be >= 1, got $salts")
-    implicit val timedEnc = Encoders.product[TimedKeyed]
-    implicit val stateEnc = Encoders.product[HdrState]
-    implicit val outEnc = Encoders.product[KeyedSaltedBucket]
-    values.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", maxDelay)
-      .withColumn("hourBucket", expr(s"tsUs div $HourUs"))
-      .withColumn("salt", pmod(xxhash64(col("vi")), lit(salts.toLong)))
-      .as[TimedKeyed]
-      .groupByKey(v => (v.key, v.hourBucket, v.salt))(
-        Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
-          Encoders.scalaLong))
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        (khs: (String, Long, Long), it: Iterator[TimedKeyed],
-            state: GroupState[HdrState]) =>
-          val (key, hour, salt) = khs
-          val prior = state.getOption.getOrElse(HdrState(Map.empty))
-          val cellsNow = it.foldLeft(prior.cells) { (m, e) =>
-            val b = bucket(e.vi)
-            m.updated(b, m.getOrElse(b, 0L) + 1L)
-          }
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val hourEndUs = (hour + 1L) * HourUs
-          if (wmUs >= hourEndUs) {
-            state.remove()
-            cellsNow.toSeq.sortBy(_._1).map { case (b, cnt) =>
-              val lo = if (b < 32L) b
-                else (16L + b % 16L) << (b / 16L - 1L)
-              KeyedSaltedBucket(key, hour, salt, b, lo, cnt)
-            }.iterator
-          } else {
-            state.update(HdrState(cellsNow))
-            state.setTimeoutTimestamp(hourEndUs / 1000L)
-            Iterator.empty
-          }
+      maxDelay: String = "1 hour"): Dataset[KeyedSaltedBucket] =
+    ClosedHours.fold(values, maxDelay,
+      byKeySalt[KeyedMeasured](hashSalt("vi", salts))(_.key))(Empty)(
+      (s, e) => add(s, e.vi)) { case ((key, hour, salt), s) =>
+      sorted(s).map { case (b, lo, cnt) =>
+        KeyedSaltedBucket(key, hour, salt, b, lo, cnt)
       }
-  }
+    }
 
   /** Folds [[keyedCells]]' salt axis away: per-(key, hour) bucket
     * tables `key, hourBucket, bucket, lo, cnt` (cell-wise addition —

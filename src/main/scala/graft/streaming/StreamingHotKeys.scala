@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.functions.{col, expr, pmod, timestamp_micros}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.{col, lit, pmod}
 
 /** Streaming half of the `hot_keys` heavy-hitter report: LIVE hot-key
   * CANDIDATES per hour, with state bounded at any key cardinality —
@@ -29,19 +28,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * itself. False positives are possible (that is what the exact
   * recount is for) — the feed is the trigger, not the verdict.
   *
-  * Emission is exactly once per (hour, bucket), on hour close — the
-  * same watermark-close discipline as [[StreamingSkew]]: counts are
-  * commutative so stragglers inside the horizon just fold in,
-  * regardless of arrival order, and the close fires when the
-  * watermark passes the hour end (after which the late-data filter
-  * admits no event of that hour).
+  * Emission is the [[ClosedHours]] fold: exactly once per (hour,
+  * bucket), when the watermark passes the hour end; MG counts fold
+  * stragglers inside the horizon in, regardless of arrival order.
   */
 object StreamingHotKeys {
 
   case class KeyEvent(key: Long, tsUs: Long)
-
-  private[streaming] case class TimedKeyEvent(key: Long, tsUs: Long,
-      eventTime: java.sql.Timestamp, hourBucket: Long, salt: Long)
 
   /** One candidate hot key: `minCount` is the Misra-Gries lower bound
     * on the key's count in `hourBucket`; the true count is within
@@ -56,7 +49,7 @@ object StreamingHotKeys {
   private[streaming] case class HotKeyState(counts: Map[Long, Long],
       total: Long)
 
-  val HourUs: Long = StreamingSkew.HourUs
+  val HourUs: Long = ClosedHours.HourUs
 
   /** @param buckets   salt-bucket fan-out (state parallelism knob;
     *   groups per open hour)
@@ -66,42 +59,14 @@ object StreamingHotKeys {
   def candidates(events: Dataset[KeyEvent], buckets: Int = 16,
       capacity: Int = 256,
       maxDelay: String = "1 hour"): Dataset[HotKeyCandidate] = {
-    implicit val timedEnc = Encoders.product[TimedKeyEvent]
-    implicit val stateEnc = Encoders.product[HotKeyState]
-    implicit val outEnc = Encoders.product[HotKeyCandidate]
-    events.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", maxDelay)
-      .withColumn("hourBucket", expr(s"tsUs div $HourUs"))
-      .withColumn("salt", pmod(col("key"), org.apache.spark.sql
-        .functions.lit(buckets.toLong)))
-      .as[TimedKeyEvent]
-      .groupByKey(e => (e.hourBucket, e.salt))(
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        (hb: (Long, Long), it: Iterator[TimedKeyEvent],
-            state: GroupState[HotKeyState]) =>
-          val (hour, _) = hb
-          val prior = state.getOption.getOrElse(HotKeyState(Map.empty, 0L))
-          val next = it.foldLeft(prior) { (st, e) =>
-            HotKeyState(graft.operators.HeavyHitters.mgUpdate(
-              st.counts, e.key, capacity), st.total + 1L)
-          }
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val hourEndUs = (hour + 1L) * HourUs
-          if (wmUs >= hourEndUs) {
-            // hour closed: the bucket's totals are final; emit the
-            // surviving candidates once and drop the state
-            state.remove()
-            next.counts.toSeq.sortBy(_._1).iterator.map {
-              case (k, c) => HotKeyCandidate(hour, k, c, next.total)
-            }
-          } else {
-            state.update(next)
-            state.setTimeoutTimestamp(hourEndUs / 1000L)
-            Iterator.empty
-          }
+    val byBucket =
+      ClosedHours.bySalt[KeyEvent](pmod(col("key"), lit(buckets.toLong)))
+    ClosedHours.fold(events, maxDelay, byBucket)(HotKeyState(Map.empty, 0L))(
+      (s, e) => HotKeyState(graft.operators.HeavyHitters.mgUpdate(
+        s.counts, e.key, capacity), s.total + 1L)) { case ((hour, _), s) =>
+      s.counts.toSeq.sortBy(_._1).iterator.map {
+        case (k, c) => HotKeyCandidate(hour, k, c, s.total)
       }
+    }
   }
 }

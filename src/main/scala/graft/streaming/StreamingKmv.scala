@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions.{col, explode, expr, lit, pmod, timestamp_micros, xxhash64}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.functions.{col, explode, expr}
 
 /** Live per-window KMV sketching — the fourth salted streaming twin
   * next to [[StreamingDistinct]] (HLL), [[StreamingCms]] and
@@ -15,9 +14,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * scaladoc).
   *
   * Same contract as its three siblings:
-  *  - hashes are [[StreamingDistinct.hash60]] — bit-identical to the
-  *    batch `kmvSketch` SQL derivation, so streamed sketches merge
-  *    with batch sketches and oracle rows;
+  *  - hashes are [[graft.functions.TextShingles.hash60]] —
+  *    bit-identical to the batch `kmvSketch` SQL derivation, so
+  *    streamed sketches merge with batch sketches and oracle rows;
   *  - the PRODUCTION path [[cells]] keys by `(hourBucket, salt)`:
   *    `salts` groups ingest in parallel, each holding its own
   *    bounded bottom-k (≤ k longs), and each emits its retained
@@ -26,24 +25,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    per-salt tables, ≤ salts × k rows per hour — reproduces the
   *    single-group sketch EXACTLY for any salt assignment;
   *  - open hours emit nothing; a closed (hour, salt) group emits once
-  *    and drops its state ([[StreamingTopK]]'s emission discipline);
+  *    and drops its state (the [[ClosedHours]] fold);
   *  - [[report]] (single hour-global group emitting the summary
   *    directly) is the test-scale audit convenience.
   */
 object StreamingKmv {
 
-  import StreamingDistinct.{SeenValue, hash60}
-
-  private[streaming] case class TimedValue(value: String, tsUs: Long,
-      eventTime: java.sql.Timestamp, hourBucket: Long, salt: Long)
+  import ClosedHours.{byHour, byKeySalt, bySalt, hashSalt}
+  import StreamingDistinct.SeenValue
+  import graft.functions.TextShingles.hash60
 
   /** A sighting of `value` under sketch key `key` (e.g. the SOURCE a
     * document came from) at event time `tsUs` — [[keyedCells]]' input. */
   case class KeyedSeen(key: String, value: String, tsUs: Long)
-
-  private[streaming] case class TimedKeyed(key: String, value: String,
-      tsUs: Long, eventTime: java.sql.Timestamp, hourBucket: Long,
-      salt: Long)
 
   /** One retained hash of a (closed hour, salt group) sketch. */
   case class SketchHash(hourBucket: Long, salt: Long, h: Long)
@@ -64,7 +58,7 @@ object StreamingKmv {
 
   private[streaming] case class KmvState(hs: Seq[Long])
 
-  val HourUs: Long = 3600000000L
+  val HourUs: Long = ClosedHours.HourUs
 
   /** Sketch size — matches the registered kmv_* oracle rows. */
   val K: Int = 256
@@ -95,53 +89,21 @@ object StreamingKmv {
       else ((hs.take(lo) :+ h) ++ hs.drop(lo)).take(K)
     }
 
-  private def timed(values: Dataset[SeenValue], maxDelay: String,
-      salts: Int): Dataset[TimedValue] = {
-    implicit val timedEnc = Encoders.product[TimedValue]
-    values.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", maxDelay)
-      .withColumn("hourBucket", expr(s"tsUs div $HourUs"))
-      // routing-only salt (the StreamingDistinct discipline): any
-      // assignment of values to salt groups merges back exactly
-      .withColumn("salt", pmod(xxhash64(col("value")), lit(salts.toLong)))
-      .as[TimedValue]
-  }
+  private val Empty = KmvState(Vector.empty)
 
-  private def fold(prior: Seq[Long],
-      it: Iterator[TimedValue]): Seq[Long] =
-    it.foldLeft(prior)((hs, v) => insert(hs, hash60(v.value)))
+  private def add(s: KmvState, value: String): KmvState =
+    KmvState(insert(s.hs, hash60(value)))
 
   /** PRODUCTION path: per-(hour, salt) bottom-k tables, exactly once
     * per group at watermark close. State is ≤ salts × k longs per
     * open hour; throughput scales with `salts`. */
   def cells(values: Dataset[SeenValue], salts: Int = 16,
-      maxDelay: String = "1 hour"): Dataset[SketchHash] = {
-    require(salts >= 1, s"salts must be >= 1, got $salts")
-    implicit val stateEnc = Encoders.product[KmvState]
-    implicit val outEnc = Encoders.product[SketchHash]
-    timed(values, maxDelay, salts)
-      .groupByKey(v => (v.hourBucket, v.salt))(
-        Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        (hs: (Long, Long), it: Iterator[TimedValue],
-            state: GroupState[KmvState]) =>
-          val (hour, salt) = hs
-          val sketch = fold(
-            state.getOption.getOrElse(KmvState(Vector.empty)).hs, it)
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val hourEndUs = (hour + 1L) * HourUs
-          if (wmUs >= hourEndUs) {
-            state.remove()
-            sketch.iterator.map(h => SketchHash(hour, salt, h))
-          } else {
-            state.update(KmvState(sketch))
-            state.setTimeoutTimestamp(hourEndUs / 1000L)
-            Iterator.empty
-          }
-      }
-  }
+      maxDelay: String = "1 hour"): Dataset[SketchHash] =
+    ClosedHours.fold(values, maxDelay,
+      bySalt[SeenValue](hashSalt("value", salts)))(Empty)(
+      (s, v) => add(s, v.value)) { case ((hour, salt), s) =>
+      s.hs.iterator.map(h => SketchHash(hour, salt, h))
+    }
 
   /** [[cells]] per sketch KEY — live per-SOURCE sketches, the input
     * of the cross-source overlap estimator (kmv_pair_estimate): a
@@ -153,40 +115,12 @@ object StreamingKmv {
     * pair estimates equal to the batch derivation on the same data).
     * State: (keys × salts) × ≤ k longs per open hour. */
   def keyedCells(values: Dataset[KeyedSeen], salts: Int = 16,
-      maxDelay: String = "1 hour"): Dataset[KeyedSketchHash] = {
-    require(salts >= 1, s"salts must be >= 1, got $salts")
-    implicit val timedEnc = Encoders.product[TimedKeyed]
-    implicit val stateEnc = Encoders.product[KmvState]
-    implicit val outEnc = Encoders.product[KeyedSketchHash]
-    values.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", maxDelay)
-      .withColumn("hourBucket", expr(s"tsUs div $HourUs"))
-      .withColumn("salt", pmod(xxhash64(col("value")), lit(salts.toLong)))
-      .as[TimedKeyed]
-      .groupByKey(v => (v.key, v.hourBucket, v.salt))(
-        Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
-          Encoders.scalaLong))
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        (khs: (String, Long, Long), it: Iterator[TimedKeyed],
-            state: GroupState[KmvState]) =>
-          val (key, hour, salt) = khs
-          val sketch = it.foldLeft(
-            state.getOption.getOrElse(KmvState(Vector.empty)).hs)(
-            (hs, v) => insert(hs, hash60(v.value)))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val hourEndUs = (hour + 1L) * HourUs
-          if (wmUs >= hourEndUs) {
-            state.remove()
-            sketch.iterator.map(h => KeyedSketchHash(key, hour, salt, h))
-          } else {
-            state.update(KmvState(sketch))
-            state.setTimeoutTimestamp(hourEndUs / 1000L)
-            Iterator.empty
-          }
-      }
-  }
+      maxDelay: String = "1 hour"): Dataset[KeyedSketchHash] =
+    ClosedHours.fold(values, maxDelay,
+      byKeySalt[KeyedSeen](hashSalt("value", salts))(_.key))(Empty)(
+      (s, v) => add(s, v.value)) { case ((key, hour, salt), s) =>
+      s.hs.iterator.map(h => KeyedSketchHash(key, hour, salt, h))
+    }
 
   /** Folds [[keyedCells]]' salt axis away: per-(key, hour) sketch
     * tables `key, hourBucket, h` (≤ keys × salts × k input rows per
@@ -223,30 +157,11 @@ object StreamingKmv {
   /** Single hour-global group emitting the folded summary directly —
     * the test-scale audit convenience. */
   def report(values: Dataset[SeenValue],
-      maxDelay: String = "1 hour"): Dataset[KmvEstimate] = {
-    implicit val stateEnc = Encoders.product[KmvState]
-    implicit val outEnc = Encoders.product[KmvEstimate]
-    timed(values, maxDelay, salts = 1)
-      .groupByKey(_.hourBucket)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        (hour: Long, it: Iterator[TimedValue],
-            state: GroupState[KmvState]) =>
-          val sketch = fold(
-            state.getOption.getOrElse(KmvState(Vector.empty)).hs, it)
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val hourEndUs = (hour + 1L) * HourUs
-          if (wmUs >= hourEndUs) {
-            state.remove()
-            val nK = sketch.size.toLong
-            val theta = if (sketch.isEmpty) 0L else sketch.last
-            Iterator.single(
-              KmvEstimate(hour, nK, theta, estimate(nK, theta)))
-          } else {
-            state.update(KmvState(sketch))
-            state.setTimeoutTimestamp(hourEndUs / 1000L)
-            Iterator.empty
-          }
-      }
-  }
+      maxDelay: String = "1 hour"): Dataset[KmvEstimate] =
+    ClosedHours.fold(values, maxDelay, byHour[SeenValue])(Empty)(
+      (s, v) => add(s, v.value)) { (hour, s) =>
+      val nK = s.hs.size.toLong
+      val theta = if (s.hs.isEmpty) 0L else s.hs.last
+      Iterator.single(KmvEstimate(hour, nK, theta, estimate(nK, theta)))
+    }
 }

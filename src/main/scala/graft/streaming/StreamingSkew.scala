@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** Streaming half of the `shard_skew_report` stream-health
   * diagnostic: per-(hour, shard) event counts with an integer-permille
@@ -18,30 +16,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * is needed — stragglers inside the watermark horizon just
   * increment, regardless of arrival order.
   *
-  * Emission is EXACTLY ONCE per (hour, shard), on hour close: rows
-  * emit only when the watermark reaches the hour end, at which point
-  * Spark's late-data filter can no longer admit any event of that
-  * hour (every such event's time is strictly below the hour end and
-  * the filter drops rows strictly below the watermark), so the
-  * closed totals — and the permilles derived from them — are final.
-  * Events later than the horizon belong to the batch backfill path,
-  * as with every watermarked stateful operator.
+  * Emission is the [[ClosedHours]] fold: EXACTLY ONCE per (hour,
+  * shard), when the watermark reaches the hour end, so the closed
+  * totals — and the permilles derived from them — are final.
   *
   * Scale shape: state is (open hours within the lateness horizon) ×
-  * (shards) longs — independent of event volume; closed hours drop
-  * their state on emission. Group count is the open-hour count, so a
-  * deep backfill replaying months of data holds only the horizon's
-  * worth of hour groups at a time.
+  * (shards) longs, so a deep backfill replaying months of data holds
+  * only the horizon's worth of hour groups at a time.
   */
 object StreamingSkew {
 
   case class SkewEvent(shardId: String, tsUs: Long)
-
-  /** [[SkewEvent]] + the TimestampType twin of `tsUs` that carries
-    * the watermark through the plan, and the precomputed hour
-    * bucket (the group key). */
-  private[streaming] case class TimedSkewEvent(shardId: String,
-      tsUs: Long, eventTime: java.sql.Timestamp, hourBucket: Long)
 
   case class SkewRow(hourBucket: Long, shardId: String, nEvents: Long,
       permille: Long)
@@ -50,49 +35,21 @@ object StreamingSkew {
     * Product-encoded (schema-ful state, see StreamingGaps). */
   private[streaming] case class SkewState(counts: Map[String, Long])
 
-  val HourUs: Long = 3600000000L
+  val HourUs: Long = ClosedHours.HourUs
 
   /** @param maxDelay watermark delay — how far behind the max seen
     *   event time a straggler may arrive and still count toward its
     *   hour (also how long after an hour's last event its row waits
     *   to emit) */
   def report(events: Dataset[SkewEvent],
-      maxDelay: String = "1 hour"): Dataset[SkewRow] = {
-    implicit val timedEnc = Encoders.product[TimedSkewEvent]
-    implicit val stateEnc = Encoders.product[SkewState]
-    implicit val outEnc = Encoders.product[SkewRow]
-    events.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", maxDelay)
-      .withColumn("hourBucket", expr(s"tsUs div $HourUs"))
-      .as[TimedSkewEvent]
-      .groupByKey(_.hourBucket)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        (hour: Long, it: Iterator[TimedSkewEvent],
-            state: GroupState[SkewState]) =>
-          val prior = state.getOption.getOrElse(SkewState(Map.empty))
-          val counts = it.foldLeft(prior.counts)((m, e) =>
-            m.updated(e.shardId, m.getOrElse(e.shardId, 0L) + 1L))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val hourEndUs = (hour + 1L) * HourUs
-          if (wmUs >= hourEndUs) {
-            // hour closed: totals are final (no admissible straggler
-            // remains — see Scaladoc); emit once and drop the state
-            state.remove()
-            val total = counts.values.sum
-            counts.toSeq.sortBy(_._1).iterator.map { case (shard, n) =>
-              SkewRow(hour, shard, n, n * 1000L / total)
-            }
-          } else {
-            state.update(SkewState(counts))
-            // wake exactly at hour close (HourUs is ms-aligned, so
-            // the ms-grained timeout loses nothing); always strictly
-            // later than the current watermark since every admitted
-            // event of this hour is below the hour end
-            state.setTimeoutTimestamp(hourEndUs / 1000L)
-            Iterator.empty
-          }
+      maxDelay: String = "1 hour"): Dataset[SkewRow] =
+    ClosedHours.fold(events, maxDelay,
+      ClosedHours.byHour[SkewEvent])(SkewState(Map.empty))((s, e) =>
+      SkewState(s.counts.updated(e.shardId,
+        s.counts.getOrElse(e.shardId, 0L) + 1L))) { (hour, s) =>
+      val total = s.counts.values.sum
+      s.counts.toSeq.sortBy(_._1).iterator.map { case (shard, n) =>
+        SkewRow(hour, shard, n, n * 1000L / total)
       }
-  }
+    }
 }

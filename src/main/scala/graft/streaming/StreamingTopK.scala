@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** Live per-window top-k: for each closed hour, the k busiest event
   * types with counts and ranks — the "what is the traffic made of
@@ -11,27 +9,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * needs the window's complete counts); the streaming form holds the
   * per-type counts as keyed state and ranks ONCE, at close.
   *
-  * Same state discipline as [[StreamingSkew]]: group key = hour
-  * bucket, state = one count per event type seen in that hour
-  * (types-bounded — event-type alphabets are small by design),
-  * counts are commutative so arrival order inside the watermark
-  * horizon is irrelevant, and emission is EXACTLY ONCE per closed
-  * hour: when the watermark reaches the hour end no admissible
-  * straggler remains, the counts are final, and the top-k ranking
-  * (count desc, type asc — total order, deterministic) is computed
-  * from finals only. Open hours emit nothing, so a dashboard never
-  * sees a provisional ranking that later reshuffles.
-  *
-  * Scale shape: state is (open hours in the horizon) × (types)
-  * longs, independent of event volume; closed hours drop state on
-  * emission.
+  * The [[ClosedHours]] fold with group key = hour bucket and state =
+  * one count per event type seen in that hour (types-bounded —
+  * event-type alphabets are small by design): emission is EXACTLY
+  * ONCE per closed hour, and the top-k ranking (count desc, type asc
+  * — total order, deterministic) is computed from final counts only,
+  * so a dashboard never sees a provisional ranking that later
+  * reshuffles. State is (open hours in the horizon) × (types) longs.
   */
 object StreamingTopK {
 
   case class TypedEvent(eventType: String, tsUs: Long)
-
-  private[streaming] case class TimedTypedEvent(eventType: String,
-      tsUs: Long, eventTime: java.sql.Timestamp, hourBucket: Long)
 
   case class TopKRow(hourBucket: Long, rank: Int, eventType: String,
       nEvents: Long)
@@ -40,38 +28,16 @@ object StreamingTopK {
     * evolvable; see StreamingGaps). */
   private[streaming] case class TopKState(counts: Map[String, Long])
 
-  val HourUs: Long = 3600000000L
+  val HourUs: Long = ClosedHours.HourUs
 
   def report(events: Dataset[TypedEvent], k: Int = 3,
-      maxDelay: String = "1 hour"): Dataset[TopKRow] = {
-    implicit val timedEnc = Encoders.product[TimedTypedEvent]
-    implicit val stateEnc = Encoders.product[TopKState]
-    implicit val outEnc = Encoders.product[TopKRow]
-    events.toDF()
-      .withColumn("eventTime", timestamp_micros(col("tsUs")))
-      .withWatermark("eventTime", maxDelay)
-      .withColumn("hourBucket", expr(s"tsUs div $HourUs"))
-      .as[TimedTypedEvent]
-      .groupByKey(_.hourBucket)(Encoders.scalaLong)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        (hour: Long, it: Iterator[TimedTypedEvent],
-            state: GroupState[TopKState]) =>
-          val prior = state.getOption.getOrElse(TopKState(Map.empty))
-          val counts = it.foldLeft(prior.counts)((m, e) =>
-            m.updated(e.eventType, m.getOrElse(e.eventType, 0L) + 1L))
-          val wmUs = state.getCurrentWatermarkMs() * 1000L
-          val hourEndUs = (hour + 1L) * HourUs
-          if (wmUs >= hourEndUs) {
-            state.remove()
-            counts.toSeq.sortBy { case (t, n) => (-n, t) }
-              .take(k).zipWithIndex.iterator
-              .map { case ((t, n), i) => TopKRow(hour, i + 1, t, n) }
-          } else {
-            state.update(TopKState(counts))
-            state.setTimeoutTimestamp(hourEndUs / 1000L)
-            Iterator.empty
-          }
-      }
-  }
+      maxDelay: String = "1 hour"): Dataset[TopKRow] =
+    ClosedHours.fold(events, maxDelay,
+      ClosedHours.byHour[TypedEvent])(TopKState(Map.empty))((s, e) =>
+      TopKState(s.counts.updated(e.eventType,
+        s.counts.getOrElse(e.eventType, 0L) + 1L))) { (hour, s) =>
+      s.counts.toSeq.sortBy { case (t, n) => (-n, t) }
+        .take(k).zipWithIndex.iterator
+        .map { case ((t, n), i) => TopKRow(hour, i + 1, t, n) }
+    }
 }

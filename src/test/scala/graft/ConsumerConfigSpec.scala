@@ -41,11 +41,5 @@ class ConsumerConfigSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       ConsumerConfig(maxNumberOfAttempts = 0)
     }
-    intercept[IllegalArgumentException] {
-      ConsumerConfig(timeoutAtPercentageOfRemainingTime = 0.0)
-    }
-    intercept[IllegalArgumentException] {
-      ConsumerConfig(timeoutAtPercentageOfRemainingTime = 1.5)
-    }
   }
 }
