@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deterministic distinct-count SKETCHES — the 100 TB path for
@@ -41,13 +42,26 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
+  /** The engine-wide 60-bit hash of a value: the first 15 md5 hex
+    * chars as a BIGINT (NULL for a NULL value). Every sketch here
+    * hashes through it, and the DuckDB oracles spell it
+    * `('0x' || substr(md5(v), 1, 15))::BIGINT`. */
+  def hash60(c: Column): Column =
+    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+
+  /** The `s1 < s2` self-join of the distinct `key`s of `keys`: every
+    * unordered pair once, the row set of the pair estimators. */
+  def pairsOf(keys: DataFrame): DataFrame = {
+    val k = keys.select("key").distinct()
+    k.select(col("key").as("s1"))
+      .join(k.select(col("key").as("s2")), col("s1") < col("s2"))
+  }
+
   /** Per-(key, register) max-rho table: `key, register, m`. */
   def hllRegisters(df: DataFrame, keyCol: Column, valueCol: Column,
       p: Int): DataFrame =
     hllRegistersFromHash(
-      df.select(keyCol.as("key"),
-        conv(substring(md5(valueCol), 1, 15), 16, 10).cast("long")
-          .as("h")), p)
+      df.select(keyCol.as("key"), hash60(valueCol).as("h")), p)
 
   /** The per-row register/rho derivation of [[hllRegistersFromHash]]
     * WITHOUT the terminal `(key, register)` max — for callers that
@@ -57,12 +71,15 @@ object Sketches {
     * (the 60-bit md5 prefix), carries every other input column
     * through, and appends `register` and `rho`. The ONE derivation:
     * [[hllRegistersFromHash]] is this plus `groupBy(key, register)
-    * .agg(max(rho))`. */
+    * .agg(max(rho))`. A NULL `h` (a NULL value) is no observation and
+    * is dropped: kept, it would form a NULL register that
+    * [[hllSummaryBy]] counts as occupied. */
   def hllRegisterRho(df: DataFrame, p: Int): DataFrame = {
     require(p >= 4 && p <= 16, s"p must be in [4, 16], got $p")
     val wBits = 60 - p
     val wMod = 1L << wBits
-    df.withColumn("register", expr(s"h div $wMod"))
+    df.filter(col("h").isNotNull)
+      .withColumn("register", expr(s"h div $wMod"))
       .withColumn("w", expr(s"h % $wMod"))
       .withColumn("rho", when(col("w") === 0L, lit(wBits + 1))
         .otherwise(lit(wBits + 1) - length(bin(col("w")))))
@@ -78,17 +95,21 @@ object Sketches {
     hllRegisterRho(df.select(col("key"), col("h")), p)
       .groupBy("key", "register").agg(max("rho").as("m"))
 
+  /** Merge of register tables by element-wise max per `keys` and
+    * register (the HLL merge law: registers of a union are the max of
+    * the parts'). Input/output: `keys…, register, m`. */
+  def hllMerge(regs: DataFrame, keys: String*): DataFrame =
+    regs.groupBy(keys.head, keys.tail :+ "register": _*)
+      .agg(max("m").as("m"))
+
   /** Register table → per-key summary `key, v_zero, s_scaled`. */
   def hllSummary(regs: DataFrame, p: Int): DataFrame =
     hllSummaryBy(regs, Seq("key"), p)
 
   /** [[hllSummary]] over ARBITRARY grouping columns — the ONE
     * derivation of the `(v_zero, s_scaled)` register fold, shared by
-    * the single-key summary above and the pair-union register algebra
-    * (hll_pair_overlap / hll_pair_estimate / kmv_pair_overlap group by
-    * `(s1, s2)`). r18 ADVICE: those queries previously duplicated the
-    * fold inline with hardcoded p=8 constants (256 / 53 / 2^53) in
-    * three places, which a future p change could silently drift. */
+    * the single-key summary above and the pair-union algebra of
+    * [[hllPairs]], which groups by `(s1, s2)`. */
   def hllSummaryBy(regs: DataFrame, groupCols: Seq[String], p: Int)
       : DataFrame = {
     val m = 1L << p
@@ -113,6 +134,28 @@ object Sketches {
     val alpha = s"0.7213e0 / (1e0 + 1.079e0 / ${m}e0)"
     s"$alpha * ${m.toDouble * m}e0 * ${(1L << top)}e0" +
       " / CAST(s_scaled AS DOUBLE)"
+  }
+
+  /** Pairwise HLL set algebra over a register table `key, register,
+    * m` and a [[pairsOf]] frame: per pair, the union's registers are
+    * the element-wise max of the two sides' (no rescan), and
+    * |A∩B| ≈ est(A) + est(B) − est(A∪B) ([[InterEstSql]]). Output:
+    * `s1, s2, v_zero, s_scaled, est_union, est_s1, est_s2,
+    * inter_est`. Every pair in `pairs` must name keys of `regs`. */
+  def hllPairs(regs: DataFrame, pairs: DataFrame, p: Int): DataFrame = {
+    val est = hllSummary(regs, p)
+      .withColumn("est", expr(hllEstimateSql(p)))
+      .select(col("key"), col("est"))
+    def side(s: String) = pairs.join(regs.withColumnRenamed("key", s), s)
+      .select("s1", "s2", "register", "m")
+    hllSummaryBy(hllMerge(side("s1").unionByName(side("s2")), "s1", "s2"),
+        Seq("s1", "s2"), p)
+      .withColumn("est_union", expr(hllEstimateSql(p)))
+      .join(est.select(col("key").as("s1"), col("est").as("est_s1")),
+        "s1")
+      .join(est.select(col("key").as("s2"), col("est").as("est_s2")),
+        "s2")
+      .withColumn("inter_est", expr(InterEstSql))
   }
 
   // ---------------------------------------------------------------
@@ -143,22 +186,15 @@ object Sketches {
   def kmvSketch(df: DataFrame, keyCol: Column, valueCol: Column,
       k: Int): DataFrame =
     kmvSketchFromHash(
-      df.select(keyCol.as("key"),
-        conv(substring(md5(valueCol), 1, 15), 16, 10).cast("long")
-          .as("h")), k)
+      df.select(keyCol.as("key"), hash60(valueCol).as("h")), k)
 
   /** [[kmvSketch]] over a PRE-HASHED frame `key, h` (see
     * [[hllRegistersFromHash]] for the hash contract and why). */
   def kmvSketchFromHash(df: DataFrame, k: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
-    df.select(col("key"), col("h"))
-      // r18 ADVICE: md5(NULL) -> NULL h would decode as 0L through the
-      // udaf's primitive long encoder, injecting a spurious minimum
-      // hash 0 into the sketch; a NULL value is "no observation"
-      .filter(col("h").isNotNull)
-      .groupBy("key")
-      .agg(graft.functions.KmvAgg.kmv(col("h"), k).as("hs"))
-      .select(col("key"), explode(col("hs")).as("h"))
+    // a NULL h would decode as 0L through the udaf's primitive long
+    // encoder, a spurious minimum hash; a NULL value is no observation
+    kmvMerge(df.select(col("key"), col("h")).filter(col("h").isNotNull), k)
   }
 
   /** Merge of KMV sketch tables built with the same k: bottom-k of
@@ -202,6 +238,36 @@ object Sketches {
     "CAST(n_match AS DOUBLE) * 1152921504606846976e0 " +
       "/ CAST(theta AS DOUBLE)"
 
+  /** The HLL inclusion–exclusion intersection estimate over a frame
+    * carrying `est_s1`, `est_s2` and `est_union`: the three inputs are
+    * bit-equal across engines (each is [[hllEstimateSql]]'s single
+    * division), so the fixed-order sum is engine-identical. */
+  val InterEstSql: String = "est_s1 + est_s2 - est_union"
+
+  /** Pairwise KMV intersection over a sketch table `key, h` and a
+    * [[pairsOf]] frame: the pair threshold θ = min(th_eff_A, th_eff_B),
+    * `n_match` = common hashes strictly below θ (0 for a pair with
+    * none), and `inter_est` by [[KmvInterEstSql]]. Output: `s1, s2,
+    * est_s1, est_s2, theta, n_match, inter_est` (`est_*` by
+    * [[kmvEstimateSql]]). */
+  def kmvPairs(kv: DataFrame, pairs: DataFrame, k: Int): DataFrame = {
+    val smry = kmvSummary(kv, k).withColumn("est", expr(kmvEstimateSql(k)))
+    def side(s: String, n: Int) = smry.select(col("key").as(s),
+      col("th_eff").as(s"t$n"), col("est").as(s"est_$s"))
+    val pth = pairs.join(side("s1", 1), "s1").join(side("s2", 2), "s2")
+      .withColumn("theta", least(col("t1"), col("t2")))
+      .select("s1", "s2", "est_s1", "est_s2", "theta")
+    val nMatch = pairs
+      .join(kv.select(col("key").as("s1"), col("h")), "s1")
+      .join(kv.select(col("key").as("s2"), col("h")), Seq("s2", "h"))
+      .join(pth.select("s1", "s2", "theta"), Seq("s1", "s2"))
+      .filter(col("h") < col("theta"))
+      .groupBy("s1", "s2").agg(count(lit(1)).as("n_match"))
+    pth.join(nMatch, Seq("s1", "s2"), "left")
+      .withColumn("n_match", coalesce(col("n_match"), lit(0L)))
+      .withColumn("inter_est", expr(KmvInterEstSql))
+  }
+
   // ---------------------------------------------------------------
   // Count-Min sketch (Cormode & Muthukrishnan 2005) — the COUNT
   // sibling of the HLL above: where the HLL answers "how many
@@ -221,8 +287,24 @@ object Sketches {
     * of the hashed text, so the d hash functions are independent
     * md5 draws, not correlated bit-slices of one digest. */
   def cmsCell(r: Column, key: Column, w: Int): Column =
-    conv(substring(md5(concat(r.cast("string"), lit(":cms:"), key)),
-      1, 15), 16, 10).cast("long") % w
+    hash60(concat(r.cast("string"), lit(":cms:"), key)) % w
+
+  /** The d row indexes `r` = 0 … d−1, exploded per input row. */
+  private def cmsRows(d: Int): Column =
+    explode(sequence(lit(0), lit(d - 1))).as("r")
+
+  /** The one cell-table body of the three builders below: `keyed`
+    * carries `by…, key, carry…`; each row explodes to its d rows, is
+    * hashed to its cell, and `cnt` aggregates per `(by…, r, c)`. */
+  private def cmsCellTable(keyed: DataFrame, by: Seq[String],
+      carry: Seq[String], d: Int, w: Int)(cnt: Column): DataFrame = {
+    require(d >= 1 && w >= 2, s"need d >= 1, w >= 2; got d=$d, w=$w")
+    val (b, c, g) = (by.map(col), carry.map(col), by ++ Seq("r", "c"))
+    keyed.select((b :+ cmsRows(d) :+ col("key")) ++ c: _*)
+      .select((b :+ col("r") :+ cmsCell(col("r"), col("key"), w).as("c"))
+        ++ c: _*)
+      .groupBy(g.head, g.tail: _*).agg(cnt.as("cnt"))
+  }
 
   /** Sketch build: per-(row, cell) counter table `r, c, cnt`.
     * The d-way explode happens BEFORE the aggregate, so map-side
@@ -231,13 +313,9 @@ object Sketches {
     * exact partial-aggregable BIGINT count, so sketches of corpus
     * shards merge by cell-wise addition for free. */
   def cmsCells(df: DataFrame, keyCol: Column, d: Int, w: Int)
-      : DataFrame = {
-    require(d >= 1 && w >= 2, s"need d >= 1, w >= 2; got d=$d, w=$w")
-    df.select(keyCol.as("key"))
-      .select(explode(sequence(lit(0), lit(d - 1))).as("r"), col("key"))
-      .select(col("r"), cmsCell(col("r"), col("key"), w).as("c"))
-      .groupBy("r", "c").agg(count(lit(1)).as("cnt"))
-  }
+      : DataFrame =
+    cmsCellTable(df.select(keyCol.as("key")), Nil, Nil, d, w)(
+      count(lit(1)))
 
   /** [[cmsCells]] with a slice/shard grouping column carried through
     * the aggregate — `(slice, r, c, cnt)`, one cell table per slice
@@ -247,15 +325,9 @@ object Sketches {
     * bit-identical to `cmsCells` over that slice alone; the exchange
     * stays capped at slices × d × w rows per partition. */
   def cmsCellsSliced(df: DataFrame, sliceCol: Column, keyCol: Column,
-      d: Int, w: Int): DataFrame = {
-    require(d >= 1 && w >= 2, s"need d >= 1, w >= 2; got d=$d, w=$w")
-    df.select(sliceCol.as("slice"), keyCol.as("key"))
-      .select(col("slice"),
-        explode(sequence(lit(0), lit(d - 1))).as("r"), col("key"))
-      .select(col("slice"), col("r"),
-        cmsCell(col("r"), col("key"), w).as("c"))
-      .groupBy("slice", "r", "c").agg(count(lit(1)).as("cnt"))
-  }
+      d: Int, w: Int): DataFrame =
+    cmsCellTable(df.select(sliceCol.as("slice"), keyCol.as("key")),
+      Seq("slice"), Nil, d, w)(count(lit(1)))
 
   /** [[cmsCells]] from a pre-aggregated `(key, cnt)` frame — for the
     * AUDIT rows that already pay a vocabulary aggregate for their
@@ -267,15 +339,13 @@ object Sketches {
     * vocabulary aggregate's exchange is vocab-sized, where
     * [[cmsCells]]' stays capped at d×w rows per partition whatever
     * the corpus — keep the streaming/ingest rows on [[cmsCells]]. */
-  def cmsCellsFromCounts(counts: DataFrame, d: Int, w: Int): DataFrame = {
-    require(d >= 1 && w >= 2, s"need d >= 1, w >= 2; got d=$d, w=$w")
-    counts
-      .select(explode(sequence(lit(0), lit(d - 1))).as("r"), col("key"),
-        col("cnt"))
-      .select(col("r"), cmsCell(col("r"), col("key"), w).as("c"),
-        col("cnt"))
-      .groupBy("r", "c").agg(sum("cnt").as("cnt"))
-  }
+  def cmsCellsFromCounts(counts: DataFrame, d: Int, w: Int): DataFrame =
+    cmsCellTable(counts, Nil, Seq("cnt"), d, w)(sum("cnt"))
+
+  /** Merge of cell tables built with the same d and w by cell-wise
+    * ADDITION (shard-safe, not idempotent). Input/output: `r, c, cnt`. */
+  def cmsMerge(cells: DataFrame): DataFrame =
+    cells.groupBy("r", "c").agg(sum("cnt").as("cnt"))
 
   /** Point-query estimates for a (small) candidate frame carrying
     * `key`: joins each candidate's d cells against the sketch and
@@ -296,8 +366,7 @@ object Sketches {
     val keyCols = candidates.columns.map(col).toSeq
     val joinType = if (missingAsZero) "left" else "inner"
     candidates
-      .select(keyCols :+
-        explode(sequence(lit(0), lit(d - 1))).as("r"): _*)
+      .select(keyCols :+ cmsRows(d): _*)
       .withColumn("c", cmsCell(col("r"), col("key"), w))
       .join(broadcast(cells), Seq("r", "c"), joinType)
       .groupBy(keyCols: _*)
@@ -353,4 +422,41 @@ object Sketches {
     s"CASE WHEN length(bin($v)) <= 5 THEN $v" +
       s" ELSE ($v >> (length(bin($v)) - 5)) <<" +
       s" (length(bin($v)) - 5) END"
+
+  /** Appends `bucket` and its inclusive lower bound `lo` for a frame's
+    * non-negative BIGINT `vi` column. */
+  def hdrBuckets(df: DataFrame): DataFrame =
+    df.withColumn("bucket", expr(hdrBucketSql("vi")))
+      .withColumn("lo", expr(hdrBucketLoSql("vi")))
+
+  /** Bucket histogram of `vi` per `groupCols`: `groupCols…, bucket,
+    * lo, cnt`. */
+  def hdrHistogram(df: DataFrame, groupCols: String*): DataFrame =
+    hdrBuckets(df).groupBy(groupCols.head, groupCols.tail :+ "bucket": _*)
+      .agg(min("lo").as("lo"), count(lit(1)).as("cnt"))
+
+  /** Merge of bucket histograms by ADDITION per `groupCols` and bucket
+    * (`lo` is a pure function of the bucket, so min() re-derives it).
+    * Shard-safe but not idempotent: a histogram merged twice counts
+    * twice. */
+  def hdrMerge(hist: DataFrame, groupCols: String*): DataFrame =
+    hist.groupBy(groupCols.head, groupCols.tail :+ "bucket": _*)
+      .agg(min("lo").as("lo"), sum("cnt").as("cnt"))
+
+  /** The quantile reader's first half: appends `cum` (the running
+    * `cnt` in `order` within `by`) and `n` (the `by` group's total) to
+    * a histogram — an HDR bucket histogram or an exact value one. */
+  def cumCounts(hist: DataFrame, by: String, order: String): DataFrame = {
+    val wn = Window.partitionBy(by)
+    hist.withColumn("cum", sum("cnt").over(wn.orderBy(order)))
+      .withColumn("n", sum("cnt").over(wn))
+  }
+
+  /** The quantile reader's second half, an aggregate over a
+    * [[cumCounts]] frame: the least `value` whose running count
+    * reaches p% of n. Integer comparison, so no float rank to drift
+    * between engines; read off HDR bucket lower bounds it never
+    * overestimates. */
+  def quantileAt(p: Int, value: String): Column =
+    min(when(col("cum") * 100 >= lit(p) * col("n"), col(value)))
 }

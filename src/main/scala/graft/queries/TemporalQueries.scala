@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{AsofJoin, Sketches}
@@ -63,6 +64,76 @@ object TemporalQueries {
       .withColumn("d", explode(sequence(col("day"), col("day") + 6)))
       .join(days.select(col("day").as("d")), Seq("d"))
 
+  /** An event's epoch-µs day. */
+  private def dayOf: Column =
+    expr("(ts div 1000) div 86400000000").as("day")
+
+  /** The HLL sliding rows' input: each event's `day` and its user as
+    * the string `uid`. */
+  private def userDays(s: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    Tables.events(s, dir)
+      .select(dayOf, col("user_id").cast("string").as("uid"))
+
+  /** `day, est_users` from a p=5 register table keyed by day. */
+  private def usersEstimate(regs: DataFrame): DataFrame =
+    Sketches.hllSummary(regs, 5)
+      .withColumnRenamed("key", "day")
+      .withColumn("est_users", expr(Sketches.hllEstimateSql(5)))
+      .select("day", "est_users")
+
+  /** Rolling 7-day `day, est_users` from per-day registers `day,
+    * register, m`: each window is one register max over its days. */
+  private def slidingUsers(dayRegs: DataFrame, days: DataFrame)
+      : DataFrame =
+    usersEstimate(expandWindow7(dayRegs, days)
+      .groupBy(col("d").as("key"), col("register"))
+      .agg(max("m").as("m")))
+
+  /** The HDR rows' input: positive event values as floor-1e6
+    * micro-units `vi` (the ONE float op, the same
+    * "floor(value * 1000000e0)" text in both engines; everything after
+    * is integer bit arithmetic), next to `keys`. */
+  private def valueMicros(s: org.apache.spark.sql.SparkSession,
+      dir: String, keys: Column*): DataFrame =
+    Tables.events(s, dir)
+      .filter(col("value").isNotNull && col("value") > 0)
+      .select(keys :+
+        expr("CAST(floor(value * 1000000e0) AS BIGINT)").as("vi"): _*)
+
+  private val Percents = Seq(50, 90, 99)
+
+  /** `pNN_<suffix>` for NN in [[Percents]] per `by`, read off a
+    * [[Sketches.cumCounts]] frame's `value`, plus `extra` aggregates. */
+  private def percentiles(cum: DataFrame, by: Column, value: String,
+      suffix: String, extra: Column*): DataFrame = {
+    val aggs = Percents.map(p =>
+      Sketches.quantileAt(p, value).as(s"p${p}_$suffix")) ++ extra
+    cum.groupBy(by).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** Rolling 7-day `day, p50_sketch, p90_sketch, p99_sketch` from
+    * per-day histograms `day, bucket, lo, cnt`: each window is a
+    * cell-wise add over its days. */
+  private def slidingPercentiles(dayHist: DataFrame, days: DataFrame)
+      : DataFrame =
+    percentiles(Sketches.cumCounts(
+        Sketches.hdrMerge(expandWindow7(dayHist, days), "d"), "d", "bucket"),
+      col("d").as("day"), "lo", "sketch")
+
+  /** The audit rows' `pNN_exact, pNN_sketch, pNN_err_pm` columns. The
+    * sketch reads bucket lower bounds, so err_pm is non-negative
+    * (truncating div and flooring // agree). value > 0 does not prevent
+    * vi = 0 on sub-microunit data, and a zero divisor splits the
+    * engines — Spark `div` returns NULL, DuckDB `//` raises — so the
+    * explicit CASE (mirrored in the oracle) makes it NULL in both. */
+  private def errPmColumns: Seq[Column] = Percents.flatMap { p =>
+    Seq(col(s"p${p}_exact"), col(s"p${p}_sketch"),
+      expr(s"CASE WHEN p${p}_exact = 0 THEN NULL ELSE " +
+        s"(p${p}_exact - p${p}_sketch) * 1000 div p${p}_exact END")
+        .as(s"p${p}_err_pm"))
+  }
+
   /** hll_sliding_users' permille error — ONE shared double string
     * (house discipline): est_users is one shared-SQL division,
     * exact_users an exact integer ≥ 1 (a day exists only with
@@ -75,7 +146,7 @@ object TemporalQueries {
     * SF-suffixed at-rest layout under the pid-scoped
     * [[graft.queries.artifactRoot]] (same concurrency contract as
     * TrainingQueries' sketch tables; writes serialize through
-    * [[TrainingQueries.writeSketchTable]]). The oracle never reads it
+    * [[TrainingQueries.overwriteThenAppend]]). The oracle never reads it
     * — it recomputes per-day registers from `events` (parquet
     * round-trips the integers losslessly). */
   private def hllDayExportPath(dir: String): String =
@@ -84,7 +155,7 @@ object TemporalQueries {
 
   /** hdr_sliding_from_table's persisted per-day bucket-histogram
     * table — the [[hllDayExportPath]] layout for the HDR family
-    * (same pid-scoped root, same [[TrainingQueries.writeSketchTable]]
+    * (same pid-scoped root, same [[TrainingQueries.overwriteThenAppend]]
     * serialization). One contract DIFFERENCE vs the HLL table,
     * documented because it changes the ingest law: HDR cells merge by
     * ADDITION (`hdr_merge_shards`), which is shard-safe but NOT
@@ -201,26 +272,16 @@ object TemporalQueries {
     // checkpointed per-day register frame ALONE, no corpus-scale
     // (day, user) distinct, no 7× window expansion of raw rows.
     "hll_sliding_users" -> { (s, dir) =>
-      val ev = Tables.events(s, dir)
-        .select(expr("(ts div 1000) div 86400000000").as("day"),
-          col("user_id").cast("string").as("uid"))
+      val ev = userDays(s, dir)
       val regs = Sketches.hllRegisters(ev, col("day"), col("uid"), 5)
         .withColumnRenamed("key", "day")
         .localCheckpoint()
       val days = regs.select("day").distinct()
-      val est = Sketches.hllSummary(
-          expandWindow7(regs, days)
-            .groupBy(col("d").as("key"), col("register"))
-            .agg(max("m").as("m")), 5)
-        .withColumnRenamed("key", "day")
-        .withColumn("est_users", expr(Sketches.hllEstimateSql(5)))
-        .select("day", "est_users")
-      val du = ev.distinct()
-      val exact = expandWindow7(du, days)
+      val exact = expandWindow7(ev.distinct(), days)
         .select(col("d"), col("uid")).distinct()
         .groupBy(col("d").as("day"))
         .agg(count(lit(1)).as("exact_users"))
-      est.join(exact, "day")
+      slidingUsers(regs, days).join(exact, "day")
         .withColumn("err_pm", expr(SlidingErrPermilleSql))
         .select("day", "est_users", "exact_users", "err_pm")
         .orderBy("day")
@@ -249,13 +310,8 @@ object TemporalQueries {
     // runs the window algebra over the read-back table.
     "hll_sliding_estimate" -> { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      val ev = Tables.events(s, dir)
-        .select(expr("(ts div 1000) div 86400000000").as("day"),
-          col("user_id").cast("string").as("uid"))
-      val hashed = ev.select(col("day"),
-        conv(substring(md5(col("uid")), 1, 15), 16, 10).cast("long")
-          .as("h"))
-      val winRegs = Sketches.hllRegisterRho(hashed, 5)
+      val winRegs = Sketches.hllRegisterRho(userDays(s, dir)
+          .select(col("day"), Sketches.hash60(col("uid")).as("h")), 5)
         .select(col("day"),
           explode(sequence(col("day"), col("day") + 6)).as("key"),
           col("register"), col("rho"))
@@ -267,11 +323,7 @@ object TemporalQueries {
         .withColumn("_obs_d", max("obs").over(Window.partitionBy("key")))
         .filter(col("_obs_d") === 1)
         .select("key", "register", "m")
-      Sketches.hllSummary(observed, 5)
-        .withColumnRenamed("key", "day")
-        .withColumn("est_users", expr(Sketches.hllEstimateSql(5)))
-        .select("day", "est_users")
-        .orderBy("day")
+      usersEstimate(observed).orderBy("day")
     },
 
     // hll_sliding_estimate over a PERSISTED day-grain sketch table
@@ -293,47 +345,22 @@ object TemporalQueries {
     // identical to hll_sliding_estimate (parquet round-trips the
     // integer registers losslessly), so both rows share one oracle.
     "hll_sliding_from_table" -> { (s, dir) =>
-      val ev = Tables.events(s, dir)
-        .select(expr("(ts div 1000) div 86400000000").as("day"),
-          col("user_id").cast("string").as("uid"))
-      // documented 1-row construction-time action (the closed-day
-      // split bound), guarded for the empty-table regime
-      val mx = ev.agg(max("day")).head
-      require(!mx.isNullAt(0),
+      val ev = userDays(s, dir)
+      val maxDay = TrainingQueries.splitBound(ev, "day",
         s"hll_sliding_from_table: events table at $dir is empty — " +
           "no day bound to split closed history vs the newest day")
-      val maxDay = mx.getLong(0)
-      def regs(f: org.apache.spark.sql.DataFrame) =
+      def regs(f: DataFrame) =
         Sketches.hllRegisters(f, col("day"), col("uid"), 5)
           .withColumnRenamed("key", "day")
-      val path = hllDayExportPath(dir)
-      // the overwrite+append PAIR holds the path lock across both
-      // writes (an interleaved pair from a concurrent construction
-      // would lose the append under overwrite)
-      TrainingQueries.withSketchTableLock(path) {
-        // at-rest table: every closed day before the newest, written
-        // once
-        TrainingQueries.writeSketchTable(
-          regs(ev.filter(col("day") < maxDay)), path)
-        // incremental ingest: the newly closed day's OWN registers
-        // only
-        TrainingQueries.writeSketchTable(
-          regs(ev.filter(col("day") === maxDay)), path,
-          mode = "append")
-      }
-      // read-back + register-max merge (idempotent: a re-appended day
-      // cannot inflate any register — the ingest law at day grain)
-      val tbl = s.read.parquet(path)
-        .groupBy("day", "register").agg(max("m").as("m"))
-      val days = tbl.select("day").distinct()
-      Sketches.hllSummary(
-          expandWindow7(tbl, days)
-            .groupBy(col("d").as("key"), col("register"))
-            .agg(max("m").as("m")), 5)
-        .withColumnRenamed("key", "day")
-        .withColumn("est_users", expr(Sketches.hllEstimateSql(5)))
-        .select("day", "est_users")
-        .orderBy("day")
+      // at rest: every closed day before the newest; appended: the
+      // newly closed day's OWN registers. The read-back register-max
+      // merge is idempotent — a re-appended day cannot inflate any
+      // register (the ingest law at day grain).
+      val tbl = Sketches.hllMerge(TrainingQueries.overwriteThenAppend(
+        regs(ev.filter(col("day") < maxDay)),
+        regs(ev.filter(col("day") === maxDay)), hllDayExportPath(dir)),
+        "day")
+      slidingUsers(tbl, tbl.select("day").distinct()).orderBy("day")
     },
 
     // As-of join: every non-purchase event picks up the user's most
@@ -609,54 +636,16 @@ object TemporalQueries {
     // histogram aggregates off one scan; windows run on bucket- and
     // value-cardinality frames, never the event stream.
     "hdr_value_quantiles" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val e = Tables.events(s, dir)
-        .filter(col("value").isNotNull && col("value") > 0)
-        .select(col("event_type"),
-          expr("CAST(floor(value * 1000000e0) AS BIGINT)").as("vi"))
-      val hist = e
-        .withColumn("bucket", expr(Sketches.hdrBucketSql("vi")))
-        .withColumn("lo", expr(Sketches.hdrBucketLoSql("vi")))
-        .groupBy("event_type", "bucket")
-        .agg(min("lo").as("lo"), count(lit(1)).as("cnt"))
-      val wn = Window.partitionBy("event_type")
-      val skCum = hist
-        .withColumn("cum", sum("cnt").over(wn.orderBy("bucket")))
-        .withColumn("n", sum("cnt").over(wn))
-      def q(v: String)(p: Int) =
-        min(when(col("cum") * 100 >= lit(p) * col("n"), col(v)))
-      val sk = skCum.groupBy("event_type")
-        .agg(q("lo")(50).as("p50_sketch"), q("lo")(90).as("p90_sketch"),
-          q("lo")(99).as("p99_sketch"),
-          count(lit(1)).as("n_buckets"))
-      val exCum = e.groupBy("event_type", "vi")
-        .agg(count(lit(1)).as("cnt"))
-        .withColumn("cum", sum("cnt").over(wn.orderBy("vi")))
-        .withColumn("n", sum("cnt").over(wn))
-      val ex = exCum.groupBy("event_type")
-        .agg(q("vi")(50).as("p50_exact"), q("vi")(90).as("p90_exact"),
-          q("vi")(99).as("p99_exact"))
-      // zero-guard (r19 verdict residual #1, propagating the
-      // hdr_sliding_quantiles fix): value > 0 does not prevent
-      // vi = floor(value·1e6) = 0 on sub-microunit data, and a zero
-      // divisor splits the engines — Spark `div` returns NULL, DuckDB
-      // `//` RAISES — so the explicit CASE (mirrored in the oracle)
-      // makes that regime NULL in both
+      val e = valueMicros(s, dir, col("event_type"))
+      val sk = percentiles(Sketches.cumCounts(
+          Sketches.hdrHistogram(e, "event_type"), "event_type", "bucket"),
+        col("event_type"), "lo", "sketch", count(lit(1)).as("n_buckets"))
+      val ex = percentiles(Sketches.cumCounts(
+          e.groupBy("event_type", "vi").agg(count(lit(1)).as("cnt")),
+          "event_type", "vi"),
+        col("event_type"), "vi", "exact")
       sk.join(ex, "event_type")
-        .select(col("event_type"),
-          col("p50_exact"), col("p50_sketch"),
-          expr("CASE WHEN p50_exact = 0 THEN NULL ELSE " +
-            "(p50_exact - p50_sketch) * 1000 div p50_exact END")
-            .as("p50_err_pm"),
-          col("p90_exact"), col("p90_sketch"),
-          expr("CASE WHEN p90_exact = 0 THEN NULL ELSE " +
-            "(p90_exact - p90_sketch) * 1000 div p90_exact END")
-            .as("p90_err_pm"),
-          col("p99_exact"), col("p99_sketch"),
-          expr("CASE WHEN p99_exact = 0 THEN NULL ELSE " +
-            "(p99_exact - p99_sketch) * 1000 div p99_exact END")
-            .as("p99_err_pm"),
-          col("n_buckets"))
+        .select(col("event_type") +: errPmColumns :+ col("n_buckets"): _*)
         .orderBy("event_type")
     },
 
@@ -678,56 +667,15 @@ object TemporalQueries {
     // hdr_sliding_sketch below — sketch percentiles from the per-day
     // histograms alone, no day×event expansion, no corpus re-sort.
     "hdr_sliding_quantiles" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val e = Tables.events(s, dir)
-        .filter(col("value").isNotNull && col("value") > 0)
-        .select(expr("(ts div 1000) div 86400000000").as("day"),
-          expr("CAST(floor(value * 1000000e0) AS BIGINT)").as("vi"))
-      val hist = e
-        .withColumn("bucket", expr(Sketches.hdrBucketSql("vi")))
-        .withColumn("lo", expr(Sketches.hdrBucketLoSql("vi")))
-        .groupBy("day", "bucket")
-        .agg(min("lo").as("lo"), count(lit(1)).as("cnt"))
-        .localCheckpoint()
+      val e = valueMicros(s, dir, dayOf)
+      val hist = Sketches.hdrHistogram(e, "day").localCheckpoint()
       val days = hist.select("day").distinct()
-      val winHist = expandWindow7(hist, days)
-        .groupBy("d", "bucket")
-        .agg(min("lo").as("lo"), sum("cnt").as("cnt"))
-      val wn = Window.partitionBy("d")
-      val skCum = winHist
-        .withColumn("cum", sum("cnt").over(wn.orderBy("bucket")))
-        .withColumn("n", sum("cnt").over(wn))
-      def q(v: String)(p: Int) =
-        min(when(col("cum") * 100 >= lit(p) * col("n"), col(v)))
-      val sk = skCum.groupBy(col("d").as("day"))
-        .agg(q("lo")(50).as("p50_sketch"), q("lo")(90).as("p90_sketch"),
-          q("lo")(99).as("p99_sketch"))
-      val exCum = expandWindow7(e, days)
-        .groupBy("d", "vi").agg(count(lit(1)).as("cnt"))
-        .withColumn("cum", sum("cnt").over(wn.orderBy("vi")))
-        .withColumn("n", sum("cnt").over(wn))
-      val ex = exCum.groupBy(col("d").as("day"))
-        .agg(q("vi")(50).as("p50_exact"), q("vi")(90).as("p90_exact"),
-          q("vi")(99).as("p99_exact"))
-      // zero-guard (r18 ADVICE): value > 0 does not prevent
-      // vi = floor(value·1e6) = 0 for sub-microunit values, and Spark
-      // `div` vs DuckDB `//` may diverge on a zero divisor — an
-      // explicit CASE (mirrored in the oracle) makes that regime NULL
-      // in both engines
-      sk.join(ex, "day")
-        .select(col("day"),
-          col("p50_exact"), col("p50_sketch"),
-          expr("CASE WHEN p50_exact = 0 THEN NULL ELSE " +
-            "(p50_exact - p50_sketch) * 1000 div p50_exact END")
-            .as("p50_err_pm"),
-          col("p90_exact"), col("p90_sketch"),
-          expr("CASE WHEN p90_exact = 0 THEN NULL ELSE " +
-            "(p90_exact - p90_sketch) * 1000 div p90_exact END")
-            .as("p90_err_pm"),
-          col("p99_exact"), col("p99_sketch"),
-          expr("CASE WHEN p99_exact = 0 THEN NULL ELSE " +
-            "(p99_exact - p99_sketch) * 1000 div p99_exact END")
-            .as("p99_err_pm"))
+      val ex = percentiles(Sketches.cumCounts(
+          expandWindow7(e, days).groupBy("d", "vi")
+            .agg(count(lit(1)).as("cnt")), "d", "vi"),
+        col("d").as("day"), "vi", "exact")
+      slidingPercentiles(hist, days).join(ex, "day")
+        .select(col("day") +: errPmColumns: _*)
         .orderBy("day")
     },
 
@@ -750,31 +698,17 @@ object TemporalQueries {
     // hdr_sliding_from_table oracle.
     "hdr_sliding_sketch" -> { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      val e = Tables.events(s, dir)
-        .filter(col("value").isNotNull && col("value") > 0)
-        .select(expr("(ts div 1000) div 86400000000").as("day"),
-          expr("CAST(floor(value * 1000000e0) AS BIGINT)").as("vi"))
-      val winHist = e
-        .withColumn("bucket", expr(Sketches.hdrBucketSql("vi")))
-        .withColumn("lo", expr(Sketches.hdrBucketLoSql("vi")))
+      val winHist = Sketches.hdrBuckets(valueMicros(s, dir, dayOf))
         .select(col("day"),
           explode(sequence(col("day"), col("day") + 6)).as("d"),
           col("bucket"), col("lo"))
         .groupBy("d", "bucket")
         .agg(min("lo").as("lo"), count(lit(1)).as("cnt"),
           max(when(col("day") === col("d"), 1).otherwise(0)).as("obs"))
-      val wn = Window.partitionBy("d")
-      val skCum = winHist
-        .withColumn("cum", sum("cnt").over(wn.orderBy("bucket")))
-        .withColumn("n", sum("cnt").over(wn))
-        .withColumn("_obs_d", max("obs").over(wn))
-      def q(p: Int) =
-        min(when(col("cum") * 100 >= lit(p) * col("n"), col("lo")))
-      skCum.filter(col("_obs_d") === 1)
-        .groupBy(col("d").as("day"))
-        .agg(q(50).as("p50_sketch"), q(90).as("p90_sketch"),
-          q(99).as("p99_sketch"))
-        .select("day", "p50_sketch", "p90_sketch", "p99_sketch")
+      val observed = Sketches.cumCounts(winHist, "d", "bucket")
+        .withColumn("_obs_d", max("obs").over(Window.partitionBy("d")))
+        .filter(col("_obs_d") === 1)
+      percentiles(observed, col("d").as("day"), "lo", "sketch")
         .orderBy("day")
     },
 
@@ -797,62 +731,21 @@ object TemporalQueries {
     // identical to hdr_sliding_sketch (lossless integer round-trip),
     // so both rows share one oracle.
     "hdr_sliding_from_table" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val e = Tables.events(s, dir)
-        .filter(col("value").isNotNull && col("value") > 0)
-        .select(expr("(ts div 1000) div 86400000000").as("day"),
-          expr("CAST(floor(value * 1000000e0) AS BIGINT)").as("vi"))
-      // documented 1-row construction-time action (the closed-day
-      // split bound), guarded for the empty-table regime
-      val mx = e.agg(max("day")).head
-      require(!mx.isNullAt(0),
+      val e = valueMicros(s, dir, dayOf)
+      val maxDay = TrainingQueries.splitBound(e, "day",
         s"hdr_sliding_from_table: events table at $dir has no " +
           "positive-value rows — no day bound to split closed " +
           "history vs the newest day")
-      val maxDay = mx.getLong(0)
-      def hist(f: org.apache.spark.sql.DataFrame) = f
-        .withColumn("bucket", expr(Sketches.hdrBucketSql("vi")))
-        .withColumn("lo", expr(Sketches.hdrBucketLoSql("vi")))
-        .groupBy("day", "bucket")
-        .agg(min("lo").as("lo"), count(lit(1)).as("cnt"))
-      val path = hdrDayExportPath(dir)
-      // the overwrite+append PAIR holds the path lock across both
-      // writes — doubly load-bearing here: cell-add is not
-      // idempotent, so an interleaved pair from a concurrent
-      // construction could double-count the newest day
-      TrainingQueries.withSketchTableLock(path) {
-        // at-rest table: every closed day before the newest, written
-        // once
-        TrainingQueries.writeSketchTable(
-          hist(e.filter(col("day") < maxDay)), path)
-        // incremental ingest: the newly closed day's OWN histogram
-        // only
-        TrainingQueries.writeSketchTable(
-          hist(e.filter(col("day") === maxDay)), path,
-          mode = "append")
-      }
-      // read-back + cell-wise ADD merge: collapses shard-split
-      // appends of one day (lo is a pure function of bucket, min()
-      // re-derives it); NOT a re-delivery shield — see the
-      // at-most-once contract on hdrDayExportPath
-      val tbl = s.read.parquet(path)
-        .groupBy("day", "bucket")
-        .agg(min("lo").as("lo"), sum("cnt").as("cnt"))
-      val days = tbl.select("day").distinct()
-      val winHist = expandWindow7(tbl, days)
-        .groupBy("d", "bucket")
-        .agg(min("lo").as("lo"), sum("cnt").as("cnt"))
-      val wn = Window.partitionBy("d")
-      val skCum = winHist
-        .withColumn("cum", sum("cnt").over(wn.orderBy("bucket")))
-        .withColumn("n", sum("cnt").over(wn))
-      def q(p: Int) =
-        min(when(col("cum") * 100 >= lit(p) * col("n"), col("lo")))
-      skCum.groupBy(col("d").as("day"))
-        .agg(q(50).as("p50_sketch"), q(90).as("p90_sketch"),
-          q(99).as("p99_sketch"))
-        .select("day", "p50_sketch", "p90_sketch", "p99_sketch")
-        .orderBy("day")
+      // at rest: every closed day before the newest; appended: the
+      // newly closed day's OWN histogram. The read-back cell-wise ADD
+      // collapses shard-split appends of one day; it is NOT a
+      // re-delivery shield (see the at-most-once contract on
+      // hdrDayExportPath).
+      val tbl = Sketches.hdrMerge(TrainingQueries.overwriteThenAppend(
+        Sketches.hdrHistogram(e.filter(col("day") < maxDay), "day"),
+        Sketches.hdrHistogram(e.filter(col("day") === maxDay), "day"),
+        hdrDayExportPath(dir)), "day")
+      slidingPercentiles(tbl, tbl.select("day").distinct()).orderBy("day")
     },
 
     // HDR member of the shard-merge family (hll_merge_shards /
@@ -866,19 +759,10 @@ object TemporalQueries {
     // one union exchange of ≤ 2 × types × 960 rows — SF-invariant
     // past the scans.
     "hdr_merge_shards" -> { (s, dir) =>
-      val e = Tables.events(s, dir)
-        .filter(col("value").isNotNull && col("value") > 0)
-        .select(col("user_id"), col("event_type"),
-          expr("CAST(floor(value * 1000000e0) AS BIGINT)").as("vi"))
-      def shard(p: Int) = e
-        .filter(pmod(col("user_id"), lit(2)) === p)
-        .withColumn("bucket", expr(Sketches.hdrBucketSql("vi")))
-        .withColumn("lo", expr(Sketches.hdrBucketLoSql("vi")))
-        .groupBy("event_type", "bucket")
-        .agg(min("lo").as("lo"), count(lit(1)).as("cnt"))
-      shard(0).unionByName(shard(1))
-        .groupBy("event_type", "bucket")
-        .agg(min("lo").as("lo"), sum("cnt").as("cnt"))
+      val e = valueMicros(s, dir, col("user_id"), col("event_type"))
+      def shard(p: Int) = Sketches.hdrHistogram(
+        e.filter(pmod(col("user_id"), lit(2)) === p), "event_type")
+      Sketches.hdrMerge(shard(0).unionByName(shard(1)), "event_type")
         .select("event_type", "bucket", "lo", "cnt")
         .orderBy("event_type", "bucket")
     },

@@ -1,8 +1,10 @@
 package graft.queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Sketches, TextAnalysis}
+import graft.operators.Sketches.InterEstSql
 import graft.sources.Tables
 
 /** Training-data pipeline queries over the `documents` table: text
@@ -200,15 +202,13 @@ object TrainingQueries {
   private val stopwordList = TextAnalysis.DefaultStopwords
     .map(w => s"'$w'").mkString("(", ",", ")")
 
-  /** hll_pair_overlap's inclusion–exclusion estimate and its permille
-    * error vs the exact audit — ONE shared double string each (house
-    * discipline): the three est inputs are bit-equal across engines
-    * (each is hllEstimateSql's single division), so the fixed-order
-    * sum and the floor'd permille are engine-identical. */
-  private val InterEstSql = "est_s1 + est_s2 - est_union"
-  // err_pm is NULL when the exact intersection is empty (r17 ADVICE:
-  // the permille-of-zero division is undefined, and the zero-overlap
-  // regime must still appear as a row, not silently drop)
+  /** The pair rows' permille error of an intersection estimate vs the
+    * exact audit — ONE shared double string (house discipline): the
+    * estimate ([[Sketches.InterEstSql]] / [[Sketches.KmvInterEstSql]])
+    * is bit-equal across engines, so the floor'd permille is too.
+    * NULL when the exact intersection is empty: the permille-of-zero
+    * division is undefined, and the zero-overlap regime must still
+    * appear as a row, not silently drop. */
   private def errPermilleSql(estCol: String): String =
     "CASE WHEN exact_inter = 0 THEN CAST(NULL AS BIGINT) ELSE " +
       s"CAST(floor(abs($estCol - CAST(exact_inter AS DOUBLE)) " +
@@ -350,10 +350,12 @@ object TrainingQueries {
       |WHERE rk <= 256 ORDER BY source, h""".stripMargin
 
   /** The whole-corpus CMS cell-table oracle — shared verbatim by
-    * cms_bigram_sketch (one-shot sketch build) and cms_table_ingest
+    * cms_bigram_sketch (one-shot sketch build), cms_merge_shards
+    * (parity shards merged by addition) and cms_table_ingest
     * (disjoint-slice write + append + read-back sum): the oracle
     * never slices, so hash equality on the full cell table IS the
-    * addition law proven through the durable round-trip. */
+    * addition law, proven in flight and through the durable
+    * round-trip. */
   private lazy val cmsCellTableOracleSql: String =
     s"""WITH t AS (
       |  SELECT $toksExpr AS toks FROM documents
@@ -369,6 +371,33 @@ object TrainingQueries {
       |  CAST(COUNT(*) AS BIGINT) AS cnt
       |FROM b, (SELECT unnest([0, 1, 2]) AS r)
       |GROUP BY 1, 2 ORDER BY r, c""".stripMargin
+
+  /** The whole-corpus per-source HLL summary oracle — shared verbatim
+    * by hll_shingle_sketch (one-shot register build) and
+    * hll_merge_shards (parity shards merged by register max): the
+    * oracle never shards, so hash equality proves the merge law. */
+  private lazy val hllSourceSketchOracleSql: String = {
+    val est = Sketches.hllEstimateSql(8)
+    s"""WITH sh AS (
+      |  SELECT source, unnest($shinglesExpr) AS sh FROM documents
+      |), hh AS (
+      |  SELECT source,
+      |    ('0x' || substr(md5(sh), 1, 15))::BIGINT AS h
+      |  FROM sh
+      |), r AS (
+      |  SELECT source, h // 4503599627370496 AS register,
+      |    MAX(CASE WHEN h % 4503599627370496 = 0 THEN 53
+      |      ELSE 53 - length(bin(h % 4503599627370496)) END) AS m
+      |  FROM hh GROUP BY source, register
+      |), su AS (
+      |  SELECT source, 256 - COUNT(*) AS v_zero,
+      |    (256 - COUNT(*)) * 9007199254740992 +
+      |      CAST(SUM(1::BIGINT << (53 - m)) AS BIGINT) AS s_scaled
+      |  FROM r GROUP BY source
+      |)
+      |SELECT source, v_zero, s_scaled, $est AS hll_estimate
+      |FROM su ORDER BY source""".stripMargin
+  }
 
   /** The corpus bigram stream (lowercased token pairs), shared by the
     * CMS sketch/report rows; `withDocId` keeps the shard key for the
@@ -406,6 +435,76 @@ object TrainingQueries {
           col("text"))).as("h"))
     if (withDocId) base else base.select("key", "h")
   }
+
+  /** The document ingest rows' overlapping split of the shingle hash
+    * stream, from ONE corpus scan: a row with doc_id < 4n/5 is tagged
+    * `existing`, one with doc_id ≥ 3n/5 is tagged `batch`, and the
+    * overlapping fifth — a deliberate re-crawl, which the idempotent
+    * merges must absorb — is exploded to both. Output `slice, key, h`. */
+  private def ingestSlices(s: org.apache.spark.sql.SparkSession,
+      dir: String, row: String, existing: String, batch: String)
+      : DataFrame = {
+    val n = docSplit(s, dir, row)
+    shingleHashStream(s, dir, withDocId = true)
+      .select(explode(array(
+          when(col("doc_id") < n * 4 / 5, lit(existing)),
+          when(col("doc_id") >= n * 3 / 5, lit(batch)))).as("slice"),
+        col("key"), col("h"))
+      .filter(col("slice").isNotNull)
+  }
+
+  /** The pair-overlap rows' TEST-SCALE audit: `pairs` (keyed `s1, s2`)
+    * LEFT-joined to the exact distinct-shingle intersection of the two
+    * sources, a corpus-scale self-join. A pair with no common shingle
+    * keeps its row, with exact_inter = 0. */
+  private def withExactOverlap(pairs: DataFrame,
+      s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
+    val dsh = Tables.documents(s, dir)
+      .select(col("source"),
+        explode(graft.functions.TextShingles.distinctShingles(3)(
+          col("text"))).as("sh"))
+      .distinct()
+    val exact = dsh.as("x")
+      .join(dsh.as("y"), col("x.sh") === col("y.sh") &&
+        col("x.source") < col("y.source"))
+      .groupBy(col("x.source").as("s1"), col("y.source").as("s2"))
+      .agg(count(lit(1)).as("exact_inter"))
+    pairs.join(exact, Seq("s1", "s2"), "left")
+      .withColumn("exact_inter", coalesce(col("exact_inter"), lit(0L)))
+  }
+
+  /** hll_shingle_sketch / hll_merge_shards' output over a p=8
+    * per-source register table. */
+  private def hllSourceSketch(regs: DataFrame): DataFrame =
+    Sketches.hllSummary(regs, 8)
+      .withColumnRenamed("key", "source")
+      .withColumn("hll_estimate", expr(Sketches.hllEstimateSql(8)))
+      .select("source", "v_zero", "s_scaled", "hll_estimate")
+      .orderBy("source")
+
+  /** kmv_merge_shards / kmv_table_ingest's output: the k=256 bottom-k
+    * merge of per-source sketch tables. */
+  private def kmvSourceTable(sketches: DataFrame): DataFrame =
+    Sketches.kmvMerge(sketches, 256)
+      .withColumnRenamed("key", "source")
+      .select("source", "h")
+      .orderBy("source", "h")
+
+  /** hll_pair_estimate / hll_pair_from_table's output over a p=8
+    * per-source register table. */
+  private def hllPairEstimate(regs: DataFrame): DataFrame =
+    Sketches.hllPairs(regs, Sketches.pairsOf(regs), 8)
+      .select("s1", "s2", "est_s1", "est_s2", "est_union", "inter_est")
+      .orderBy("s1", "s2")
+
+  /** kmv_pair_estimate / kmv_pair_from_table's output over a k=256
+    * per-source bottom-k table. */
+  private def kmvPairEstimate(kv: DataFrame): DataFrame =
+    Sketches.kmvPairs(kv, Sketches.pairsOf(Sketches.kmvSummary(kv, 256)),
+        256)
+      .select("s1", "s2", "est_s1", "est_s2", "n_match", "theta",
+        "inter_est")
+      .orderBy("s1", "s2")
 
   /** quota_sample's engine, parameterized on K so QuotaSampleSpec can
     * pin the K > corpus regime (the hardwired registry row uses
@@ -2627,12 +2726,8 @@ object TrainingQueries {
     // size; the summary fold and the one shared-SQL double division
     // happen on that fixed-width frame.
     "hll_shingle_sketch" -> { (s, dir) =>
-      Sketches.hllSummary(
-          Sketches.hllRegistersFromHash(shingleHashStream(s, dir), 8), 8)
-        .withColumnRenamed("key", "source")
-        .withColumn("hll_estimate", expr(Sketches.hllEstimateSql(8)))
-        .select("source", "v_zero", "s_scaled", "hll_estimate")
-        .orderBy("source")
+      hllSourceSketch(
+        Sketches.hllRegistersFromHash(shingleHashStream(s, dir), 8))
     },
 
     // cms_bigram_sketch: the d=3 × w=256 cell table itself. Plan:
@@ -2661,13 +2756,8 @@ object TrainingQueries {
       val sh = shingleHashStream(s, dir, withDocId = true)
       def shard(p: Int) = Sketches.hllRegistersFromHash(
         sh.filter(pmod(col("doc_id"), lit(2)) === p), 8)
-      val merged = shard(0).unionByName(shard(1))
-        .groupBy("key", "register").agg(max("m").as("m"))
-      Sketches.hllSummary(merged, 8)
-        .withColumnRenamed("key", "source")
-        .withColumn("hll_estimate", expr(Sketches.hllEstimateSql(8)))
-        .select("source", "v_zero", "s_scaled", "hll_estimate")
-        .orderBy("source")
+      hllSourceSketch(
+        Sketches.hllMerge(shard(0).unionByName(shard(1)), "key"))
     },
 
     "cms_merge_shards" -> { (s, dir) =>
@@ -2675,8 +2765,7 @@ object TrainingQueries {
       def shard(p: Int) = Sketches.cmsCells(
         big.filter(pmod(col("doc_id"), lit(2)) === p)
           .select("key"), col("key"), 3, 256)
-      shard(0).unionByName(shard(1))
-        .groupBy("r", "c").agg(sum("cnt").as("cnt"))
+      Sketches.cmsMerge(shard(0).unionByName(shard(1)))
         .select("r", "c", "cnt")
         .orderBy("r", "c")
     },
@@ -2699,45 +2788,25 @@ object TrainingQueries {
     // per batch — see cmsCellExportPath. Answer-time plan reads ONLY
     // the ≤ 768-row table (PlanPins pins `documents` absent).
     "cms_table_ingest" -> { (s, dir) =>
-      // documented 1-row construction-time action (the split bound),
-      // guarded for the empty-table regime
-      val mx = Tables.documents(s, dir).agg(max("doc_id")).head
-      require(!mx.isNullAt(0),
-        s"cms_table_ingest: documents table at $dir is empty — " +
-          "no doc_id bound to split existing corpus vs new batch")
-      val n = mx.getLong(0) + 1
-      // r21: ONE slice-tagged corpus scan builds BOTH cell tables —
-      // the slices are DISJOINT (cell-add is not idempotent), so the
-      // tag is a plain when() with no row expansion, and the slice
-      // rides the cell aggregate's key (cmsCellsSliced: the cell hash
-      // never sees it, each slice's cells are bit-identical to the
-      // separately-filtered build). Checkpointed split frame
-      // ≤ 2 × d × w rows.
-      val big = bigramStream(s, dir, withDocId = true)
+      val n = docSplit(s, dir, "cms_table_ingest")
+      // ONE slice-tagged corpus scan builds BOTH cell tables — the
+      // slices are DISJOINT (cell-add is not idempotent), so the tag is
+      // a plain when() with no row expansion, and the slice rides the
+      // cell aggregate's key (the cell hash never sees it). Checkpointed
+      // split frame ≤ 2 × d × w rows.
       val bySlice = Sketches.cmsCellsSliced(
-          big.select(when(col("doc_id") < n * 4 / 5, lit("existing"))
-            .otherwise(lit("batch")).as("slice"), col("key")),
+          bigramStream(s, dir, withDocId = true)
+            .select(when(col("doc_id") < n * 4 / 5, lit("existing"))
+              .otherwise(lit("batch")).as("slice"), col("key")),
           col("slice"), col("key"), 3, 256)
         .localCheckpoint()
-      val path = cmsCellExportPath(dir)
-      // the overwrite+append PAIR holds the path lock across both
-      // writes — doubly load-bearing here: cell-add is not
-      // idempotent, so an interleaved pair from a concurrent
-      // construction could double-count the new batch
-      withSketchTableLock(path) {
-        // at-rest table: the existing corpus slice, written once
-        writeSketchTable(
-          bySlice.filter(col("slice") === "existing")
-            .select("r", "c", "cnt"), path)
-        // incremental ingest: the new batch's OWN cells only
-        // (disjoint — addition is not idempotent)
-        writeSketchTable(
-          bySlice.filter(col("slice") === "batch")
-            .select("r", "c", "cnt"), path, mode = "append")
-      }
-      // read-back + cell-wise ADD = the whole-corpus sketch
-      s.read.parquet(path)
-        .groupBy("r", "c").agg(sum("cnt").as("cnt"))
+      def slice(name: String) =
+        bySlice.filter(col("slice") === name).select("r", "c", "cnt")
+      // at rest: the existing corpus slice; appended: the new batch's
+      // OWN cells only. Read back and added, they are the whole-corpus
+      // sketch.
+      Sketches.cmsMerge(overwriteThenAppend(slice("existing"),
+          slice("batch"), cmsCellExportPath(dir)))
         .select("r", "c", "cnt")
         .orderBy("r", "c")
     },
@@ -2754,10 +2823,7 @@ object TrainingQueries {
       val sh = shingleHashStream(s, dir, withDocId = true)
       def shard(p: Int) = Sketches.kmvSketchFromHash(
         sh.filter(pmod(col("doc_id"), lit(2)) === p), 256)
-      Sketches.kmvMerge(shard(0).unionByName(shard(1)), 256)
-        .withColumnRenamed("key", "source")
-        .select("source", "h")
-        .orderBy("source", "h")
+      kmvSourceTable(shard(0).unionByName(shard(1)))
     },
 
     // KMV member of the table-ingest family (r20 — with this row the
@@ -2777,35 +2843,12 @@ object TrainingQueries {
     // steady-state production only the batch scan recurs; the merge
     // re-aggregate sees ≤ 2 × sources × k longs at any corpus size.
     "kmv_table_ingest" -> { (s, dir) =>
-      val d = Tables.documents(s, dir)
-      // documented 1-row construction-time action (the split bound),
-      // guarded for the empty-table regime
-      val mx = d.agg(max("doc_id")).head
-      require(!mx.isNullAt(0),
-        s"kmv_table_ingest: documents table at $dir is empty — " +
-          "no doc_id bound to split existing corpus vs new batch")
-      val n = mx.getLong(0) + 1
-      // r21: ONE slice-tagged corpus scan builds BOTH bottom-k sets
-      // (hll_table_ingest's explode-membership shape — the overlap
-      // fifth belongs to both slices, which is the deliberate
-      // re-crawl that proves bottom-k idempotence by hash); the
+      // the slice rides the aggregate key as a FIXED-WIDTH 2-char
+      // prefix on the source string, not a struct: KmvAgg's hash
+      // aggregate then groups on a flat string key, and the prefix
+      // strips back off positionally on the sketch-sized output. The
       // checkpointed split frame is ≤ 2 × sources × 256 longs.
-      // r22 (verdict #3): the slice rides the aggregate key as a
-      // 1-char PREFIX on the source string instead of a struct —
-      // KmvAgg's hash-aggregate then groups on a flat string key
-      // (one UnsafeRow field) rather than a nested row, and the
-      // prefix strips back off with two substrings on the
-      // sketch-sized output. Source names never contain the
-      // separator's position ambiguity: the prefix is FIXED-WIDTH
-      // ("e:"/"b:"), so the split is positional, not delimiter-based.
-      val sh = shingleHashStream(s, dir, withDocId = true)
-      val tagged = sh.select(
-          explode(array(
-            when(col("doc_id") < n * 4 / 5, lit("e:")),
-            when(col("doc_id") >= n * 3 / 5, lit("b:"))))
-            .as("slice"),
-          col("key"), col("h"))
-        .filter(col("slice").isNotNull)
+      val tagged = ingestSlices(s, dir, "kmv_table_ingest", "e:", "b:")
       val bySlice = Sketches.kmvSketchFromHash(
           tagged.select(concat(col("slice"), col("key")).as("key"),
             col("h")), 256)
@@ -2816,12 +2859,8 @@ object TrainingQueries {
       // at-rest table: the existing corpus slice, written once
       writeSketchTable(
         bySlice.filter(col("slice") === "e:").drop("slice"), path)
-      val existing = s.read.parquet(path)
-      val batch = bySlice.filter(col("slice") === "b:").drop("slice")
-      Sketches.kmvMerge(existing.unionByName(batch), 256)
-        .withColumnRenamed("key", "source")
-        .select("source", "h")
-        .orderBy("source", "h")
+      kmvSourceTable(s.read.parquet(path).unionByName(
+        bySlice.filter(col("slice") === "b:").drop("slice")))
     },
 
     // SKETCH SET-ALGEBRA — pairwise source-vocabulary OVERLAP from
@@ -2847,62 +2886,16 @@ object TrainingQueries {
     // worst — sketch-sized, not corpus-sized); only the audit branch
     // touches corpus-scale data.
     "hll_pair_overlap" -> { (s, dir) =>
-      // r21: both corpus passes run COMPILED kernels — the register
-      // build hashes in-kernel (shingleHashStream) and the exact
-      // audit's distinct feeds from the per-doc-distinct kernel
-      // (per-doc dedup cannot change a cross-doc distinct) — replacing
-      // the interpreted shingle-transform HOF + per-shingle
-      // hex/substring/conv chain on both. Branch structure is
-      // deliberately unchanged (eager checkpointed sketch, lazy exact
-      // audit): the audit stays count()-elidable, so the bench's
-      // headline column keeps measuring the production branch.
-      // checkpoint the register frame (r17 verdict): the est / srcs /
-      // pair-union branches reference it ~7×; without this the static
-      // plan embeds 20 corpus scans (AQE recovered 7 reuses but still
-      // executed 3 scans + explodes)
+      // the sketch is eager and checkpointed, the exact audit lazy: the
+      // audit stays count()-elidable, so the bench's headline column
+      // keeps measuring the production branch. The est / pairs /
+      // pair-union branches read the register frame ~7×; without the
+      // checkpoint the static plan embeds one corpus scan per read.
       val regs = Sketches.hllRegistersFromHash(
           shingleHashStream(s, dir), 8)
         .localCheckpoint()
-      val est = Sketches.hllSummary(regs, 8)
-        .withColumn("est", expr(Sketches.hllEstimateSql(8)))
-        .select(col("key"), col("est"))
-      val srcs = regs.select("key").distinct()
-      val pairs = srcs.select(col("key").as("s1"))
-        .join(srcs.select(col("key").as("s2")), col("s1") < col("s2"))
-      val pu = pairs
-        .join(regs.withColumnRenamed("key", "s1"), "s1")
-        .select("s1", "s2", "register", "m")
-        .unionByName(pairs
-          .join(regs.withColumnRenamed("key", "s2"), "s2")
-          .select("s1", "s2", "register", "m"))
-      // the (s1, s2)-keyed register fold is Sketches.hllSummaryBy —
-      // ONE derivation shared with the single-key summary (r18 ADVICE:
-      // previously inlined with hardcoded p=8 constants in 3 places)
-      val unionSummary = Sketches.hllSummaryBy(
-          pu.groupBy("s1", "s2", "register").agg(max("m").as("m")),
-          Seq("s1", "s2"), 8)
-        .withColumn("est_union", expr(Sketches.hllEstimateSql(8)))
-      val dsh = Tables.documents(s, dir)
-        .select(col("source"),
-          explode(graft.functions.TextShingles.distinctShingles(3)(
-            col("text"))).as("sh"))
-        .distinct()
-      val exact = dsh.as("x")
-        .join(dsh.as("y"), col("x.sh") === col("y.sh") &&
-          col("x.source") < col("y.source"))
-        .groupBy(col("x.source").as("s1"), col("y.source").as("s2"))
-        .agg(count(lit(1)).as("exact_inter"))
-      // LEFT join (r17 ADVICE): a pair with zero exact overlap — the
-      // very regime the err_pm commentary flags — must surface with
-      // exact_inter = 0 and a NULL err_pm, not vanish from the row set
-      unionSummary
-        .join(est.select(col("key").as("s1"), col("est").as("est_s1")),
-          "s1")
-        .join(est.select(col("key").as("s2"), col("est").as("est_s2")),
-          "s2")
-        .join(exact, Seq("s1", "s2"), "left")
-        .withColumn("exact_inter", coalesce(col("exact_inter"), lit(0L)))
-        .withColumn("inter_est", expr(InterEstSql))
+      withExactOverlap(Sketches.hllPairs(regs, Sketches.pairsOf(regs), 8),
+          s, dir)
         .withColumn("err_pm", expr(InterErrPermilleSql))
         .select("s1", "s2", "exact_inter", "inter_est", "err_pm")
         .orderBy("s1", "s2")
@@ -2924,33 +2917,8 @@ object TrainingQueries {
     // the whole query holds ONE corpus scan, executed at
     // construction (PlanPinsSpec pins the final plan parquet-free).
     "hll_pair_estimate" -> { (s, dir) =>
-      val regs = Sketches.hllRegistersFromHash(
-          shingleHashStream(s, dir), 8)
-        .localCheckpoint()
-      val est = Sketches.hllSummary(regs, 8)
-        .withColumn("est", expr(Sketches.hllEstimateSql(8)))
-        .select(col("key"), col("est"))
-      val srcs = regs.select("key").distinct()
-      val pairs = srcs.select(col("key").as("s1"))
-        .join(srcs.select(col("key").as("s2")), col("s1") < col("s2"))
-      val pu = pairs
-        .join(regs.withColumnRenamed("key", "s1"), "s1")
-        .select("s1", "s2", "register", "m")
-        .unionByName(pairs
-          .join(regs.withColumnRenamed("key", "s2"), "s2")
-          .select("s1", "s2", "register", "m"))
-      Sketches.hllSummaryBy(
-          pu.groupBy("s1", "s2", "register").agg(max("m").as("m")),
-          Seq("s1", "s2"), 8)
-        .withColumn("est_union", expr(Sketches.hllEstimateSql(8)))
-        .join(est.select(col("key").as("s1"), col("est").as("est_s1")),
-          "s1")
-        .join(est.select(col("key").as("s2"), col("est").as("est_s2")),
-          "s2")
-        .withColumn("inter_est", expr(InterEstSql))
-        .select("s1", "s2", "est_s1", "est_s2", "est_union",
-          "inter_est")
-        .orderBy("s1", "s2")
+      hllPairEstimate(Sketches.hllRegistersFromHash(
+        shingleHashStream(s, dir), 8).localCheckpoint())
     },
 
     // KMV pair overlap — the SMALL-INTERSECTION estimator
@@ -2968,73 +2936,21 @@ object TrainingQueries {
     // TEST-SCALE comparison twin, kmv_pair_estimate below is the
     // production form.
     "kmv_pair_overlap" -> { (s, dir) =>
-      // r21: all three corpus passes run COMPILED kernels (see
-      // hll_pair_overlap) — KMV and HLL sketch builds hash in-kernel,
-      // the exact audit's distinct feeds from the per-doc-distinct
-      // kernel. Branch structure unchanged: eager checkpointed
-      // sketches, lazy count()-elidable exact audit.
-      // ---- KMV branch: sketch, summary, pair matching
+      // eager checkpointed sketches, lazy count()-elidable exact audit
+      // (see hll_pair_overlap); ONE pairs frame feeds both estimators
       val kv = Sketches.kmvSketchFromHash(shingleHashStream(s, dir), 256)
         .localCheckpoint()
-      val smry = Sketches.kmvSummary(kv, 256)
-      val srcs = smry.select("key").distinct()
-      val pairs = srcs.select(col("key").as("s1"))
-        .join(srcs.select(col("key").as("s2")), col("s1") < col("s2"))
-      val pth = pairs
-        .join(smry.select(col("key").as("s1"), col("th_eff").as("t1")),
-          "s1")
-        .join(smry.select(col("key").as("s2"), col("th_eff").as("t2")),
-          "s2")
-        .withColumn("theta", least(col("t1"), col("t2")))
-        .select("s1", "s2", "theta")
-      val common = pairs
-        .join(kv.select(col("key").as("s1"), col("h")), "s1")
-        .join(kv.select(col("key").as("s2"), col("h")), Seq("s2", "h"))
-      val nMatch = common.join(pth, Seq("s1", "s2"))
-        .filter(col("h") < col("theta"))
-        .groupBy("s1", "s2").agg(count(lit(1)).as("n_match"))
-      val kmvPairs = pth.join(nMatch, Seq("s1", "s2"), "left")
-        .withColumn("n_match", coalesce(col("n_match"), lit(0L)))
-        .withColumn("inter_kmv", expr(Sketches.KmvInterEstSql))
-        .select("s1", "s2", "inter_kmv")
-      // ---- HLL branch: the hll_pair_overlap inclusion–exclusion
+      val pairs = Sketches.pairsOf(Sketches.kmvSummary(kv, 256))
       val regs = Sketches.hllRegistersFromHash(
           shingleHashStream(s, dir), 8)
         .localCheckpoint()
-      val est = Sketches.hllSummary(regs, 8)
-        .withColumn("est", expr(Sketches.hllEstimateSql(8)))
-        .select(col("key"), col("est"))
-      val pu = pairs
-        .join(regs.withColumnRenamed("key", "s1"), "s1")
-        .select("s1", "s2", "register", "m")
-        .unionByName(pairs
-          .join(regs.withColumnRenamed("key", "s2"), "s2")
-          .select("s1", "s2", "register", "m"))
-      val hllPairs = Sketches.hllSummaryBy(
-          pu.groupBy("s1", "s2", "register").agg(max("m").as("m")),
-          Seq("s1", "s2"), 8)
-        .withColumn("est_union", expr(Sketches.hllEstimateSql(8)))
-        .join(est.select(col("key").as("s1"), col("est").as("est_s1")),
-          "s1")
-        .join(est.select(col("key").as("s2"), col("est").as("est_s2")),
-          "s2")
-        .withColumn("inter_hll", expr(InterEstSql))
-        .select("s1", "s2", "inter_hll")
-      // ---- exact audit (test-scale; see hll_pair_overlap)
-      val dsh = Tables.documents(s, dir)
-        .select(col("source"),
-          explode(graft.functions.TextShingles.distinctShingles(3)(
-            col("text"))).as("sh"))
-        .distinct()
-      val exact = dsh.as("x")
-        .join(dsh.as("y"), col("x.sh") === col("y.sh") &&
-          col("x.source") < col("y.source"))
-        .groupBy(col("x.source").as("s1"), col("y.source").as("s2"))
-        .agg(count(lit(1)).as("exact_inter"))
-      kmvPairs
-        .join(hllPairs, Seq("s1", "s2"))
-        .join(exact, Seq("s1", "s2"), "left")
-        .withColumn("exact_inter", coalesce(col("exact_inter"), lit(0L)))
+      def inter(est: DataFrame, name: String) =
+        est.select(col("s1"), col("s2"), col("inter_est").as(name))
+      withExactOverlap(
+          inter(Sketches.kmvPairs(kv, pairs, 256), "inter_kmv")
+            .join(inter(Sketches.hllPairs(regs, pairs, 8), "inter_hll"),
+              Seq("s1", "s2")),
+          s, dir)
         .withColumn("err_pm_hll", expr(errPermilleSql("inter_hll")))
         .withColumn("err_pm_kmv", expr(errPermilleSql("inter_kmv")))
         .select("s1", "s2", "exact_inter", "inter_hll", "err_pm_hll",
@@ -3051,33 +2967,8 @@ object TrainingQueries {
     // string divisions. At 100 TB: sketches persist per source;
     // sources² pair estimates cost zero corpus reads.
     "kmv_pair_estimate" -> { (s, dir) =>
-      val kv = Sketches.kmvSketchFromHash(shingleHashStream(s, dir), 256)
-        .localCheckpoint()
-      val smry = Sketches.kmvSummary(kv, 256)
-        .withColumn("est", expr(Sketches.kmvEstimateSql(256)))
-      val srcs = smry.select("key").distinct()
-      val pairs = srcs.select(col("key").as("s1"))
-        .join(srcs.select(col("key").as("s2")), col("s1") < col("s2"))
-      val pth = pairs
-        .join(smry.select(col("key").as("s1"), col("th_eff").as("t1"),
-          col("est").as("est_s1")), "s1")
-        .join(smry.select(col("key").as("s2"), col("th_eff").as("t2"),
-          col("est").as("est_s2")), "s2")
-        .withColumn("theta", least(col("t1"), col("t2")))
-        .select("s1", "s2", "est_s1", "est_s2", "theta")
-      val common = pairs
-        .join(kv.select(col("key").as("s1"), col("h")), "s1")
-        .join(kv.select(col("key").as("s2"), col("h")), Seq("s2", "h"))
-      val nMatch = common
-        .join(pth.select("s1", "s2", "theta"), Seq("s1", "s2"))
-        .filter(col("h") < col("theta"))
-        .groupBy("s1", "s2").agg(count(lit(1)).as("n_match"))
-      pth.join(nMatch, Seq("s1", "s2"), "left")
-        .withColumn("n_match", coalesce(col("n_match"), lit(0L)))
-        .withColumn("inter_est", expr(Sketches.KmvInterEstSql))
-        .select("s1", "s2", "est_s1", "est_s2", "n_match", "theta",
-          "inter_est")
-        .orderBy("s1", "s2")
+      kmvPairEstimate(Sketches.kmvSketchFromHash(
+        shingleHashStream(s, dir), 256).localCheckpoint())
     },
 
     // hll_pair_estimate over a PERSISTED sketch table (r18 verdict
@@ -3101,31 +2992,7 @@ object TrainingQueries {
       writeSketchTable(
         Sketches.hllRegistersFromHash(shingleHashStream(s, dir), 8),
         path)
-      val regs = s.read.parquet(path)
-      val est = Sketches.hllSummary(regs, 8)
-        .withColumn("est", expr(Sketches.hllEstimateSql(8)))
-        .select(col("key"), col("est"))
-      val srcs = regs.select("key").distinct()
-      val pairs = srcs.select(col("key").as("s1"))
-        .join(srcs.select(col("key").as("s2")), col("s1") < col("s2"))
-      val pu = pairs
-        .join(regs.withColumnRenamed("key", "s1"), "s1")
-        .select("s1", "s2", "register", "m")
-        .unionByName(pairs
-          .join(regs.withColumnRenamed("key", "s2"), "s2")
-          .select("s1", "s2", "register", "m"))
-      Sketches.hllSummaryBy(
-          pu.groupBy("s1", "s2", "register").agg(max("m").as("m")),
-          Seq("s1", "s2"), 8)
-        .withColumn("est_union", expr(Sketches.hllEstimateSql(8)))
-        .join(est.select(col("key").as("s1"), col("est").as("est_s1")),
-          "s1")
-        .join(est.select(col("key").as("s2"), col("est").as("est_s2")),
-          "s2")
-        .withColumn("inter_est", expr(InterEstSql))
-        .select("s1", "s2", "est_s1", "est_s2", "est_union",
-          "inter_est")
-        .orderBy("s1", "s2")
+      hllPairEstimate(s.read.parquet(path))
     },
 
     // Incremental INGEST against the persisted sketch table —
@@ -3143,31 +3010,10 @@ object TrainingQueries {
     // sets from the raw slices directly, so hash equality proves the
     // at-rest round trip AND the ingest merge law on real data.
     "hll_table_ingest" -> { (s, dir) =>
-      val d = Tables.documents(s, dir)
-      // documented 1-row construction-time action (the split bound);
-      // guarded (r19 ADVICE): max() of an empty table is NULL and
-      // would otherwise NPE here when the query is merely constructed
-      val mx = d.agg(max("doc_id")).head
-      require(!mx.isNullAt(0),
-        s"hll_table_ingest: documents table at $dir is empty — " +
-          "no doc_id bound to split existing corpus vs new batch")
-      val n = mx.getLong(0) + 1
-      // r21: ONE slice-tagged corpus scan builds BOTH register sets —
-      // each shingle row explodes to its slice memberships (the
-      // overlap fifth belongs to both, 6n/5 aggregate input rows
-      // either way) and the slice rides the aggregate key as a
-      // struct, so the existing-vs-batch split costs one scan+kernel
-      // pass instead of the two separately-filtered scans (guide §1.2
-      // "don't pay two passes where one suffices"). The checkpointed
-      // split frame is sketch-sized (≤ 2 × sources × 256 rows).
-      val sh = shingleHashStream(s, dir, withDocId = true)
-      val tagged = sh.select(
-          explode(array(
-            when(col("doc_id") < n * 4 / 5, lit("existing")),
-            when(col("doc_id") >= n * 3 / 5, lit("batch"))))
-            .as("slice"),
-          col("key"), col("h"))
-        .filter(col("slice").isNotNull)
+      // the slice rides the aggregate key as a struct; the checkpointed
+      // split frame is sketch-sized (≤ 2 × sources × 256 rows)
+      val tagged =
+        ingestSlices(s, dir, "hll_table_ingest", "existing", "batch")
       val bySlice = Sketches.hllRegistersFromHash(
           tagged.select(struct(col("slice"), col("key")).as("key"),
             col("h")), 8)
@@ -3179,15 +3025,12 @@ object TrainingQueries {
         bySlice.filter(col("slice") === "existing").drop("slice"), path)
       val existing = s.read.parquet(path)
       val batch = bySlice.filter(col("slice") === "batch").drop("slice")
-      val merged = existing.unionByName(batch)
-        .groupBy("key", "register").agg(max("m").as("m"))
-      val estE = Sketches.hllSummary(existing, 8)
-        .withColumn("est_existing", expr(Sketches.hllEstimateSql(8)))
-        .select(col("key"), col("est_existing"))
-      val estM = Sketches.hllSummary(merged, 8)
-        .withColumn("est_merged", expr(Sketches.hllEstimateSql(8)))
-        .select(col("key"), col("est_merged"))
-      estE.join(estM, "key")
+      def est(regs: DataFrame, name: String) = Sketches.hllSummary(regs, 8)
+        .withColumn(name, expr(Sketches.hllEstimateSql(8)))
+        .select(col("key"), col(name))
+      est(existing, "est_existing")
+        .join(est(Sketches.hllMerge(existing.unionByName(batch), "key"),
+          "est_merged"), "key")
         .select(col("key").as("source"), col("est_existing"),
           col("est_merged"))
         .orderBy("source")
@@ -3213,32 +3056,7 @@ object TrainingQueries {
       writeSketchTable(
         Sketches.kmvSketchFromHash(shingleHashStream(s, dir), 256),
         path)
-      val kv = s.read.parquet(path)
-      val smry = Sketches.kmvSummary(kv, 256)
-        .withColumn("est", expr(Sketches.kmvEstimateSql(256)))
-      val srcs = smry.select("key").distinct()
-      val pairs = srcs.select(col("key").as("s1"))
-        .join(srcs.select(col("key").as("s2")), col("s1") < col("s2"))
-      val pth = pairs
-        .join(smry.select(col("key").as("s1"), col("th_eff").as("t1"),
-          col("est").as("est_s1")), "s1")
-        .join(smry.select(col("key").as("s2"), col("th_eff").as("t2"),
-          col("est").as("est_s2")), "s2")
-        .withColumn("theta", least(col("t1"), col("t2")))
-        .select("s1", "s2", "est_s1", "est_s2", "theta")
-      val common = pairs
-        .join(kv.select(col("key").as("s1"), col("h")), "s1")
-        .join(kv.select(col("key").as("s2"), col("h")), Seq("s2", "h"))
-      val nMatch = common
-        .join(pth.select("s1", "s2", "theta"), Seq("s1", "s2"))
-        .filter(col("h") < col("theta"))
-        .groupBy("s1", "s2").agg(count(lit(1)).as("n_match"))
-      pth.join(nMatch, Seq("s1", "s2"), "left")
-        .withColumn("n_match", coalesce(col("n_match"), lit(0L)))
-        .withColumn("inter_est", expr(Sketches.KmvInterEstSql))
-        .select("s1", "s2", "est_s1", "est_s2", "n_match", "theta",
-          "inter_est")
-        .orderBy("s1", "s2")
+      kmvPairEstimate(s.read.parquet(path))
     },
 
     // r22 (verdict #7): the bucket-grain Heaps curve grows linearly
@@ -3805,15 +3623,48 @@ object TrainingQueries {
 
   /** Runs `body` holding `path`'s write lock — the unit of atomicity
     * for multi-write sketch-table constructions (overwrite + append). */
-  private[queries] def withSketchTableLock[A](path: String)(body: => A): A =
+  private def withSketchTableLock[A](path: String)(body: => A): A =
     sketchTableWriteLock.computeIfAbsent(path, _ => new Object)
       .synchronized(body)
 
-  private[queries] def writeSketchTable(df: org.apache.spark.sql.DataFrame,
-      path: String, mode: String = "overwrite"): Unit =
+  private def writeSketchTable(df: DataFrame, path: String)
+      : Unit =
     withSketchTableLock(path) {
-      df.write.mode(mode).parquet(path)
+      df.write.mode("overwrite").parquet(path)
     }
+
+  /** The ingest rows' write: `atRest` overwrites the table at `path`,
+    * then `batch` is appended, with the path lock held across BOTH
+    * writes — an interleaved pair from a concurrent construction would
+    * lose the append under the overwrite, or double-count a
+    * non-idempotent cell-add batch. Returns the read-back table. */
+  private[queries] def overwriteThenAppend(atRest: DataFrame,
+      batch: DataFrame, path: String): DataFrame = {
+    withSketchTableLock(path) {
+      writeSketchTable(atRest, path)
+      batch.write.mode("append").parquet(path)
+    }
+    atRest.sparkSession.read.parquet(path)
+  }
+
+  /** The ingest rows' one-row construction-time action: max of `column`
+    * over `df`, the bound that splits history from the new batch. An
+    * empty frame has no bound and fails with `emptyMessage` (max() of
+    * no rows is NULL). */
+  private[queries] def splitBound(df: DataFrame, column: String,
+      emptyMessage: => String): Long = {
+    val mx = df.agg(max(column)).head
+    require(!mx.isNullAt(0), emptyMessage)
+    mx.getLong(0)
+  }
+
+  /** One past the corpus' largest doc_id — the document ingest rows'
+    * [[splitBound]]. */
+  private def docSplit(s: org.apache.spark.sql.SparkSession, dir: String,
+      row: String): Long =
+    splitBound(Tables.documents(s, dir), "doc_id",
+      s"$row: documents table at $dir is empty — " +
+        "no doc_id bound to split existing corpus vs new batch") + 1
 
   private val minhashMins = (0 until 8).map { i =>
     s"min(substr(md5(s), ${4 * i + 1}, 8)) AS h$i"
@@ -4311,28 +4162,7 @@ object TrainingQueries {
         |  (cms_estimate - n_exact) * 1000 // n_exact AS over_pm
         |FROM est ORDER BY n_exact DESC, bigram ASC""".stripMargin,
 
-    "hll_shingle_sketch" -> {
-      val est = Sketches.hllEstimateSql(8)
-      s"""WITH sh AS (
-        |  SELECT source, unnest($shinglesExpr) AS sh FROM documents
-        |), hh AS (
-        |  SELECT source,
-        |    ('0x' || substr(md5(sh), 1, 15))::BIGINT AS h
-        |  FROM sh
-        |), r AS (
-        |  SELECT source, h // 4503599627370496 AS register,
-        |    MAX(CASE WHEN h % 4503599627370496 = 0 THEN 53
-        |      ELSE 53 - length(bin(h % 4503599627370496)) END) AS m
-        |  FROM hh GROUP BY source, register
-        |), su AS (
-        |  SELECT source, 256 - COUNT(*) AS v_zero,
-        |    (256 - COUNT(*)) * 9007199254740992 +
-        |      CAST(SUM(1::BIGINT << (53 - m)) AS BIGINT) AS s_scaled
-        |  FROM r GROUP BY source
-        |)
-        |SELECT source, v_zero, s_scaled, $est AS hll_estimate
-        |FROM su ORDER BY source""".stripMargin
-    },
+    "hll_shingle_sketch" -> hllSourceSketchOracleSql,
 
     "cms_bigram_sketch" -> cmsCellTableOracleSql,
     // identical whole-corpus cell derivation — the disjoint-slice
@@ -4581,44 +4411,9 @@ object TrainingQueries {
     // whole-corpus sketch in one pass, so hash equality against the
     // Spark side's shard-and-merge derivation proves the merge law
     // across engines on real data
-    "hll_merge_shards" -> {
-      val est = Sketches.hllEstimateSql(8)
-      s"""WITH sh AS (
-        |  SELECT source, unnest($shinglesExpr) AS sh FROM documents
-        |), hh AS (
-        |  SELECT source,
-        |    ('0x' || substr(md5(sh), 1, 15))::BIGINT AS h
-        |  FROM sh
-        |), r AS (
-        |  SELECT source, h // 4503599627370496 AS register,
-        |    MAX(CASE WHEN h % 4503599627370496 = 0 THEN 53
-        |      ELSE 53 - length(bin(h % 4503599627370496)) END) AS m
-        |  FROM hh GROUP BY source, register
-        |), su AS (
-        |  SELECT source, 256 - COUNT(*) AS v_zero,
-        |    (256 - COUNT(*)) * 9007199254740992 +
-        |      CAST(SUM(1::BIGINT << (53 - m)) AS BIGINT) AS s_scaled
-        |  FROM r GROUP BY source
-        |)
-        |SELECT source, v_zero, s_scaled, $est AS hll_estimate
-        |FROM su ORDER BY source""".stripMargin
-    },
+    "hll_merge_shards" -> hllSourceSketchOracleSql,
 
-    "cms_merge_shards" ->
-      s"""WITH t AS (
-        |  SELECT $toksExpr AS toks FROM documents
-        |), b AS (
-        |  SELECT unnest(list_transform(range(1, len(toks)),
-        |    i -> toks[CAST(i AS INT)] || ' ' ||
-        |         toks[CAST(i + 1 AS INT)])) AS key
-        |  FROM t WHERE len(toks) >= 2
-        |)
-        |SELECT CAST(r AS INT) AS r,
-        |  ('0x' || substr(md5(CAST(r AS VARCHAR) ||
-        |    ':cms:' || key), 1, 15))::BIGINT % 256 AS c,
-        |  CAST(COUNT(*) AS BIGINT) AS cnt
-        |FROM b, (SELECT unnest([0, 1, 2]) AS r)
-        |GROUP BY 1, 2 ORDER BY r, c""".stripMargin,
+    "cms_merge_shards" -> cmsCellTableOracleSql,
 
     "heaps_law" ->
       s"""WITH d AS (

@@ -252,4 +252,80 @@ class SketchesSpec extends SparkSpec {
     assert(a === b, "NULL values changed the sketch")
     assert(!a.contains(0L), "spurious 0 hash in the sketch")
   }
+
+  test("hllRegisters ignores NULL values: a nullable column yields " +
+      "exactly the registers and summary of its non-null subset — " +
+      "md5(NULL) cannot occupy a phantom register") {
+    import spark.implicits._
+    val vals = (1 to 500).map(i => s"v-$i-${i * 7919}")
+    val withNulls: Seq[Option[String]] =
+      vals.map(Option(_)) ++ Seq.fill(50)(Option.empty[String])
+    def regs(df: org.apache.spark.sql.DataFrame) =
+      Sketches.hllRegisters(df, lit("k"), col("v"), 8)
+    val (a, b) = (regs(withNulls.toDF("v")), regs(vals.toDF("v")))
+    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+      "NULL values changed the register table")
+    def summary(r: org.apache.spark.sql.DataFrame) =
+      Sketches.hllSummary(r, 8).collect()
+        .map(x => (x.getAs[Long]("v_zero"), x.getAs[Long]("s_scaled")))
+        .toSeq
+    assert(summary(a) === summary(b), "NULL values changed the summary")
+  }
+
+  test("hllPairs: a pair's union summary is the summary of its two " +
+      "sources' rows relabelled as one key (the merge law through the " +
+      "pair helper), and inter_est = est_s1 + est_s2 - est_union") {
+    val sh = shingleStream(sf0001)
+    val regs = Sketches.hllRegisters(sh, col("source"), col("sh"), 8)
+    val pairs = Sketches.pairsOf(regs)
+    val got = Sketches.hllPairs(regs, pairs, 8).collect()
+    val relabelled = pairs.join(sh,
+      col("source") === col("s1") || col("source") === col("s2"))
+    val want = Sketches.hllSummary(Sketches.hllRegisters(relabelled,
+        concat_ws("|", col("s1"), col("s2")), col("sh"), 8), 8)
+      .withColumn("est", expr(Sketches.hllEstimateSql(8)))
+      .collect()
+      .map(r => r.getAs[String]("key") ->
+        ((r.getAs[Long]("s_scaled"), r.getAs[Double]("est")))).toMap
+    assert(got.nonEmpty && got.length === want.size,
+      s"${got.length} pair rows vs ${want.size} relabelled unions")
+    got.foreach { r =>
+      val k = s"${r.getAs[String]("s1")}|${r.getAs[String]("s2")}"
+      assert((r.getAs[Long]("s_scaled"), r.getAs[Double]("est_union")) ===
+        want(k), s"$k: union summary diverged from the relabelled rows'")
+      assert(r.getAs[Double]("inter_est") === r.getAs[Double]("est_s1") +
+        r.getAs[Double]("est_s2") - r.getAs[Double]("est_union"),
+        s"$k: inter_est is not inclusion-exclusion")
+    }
+  }
+
+  test("kmvPairs with an exhaustive k (every sketch has n_k < k) " +
+      "gives inter_est equal to the exact intersection for every " +
+      "pair, pairs with no common value included") {
+    val byDoc = Tables.documents(spark, sf0001)
+      .filter(col("doc_id") < 50)
+      .select(col("doc_id").cast("string").as("key"),
+        explode(graft.operators.TextAnalysis.shingles(col("text"), 3))
+          .as("sh"))
+    val kv = Sketches.kmvSketch(byDoc, col("key"), col("sh"), 256)
+    val got = Sketches.kmvPairs(kv, Sketches.pairsOf(kv), 256).collect()
+    val d = byDoc.distinct()
+    val exact = d.as("x")
+      .join(d.as("y"), col("x.sh") === col("y.sh") &&
+        col("x.key") < col("y.key"))
+      .groupBy(col("x.key"), col("y.key")).count()
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
+      .toMap
+    val nDocs = byDoc.select("key").distinct().count()
+    assert(got.length === nDocs * (nDocs - 1) / 2, "pairs lost")
+    assert(exact.nonEmpty && exact.size < got.length,
+      "fixture must hold pairs with and without common shingles")
+    got.foreach { r =>
+      val k = (r.getAs[String]("s1"), r.getAs[String]("s2"))
+      assert(r.getAs[Long]("theta") === 1L << 60,
+        s"$k: a sketch was not exhaustive")
+      assert(r.getAs[Double]("inter_est") === exact.getOrElse(k, 0L).toDouble,
+        s"$k: exhaustive pair estimate is not the exact intersection")
+    }
+  }
 }
