@@ -25,7 +25,7 @@ import graft.functions.FloatVecDot
   * Scale design: queries are broadcast (collect-free plan, one scan of
   * the vector table); top-k uses a per-query window — with Q queries and
   * N vectors the shuffled pair set is Q·N rows, so batch Q accordingly
-  * or pre-prune with [[ivfTopK]] which probes only the query's coarse
+  * or pre-prune with [[probedScores]] which probes only the query's coarse
   * cell (partition pruning on the cell column cuts both scan and pair
   * count by the cell fan-out). Near-dup pairing never goes all-pairs:
   * candidates are restricted to a bucket column (coarse cluster id,
@@ -281,32 +281,63 @@ object Similarity {
     * to the smaller cell id) — the multi-probe companion to
     * [[assignCells]]: a query near a cell boundary must search its
     * runner-up cells or it misses true neighbors that quantized across
-    * the line. Returns `array<int>`; explode it onto the query side of
-    * [[ivfTopK]] (each corpus vector lives in exactly one cell, so
+    * the line. Returns `array<int>`; explode it onto the probe side of
+    * [[probedScores]] (each corpus vector lives in exactly one cell, so
     * multi-probing cannot duplicate a (query, vector) pair). */
   def probeCells(vec: Column, centroids: Seq[Array[Float]],
       nprobe: Int): Column =
     graft.functions.CentroidTopN(vec, centroids, nprobe)
 
-  /** IVF-style probed top-k: vectors and queries carry a coarse cell id
-    * (cluster/IVF cell); only same-cell vectors are scored. On a
-    * cell-partitioned table the scan prunes to the probed cells. For
-    * multi-probe, pre-explode [[probeCells]] into the query side's
-    * `cellCol` — Q×nprobe probe rows, each still a pruned cell scan. */
+  /** Cosine of every (vector, probe) pair that shares `key` — the
+    * scoring stage of the probed top-k paths. `key` is a coarse cell id
+    * (pre-explode [[probeCells]] into the probe side: Q×nprobe rows)
+    * or any other bucket column such as a label. Norms are hoisted onto
+    * each side before the join (`_vn` on the vectors, `_qn` on the
+    * probes) and the probe side is broadcast, so on a cell-partitioned
+    * table the join's runtime filter prunes the scan to the probed
+    * cells. Output: both sides' columns plus `_vn`, `_qn` and
+    * `cosine`. */
+  def probedScores(vectors: DataFrame, vecCol: Column, probes: DataFrame,
+      qvecCol: Column, key: String): DataFrame =
+    vectors.withColumn("_vn", norm(vecCol))
+      .join(broadcast(probes.withColumn("_qn", norm(qvecCol))), key)
+      .withColumn("cosine",
+        dot(vecCol, qvecCol) / (col("_vn") * col("_qn")))
+
+  /** IVF-style probed top-k: [[probedScores]] on `cellCol`, ranked per
+    * query by a window — only same-cell vectors are scored. */
   def ivfTopK(vectors: DataFrame, idCol: Column, vecCol: Column,
       cellCol: String, queries: DataFrame, queryIdCol: Column,
       queryVecCol: Column, k: Int): DataFrame = {
-    val vecs = vectors.withColumn("_vnorm", norm(vecCol))
-    val qs = queries.withColumn("_qnorm", norm(queryVecCol))
     val w = Window.partitionBy(queryIdCol)
       .orderBy(col("cosine").desc, idCol)
-    vecs.join(broadcast(qs), cellCol)
-      .withColumn("cosine",
-        dot(vecCol, queryVecCol) / (col("_vnorm") * col("_qnorm")))
+    probedScores(vectors, vecCol, queries, queryVecCol, cellCol)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .drop("_vnorm", "_qnorm")
+      .drop("_vn", "_qn")
   }
+
+  /** Product-quantization codes (Jégou et al., TPAMI'11): for each
+    * subspace `m`, the nearest row ([[assignCells]]) of `codebooks(m)`
+    * to the m-th consecutive slice of `vec`, as an INT column
+    * `code<m>`. The slice width is the codebook rows' width (d/M). */
+  def pqCodes(vec: Column,
+      codebooks: Seq[Array[Array[Float]]]): Seq[Column] =
+    codebooks.zipWithIndex.map { case (book, m) =>
+      val width = book.head.length
+      assignCells(slice(vec, m * width + 1, width), book.toSeq)
+        .as(s"code$m")
+    }
+
+  /** The PQ reconstruction of the `code<m>` columns of [[pqCodes]]: the
+    * concatenation of each subspace's chosen codebook row, as
+    * `array<double>` (doubles carry the float rows exactly). Codebooks
+    * are inlined as literals — M·K·(d/M) floats, always broadcast-sized. */
+  def pqReconstruct(codebooks: Seq[Array[Array[Float]]]): Column =
+    concat(codebooks.zipWithIndex.map { case (book, m) =>
+      element_at(typedLit(book.toSeq.map(_.toSeq.map(_.toDouble))),
+        col(s"code$m") + 1)
+    }: _*)
 
   /** Embedding-cosine near-duplicate pairs within a bucket, with the
     * bucket refined by `probeDims` chord-bound projection grids and an
@@ -353,9 +384,9 @@ object Similarity {
     *     count job runs before the DataFrame exists) — unavoidable,
     *     because grid depth is plan SHAPE.
     *
-    * `GRAFT_PROBE_DIMS` overrides the grid depth for measurements —
-    * output-invariant by the exactness argument. Projections are
-    * computed per ROW in O(d) next to the O(d) norm — never per pair. */
+    * A positive `probeDims` pins the grid depth (output-invariant by the
+    * exactness argument). Projections are computed per ROW in O(d) next
+    * to the O(d) norm — never per pair. */
   /** Construction-time COUNT probe, memoized by the input's SEMANTIC
     * plan hash: `probeDims = 0` auto-sizing needs the row count (grid
     * depth is plan SHAPE, so it must be known before the DataFrame
@@ -380,7 +411,7 @@ object Similarity {
       "threshold must be in (-1, 1)")
     val memoKey =
       df.select(idCol, vecCol).queryExecution.analyzed.semanticHash()
-    val autoDims =
+    val gridDims =
       if (probeDims > 0) probeDims
       else {
         val n = countMemo.computeIfAbsent(memoKey, _ => df.count())
@@ -388,8 +419,6 @@ object Similarity {
           math.floor(math.log10(math.max(1.0, n / 50000.0))).toInt +
             (if (n > 50000) 1 else 0)))
       }
-    val probeDims1 = sys.env.get("GRAFT_PROBE_DIMS").map(_.toInt)
-      .getOrElse(autoDims)
     val cellW = math.sqrt(2.0 - 2.0 * threshold)
     val base = df.select(col(bucketCol).as("_bk"), idCol.as("_id"),
         vecCol.as("_vec"))
@@ -406,7 +435,7 @@ object Similarity {
     // of 2^⌈log₂(m+1)⌉; bDiv = largest b with 2^b | d bounds the family
     val bDiv = if (dim > 0) Integer.numberOfTrailingZeros(dim) else 0
     val nOrtho = (1 << math.min(bDiv, 16)) - 1
-    val useHadamard = nOrtho >= probeDims1
+    val useHadamard = nOrtho >= gridDims
     val mPref = if (useHadamard) math.min(8, nOrtho) else 0
     def signsFor(j: Int) = {
       val mask = if (useHadamard) j + 1 else 1 << j
@@ -416,7 +445,7 @@ object Similarity {
     def proj(j: Int): Column =
       dot(col("_vec"), signsFor(j)) /
         (lit(math.sqrt(dim.toDouble)) * col("_norm"))
-    val withProj = (0 until math.max(probeDims1, mPref))
+    val withProj = (0 until math.max(gridDims, mPref))
       .foldLeft(base)((acc, j) => acc.withColumn(s"_p$j", proj(j)))
     val withPf =
       if (mPref == 0) withProj.withColumn("_pf", lit(null).cast("array<float>"))
@@ -425,7 +454,7 @@ object Similarity {
         .withColumn("_pf", array((0 until mPref).map(j =>
           col(s"_p$j").cast("float")): _*))
         .withColumn("_pf2", dot(col("_pf"), col("_pf")))
-    val withCells = (0 until probeDims1).foldLeft(withPf) { (acc, k) =>
+    val withCells = (0 until gridDims).foldLeft(withPf) { (acc, k) =>
       acc.withColumn(s"_c$k", floor(col(s"_p$k") / lit(cellW)))
     }
     // Probe side duplicates each row into the 3^probeDims neighboring
@@ -443,7 +472,7 @@ object Similarity {
     // are ~40 B; the exact cosine filter instead joins the two
     // vectors back by id — two linear hash joins whose cost follows
     // the CANDIDATE count the grid just cut.
-    val offsets = Seq.fill(probeDims1)(Seq(-1, 0, 1))
+    val offsets = Seq.fill(gridDims)(Seq(-1, 0, 1))
       .foldLeft(Seq(Seq.empty[Int]))((acc, s) =>
         for (c <- acc; x <- s) yield c :+ x)
     val offArr = array(offsets.map(o =>
@@ -451,12 +480,12 @@ object Similarity {
     ): _*)
     val aCols = Seq(col("_bk"), col("_id").as("id_a"),
       col("_pf").as("_pf_a"), col("_pf2").as("_pf2_a")) ++
-      (0 until probeDims1).map(k =>
+      (0 until gridDims).map(k =>
         (col(s"_c$k") + col(s"_off").getField(s"o$k")).as(s"_ca$k"))
     val a = withCells.withColumn("_off", explode(offArr)).select(aCols: _*)
     val bCols = Seq(col("_bk").as("_bkb"), col("_id").as("id_b"),
       col("_pf").as("_pf_b"), col("_pf2").as("_pf2_b")) ++
-      (0 until probeDims1).map(k => col(s"_c$k").as(s"_cb$k"))
+      (0 until gridDims).map(k => col(s"_c$k").as(s"_cb$k"))
     val b = withCells.select(bCols: _*)
     // exact chord prefilter (see scaladoc): the slack must dominate
     // the float rounding of the projections so it only ever ADMITS
@@ -475,7 +504,7 @@ object Similarity {
       else col("_pf2_a") + col("_pf2_b") -
         lit(2.0) * dot(col("_pf_a"), col("_pf_b")) <=
         lit(2.0 - 2.0 * threshold + slack)
-    val joinCond = (0 until probeDims1)
+    val joinCond = (0 until gridDims)
       .map(k => col(s"_ca$k") === col(s"_cb$k"))
       .foldLeft(col("_bk") === col("_bkb") &&
         col("id_a") < col("id_b") && prefilter)(_ && _)

@@ -1,9 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.functions.DoubleVecDot
+import graft.operators.{Similarity, TopK}
+import graft.sinks.CorpusWriter
 import graft.sources.Tables
 
 /** Similarity-search queries over the `embeddings` table
@@ -20,7 +23,7 @@ object SimilarityQueries {
   private val Dim = 64
 
   // ann_topk_ivf_trained knobs — mirrored literally in its oracle SQL
-  private val IvfK = 8
+  private[graft] val IvfK = 8
   private val IvfNprobe = 2
   private val IvfIters = 3
   private val IvfInitRounds = 2
@@ -51,7 +54,7 @@ object SimilarityQueries {
   private[graft] def pqCodebookPath(dir: String): String =
     s"$artifactRoot/pq_codebooks_${new java.io.File(dir).getName}.parquet"
 
-  private def pqCodebooks(s: org.apache.spark.sql.SparkSession,
+  private[graft] def pqCodebooks(s: org.apache.spark.sql.SparkSession,
       dir: String): Array[Array[Array[Float]]] =
     pqMemo.computeIfAbsent((dir, PqM, PqK, IvfIters, IvfInitRounds), _ => {
       val e = Tables.embeddings(s, dir)
@@ -87,7 +90,7 @@ object SimilarityQueries {
   private val centroidMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, Int, Int, Int, Double), Array[Array[Float]]]()
 
-  private def trainedCentroids(s: org.apache.spark.sql.SparkSession,
+  private[graft] def trainedCentroids(s: org.apache.spark.sql.SparkSession,
       dir: String, sampleFraction: Double = 1.0): Array[Array[Float]] =
     centroidMemo.computeIfAbsent(
       (dir, IvfK, IvfIters, IvfInitRounds, sampleFraction), _ => {
@@ -153,6 +156,117 @@ object SimilarityQueries {
   private[graft] def cosSql(a: String, b: String): String =
     s"(${dotSql(a, b)}) / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
 
+  /** A top-k operator of [[TopK]]: `(df, group, id, score, k)`. */
+  private type TopKOp = (DataFrame, String, String, String, Int) => DataFrame
+
+  /** The 5 query vectors as `(query_id, qvec)`, then `extra`. */
+  private[graft] def queryFrame(e: DataFrame, extra: Column*): DataFrame =
+    e.filter(col("vec_id") < 5)
+      .select(Seq(col("vec_id").as("query_id"),
+        col("embedding").as("qvec")) ++ extra: _*)
+
+  /** [[queryFrame]] with each query's `nprobe` best cells exploded into
+    * `cell` — the probe side of [[Similarity.probedScores]]. */
+  private[graft] def probes(e: DataFrame, cents: Array[Array[Float]],
+      nprobe: Int): DataFrame =
+    queryFrame(e).withColumn("cell",
+      explode(Similarity.probeCells(col("qvec"), cents, nprobe)))
+
+  /** `df` with the nearest-centroid `cell` of its `embedding`. */
+  private[graft] def assigned(df: DataFrame,
+      cents: Array[Array[Float]]): DataFrame =
+    df.withColumn("cell", Similarity.assignCells(col("embedding"), cents))
+
+  /** Per query, the `k` best rows of a `(query_id, vec_id, score)` frame
+    * through `topK`. */
+  private def perQuery(scored: DataFrame, topK: TopKOp,
+      k: Int = 10): DataFrame =
+    topK(scored, "query_id", "vec_id", scored.columns.last, k)
+
+  /** `(query_id, vec_id, cosine)` of the corpus `vectors` against the
+    * query frame `qs`, joined on `key`. */
+  private def probedCosines(vectors: DataFrame, qs: DataFrame,
+      key: String): DataFrame =
+    Similarity.probedScores(vectors, col("embedding"), qs, col("qvec"), key)
+      .select("query_id", "vec_id", "cosine")
+
+  /** The trained-IVF serving path: `vectors` (carrying `cell`) scored
+    * against the [[probes]] frame, native top-10. */
+  private[graft] def ivfTop10(vectors: DataFrame,
+      probed: DataFrame): DataFrame =
+    perQuery(probedCosines(vectors, probed, "cell"), TopK.perGroupNative)
+
+  /** The exact top-10 of the whole corpus for the query frame `q`
+    * through `topK`: `(query_id, vec_id, cosine, rank)`. */
+  private[graft] def bruteTop10(e: DataFrame, q: DataFrame,
+      topK: TopKOp = TopK.perGroup): DataFrame =
+    perQuery(Similarity.scoredPairs(e, col("vec_id"), col("embedding"), q,
+        col("query_id"), col("qvec")).select("query_id", "vec_id", "cosine"),
+      topK)
+
+  /** How many `truth` rows `found` returned, per `by`, and that count in
+    * permille of `outOf`: `(by, n_hits, recall_permille)`. Both frames
+    * carry exactly the join keys; `truth` is the preserved side. */
+  private[graft] def recallReport(truth: DataFrame, found: DataFrame,
+      by: String = "query_id", outOf: Int = 10): DataFrame =
+    truth.join(found.withColumn("hit", lit(1L)), found.columns.toSeq, "left")
+      .groupBy(by)
+      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+      .select(col(by), col("n_hits"),
+        expr(s"n_hits * 1000 div $outOf").as("recall_permille"))
+      .orderBy(by)
+
+  /** [[queryFrame]] for PQ scoring: `qvec` as `array<double>` and its
+    * norm `_qn`, with `extra` columns before the norm. */
+  private def pqQueries(e: DataFrame, extra: Column*): DataFrame =
+    e.filter(col("vec_id") < 5)
+      .select(Seq(col("vec_id").as("query_id"),
+        expr("transform(embedding, x -> cast(x as double))").as("qvec")) ++
+        extra: _*)
+      .withColumn("_qn", sqrt(DoubleVecDot(col("qvec"), col("qvec"))))
+
+  /** [[pqQueries]] with each query's `IvfNprobe` best coarse cells. */
+  private def pqProbes(e: DataFrame, cents: Array[Array[Float]]): DataFrame =
+    pqQueries(e, explode(Similarity.probeCells(col("embedding"), cents,
+      IvfNprobe)).as("cell"))
+
+  /** `(query_id, vec_id, score)`: the reconstruction cosine of the
+    * PQ-`coded` rows against the broadcast PQ query side `qs`, the two
+    * sides combined by `pair` (a cross join or a join on `cell`). */
+  private def pqScores(coded: DataFrame, books: Array[Array[Array[Float]]],
+      qs: DataFrame)(pair: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    pair(coded.withColumn("rvec", Similarity.pqReconstruct(books))
+        .withColumn("_rn", sqrt(DoubleVecDot(col("rvec"), col("rvec")))),
+      broadcast(qs))
+      .withColumn("score",
+        DoubleVecDot(col("rvec"), col("qvec")) / (col("_rn") * col("_qn")))
+      .select("query_id", "vec_id", "score")
+
+  /** [[pqScores]] of the whole PQ-coded corpus against the 5 queries. */
+  private def pqBrute(e: DataFrame,
+      books: Array[Array[Array[Float]]]): DataFrame =
+    pqScores(e.select(col("vec_id") +:
+      Similarity.pqCodes(col("embedding"), books): _*), books,
+      pqQueries(e))(_.crossJoin(_))
+
+  /** The corpus' `vec_id` and `cols` plus an id-shifted copy of the same
+    * rows (planted exact duplicates, or an append batch). */
+  private def withCopy(e: DataFrame, cols: String*): DataFrame = {
+    val base = e.select(col("vec_id") +: cols.map(col): _*)
+    base.unionByName(base.select(
+      (col("vec_id") + CopyShift).as("vec_id") +: cols.map(col): _*))
+  }
+
+  /** The exact re-score of a `(query_id, vec_id)` shortlist: the
+    * shortlist, then the query frame `q`, broadcast onto the corpus `e`,
+    * and `cosine` computed per joined row. */
+  private def rescored(e: DataFrame, shortlist: DataFrame, q: DataFrame,
+      cosine: Column): DataFrame =
+    e.join(broadcast(shortlist), "vec_id")
+      .join(broadcast(q), "query_id")
+      .withColumn("cosine", cosine)
+      .select("query_id", "vec_id", "cosine")
+
   val all: Map[String, Q] = Map(
 
     // Exact brute-force cosine top-10 for 5 broadcast query vectors,
@@ -161,14 +275,7 @@ object SimilarityQueries {
     // the oracle's windowed form proves the pruning exact.
     "ann_topk_brute" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      val scored = Similarity.scoredPairs(e, col("vec_id"),
-          col("embedding"), q, col("query_id"), col("qvec"))
-        .select("query_id", "vec_id", "cosine")
-      graft.operators.TopK.perGroup(scored, "query_id", "vec_id",
-          "cosine", k = 10)
-        .orderBy("query_id", "rank")
+      bruteTop10(e, queryFrame(e)).orderBy("query_id", "rank")
     },
 
     // The SAME brute-force contract through the NATIVE top-k plan node
@@ -177,13 +284,7 @@ object SimilarityQueries {
     // the identical oracle proves the custom operator end-to-end.
     "ann_topk_native" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      val scored = Similarity.scoredPairs(e, col("vec_id"),
-          col("embedding"), q, col("query_id"), col("qvec"))
-        .select("query_id", "vec_id", "cosine")
-      graft.operators.TopK.perGroupNative(scored, "query_id", "vec_id",
-          "cosine", k = 10)
+      bruteTop10(e, queryFrame(e), TopK.perGroupNative)
         .orderBy("query_id", "rank")
     },
 
@@ -191,17 +292,8 @@ object SimilarityQueries {
     // (partition-pruned), then the two-phase bounded top-k.
     "ann_topk_ivf" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
-          col("label"))
-      val scored = e.withColumn("_vn", Similarity.norm(col("embedding")))
-        .join(broadcast(q.withColumn("_qn", Similarity.norm(col("qvec")))),
-          "label")
-        .withColumn("cosine", Similarity.dot(col("embedding"), col("qvec"))
-          / (col("_vn") * col("_qn")))
-        .select("query_id", "vec_id", "cosine")
-      graft.operators.TopK.perGroup(scored, "query_id", "vec_id",
-          "cosine", k = 10)
+      perQuery(probedCosines(e, queryFrame(e, col("label")), "label"),
+          TopK.perGroup)
         .orderBy("query_id", "rank")
     },
 
@@ -215,31 +307,10 @@ object SimilarityQueries {
     // Integer hits and a permille rate keep the oracle exact.
     "ann_recall_report" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
-          col("label"))
-      val bruteScored = Similarity.scoredPairs(e, col("vec_id"),
-          col("embedding"), q.select("query_id", "qvec"),
-          col("query_id"), col("qvec"))
-        .select("query_id", "vec_id", "cosine")
-      val brute = graft.operators.TopK.perGroup(bruteScored, "query_id",
-          "vec_id", "cosine", k = 10)
-        .select("query_id", "vec_id")
-      val ivfScored = e.withColumn("_vn", Similarity.norm(col("embedding")))
-        .join(broadcast(q.withColumn("_qn", Similarity.norm(col("qvec")))),
-          "label")
-        .withColumn("cosine", Similarity.dot(col("embedding"), col("qvec"))
-          / (col("_vn") * col("_qn")))
-        .select("query_id", "vec_id", "cosine")
-      val ivf = graft.operators.TopK.perGroup(ivfScored, "query_id",
-          "vec_id", "cosine", k = 10)
-        .select("query_id", "vec_id").withColumn("hit", lit(1L))
-      brute.join(ivf, Seq("query_id", "vec_id"), "left")
-        .groupBy("query_id")
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .select(col("query_id"), col("n_hits"),
-          expr("n_hits * 1000 div 10").as("recall_permille"))
-        .orderBy("query_id")
+      val ivf = perQuery(
+        probedCosines(e, queryFrame(e, col("label")), "label"), TopK.perGroup)
+      recallReport(bruteTop10(e, queryFrame(e)).select("query_id", "vec_id"),
+        ivf.select("query_id", "vec_id"))
     },
 
     // The flagship 100 TB ANN composition END-TO-END under the hard
@@ -257,20 +328,7 @@ object SimilarityQueries {
     "ann_topk_ivf_trained" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
       val cents = trainedCentroids(s, dir)
-      val assigned = e
-        .withColumn("cell", Similarity.assignCells(col("embedding"), cents))
-        .withColumn("_vn", Similarity.norm(col("embedding")))
-      val probed = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-        .withColumn("cell",
-          explode(Similarity.probeCells(col("qvec"), cents, IvfNprobe)))
-        .withColumn("_qn", Similarity.norm(col("qvec")))
-      val scored = assigned.join(broadcast(probed), "cell")
-        .withColumn("cosine", Similarity.dot(col("embedding"), col("qvec"))
-          / (col("_vn") * col("_qn")))
-        .select("query_id", "vec_id", "cosine")
-      graft.operators.TopK.perGroupNative(scored, "query_id", "vec_id",
-          "cosine", k = 10)
+      ivfTop10(assigned(e, cents), probes(e, cents, IvfNprobe))
         .orderBy("query_id", "rank")
     },
 
@@ -287,34 +345,9 @@ object SimilarityQueries {
     "ann_recall_trained" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
       val cents = trainedCentroids(s, dir)
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      val assigned = e
-        .withColumn("cell", Similarity.assignCells(col("embedding"), cents))
-        .withColumn("_vn", Similarity.norm(col("embedding")))
-      val probed = q
-        .withColumn("cell",
-          explode(Similarity.probeCells(col("qvec"), cents, IvfNprobe)))
-        .withColumn("_qn", Similarity.norm(col("qvec")))
-      val ivfScored = assigned.join(broadcast(probed), "cell")
-        .withColumn("cosine", Similarity.dot(col("embedding"), col("qvec"))
-          / (col("_vn") * col("_qn")))
-        .select("query_id", "vec_id", "cosine")
-      val ivf = graft.operators.TopK.perGroupNative(ivfScored, "query_id",
-          "vec_id", "cosine", k = 10)
-        .select("query_id", "vec_id").withColumn("hit", lit(1L))
-      val bruteScored = Similarity.scoredPairs(e, col("vec_id"),
-          col("embedding"), q, col("query_id"), col("qvec"))
-        .select("query_id", "vec_id", "cosine")
-      val brute = graft.operators.TopK.perGroup(bruteScored, "query_id",
-          "vec_id", "cosine", k = 10)
-        .select("query_id", "vec_id")
-      brute.join(ivf, Seq("query_id", "vec_id"), "left")
-        .groupBy("query_id")
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .select(col("query_id"), col("n_hits"),
-          expr("n_hits * 1000 div 10").as("recall_permille"))
-        .orderBy("query_id")
+      val ivf = ivfTop10(assigned(e, cents), probes(e, cents, IvfNprobe))
+      recallReport(bruteTop10(e, queryFrame(e)).select("query_id", "vec_id"),
+        ivf.select("query_id", "vec_id"))
     },
 
     // The SAMPLED-TRAINING path under the hard oracle — the actual
@@ -331,20 +364,7 @@ object SimilarityQueries {
       val e = Tables.embeddings(s, dir)
       val cents = trainedCentroids(s, dir,
         sampleFraction = IvfSampleFraction)
-      val assigned = e
-        .withColumn("cell", Similarity.assignCells(col("embedding"), cents))
-        .withColumn("_vn", Similarity.norm(col("embedding")))
-      val probed = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-        .withColumn("cell",
-          explode(Similarity.probeCells(col("qvec"), cents, IvfNprobe)))
-        .withColumn("_qn", Similarity.norm(col("qvec")))
-      val scored = assigned.join(broadcast(probed), "cell")
-        .withColumn("cosine", Similarity.dot(col("embedding"), col("qvec"))
-          / (col("_vn") * col("_qn")))
-        .select("query_id", "vec_id", "cosine")
-      graft.operators.TopK.perGroupNative(scored, "query_id", "vec_id",
-          "cosine", k = 10)
+      ivfTop10(assigned(e, cents), probes(e, cents, IvfNprobe))
         .orderBy("query_id", "rank")
     },
 
@@ -362,25 +382,11 @@ object SimilarityQueries {
     "ann_topk_ivf_pruned" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
       val cents = trainedCentroids(s, dir)
-      val assigned = e
-        .withColumn("cell", Similarity.assignCells(col("embedding"), cents))
-        .select("vec_id", "embedding", "cell")
       val path = ivfLayoutPath(dir)
-      graft.sinks.CorpusWriter.writePartitioned(assigned, path,
+      CorpusWriter.writePartitioned(
+        assigned(e, cents).select("vec_id", "embedding", "cell"), path,
         partitionCol = "cell", sortCols = Seq("vec_id"))
-      val atRest = s.read.parquet(path)
-        .withColumn("_vn", Similarity.norm(col("embedding")))
-      val probed = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-        .withColumn("cell",
-          explode(Similarity.probeCells(col("qvec"), cents, IvfNprobe)))
-        .withColumn("_qn", Similarity.norm(col("qvec")))
-      val scored = atRest.join(broadcast(probed), "cell")
-        .withColumn("cosine", Similarity.dot(col("embedding"), col("qvec"))
-          / (col("_vn") * col("_qn")))
-        .select("query_id", "vec_id", "cosine")
-      graft.operators.TopK.perGroupNative(scored, "query_id", "vec_id",
-          "cosine", k = 10)
+      ivfTop10(s.read.parquet(path), probes(e, cents, IvfNprobe))
         .orderBy("query_id", "rank")
     },
 
@@ -400,21 +406,17 @@ object SimilarityQueries {
     "ann_topk_quantized" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
       val cents = trainedCentroids(s, dir)
-      val assigned = e
-        .withColumn("cell", Similarity.assignCells(col("embedding"), cents))
+      val quantized = assigned(e, cents)
         .withColumn("_q", Similarity.quantizeInt8(col("embedding")))
         .select(col("vec_id"), col("cell"), col("_q.mn").as("mn"),
           col("_q.mx").as("mx"), col("_q.q").as("q"))
       val path = int8LayoutPath(dir)
-      graft.sinks.CorpusWriter.writePartitioned(assigned, path,
+      CorpusWriter.writePartitioned(quantized, path,
         partitionCol = "cell", sortCols = Seq("vec_id"))
       // codegen'd double dot (DoubleVecDot): identical fold order to
       // the aggregate(zip_with) chain, so oracle-neutral — but the
       // scoring loop is the hot path (Q·corpus/k·nprobe pairs at
       // scale) and must stay inside WholeStageCodegen
-      def dotD(a: org.apache.spark.sql.Column,
-          b: org.apache.spark.sql.Column) =
-        graft.functions.DoubleVecDot(a, b)
       val atRest = s.read.parquet(path)
         .withColumn("dq", Similarity.dequantizeInt8(
           struct(col("mn"), col("mx"), col("q"))))
@@ -424,13 +426,11 @@ object SimilarityQueries {
         .select(col("vec_id").as("query_id"),
           col("embedding").cast("array<double>").as("qvd"), col("cell"))
       val scored = atRest.join(broadcast(probed), "cell")
-        .withColumn("cosine", dotD(col("dq"), col("qvd")) /
-          (sqrt(dotD(col("dq"), col("dq"))) *
-            sqrt(dotD(col("qvd"), col("qvd")))))
+        .withColumn("cosine", DoubleVecDot(col("dq"), col("qvd")) /
+          (sqrt(DoubleVecDot(col("dq"), col("dq"))) *
+            sqrt(DoubleVecDot(col("qvd"), col("qvd")))))
         .select("query_id", "vec_id", "cosine")
-      graft.operators.TopK.perGroupNative(scored, "query_id", "vec_id",
-          "cosine", k = 10)
-        .orderBy("query_id", "rank")
+      perQuery(scored, TopK.perGroupNative).orderBy("query_id", "rank")
     },
 
     // PRODUCT quantization top-k (Jégou et al., TPAMI'11): M=4
@@ -452,31 +452,7 @@ object SimilarityQueries {
     // codebooks — hash-matching scores, not just ranks.
     "ann_topk_pq" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      val books = pqCodebooks(s, dir)
-      val codeCols = (0 until PqM).map { m =>
-        Similarity.assignCells(expr(
-          s"slice(embedding, ${m * PqSub + 1}, $PqSub)"), books(m))
-          .as(s"code$m")
-      }
-      val coded = e.select(col("vec_id") +: codeCols: _*)
-      val bookLits = books.map(cb =>
-        typedLit(cb.toSeq.map(_.toSeq.map(_.toDouble))))
-      val recon = concat((0 until PqM).map(m =>
-        element_at(bookLits(m), col(s"code$m") + 1)): _*)
-      val qs = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"),
-          expr("transform(embedding, x -> cast(x as double))").as("qvec"))
-        .withColumn("_qn", sqrt(graft.functions.DoubleVecDot(
-          col("qvec"), col("qvec"))))
-      val scored = coded.withColumn("rvec", recon)
-        .withColumn("_rn", sqrt(graft.functions.DoubleVecDot(
-          col("rvec"), col("rvec"))))
-        .crossJoin(broadcast(qs))
-        .withColumn("score", graft.functions.DoubleVecDot(
-          col("rvec"), col("qvec")) / (col("_rn") * col("_qn")))
-        .select("query_id", "vec_id", "score")
-      graft.operators.TopK.perGroupNative(scored, "query_id", "vec_id",
-          "score", k = 10)
+      perQuery(pqBrute(e, pqCodebooks(s, dir)), TopK.perGroupNative)
         .orderBy("query_id", "rank")
     },
 
@@ -488,46 +464,9 @@ object SimilarityQueries {
     // top-k-sized. Integer hits + permille keep the oracle exact.
     "ann_recall_pq" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      val books = pqCodebooks(s, dir)
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      val bruteScored = Similarity.scoredPairs(e, col("vec_id"),
-          col("embedding"), q, col("query_id"), col("qvec"))
-        .select("query_id", "vec_id", "cosine")
-      val brute = graft.operators.TopK.perGroup(bruteScored, "query_id",
-          "vec_id", "cosine", k = 10)
-        .select("query_id", "vec_id")
-      val codeCols = (0 until PqM).map { m =>
-        Similarity.assignCells(expr(
-          s"slice(embedding, ${m * PqSub + 1}, $PqSub)"), books(m))
-          .as(s"code$m")
-      }
-      val coded = e.select(col("vec_id") +: codeCols: _*)
-      val bookLits = books.map(cb =>
-        typedLit(cb.toSeq.map(_.toSeq.map(_.toDouble))))
-      val recon = concat((0 until PqM).map(m =>
-        element_at(bookLits(m), col(s"code$m") + 1)): _*)
-      val qd = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"),
-          expr("transform(embedding, x -> cast(x as double))").as("qvec"))
-        .withColumn("_qn", sqrt(graft.functions.DoubleVecDot(
-          col("qvec"), col("qvec"))))
-      val pqScored = coded.withColumn("rvec", recon)
-        .withColumn("_rn", sqrt(graft.functions.DoubleVecDot(
-          col("rvec"), col("rvec"))))
-        .crossJoin(broadcast(qd))
-        .withColumn("score", graft.functions.DoubleVecDot(
-          col("rvec"), col("qvec")) / (col("_rn") * col("_qn")))
-        .select("query_id", "vec_id", "score")
-      val pq = graft.operators.TopK.perGroupNative(pqScored, "query_id",
-          "vec_id", "score", k = 10)
-        .select("query_id", "vec_id").withColumn("hit", lit(1L))
-      brute.join(pq, Seq("query_id", "vec_id"), "left")
-        .groupBy("query_id")
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .select(col("query_id"), col("n_hits"),
-          expr("n_hits * 1000 div 10").as("recall_permille"))
-        .orderBy("query_id")
+      val pq = perQuery(pqBrute(e, pqCodebooks(s, dir)), TopK.perGroupNative)
+      recallReport(bruteTop10(e, queryFrame(e)).select("query_id", "vec_id"),
+        pq.select("query_id", "vec_id"))
     },
 
     // PQ + RE-RANK — how product quantization is actually deployed
@@ -543,44 +482,15 @@ object SimilarityQueries {
     // never a second corpus scan.
     "ann_topk_pq_rerank" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      val books = pqCodebooks(s, dir)
-      val codeCols = (0 until PqM).map { m =>
-        Similarity.assignCells(expr(
-          s"slice(embedding, ${m * PqSub + 1}, $PqSub)"), books(m))
-          .as(s"code$m")
-      }
-      val coded = e.select(col("vec_id") +: codeCols: _*)
-      val bookLits = books.map(cb =>
-        typedLit(cb.toSeq.map(_.toSeq.map(_.toDouble))))
-      val recon = concat((0 until PqM).map(m =>
-        element_at(bookLits(m), col(s"code$m") + 1)): _*)
-      val qd = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"),
-          expr("transform(embedding, x -> cast(x as double))").as("qvec"))
-        .withColumn("_qn", sqrt(graft.functions.DoubleVecDot(
-          col("qvec"), col("qvec"))))
-      val adcScored = coded.withColumn("rvec", recon)
-        .withColumn("_rn", sqrt(graft.functions.DoubleVecDot(
-          col("rvec"), col("rvec"))))
-        .crossJoin(broadcast(qd))
-        .withColumn("score", graft.functions.DoubleVecDot(
-          col("rvec"), col("qvec")) / (col("_rn") * col("_qn")))
-        .select("query_id", "vec_id", "score")
-      val shortlist = graft.operators.TopK.perGroupNative(adcScored,
-          "query_id", "vec_id", "score", k = 100)
+      val shortlist = perQuery(pqBrute(e, pqCodebooks(s, dir)),
+          TopK.perGroupNative, k = 100)
         .select("query_id", "vec_id")
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-        .withColumn("_qn2", Similarity.norm(col("qvec")))
-      val exact = e.withColumn("_vn", Similarity.norm(col("embedding")))
-        .join(broadcast(shortlist), "vec_id")
-        .join(broadcast(q), "query_id")
-        .withColumn("cosine", Similarity.dot(col("embedding"), col("qvec"))
+      val exact = rescored(
+        e.withColumn("_vn", Similarity.norm(col("embedding"))), shortlist,
+        queryFrame(e).withColumn("_qn2", Similarity.norm(col("qvec"))),
+        Similarity.dot(col("embedding"), col("qvec"))
           / (col("_vn") * col("_qn2")))
-        .select("query_id", "vec_id", "cosine")
-      graft.operators.TopK.perGroupNative(exact, "query_id", "vec_id",
-          "cosine", k = 10)
-        .orderBy("query_id", "rank")
+      perQuery(exact, TopK.perGroupNative).orderBy("query_id", "rank")
     },
 
     // The STORAGE tier of the embedding pipeline: per-vector int8
@@ -605,11 +515,7 @@ object SimilarityQueries {
     // Embedding-cosine near-dup pairs, label-bucketed, over the corpus
     // plus an id-shifted copy (planted exact duplicates ⇒ cosine 1).
     "embedding_dups" -> { (s, dir) =>
-      val e = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding"), col("label"))
-      val all = e.unionByName(
-        e.select((col("vec_id") + CopyShift).as("vec_id"),
-          col("embedding"), col("label")))
+      val all = withCopy(Tables.embeddings(s, dir), "embedding", "label")
       Similarity.cosineDupPairs(all, col("vec_id"), col("embedding"),
           "label", threshold = 0.99)
         .orderBy("id_a", "id_b")
@@ -630,34 +536,11 @@ object SimilarityQueries {
       val e = Tables.embeddings(s, dir)
       val cents = trainedCentroids(s, dir)
       val books = pqCodebooks(s, dir)
-      val codeCols = (0 until PqM).map { m =>
-        Similarity.assignCells(expr(
-          s"slice(embedding, ${m * PqSub + 1}, $PqSub)"), books(m))
-          .as(s"code$m")
-      }
-      val bookLits = books.map(cb =>
-        typedLit(cb.toSeq.map(_.toSeq.map(_.toDouble))))
-      val recon = concat((0 until PqM).map(m =>
-        element_at(bookLits(m), col(s"code$m") + 1)): _*)
       val coded = e.select(Seq(col("vec_id"),
         Similarity.assignCells(col("embedding"), cents).as("cell")) ++
-        codeCols: _*)
-        .withColumn("rvec", recon)
-        .withColumn("_rn", sqrt(graft.functions.DoubleVecDot(
-          col("rvec"), col("rvec"))))
-      val probed = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"),
-          expr("transform(embedding, x -> cast(x as double))").as("qvec"),
-          explode(Similarity.probeCells(col("embedding"), cents,
-            IvfNprobe)).as("cell"))
-        .withColumn("_qn", sqrt(graft.functions.DoubleVecDot(
-          col("qvec"), col("qvec"))))
-      val scored = coded.join(broadcast(probed), "cell")
-        .withColumn("score", graft.functions.DoubleVecDot(
-          col("rvec"), col("qvec")) / (col("_rn") * col("_qn")))
-        .select("query_id", "vec_id", "score")
-      graft.operators.TopK.perGroupNative(scored, "query_id", "vec_id",
-          "score", k = 10)
+        Similarity.pqCodes(col("embedding"), books): _*)
+      perQuery(pqScores(coded, books, pqProbes(e, cents))(_.join(_, "cell")),
+          TopK.perGroupNative)
         .orderBy("query_id", "rank")
     },
 
@@ -678,38 +561,14 @@ object SimilarityQueries {
       val e = Tables.embeddings(s, dir)
       val cents = trainedCentroids(s, dir)
       val books = pqCodebooks(s, dir)
-      val codeCols = (0 until PqM).map { m =>
-        Similarity.assignCells(expr(
-          s"slice(embedding, ${m * PqSub + 1}, $PqSub)"), books(m))
-          .as(s"code$m")
-      }
       val coded = e.select(Seq(col("vec_id"),
         Similarity.assignCells(col("embedding"), cents).as("cell")) ++
-        codeCols: _*)
+        Similarity.pqCodes(col("embedding"), books): _*)
       val path = ivfPqLayoutPath(dir)
-      graft.sinks.CorpusWriter.writePartitioned(coded, path,
+      CorpusWriter.writePartitioned(coded, path,
         partitionCol = "cell", sortCols = Seq("vec_id"))
-      val bookLits = books.map(cb =>
-        typedLit(cb.toSeq.map(_.toSeq.map(_.toDouble))))
-      val recon = concat((0 until PqM).map(m =>
-        element_at(bookLits(m), col(s"code$m") + 1)): _*)
-      val atRest = s.read.parquet(path)
-        .withColumn("rvec", recon)
-        .withColumn("_rn", sqrt(graft.functions.DoubleVecDot(
-          col("rvec"), col("rvec"))))
-      val probed = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"),
-          expr("transform(embedding, x -> cast(x as double))").as("qvec"),
-          explode(Similarity.probeCells(col("embedding"), cents,
-            IvfNprobe)).as("cell"))
-        .withColumn("_qn", sqrt(graft.functions.DoubleVecDot(
-          col("qvec"), col("qvec"))))
-      val scored = atRest.join(broadcast(probed), "cell")
-        .withColumn("score", graft.functions.DoubleVecDot(
-          col("rvec"), col("qvec")) / (col("_rn") * col("_qn")))
-        .select("query_id", "vec_id", "score")
-      graft.operators.TopK.perGroupNative(scored, "query_id", "vec_id",
-          "score", k = 10)
+      perQuery(pqScores(s.read.parquet(path), books, pqProbes(e, cents))(
+          _.join(_, "cell")), TopK.perGroupNative)
         .orderBy("query_id", "rank")
     },
 
@@ -726,25 +585,9 @@ object SimilarityQueries {
     // fixed point.
     "ann_topk_ivf_append" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding"))
-      val all = e.unionByName(
-        e.select((col("vec_id") + CopyShift).as("vec_id"),
-          col("embedding")))
       val cents = trainedCentroids(s, dir)
-      val assigned = all
-        .withColumn("cell", Similarity.assignCells(col("embedding"), cents))
-        .withColumn("_vn", Similarity.norm(col("embedding")))
-      val probed = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-        .withColumn("cell",
-          explode(Similarity.probeCells(col("qvec"), cents, IvfNprobe)))
-        .withColumn("_qn", Similarity.norm(col("qvec")))
-      val scored = assigned.join(broadcast(probed), "cell")
-        .withColumn("cosine", Similarity.dot(col("embedding"), col("qvec"))
-          / (col("_vn") * col("_qn")))
-        .select("query_id", "vec_id", "cosine")
-      graft.operators.TopK.perGroupNative(scored, "query_id", "vec_id",
-          "cosine", k = 10)
+      ivfTop10(assigned(withCopy(e, "embedding"), cents),
+          probes(e, cents, IvfNprobe))
         .orderBy("query_id", "rank")
     },
 
@@ -762,19 +605,10 @@ object SimilarityQueries {
     // documented, same trade as any LSH family); planted exact copies
     // encode identically by determinism, so they can never be missed.
     "embedding_code_dups" -> { (s, dir) =>
-      val e = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding"))
-      val all = e.unionByName(
-        e.select((col("vec_id") + CopyShift).as("vec_id"),
-          col("embedding")))
+      val all = withCopy(Tables.embeddings(s, dir), "embedding")
       val books = pqCodebooks(s, dir)
-      val codeCols = (0 until PqM).map { m =>
-        Similarity.assignCells(expr(
-          s"slice(embedding, ${m * PqSub + 1}, $PqSub)"), books(m))
-          .as(s"code$m")
-      }
-      val coded = all.select(
-        col("vec_id") +: col("embedding") +: codeCols: _*)
+      val coded = all.select(col("vec_id") +: col("embedding") +:
+          Similarity.pqCodes(col("embedding"), books): _*)
         .withColumn("_vn", Similarity.norm(col("embedding")))
       val keys = (0 until PqM).map(m => s"code$m")
       val left = coded.select(Seq(col("vec_id").as("id_a"),
@@ -802,11 +636,7 @@ object SimilarityQueries {
     // is corpus-scale — stats/AQE choose broadcast vs shuffle
     // (StrategyNeutralSpec pins both plans).
     "embedding_survivors" -> { (s, dir) =>
-      val e = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding"), col("label"))
-      val all = e.unionByName(
-        e.select((col("vec_id") + CopyShift).as("vec_id"),
-          col("embedding"), col("label")))
+      val all = withCopy(Tables.embeddings(s, dir), "embedding", "label")
       val pairs = Similarity.cosineDupPairs(all, col("vec_id"),
         col("embedding"), "label", threshold = 0.99)
       val comp = graft.operators.Dedup.connectedComponents(
@@ -841,18 +671,13 @@ object SimilarityQueries {
     // (SCALE.md round 13); the knob, not the shape, is what changes
     // in production.
     "semantic_dedup" -> { (s, dir) =>
-      val e = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding"))
-      val all = e.unionByName(
-        e.select((col("vec_id") + CopyShift).as("vec_id"),
-          col("embedding")))
       val cents = trainedCentroids(s, dir)
-      val assigned = all
-        .withColumn("cell", Similarity.assignCells(col("embedding"), cents))
+      val cells = assigned(withCopy(Tables.embeddings(s, dir), "embedding"),
+          cents)
         .withColumn("_vn", Similarity.norm(col("embedding")))
-      val left = assigned.select(col("cell"), col("vec_id").as("id_a"),
+      val left = cells.select(col("cell"), col("vec_id").as("id_a"),
         col("embedding").as("va"), col("_vn").as("_na"))
-      val right = assigned.select(col("cell"), col("vec_id").as("id_b"),
+      val right = cells.select(col("cell"), col("vec_id").as("id_b"),
         col("embedding").as("vb"), col("_vn").as("_nb"))
       val pairs = left.join(right, Seq("cell"))
         .filter(col("id_a") < col("id_b"))
@@ -863,11 +688,11 @@ object SimilarityQueries {
         pairs.select("id_a", "id_b"), col("id_a"), col("id_b"))
       val dropped = comp.filter(col("id") =!= col("canonical"))
         .select(col("id").as("vec_id"))
-      val perCell = assigned.groupBy("cell")
+      val perCell = cells.groupBy("cell")
         .agg(count(lit(1)).as("n_vecs"))
       val pairCell = pairs.groupBy("cell")
         .agg(count(lit(1)).as("n_pairs"))
-      val dropCell = assigned.join(dropped, Seq("vec_id"))
+      val dropCell = cells.join(dropped, Seq("vec_id"))
         .groupBy("cell").agg(count(lit(1)).as("n_dropped"))
       perCell
         .join(pairCell, Seq("cell"), "left")
@@ -891,11 +716,8 @@ object SimilarityQueries {
     // over the k aggregated rows, never corpus rows, so the
     // single-partition window is k-bounded by construction.
     "ivf_balance_report" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val e = Tables.embeddings(s, dir)
-      val cents = trainedCentroids(s, dir)
-      val perCell = e
-        .withColumn("cell", Similarity.assignCells(col("embedding"), cents))
+      val perCell = assigned(Tables.embeddings(s, dir),
+          trainedCentroids(s, dir))
         .groupBy("cell").agg(count(lit(1)).as("n_vecs"))
       val tot = perCell.agg(sum("n_vecs").as("_total"))
       perCell.crossJoin(broadcast(tot))
@@ -923,42 +745,23 @@ object SimilarityQueries {
     "ivf_probe_sweep" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
       val cents = trainedCentroids(s, dir)
-      val assigned = e
-        .withColumn("cell", Similarity.assignCells(col("embedding"), cents))
-        .withColumn("_vn", Similarity.norm(col("embedding")))
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      val probed = q
+      val probed = queryFrame(e)
         .select(col("query_id"), col("qvec"),
           posexplode(Similarity.probeCells(col("qvec"), cents, 4)))
         .select(col("query_id"), col("qvec"),
           (col("pos") + 1).as("probe_rank"), col("col").as("cell"))
-        .withColumn("_qn", Similarity.norm(col("qvec")))
       val np = s.range(1, 5).toDF("nprobe")
-      val scored = assigned.join(broadcast(probed), "cell")
-        .withColumn("cosine", Similarity.dot(col("embedding"), col("qvec"))
-          / (col("_vn") * col("_qn")))
+      val scored = Similarity.probedScores(assigned(e, cents),
+          col("embedding"), probed, col("qvec"), "cell")
         .select("query_id", "vec_id", "cosine", "probe_rank")
       val swept = scored.join(broadcast(np),
           col("probe_rank") <= col("nprobe"))
         .withColumn("grp", col("nprobe") * 1000 + col("query_id"))
-      val ivf = graft.operators.TopK.perGroupNative(swept, "grp",
-          "vec_id", "cosine", k = 10)
+      val ivf = TopK.perGroupNative(swept, "grp", "vec_id", "cosine", k = 10)
         .select(expr("grp div 1000").as("nprobe"),
           pmod(col("grp"), lit(1000)).as("query_id"), col("vec_id"))
-        .withColumn("hit", lit(1L))
-      val bruteScored = Similarity.scoredPairs(e, col("vec_id"),
-          col("embedding"), q, col("query_id"), col("qvec"))
-        .select("query_id", "vec_id", "cosine")
-      val brute = graft.operators.TopK.perGroup(bruteScored, "query_id",
-          "vec_id", "cosine", k = 10)
-        .select("query_id", "vec_id")
-      brute.crossJoin(broadcast(np))
-        .join(ivf, Seq("nprobe", "query_id", "vec_id"), "left")
-        .groupBy("nprobe")
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-        .withColumn("recall_permille", expr("n_hits * 1000 div 50"))
-        .orderBy("nprobe")
+      recallReport(bruteTop10(e, queryFrame(e)).select("query_id", "vec_id")
+          .crossJoin(broadcast(np)), ivf, by = "nprobe", outOf = 50)
     },
 
     // Cell PURITY against ground-truth labels — the standard
@@ -971,11 +774,7 @@ object SimilarityQueries {
     // complementary axis). One kernel-map scan → cell×label counts →
     // per-cell argmax via a cells-bounded rank window.
     "ivf_purity" -> { (s, dir) =>
-      import org.apache.spark.sql.expressions.Window
-      val e = Tables.embeddings(s, dir)
-      val cents = trainedCentroids(s, dir)
-      val cl = e
-        .withColumn("cell", Similarity.assignCells(col("embedding"), cents))
+      val cl = assigned(Tables.embeddings(s, dir), trainedCentroids(s, dir))
         .groupBy("cell", "label").agg(count(lit(1)).as("n"))
       val tot = cl.groupBy("cell").agg(sum("n").as("n_vecs"))
       cl.withColumn("rn", row_number().over(
@@ -1003,22 +802,18 @@ object SimilarityQueries {
     // on the query path is the mitigation — pair mining accepts it
     // for one-pass cost).
     "knn_join" -> { (s, dir) =>
-      val e = Tables.embeddings(s, dir)
-      val cents = trainedCentroids(s, dir)
-      val assigned = e
-        .withColumn("cell", Similarity.assignCells(col("embedding"), cents))
+      val cells = assigned(Tables.embeddings(s, dir), trainedCentroids(s, dir))
         .withColumn("_vn", Similarity.norm(col("embedding")))
-      val left = assigned.select(col("cell"), col("vec_id"),
+      val left = cells.select(col("cell"), col("vec_id"),
         col("embedding").as("va"), col("_vn").as("_na"))
-      val right = assigned.select(col("cell"), col("vec_id").as("nn_id"),
+      val right = cells.select(col("cell"), col("vec_id").as("nn_id"),
         col("embedding").as("vb"), col("_vn").as("_nb"))
       val scored = left.join(right, Seq("cell"))
         .filter(col("vec_id") =!= col("nn_id"))
         .withColumn("cosine", Similarity.dot(col("va"), col("vb"))
           / (col("_na") * col("_nb")))
         .select("vec_id", "nn_id", "cosine")
-      graft.operators.TopK.perGroupNative(scored, "vec_id", "nn_id",
-          "cosine", k = 1)
+      TopK.perGroupNative(scored, "vec_id", "nn_id", "cosine", k = 1)
         .select("vec_id", "nn_id", "cosine")
         .orderBy("vec_id")
     },
@@ -1052,8 +847,7 @@ object SimilarityQueries {
         .withColumn("nearest_cell",
           Similarity.assignCells(col("fvec"), samp))
         .join(broadcast(sampDf), "nearest_cell")
-        .withColumn("cosine", Similarity.dot(col("fvec"), col("svec"))
-          / (Similarity.norm(col("fvec")) * Similarity.norm(col("svec"))))
+        .withColumn("cosine", Similarity.cosine(col("fvec"), col("svec")))
         .select("cell", "nearest_cell", "cosine")
         .orderBy("cell")
     },
@@ -1073,17 +867,8 @@ object SimilarityQueries {
     "ann_range_search" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
       val cents = trainedCentroids(s, dir)
-      val assigned = e
-        .withColumn("cell", Similarity.assignCells(col("embedding"), cents))
-        .withColumn("_vn", Similarity.norm(col("embedding")))
-      val probed = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-        .withColumn("cell",
-          explode(Similarity.probeCells(col("qvec"), cents, IvfNprobe)))
-        .withColumn("_qn", Similarity.norm(col("qvec")))
-      assigned.join(broadcast(probed), "cell")
-        .withColumn("cosine", Similarity.dot(col("embedding"), col("qvec"))
-          / (col("_vn") * col("_qn")))
+      Similarity.probedScores(assigned(e, cents), col("embedding"),
+          probes(e, cents, IvfNprobe), col("qvec"), "cell")
         .filter(col("cosine") >= 0.2)
         .select("query_id", "vec_id", "cosine")
         .orderBy("query_id", "vec_id")
@@ -1103,20 +888,8 @@ object SimilarityQueries {
     "ann_topk_filtered" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
       val cents = trainedCentroids(s, dir)
-      val assigned = e.filter(col("label") % 2 === 0)
-        .withColumn("cell", Similarity.assignCells(col("embedding"), cents))
-        .withColumn("_vn", Similarity.norm(col("embedding")))
-      val probed = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-        .withColumn("cell",
-          explode(Similarity.probeCells(col("qvec"), cents, IvfNprobe)))
-        .withColumn("_qn", Similarity.norm(col("qvec")))
-      val scored = assigned.join(broadcast(probed), "cell")
-        .withColumn("cosine", Similarity.dot(col("embedding"), col("qvec"))
-          / (col("_vn") * col("_qn")))
-        .select("query_id", "vec_id", "cosine")
-      graft.operators.TopK.perGroupNative(scored, "query_id", "vec_id",
-          "cosine", k = 10)
+      ivfTop10(assigned(e.filter(col("label") % 2 === 0), cents),
+          probes(e, cents, IvfNprobe))
         .orderBy("query_id", "rank")
     },
 
@@ -1134,25 +907,17 @@ object SimilarityQueries {
     // the output itself is exact arithmetic, hash-pinned.
     "matryoshka_topk" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
+      val q = queryFrame(e)
       val coarse = e
         .select(col("vec_id"), slice(col("embedding"), 1, 16).as("v16"))
         .crossJoin(broadcast(q.select(col("query_id"),
           slice(col("qvec"), 1, 16).as("q16"))))
-        .withColumn("c16", Similarity.dot(col("v16"), col("q16"))
-          / (Similarity.norm(col("v16")) * Similarity.norm(col("q16"))))
+        .withColumn("c16", Similarity.cosine(col("v16"), col("q16")))
         .select("query_id", "vec_id", "c16")
-      val shortlist = graft.operators.TopK.perGroupNative(coarse,
-          "query_id", "vec_id", "c16", k = 50)
+      val shortlist = perQuery(coarse, TopK.perGroupNative, k = 50)
         .select("query_id", "vec_id")
-      val rescored = e.join(broadcast(shortlist), "vec_id")
-        .join(broadcast(q), "query_id")
-        .withColumn("cosine", Similarity.dot(col("embedding"), col("qvec"))
-          / (Similarity.norm(col("embedding")) * Similarity.norm(col("qvec"))))
-        .select("query_id", "vec_id", "cosine")
-      graft.operators.TopK.perGroup(rescored, "query_id", "vec_id",
-          "cosine", k = 10)
+      perQuery(rescored(e, shortlist, q,
+          Similarity.cosine(col("embedding"), col("qvec"))), TopK.perGroup)
         .orderBy("query_id", "rank")
     },
 
@@ -1180,15 +945,8 @@ object SimilarityQueries {
         .filter(bit_count(col("lo").bitwiseXOR(col("qlo"))) +
           bit_count(col("hi").bitwiseXOR(col("qhi"))) <= 24)
         .select("query_id", "vec_id")
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      val rescored = e.join(broadcast(cand), "vec_id")
-        .join(broadcast(q), "query_id")
-        .withColumn("cosine", Similarity.dot(col("embedding"), col("qvec"))
-          / (Similarity.norm(col("embedding")) * Similarity.norm(col("qvec"))))
-        .select("query_id", "vec_id", "cosine")
-      graft.operators.TopK.perGroup(rescored, "query_id", "vec_id",
-          "cosine", k = 10)
+      perQuery(rescored(e, cand, queryFrame(e),
+          Similarity.cosine(col("embedding"), col("qvec"))), TopK.perGroup)
         .orderBy("query_id", "rank")
     },
 
@@ -1204,27 +962,9 @@ object SimilarityQueries {
     "ann_ndcg_report" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
       val cents = trainedCentroids(s, dir)
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-      val assigned = e
-        .withColumn("cell", Similarity.assignCells(col("embedding"), cents))
-        .withColumn("_vn", Similarity.norm(col("embedding")))
-      val probed = q
-        .withColumn("cell",
-          explode(Similarity.probeCells(col("qvec"), cents, IvfNprobe)))
-        .withColumn("_qn", Similarity.norm(col("qvec")))
-      val ivfScored = assigned.join(broadcast(probed), "cell")
-        .withColumn("cosine", Similarity.dot(col("embedding"), col("qvec"))
-          / (col("_vn") * col("_qn")))
-        .select("query_id", "vec_id", "cosine")
-      val ivf = graft.operators.TopK.perGroupNative(ivfScored, "query_id",
-          "vec_id", "cosine", k = 10)
+      val ivf = ivfTop10(assigned(e, cents), probes(e, cents, IvfNprobe))
         .select("query_id", "vec_id", "rank")
-      val bruteScored = Similarity.scoredPairs(e, col("vec_id"),
-          col("embedding"), q, col("query_id"), col("qvec"))
-        .select("query_id", "vec_id", "cosine")
-      val brute = graft.operators.TopK.perGroup(bruteScored, "query_id",
-          "vec_id", "cosine", k = 10)
+      val brute = bruteTop10(e, queryFrame(e))
         .select(col("query_id"), col("vec_id"),
           col("rank").as("brute_rank"))
       ivf.join(brute, Seq("query_id", "vec_id"), "left")

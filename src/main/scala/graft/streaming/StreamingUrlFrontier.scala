@@ -80,7 +80,7 @@ object StreamingUrlFrontier {
 
 /** Per-canonical-URL state: the admit (rawUrl, tsUs) and the count of
   * suppressed sightings since. Product-encoded (schema-ful, evolvable
-  * — the ChainTasksProcessor discipline). */
+  * — like PolitenessLimiter's `HostBucket`). */
 private[streaming] case class AdmitState(rawUrl: String, tsUs: Long,
     nSuppressed: Long)
 

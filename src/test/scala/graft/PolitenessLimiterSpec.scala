@@ -121,7 +121,7 @@ class PolitenessLimiterSpec extends SparkSpec {
     restartOut.clear()
     val input = MemoryStream[FetchRequest]
     // the memory sink refuses checkpoint recovery; collect through
-    // foreachBatch into a static buffer (the TransformWithStateSpec
+    // foreachBatch into a static buffer (the MultiTaskStreamingSpec
     // restart discipline)
     def startQuery() =
       PolitenessLimiter.limit(input.toDS(), gapUs = g, burst = 1,

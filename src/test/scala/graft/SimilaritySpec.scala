@@ -463,4 +463,50 @@ class SimilaritySpec extends SparkSpec {
     assert(rows.length == 5 * 10)
     assert(rows.forall(_.getInt(rows.head.fieldIndex("rank")) <= 10))
   }
+
+  test("probedScores probing every trained cell (nprobe = IvfK) returns " +
+      "exactly the brute top-10") {
+    import graft.queries.SimilarityQueries._
+    val e = graft.sources.Tables.embeddings(spark, sf0001)
+    val cents = trainedCentroids(spark, sf0001)
+    val probed = probes(e, cents, IvfK)
+    assert(probed.count() === 5L * IvfK, "not every cell is probed")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "vec_id", "rank", "cosine").collect()
+        .map(_.toSeq).toSet
+    val ivf = rows(ivfTop10(assigned(e, cents), probed))
+    assert(ivf.size === 50)
+    assert(ivf === rows(bruteTop10(e, queryFrame(e))))
+  }
+
+  test("PQ reconstruction is the concatenation of the codebook rows " +
+      "assignCells picks for each slice") {
+    import spark.implicits._
+    val e = graft.sources.Tables.embeddings(spark, sf0001)
+    val books = graft.queries.SimilarityQueries.pqCodebooks(spark, sf0001)
+    val width = books.head.head.length
+    val picks = books.indices.map(m => Similarity.assignCells(
+      slice(col("embedding"), m * width + 1, width), books(m).toSeq))
+    val rows = e.select(array(picks: _*).as("picks") +:
+        Similarity.pqCodes(col("embedding"), books): _*)
+      .select(col("picks"), Similarity.pqReconstruct(books))
+      .as[(Seq[Int], Seq[Double])].collect()
+    assert(rows.nonEmpty)
+    assert(rows.map(_._1).distinct.length > 1, "every vector coded alike")
+    rows.foreach { case (pick, rvec) =>
+      val expected = pick.zipWithIndex.flatMap { case (code, m) =>
+        books(m)(code).map(_.toDouble) }
+      assert(rvec === expected, s"codes $pick")
+    }
+  }
+
+  test("the recall report of the brute top-10 against itself is 1000 " +
+      "permille for all 5 queries") {
+    import graft.queries.SimilarityQueries._
+    val e = graft.sources.Tables.embeddings(spark, sf0001)
+    val brute = bruteTop10(e, queryFrame(e)).select("query_id", "vec_id")
+    val report = recallReport(brute, brute).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(report === (0L until 5L).map(q => (q, 10L, 1000L)))
+  }
 }

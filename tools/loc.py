@@ -7,7 +7,9 @@ Counts non-blank, non-comment lines of the source files (.scala, .java,
 .py, .sh) under src/main, src/test and tools at both refs, reading
 blobs with git only (no checkout, so the working tree is not touched).
 Scala/Java `//` and `/* ... */` comments (scaladoc included) and `#`
-comments of Python/shell are not counted; a line holding both code and
+comments of Python/shell are not counted. A triple-quoted string stays
+open across lines, so comment markers inside it (`/*.parquet` in
+embedded SQL) are text, and its lines count as code; a line holding both code and
 a comment is code. `--files` also lists every file whose count changed.
 
 It then reports the configuration surface at both refs: the fields of
@@ -44,10 +46,10 @@ def c_like_code_lines(text):
     not mistaken for comments."""
     n = 0
     depth = 0  # block-comment nesting (Scala nests them)
+    quote = None  # '"' or '"""' while inside a string literal
     for line in text.splitlines():
         code = False
         i = 0
-        quote = None  # '"', '"""' or "'" while inside a literal
         while i < len(line):
             if depth:
                 if line.startswith("*/", i):
@@ -59,6 +61,8 @@ def c_like_code_lines(text):
                 else:
                     i += 1
             elif quote:
+                if not line[i].isspace():
+                    code = True  # a multi-line string's body is code
                 if line[i] == "\\" and quote != '"""':
                     i += 2
                 elif line.startswith(quote, i):

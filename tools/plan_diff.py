@@ -12,8 +12,9 @@ runs or commits without any change to the plan is normalized: expression
 ids (`#123`) and exchange plan ids (`[plan_id=308]`), both session
 counters; RDD call sites (`RDD[7] at localCheckpoint at
 TrainingQueries.scala:2864`); the process-scoped artifact root
-(`/tmp/graft_<pid>`); and the identity hash in an aggregator object's
-default `toString` (`graft.functions.KmvAgg@10744fff`). For every query
+(`/tmp/graft_<pid>`); the JVM's per-run name of a lambda class
+(`TopK$$$Lambda$5510/0x00007f92a0de1ff0`); and the identity hash in an
+object's default `toString` (`graft.functions.KmvAgg@10744fff`). For every query
 the script prints `same` or a unified diff of the normalized plans, then
 a one-line summary. It exits 1 when any query differs or is present on
 one side only.
@@ -30,6 +31,7 @@ NORMALIZE = (
     (re.compile(r"RDD\[\d+\] at (\w+) at \w+\.scala:\d+"),
      r"RDD[N] at \1 at <site>"),
     (re.compile(r"/tmp/graft_\d+"), "/tmp/graft_<pid>"),
+    (re.compile(r"Lambda[$\d]*/0x[0-9a-f]+"), "Lambda_N"),
     (re.compile(r"\b([\w.$]+)@[0-9a-f]+\b"), r"\1@<obj>"),
 )
 
