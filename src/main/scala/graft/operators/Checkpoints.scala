@@ -23,7 +23,19 @@ import org.apache.spark.sql.DataFrame
   * scans a materialized RDD), so plan growth — the reason every
   * iterative operator here checkpoints per round — is controlled the
   * same way in either mode; `CheckpointsSpec` pins result equality
-  * and lineage truncation under the reliable strategy. */
+  * and lineage truncation under the reliable strategy.
+  *
+  * What is kept and what is released: a truncated frame's blocks (and,
+  * in reliable mode, its `rdd-*` checkpoint directory) stay until
+  * [[release]]d — Spark's cleaner does not delete checkpoint files by
+  * default. A loop that has materialized round N's successor releases
+  * round N, so `Dedup.connectedComponents` leaves only its edge frame
+  * and the returned labels on disk, and star contraction only its
+  * final edge set. The BFS/redirect loops in `WebQueries` chain lazy
+  * checkpoints with no action between rounds: nothing materializes a
+  * round's successor before the query's own action, so no round can be
+  * released early there and their directories stay until the
+  * checkpoint dir is cleaned. */
 object Checkpoints {
 
   def truncate(df: DataFrame, eager: Boolean = true): DataFrame = {
@@ -40,5 +52,19 @@ object Checkpoints {
       }
       df.checkpoint(eager)
     } else df.localCheckpoint(eager)
+  }
+
+  /** Releases a [[truncate]]d frame its successor no longer reads:
+    * unpersists it and, in reliable mode, deletes its checkpoint
+    * directory (nothing to delete if it was never materialized). */
+  def release(df: DataFrame): Unit = {
+    df.unpersist()
+    df.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.flatMap(_.getCheckpointFile).foreach { dir =>
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+        .delete(p, true)
+    }
   }
 }

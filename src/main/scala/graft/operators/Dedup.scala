@@ -378,7 +378,7 @@ object Dedup {
             col("canonical"))).as("canonical")),
         eager = false)
       changed = next.filter(col("canonical") =!= col("old")).count()
-      labels.unpersist()
+      Checkpoints.release(labels)
       labels = next
       iters += 1
     }
@@ -412,6 +412,24 @@ object Dedup {
     require(changed == 0,
       s"connectedComponents did not converge in $maxIters rounds")
     labels.select("id", "canonical")
+  }
+
+  /** The survivors of a near-dup collapse: the ids of `ids` (its one
+    * column) minus every non-canonical member of the
+    * [[connectedComponents]] of `pairs` (`id_a`, `id_b`) — each
+    * component keeps its min id, and unpaired ids all survive. The
+    * anti-join is strategy-NEUTRAL (no broadcast hint): the dropped
+    * set is ∝ duplicates, and real crawl corpora run 30-80% near-dups,
+    * so a forced broadcast of it would exceed the broadcast cap long
+    * before 100 TB; stats/AQE pick broadcast at small scale and an
+    * id-hashed shuffle anti-join past the threshold
+    * (StrategyNeutralSpec pins both plans). */
+  def survivors(ids: DataFrame, pairs: DataFrame): DataFrame = {
+    val id = ids.columns.head
+    val dropped = connectedComponents(pairs, col("id_a"), col("id_b"))
+      .filter(col("id") =!= col("canonical"))
+      .select(col("id").as(id))
+    ids.join(dropped, Seq(id), "left_anti")
   }
 
   /** Alternating large-star/small-star contraction (Kiveris et al.,
@@ -465,8 +483,8 @@ object Dedup {
       // an empty one-sided anti-join
       done = next.count() == e.count() &&
         next.join(e, Seq("src", "dst"), "left_anti").isEmpty
-      ls.unpersist()
-      e.unpersist()
+      Checkpoints.release(ls)
+      Checkpoints.release(e)
       e = next
       rounds += 1
     }

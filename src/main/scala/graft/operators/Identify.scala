@@ -82,6 +82,24 @@ object Identify {
       array_join(miss, ", "), lit(s"] for $forName")))
   }
 
+  /** JS truthiness of `c` (`c ? … : …`), resolved from the column's
+    * static type in `df` (plan-time schema lookup; no job,
+    * streaming-safe): a number is falsy when zero or NaN — Spark's
+    * `NaN != 0` is TRUE, so float/double columns need the explicit
+    * isnan guard (integral and decimal types cannot hold NaN) — and a
+    * string only when empty (string "0" is truthy). NULL is falsy. */
+  private def jsTruthy(df: DataFrame, c: Column): Column =
+    df.select(c).schema.head.dataType match {
+      case org.apache.spark.sql.types.DoubleType |
+           org.apache.spark.sql.types.FloatType =>
+        c.isNotNull && !isnan(c) && c =!= lit(0)
+      case _: org.apache.spark.sql.types.NumericType =>
+        c.isNotNull && c =!= lit(0)
+      case _ =>
+        val s = c.cast("string")
+        s.isNotNull && s =!= ""
+    }
+
   /** I3 — resolve ids, keys and seqNos per the configured property names
     * (`kinesis-identify.js:85-133`, matrix
     * `test/kinesis-identify.test.js:208-425`):
@@ -144,42 +162,9 @@ object Identify {
         // only builds seqNos at all under `eventIdAndSeqNos.eventSeqNo
         // ?`, so a falsy eventSeqNo yields EMPTY seqNos — which rejects
         // under required sequencing — never a ('eventSeqNo', null/'0')
-        // pair. JS falsiness is TYPE-dependent: a string is falsy only
-        // when empty (string "0" is truthy), a number when zero — so
-        // the gate resolves the column's static type and mirrors each
-        // case (plan-time schema lookup; no job, streaming-safe).
-        val seqTruthy =
-          df.select(eventSeqNo).schema.head.dataType match {
-            // JS numeric falsiness includes NaN (`NaN ? …` is false), and
-            // Spark's `NaN != 0` is TRUE — so float/double columns need
-            // an explicit isnan guard or a NaN seqNo would slip through
-            // as truthy where the reference yields empty seqNos.
-            // Integral and decimal types cannot hold NaN.
-            case org.apache.spark.sql.types.DoubleType |
-                 org.apache.spark.sql.types.FloatType =>
-              eventSeqNo.isNotNull && !isnan(eventSeqNo) &&
-                eventSeqNo =!= lit(0)
-            case _: org.apache.spark.sql.types.NumericType =>
-              eventSeqNo.isNotNull && eventSeqNo =!= lit(0)
-            case _ =>
-              val s = eventSeqNo.cast("string")
-              s.isNotNull && s =!= ""
-          }
-        // the sub-seqNo gate mirrors the same type-aware JS truthiness
-        // (`eventSubSeqNo ?`): NaN is falsy for float/double columns,
-        // string "0" is truthy, numeric 0 is falsy
-        val sub =
-          df.select(eventSubSeqNo).schema.head.dataType match {
-            case org.apache.spark.sql.types.DoubleType |
-                 org.apache.spark.sql.types.FloatType =>
-              eventSubSeqNo.isNotNull && !isnan(eventSubSeqNo) &&
-                eventSubSeqNo =!= lit(0)
-            case _: org.apache.spark.sql.types.NumericType =>
-              eventSubSeqNo.isNotNull && eventSubSeqNo =!= lit(0)
-            case _ =>
-              val s = eventSubSeqNo.cast("string")
-              s.isNotNull && s =!= ""
-          }
+        // pair. JS falsiness is TYPE-dependent; see [[jsTruthy]].
+        val seqTruthy = jsTruthy(df, eventSeqNo)
+        val sub = jsTruthy(df, eventSubSeqNo)
         val pairs = when(!seqTruthy,
             array().cast("array<struct<name:string,value:string>>"))
           .when(sub, array(

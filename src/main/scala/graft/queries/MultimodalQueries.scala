@@ -33,12 +33,7 @@ object MultimodalQueries {
     require(graft.tools.ScaleUp.Shift % CopyShift == 0,
       "image seed recovery assumes ScaleUp.Shift is a multiple of " +
         "CopyShift")
-    val all = {
-      val d = Tables.documents(s, dir).select(col("doc_id"))
-      d.unionByName(
-        d.filter(pmod(col("doc_id"), lit(5)) >= lit(3))
-          .select((col("doc_id") + CopyShift).as("doc_id")))
-    }
+    val all = withRecrawl(Tables.documents(s, dir).select(col("doc_id")))
     val hashed = all.as[Long].map { id =>
       val base = (id % CopyShift).toInt
       val copy = (id / graft.tools.ScaleUp.Shift).toInt
@@ -67,8 +62,6 @@ object MultimodalQueries {
         sys.error(s"fixture for doc $id is not a 24bpp BMP")))
     }.toDF("doc_id", "phash")
   }
-
-  private val CopyShift = 1000000L
 
   /** The dHash gray value at resized column `tx` (a SQL expression
     * string), in scope: `ty` (resized row), `w`/`h` (source dims),
@@ -396,14 +389,9 @@ object MultimodalQueries {
     // pair report.
     "multimodal_dedup_survivors" -> { (s, dir) =>
       val (all, hashed) = imageCorpus(s, dir)
-      val pairs = graft.operators.Dedup.hammingBandPairs(hashed,
-          col("doc_id"), col("dhash"), maxHamming = 3)
-        .select("id_a", "id_b")
-      val comp = graft.operators.Dedup.connectedComponents(
-        pairs, col("id_a"), col("id_b"))
-      val dropped = comp.filter(col("id") =!= col("canonical"))
-        .select(col("id").as("doc_id"))
-      all.join(dropped, Seq("doc_id"), "left_anti")
+      graft.operators.Dedup.survivors(all,
+          graft.operators.Dedup.hammingBandPairs(hashed, col("doc_id"),
+            col("dhash"), maxHamming = 3))
         .orderBy("doc_id")
     },
 

@@ -594,10 +594,8 @@ object OpsQueries {
     // summary is 4 rows at any scale. At 100 TB the change batch is
     // ingest-sized, so its side broadcasts.
     "cdc_merge" -> { (s, dir) =>
-      // local copy of the dedup tier's CopyShift: insert ids live in
-      // the +1e6 block, disjoint from base ids by the same invariant
-      // dedup_source_matrix asserts (ids < 1e6, ScaleUp shifts by 1e7)
-      val InsertShift = 1000000L
+      // insert ids live in the +CopyShift block, disjoint from base
+      // ids by the invariant dedup_source_matrix asserts
       val docs = Tables.documents(s, dir)
       val base = docs.select(col("doc_id"), md5(col("text")).as("fp"))
       val nullFp = lit(null).cast("string")
@@ -608,7 +606,7 @@ object OpsQueries {
         .select(col("doc_id"), lit("U").as("op"),
           md5(concat(lit("v2:"), col("text"))).as("new_fp"))
       val ins = docs.filter(pmod(col("doc_id"), lit(11)) === 0)
-        .select((col("doc_id") + InsertShift).as("doc_id"),
+        .select((col("doc_id") + CopyShift).as("doc_id"),
           lit("I").as("op"),
           md5(concat(lit("new:"), col("text"))).as("new_fp"))
       val cdc = dels.unionByName(upds).unionByName(ins)

@@ -19,7 +19,6 @@ import graft.sources.Tables
   */
 object SimilarityQueries {
 
-  private val CopyShift = 1000000L
   private val Dim = 64
 
   // ann_topk_ivf_trained knobs — mirrored literally in its oracle SQL
@@ -248,14 +247,6 @@ object SimilarityQueries {
     pqScores(e.select(col("vec_id") +:
       Similarity.pqCodes(col("embedding"), books): _*), books,
       pqQueries(e))(_.crossJoin(_))
-
-  /** The corpus' `vec_id` and `cols` plus an id-shifted copy of the same
-    * rows (planted exact duplicates, or an append batch). */
-  private def withCopy(e: DataFrame, cols: String*): DataFrame = {
-    val base = e.select(col("vec_id") +: cols.map(col): _*)
-    base.unionByName(base.select(
-      (col("vec_id") + CopyShift).as("vec_id") +: cols.map(col): _*))
-  }
 
   /** The exact re-score of a `(query_id, vec_id)` shortlist: the
     * shortlist, then the query frame `q`, broadcast onto the corpus `e`,
@@ -515,7 +506,8 @@ object SimilarityQueries {
     // Embedding-cosine near-dup pairs, label-bucketed, over the corpus
     // plus an id-shifted copy (planted exact duplicates ⇒ cosine 1).
     "embedding_dups" -> { (s, dir) =>
-      val all = withCopy(Tables.embeddings(s, dir), "embedding", "label")
+      val all = withCopy(Tables.embeddings(s, dir), "vec_id", "embedding",
+        "label")
       Similarity.cosineDupPairs(all, col("vec_id"), col("embedding"),
           "label", threshold = 0.99)
         .orderBy("id_a", "id_b")
@@ -586,7 +578,7 @@ object SimilarityQueries {
     "ann_topk_ivf_append" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
       val cents = trainedCentroids(s, dir)
-      ivfTop10(assigned(withCopy(e, "embedding"), cents),
+      ivfTop10(assigned(withCopy(e, "vec_id", "embedding"), cents),
           probes(e, cents, IvfNprobe))
         .orderBy("query_id", "rank")
     },
@@ -605,7 +597,7 @@ object SimilarityQueries {
     // documented, same trade as any LSH family); planted exact copies
     // encode identically by determinism, so they can never be missed.
     "embedding_code_dups" -> { (s, dir) =>
-      val all = withCopy(Tables.embeddings(s, dir), "embedding")
+      val all = withCopy(Tables.embeddings(s, dir), "vec_id", "embedding")
       val books = pqCodebooks(s, dir)
       val coded = all.select(col("vec_id") +: col("embedding") +:
           Similarity.pqCodes(col("embedding"), books): _*)
@@ -629,22 +621,15 @@ object SimilarityQueries {
     // Cross-tier composition: the embedding-space near-dup COLLAPSE —
     // cosine pairs (Similarity tier) → transitive closure (Dedup
     // tier's connectedComponents, star-contraction fallback and all) →
-    // keep min-id canonicals + unpaired vectors. Pins that the two
-    // tiers compose on a shared pair contract, exactly like the text
-    // pipeline's dedup_survivors. The anti-join carries NO broadcast
-    // hint: the dropped set is ∝ duplicates, which on high-dup corpora
-    // is corpus-scale — stats/AQE choose broadcast vs shuffle
-    // (StrategyNeutralSpec pins both plans).
+    // keep min-id canonicals + unpaired vectors (Dedup.survivors, the
+    // text pipeline's dedup_survivors step). Pins that the two tiers
+    // compose on a shared pair contract.
     "embedding_survivors" -> { (s, dir) =>
-      val all = withCopy(Tables.embeddings(s, dir), "embedding", "label")
-      val pairs = Similarity.cosineDupPairs(all, col("vec_id"),
-        col("embedding"), "label", threshold = 0.99)
-      val comp = graft.operators.Dedup.connectedComponents(
-        pairs, col("id_a"), col("id_b"))
-      val dropped = comp.filter(col("id") =!= col("canonical"))
-        .select(col("id").as("vec_id"))
-      all.select("vec_id")
-        .join(dropped, Seq("vec_id"), "left_anti")
+      val all = withCopy(Tables.embeddings(s, dir), "vec_id", "embedding",
+        "label")
+      graft.operators.Dedup.survivors(all.select("vec_id"),
+          Similarity.cosineDupPairs(all, col("vec_id"), col("embedding"),
+            "label", threshold = 0.99))
         .orderBy("vec_id")
     },
 
@@ -672,8 +657,8 @@ object SimilarityQueries {
     // in production.
     "semantic_dedup" -> { (s, dir) =>
       val cents = trainedCentroids(s, dir)
-      val cells = assigned(withCopy(Tables.embeddings(s, dir), "embedding"),
-          cents)
+      val cells = assigned(
+          withCopy(Tables.embeddings(s, dir), "vec_id", "embedding"), cents)
         .withColumn("_vn", Similarity.norm(col("embedding")))
       val left = cells.select(col("cell"), col("vec_id").as("id_a"),
         col("embedding").as("va"), col("_vn").as("_na"))

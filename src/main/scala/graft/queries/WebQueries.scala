@@ -555,11 +555,8 @@ object WebQueries {
     // farm bounds the pair blowup; every join is a hash equi-join on
     // md5 or doc_id, and the matrix is domain²-bounded.
     "domain_dup_matrix" -> { (s, dir) =>
-      val DupShift = 1000000L
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val corpus = d.unionByName(
-        d.filter(pmod(col("doc_id"), lit(5)) >= 3)
-          .select((col("doc_id") + DupShift).as("doc_id"), col("text")))
+      val corpus = withRecrawl(
+        Tables.documents(s, dir).select(col("doc_id"), col("text")))
       val fp = corpus.select(col("doc_id"), md5(col("text")).as("f"))
       val capped = fp.groupBy("f").agg(count(lit(1)).as("c"))
         .filter(col("c").between(2, 100)).select("f")

@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.TextAnalysis
+import graft.sources.Tables
+
 package object queries {
   /** A named query over one scale-factor directory. */
   type Q = (SparkSession, String) => DataFrame
@@ -19,6 +22,47 @@ package object queries {
   /** Exact average: decimal sum / count, evaluated in double at the end. */
   def decAvg(c: Column): Column =
     (sum(dec(c)).cast("double") / count(c)).cast("double")
+
+  /** Id offset of the planted copies in the dedup family's fixtures.
+    * Base ids stay below it and ScaleUp shifts are multiples of it, so
+    * `id % CopyShift` recovers a copy's original (asserted where a
+    * query relies on it). The oracle SQL embeds the same literal. */
+  val CopyShift = 1000000L
+
+  /** `df` with its `id` column shifted by [[CopyShift]], every other
+    * column in place. */
+  def shifted(df: DataFrame, id: String): DataFrame =
+    df.select(df.columns.map(c =>
+      if (c == id) (col(c) + CopyShift).as(c) else col(c)): _*)
+
+  /** `id` and `cols` of `df` plus an id-shifted copy of the same rows
+    * (planted exact duplicates, or an append batch). */
+  def withCopy(df: DataFrame, id: String, cols: String*): DataFrame = {
+    val base = df.select((id +: cols).map(col): _*)
+    base.unionByName(shifted(base, id))
+  }
+
+  /** documents `(doc_id, text)` ∪ its id-shifted copy: planted
+    * duplicates give the dedup operators ground truth to find (the raw
+    * corpus has no duplicate texts). */
+  def withCopies(s: SparkSession, dir: String): DataFrame =
+    withCopy(Tables.documents(s, dir), "doc_id", "text")
+
+  /** `d` plus an id-shifted re-crawl of its modulo-selected 40% tail
+    * (`doc_id % 5 >= 3`: SF-invariant, no size probe). */
+  def withRecrawl(d: DataFrame): DataFrame =
+    d.unionByName(shifted(d.filter(pmod(col("doc_id"), lit(5)) >= lit(3)),
+      "doc_id"))
+
+  /** Every 3rd doc of `d` as its first-half-words excerpt under a
+    * shifted id: `(doc_id, text)` followed by `extra`. */
+  def excerpts(d: DataFrame, extra: Column*): DataFrame =
+    d.filter(pmod(col("doc_id"), lit(3)) === 0)
+      .withColumn("toks", TextAnalysis.tokens(lower(col("text"))))
+      .select(Seq((col("doc_id") + CopyShift).as("doc_id"),
+        array_join(expr("slice(toks, 1, " +
+          "greatest(cast(size(toks) div 2 as int), 1))"), " ")
+          .as("text")) ++ extra: _*)
 
   /** PROCESS-SCOPED artifact root for query-side at-rest layouts
     * (IVF/PQ exports, LSH index, corpus write-read). r13 flagged the

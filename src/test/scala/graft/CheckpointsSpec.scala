@@ -75,6 +75,30 @@ class CheckpointsSpec extends SparkSpec {
     assert(got.toSeq === expected.toSeq)
   }
 
+  test("reliable mode releases superseded propagation rounds: a chain " +
+      "leaves only the edge frame's and the returned labels' rdd-* dirs") {
+    import spark.implicits._
+    def rddDirs(): Set[String] =
+      spark.sparkContext.getCheckpointDir.toSeq.flatMap { d =>
+        val p = new org.apache.hadoop.fs.Path(d)
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (!fs.exists(p)) Nil
+        else fs.listStatus(p).map(_.getPath.getName)
+          .filter(_.startsWith("rdd-")).toSeq
+      }.toSet
+    // chain 1-…-7: the min label walks one hop per round, so labels
+    // take 6 propagation rounds (inside the budget before the star
+    // contraction fallback)
+    val chain = (1L to 6L).map(i => (i, i + 1)).toDF("a", "b")
+    withReliable {
+      val before = rddDirs()
+      val out = Dedup.connectedComponents(chain, col("a"), col("b"))
+      assert(out.as[(Long, Long)].collect().toMap ===
+        (1L to 7L).map(_ -> 1L).toMap)
+      assert((rddDirs() -- before).size === 2)
+    }
+  }
+
   test("crawl_depth_bfs and redirect_resolve are hash-identical " +
       "under the reliable strategy at sf0.001") {
     val dir = "/root/testdata/sf0.001"

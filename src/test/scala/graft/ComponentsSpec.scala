@@ -31,6 +31,23 @@ class ComponentsSpec extends SparkSpec {
       30L -> 30L, 31L -> 30L))
   }
 
+  test("survivors keeps the unpaired ids plus each component's min id") {
+    import spark.implicits._
+    // chain 10-11-12-13, triangle 20-21-22, lone pair 30-31, and three
+    // ids in no pair at all
+    val pairs = Seq(
+      (11L, 10L), (11L, 12L), (12L, 13L),
+      (20L, 21L), (21L, 22L), (20L, 22L),
+      (30L, 31L)
+    ).toDF("id_a", "id_b")
+    val ids = Seq(10L, 11L, 12L, 13L, 20L, 21L, 22L, 30L, 31L, 1L, 40L, 50L)
+      .toDF("doc_id")
+    val out = Dedup.survivors(ids, pairs)
+    assert(out.columns.toSeq === Seq("doc_id"))
+    assert(out.as[Long].collect().sorted.toSeq ===
+      Seq(1L, 10L, 20L, 30L, 40L, 50L))
+  }
+
   test("non-convergence within maxIters throws instead of returning a " +
       "partial clustering") {
     import spark.implicits._

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Per-query diff of two `graft.tools.Explain` outputs.
 
-    python3 tools/plan_diff.py <before.txt> <after.txt>
+    python3 tools/plan_diff.py <before.txt> <after.txt> [<before2.txt>]
 
 Each input is the captured console output (stdout and stderr) of
 
@@ -16,8 +16,11 @@ TrainingQueries.scala:2864`); the process-scoped artifact root
 (`TopK$$$Lambda$5510/0x00007f92a0de1ff0`); and the identity hash in an
 object's default `toString` (`graft.functions.KmvAgg@10744fff`). For every query
 the script prints `same` or a unified diff of the normalized plans, then
-a one-line summary. It exits 1 when any query differs or is present on
-one side only.
+a one-line summary. With a second run of the before commit
+(`before2.txt`), a query whose two before runs already differ is
+printed `unresolved` instead: its plan moves without any change, so a
+comparison cannot show it the same. It exits 1 when any query differs,
+is unresolved or is present on one side only.
 """
 import difflib
 import re
@@ -56,14 +59,18 @@ def plans(path):
     return out
 
 
-def main(before_path, after_path):
+def main(before_path, after_path, before2_path=None):
     before, after = plans(before_path), plans(after_path)
+    before2 = plans(before2_path) if before2_path else before
     names = list(before) + [n for n in after if n not in before]
     differ = []
     for name in names:
         if name not in before or name not in after:
             side = "after" if name not in before else "before"
             print(f"== {name}: only in {side}")
+            differ.append(name)
+        elif before2.get(name) != before[name]:
+            print(f"== {name}: unresolved (the two before runs differ)")
             differ.append(name)
         elif before[name] == after[name]:
             print(f"== {name}: same")
@@ -75,11 +82,12 @@ def main(before_path, after_path):
                     lineterm="", n=2))
             differ.append(name)
     print(f"{len(names) - len(differ)}/{len(names)} queries same"
-          + (f"; differ: {' '.join(differ)}" if differ else ""))
+          + (f"; differ or unresolved: {' '.join(differ)}"
+             if differ else ""))
     return 1 if differ else 0
 
 
 if __name__ == "__main__":
-    if len(sys.argv) != 3:
+    if len(sys.argv) not in (3, 4):
         sys.exit(__doc__)
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(*sys.argv[1:]))
