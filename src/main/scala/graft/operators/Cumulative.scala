@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Scale-safe GLOBAL cumulative sums — the two-pass remedy for
+/** GLOBAL cumulative sums in two passes — the remedy for
   * `Window.orderBy` with no `partitionBy` (guide §2: an unpartitioned
   * window moves the whole frame to ONE task, which is fine for frames
   * bounded by construction but a single-partition sort for frames
@@ -21,14 +21,19 @@ import org.apache.spark.sql.functions._
   * and de-synchronized the local cums from their prefixes), run the
   * running sum INSIDE each bucket (a partitioned window — streams,
   * never buffers), then add each bucket's exclusive prefix, computed
-  * with one single-task window over the ≤ 960-row per-bucket totals
-  * (`partitionBy(lit(0))` — the partition is DEFINED and the frame
-  * bucket-bounded, so no single-partition hazard hides here either).
+  * with one window over the ≤ 960-row per-bucket totals (no partition
+  * key: a bounded frame evaluated in one task, so WindowExec still
+  * logs its `No Partition Defined` warning, but the frame cannot grow
+  * with the data).
   * Global cum = local cum + prefix for ANY monotone bucketing, so the
   * result is bit-equal to the single-partition window it replaces.
-  * Per-bucket occupancy is the keys within a 1/16-octave of the value
-  * range — the same guarantee structure the HDR quantile sketch
-  * itself deploys.
+  *
+  * The bound is a constant factor, not a removal: a bucket holds the
+  * keys within a 1/16-octave of the value range, so for dense integer
+  * keys `0 until n` the densest bucket (the top octave's sixteenth)
+  * holds ~n/32 of the rows. The in-bucket window still sorts that one
+  * bucket in one task; it is ~32× smaller than the single-partition
+  * sort it replaces, not bounded by a constant.
   *
   * Contract: `df` must be UNIQUE on `orderCol` (the histogram frames
   * these rows feed are groupBy outputs keyed by the order column) and
@@ -67,17 +72,16 @@ object Cumulative {
     val partTotals = local.groupBy("_pid")
       .agg(aggCols.head, aggCols.tail: _*)
     // exclusive prefix per bucket + global totals in ONE window pass
-    // over the ≤ 960-row totals frame
-    val wp = Window.partitionBy(lit(0)).orderBy("_pid")
+    // over the ≤ 960-row totals frame, evaluated in one task
+    val wp = Window.orderBy("_pid")
       .rowsBetween(Window.unboundedPreceding, -1)
-    val wg = Window.partitionBy(lit(0))
     val prefix = partTotals.select(
       (col("_pid") +:
         (sums.map { case (_, out) =>
           coalesce(sum(col(s"_t_$out")).over(wp), lit(0L))
             .as(s"_p_$out") } ++
           totals.map { case (_, out) =>
-            sum(col(s"_g_$out")).over(wg).as(out) })): _*)
+            sum(col(s"_g_$out")).over().as(out) })): _*)
     val joined = local.join(broadcast(prefix), Seq("_pid"))
     val bumped = sums.foldLeft(joined) { case (acc, (_, out)) =>
       acc.withColumn(out, col(out) + col(s"_p_$out"))

@@ -871,12 +871,10 @@ object TemporalQueries {
                 hist, c, Seq(("cnt", "cum")), Seq(("cnt", "n")))
               .select(col(c), col("cum"), col("n"))
           else hist.select(col(c),
-            // defined constant partition: same one-task evaluation the
-            // bounded size-histogram licenses, without the WindowExec
-            // single-partition warning
-            sum("cnt").over(Window.partitionBy(lit(0)).orderBy(c))
-              .as("cum"),
-            sum("cnt").over(Window.partitionBy(lit(0))).as("n"))
+            // no partition key: the size histogram is a bounded frame
+            // evaluated in one task
+            sum("cnt").over(Window.orderBy(c)).as("cum"),
+            sum("cnt").over().as("n"))
         def qd(p: Double) =
           min(when(col("cum") >= ceil(lit(p) * col("n")), col(c)))
         ranked.agg(qd(0.5).as(s"p50_$c"), qd(0.9).as(s"p90_$c"),

@@ -1055,12 +1055,11 @@ object TrainingQueries {
               expr("coalesce(s, CAST(0 AS BIGINT)) * 85 div 100"))
               .as("rank"))
       }
-      // partitionBy(lit(0)) marks this window as reviewed-bounded: it
-      // runs over the 20-row limit. Spark's optimizer drops the
-      // constant key, so the plan is the unpartitioned one.
+      // no partition key: the window runs over the 20-row limit, a
+      // bounded frame evaluated in one task
       rank.orderBy(col("rank").desc, col("doc_id")).limit(20)
-        .withColumn("hub_rank", row_number().over(Window.partitionBy(lit(0))
-          .orderBy(col("rank").desc, col("doc_id"))))
+        .withColumn("hub_rank", row_number().over(
+          Window.orderBy(col("rank").desc, col("doc_id"))))
         .select("hub_rank", "doc_id", "rank")
         .orderBy("hub_rank")
     },
@@ -1885,14 +1884,11 @@ object TrainingQueries {
       val d = Tables.documents(s, dir).select(col("source"),
         TextAnalysis.tokenCount(col("text")).cast("long").as("tokens"))
       val hist = d.groupBy("tokens").agg(count(lit(1)).as("cnt"))
-      // partitionBy(lit(0)): same one-partition evaluation the frame's
-      // boundedness licenses, spelled as a DEFINED partition so the
-      // entry run does not flood WindowExec single-partition warnings
-      // for a pinned-bounded frame
+      // no partition key: the histogram has one row per distinct
+      // token count, a bounded frame evaluated in one task
       val ranked = hist.select(col("tokens"),
-        sum("cnt").over(Window.partitionBy(lit(0)).orderBy("tokens"))
-          .as("cum"),
-        sum("cnt").over(Window.partitionBy(lit(0))).as("n"))
+        sum("cnt").over(Window.orderBy("tokens")).as("cum"),
+        sum("cnt").over().as("n"))
       def qd(p: Double) =
         min(when(col("cum") >= ceil(lit(p) * col("n")), col("tokens")))
       val th = ranked.agg(qd(0.05).as("lo"), qd(0.95).as("hi"))
@@ -3240,15 +3236,12 @@ object TrainingQueries {
         .agg(sum(col("n_chars")).as("chars"))
       val t = b.agg(sum("chars").as("total_chars"),
         count(lit(1)).as("n_buckets"))
-      // partitionBy(lit(0)): the ≤200-bucket boundedness (pinned
-      // above) licenses the one-partition window. The constant key
-      // marks it as reviewed; Spark's optimizer drops it, so WindowExec
-      // still logs its single-partition warning.
-      val w = Window.partitionBy(lit(0)).orderBy("bucket")
+      // no partition key: the windows run over ≤200 buckets (pinned
+      // above), a bounded frame evaluated in one task
+      val w = Window.orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val cusum = b.crossJoin(broadcast(t))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(lit(0)).orderBy("bucket")))
+        .withColumn("rank", row_number().over(Window.orderBy("bucket")))
         .withColumn("cum_chars", sum("chars").over(w))
         .withColumn("cusum",
           expr("cum_chars * n_buckets - total_chars * rank"))

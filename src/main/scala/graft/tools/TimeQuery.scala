@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 import graft.{GraftSession, SparkEntry}
 
 /** Times one registered query for N passes on SPARK_GRAFT_SF_DIR with
@@ -14,7 +16,12 @@ import graft.{GraftSession, SparkEntry}
   * a left join to a unique-keyed aggregate (r15 finding: Bench's
   * dedup_span_trim / decontaminate / dup_span_report numbers measure
   * only their surviving scan side; see Bench's scaladoc). `-full` is
-  * the truth instrument for those shapes. */
+  * the truth instrument for those shapes.
+  *
+  * Each pass also prints the classes it compiled (the JVM-wide
+  * `CodegenMetrics` compile count): a warm pass compiles 0, so a
+  * non-zero count on every pass names a query whose generated source
+  * changes between runs. */
 object TimeQuery {
   def main(rawArgs: Array[String]): Unit = {
     val full = rawArgs.contains("-full")
@@ -39,12 +46,14 @@ object TimeQuery {
       throw new IllegalStateException("unreachable")
     })
     val spark = GraftSession.local("graft-time")
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
     (1 to passes).foreach { i =>
+      val c0 = compiles.getCount
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val n = if (full) df.queryExecution.toRdd.count() else df.count()
       val mode = if (full) " (full)" else ""
-      println(f"[timequery] $name$mode pass $i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
+      println(f"[timequery] $name$mode pass $i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows, ${compiles.getCount - c0} classes compiled)")
     }
     spark.stop()
   }
