@@ -18,8 +18,7 @@ import org.apache.spark.sql.SparkSession
   * delivery, ~440 per analytics pass. On a 4-vCPU VM that put the
   * perfbench analytics_mix per-call geomean at 1.09 s instead of 0.74 s
   * and consumer_small's at 3.7 s instead of 3.0 s (medians of 5 and 3
-  * runs).
-  * Measured with a cache that never evicts, one full perfbench run
+  * runs). Measured with a cache that never evicts, one full perfbench run
   * compiles 131 distinct classes for consumer_small and 412 for
   * analytics_mix (120 and 352 with the stage id kept out of the class
   * name, below); 2000 is a round value above twice their sum, for a JVM

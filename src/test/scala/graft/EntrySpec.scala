@@ -25,6 +25,21 @@ class EntrySpec extends SparkSpec {
     }
   }
 
+  test("two registry queries run alternately reuse their compiled " +
+      "classes in the second round (generated code is cached for the " +
+      "life of the JVM)") {
+    def round(): Unit = Seq("cluster_labels", "heaps_law").foreach { q =>
+      SparkEntry.queries(q)(spark, sf0001).write.format("noop")
+        .mode("overwrite").save()
+    }
+    round()
+    // usually 0; an AQE plan variant (see ConsumerPipelineSpec) may
+    // add a few. At Spark's default cache size of 100 this round
+    // compiles 71-92.
+    val n = compiledDuring(round())
+    assert(n <= 8L, s"the second round compiled $n classes")
+  }
+
   test("every bench name resolves to a registered query (a typo would " +
       "silently shrink the bench)") {
     val missing = SparkEntry.benchNames.filterNot(SparkEntry.queries.contains)
