@@ -4,22 +4,20 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{DoubleVecDot, FloatVecDot}
+import graft.functions.VecDot
 
 /** Session extension registering this engine's custom Catalyst
   * expressions with the SQL function registry, so `spark.sql` users get
-  * them too:
+  * them too, plus its optimizer rules (see [[graft.plans.ChainHeadsRule]]):
   *
-  *  - `float_vec_dot(a, b)` — codegen'd array<float> dot product.
-  *  - `double_vec_dot(a, b)` — its array<double> twin (dequantized /
-  *    derived vectors).
+  *  - `float_vec_dot(a, b)` / `double_vec_dot(a, b)` — the codegen'd
+  *    [[graft.functions.VecDot]] over array<float> or array<double>
+  *    (dequantized / derived vectors).
   *
   * Wire up either at build time
   * (`SparkSession.builder.withExtensions(new GraftExtensions)` /
   * `spark.sql.extensions=graft.GraftExtensions`) or onto a live session
   * via [[GraftExtensions.register]]. */
-/** Session extension registering the engine's custom SQL functions and
-  * optimizer rules (see [[graft.plans.ChainHeadsRule]]). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (ident, info, builder) =>
@@ -33,21 +31,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
 
   private val functions: Seq[(FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("float_vec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "float_vec_dot"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "float_vec_dot requires exactly 2 arguments")
-        FloatVecDot(children.head, children(1))
-      }),
-    (FunctionIdentifier("double_vec_dot"),
-      new ExpressionInfo(classOf[DoubleVecDot].getName, "double_vec_dot"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "double_vec_dot requires exactly 2 arguments")
-        DoubleVecDot(children.head, children(1))
-      }))
+      Seq[Expression] => Expression)] =
+    Seq("float_vec_dot", "double_vec_dot").map { name =>
+      (FunctionIdentifier(name),
+        new ExpressionInfo(classOf[VecDot].getName, name),
+        (children: Seq[Expression]) => {
+          require(children.length == 2,
+            s"$name requires exactly 2 arguments")
+          VecDot(children.head, children(1))
+        })
+    }
 
   /** Register on an already-built session: SQL functions AND the
     * optimizer rule. The rule goes through

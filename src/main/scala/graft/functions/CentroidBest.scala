@@ -25,28 +25,23 @@ import org.apache.spark.sql.types._
   * per-centroid allocation.
   *
   * Numeric semantics are IDENTICAL to the old formulation by
-  * construction: the dot accumulates left-to-right in double exactly
-  * like [[FloatVecDot]]; each score divides by the same
-  * `sqrt(Σ c²)`-as-double norm (zero norm → 1.0); comparison is
+  * construction: scores come from [[CentroidScorer]] (the dot and norm
+  * rules are documented there); comparison is
   * `java.lang.Double.compare` (Spark's total order: NaN greatest,
   * -0.0 < 0.0) with strict-greater update, so ties keep the SMALLEST
   * centroid index — exactly `array_max`'s lexicographic
   * (s, -i) maximum. `SimilaritySpec` pins kernel == legacy
   * formulation across random vectors, ties, zero and NaN edges.
   *
-  * `cos` is the dot/centroid-norm score (NOT divided by |v| — callers
-  * divide by the row norm when they need true cosine, as the trainer
-  * does; ranking per row is unaffected).
+  * `cos` is the best [[CentroidScorer]] score (the trainer divides it
+  * by the row norm for true cosine).
   */
 case class CentroidBest(child: Expression,
     centroids: Array[Array[Float]]) extends UnaryExpression {
 
   require(centroids.nonEmpty, "centroids must not be empty")
 
-  @transient private lazy val norms: Array[Double] = centroids.map { c =>
-    val n = math.sqrt(c.foldLeft(0.0)((a, x) => a + x.toDouble * x))
-    if (n == 0.0) 1.0 else n
-  }
+  @transient private lazy val score = new CentroidScorer(centroids)
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -73,18 +68,6 @@ case class CentroidBest(child: Expression,
     new GenericInternalRow(Array[Any](bestI, bestS))
   }
 
-  private def score(vec: ArrayData, i: Int): Double = {
-    val c = centroids(i)
-    val n = math.min(vec.numElements(), c.length)
-    var s = 0.0
-    var j = 0
-    while (j < n) {
-      s += vec.getFloat(j).toDouble * c(j).toDouble
-      j += 1
-    }
-    s / norms(i)
-  }
-
   override protected def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
 
@@ -103,4 +86,32 @@ object CentroidBest {
   def apply(vec: Column, centroids: Seq[Array[Float]]): Column =
     bridge.toColumn(CentroidBest(bridge.toExpression(vec),
       centroids.toArray))
+}
+
+/** The centroid score both [[CentroidBest]] and [[CentroidTopN]] rank
+  * by — the bit-determinism decision the DuckDB oracle relies on, kept
+  * in one place: `apply(vec, i)` is the dot of `vec` with centroid `i`,
+  * accumulated left-to-right in double exactly like [[VecDot]]
+  * (float32 converts exactly), divided by that centroid's
+  * `sqrt(Σ c²)`-as-double norm (a zero norm becomes 1.0). It is NOT
+  * divided by |vec| — callers divide by the row norm when they need
+  * true cosine; ranking per row is unaffected. */
+final class CentroidScorer(centroids: Array[Array[Float]]) {
+
+  private val norms: Array[Double] = centroids.map { c =>
+    val n = math.sqrt(c.foldLeft(0.0)((a, x) => a + x.toDouble * x))
+    if (n == 0.0) 1.0 else n
+  }
+
+  def apply(vec: ArrayData, i: Int): Double = {
+    val c = centroids(i)
+    val n = math.min(vec.numElements(), c.length)
+    var s = 0.0
+    var j = 0
+    while (j < n) {
+      s += vec.getFloat(j).toDouble * c(j).toDouble
+      j += 1
+    }
+    s / norms(i)
+  }
 }

@@ -30,10 +30,7 @@ case class CentroidTopN(child: Expression,
   require(n >= 1 && n <= centroids.length,
     s"n must be in [1, ${centroids.length}], got $n")
 
-  @transient private lazy val norms: Array[Double] = centroids.map { c =>
-    val m = math.sqrt(c.foldLeft(0.0)((a, x) => a + x.toDouble * x))
-    if (m == 0.0) 1.0 else m
-  }
+  @transient private lazy val score = new CentroidScorer(centroids)
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -53,15 +50,7 @@ case class CentroidTopN(child: Expression,
     var size = 0
     var i = 0
     while (i < centroids.length) {
-      val c = centroids(i)
-      val d = math.min(vec.numElements(), c.length)
-      var s = 0.0
-      var j = 0
-      while (j < d) {
-        s += vec.getFloat(j).toDouble * c(j).toDouble
-        j += 1
-      }
-      s /= norms(i)
+      val s = score(vec, i)
       // find insertion point: strictly-better scores displace; equal
       // scores keep the earlier (smaller) index ahead
       if (size < n || java.lang.Double.compare(s, keptS(size - 1)) > 0) {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.udaf
 /** Typed `Aggregator` top-k: `topk_by(id, score, k)` keeps the k best
   * `(score desc, id asc)` pairs per group as a bounded buffer — the
   * aggregate-function tier of SURVEY §7.3 (custom `TypedColumn` /
-  * aggregate functions), complementing [[FloatVecDot]] (expression
+  * aggregate functions), complementing [[VecDot]] (expression
   * tier) and [[graft.plans.ChainHeadsRule]] (plan-rewrite tier).
   *
   * Unlike the window top-k, the buffer merges in ANY combine order to

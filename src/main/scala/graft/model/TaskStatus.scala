@@ -34,12 +34,10 @@ object TaskStatus {
   val successFamily: Set[String] = Set(Completed, Succeeded)
   val failureFamily: Set[String] = Set(Failed, TimedOut)
   val rejectedFamily: Set[String] = Set(Rejected, Discarded, Abandoned)
-  val openFamily: Set[String] = Set(Unstarted, Started)
 
   /** Terminal states: the task never runs again. */
   val finalisedFamily: Set[String] = successFamily ++ rejectedFamily
 
   def isFinalised(s: String): Boolean = finalisedFamily.contains(s)
   def isRejected(s: String): Boolean = rejectedFamily.contains(s)
-  def isIncomplete(s: String): Boolean = !isFinalised(s)
 }

@@ -28,31 +28,11 @@ import org.apache.spark.sql.functions._
   * [[Dedup.ngramJaccardPairs]] (field names are the downstream schema). */
 final case class IdPair(id_a: Long, id_b: Long)
 
-/** Element type of the compiled in-bucket Hamming verification in
-  * [[Dedup.hammingBandPairs]] (field names are the downstream schema). */
+/** Element type of the shared in-bucket pair kernel behind
+  * [[Dedup.hammingBandPairs]] and [[Dedup.bucketPairCounts]] (field
+  * names are the downstream schema; `hamming` is 0 for buckets that
+  * carry no signatures). */
 final case class HamPair(id_a: Long, id_b: Long, hamming: Int)
-
-/** One (i ≤ j) chunk pair of a bucket's sorted id list — the streamed
-  * decomposition unit of [[Dedup.bucketPairCounts]]'s pair expansion
-  * (see the oversized-bucket note there). A DIAGONAL pair (i == j,
-  * the only kind buckets within the cap ever emit) leaves `b` empty
-  * and expands the strict upper triangle of `a` — the hot path
-  * serializes one array, exactly like the pre-chunking kernel. */
-final case class IdChunkPair(a: Array[Long], b: Array[Long])
-
-/** Streamed unit of [[Dedup.hammingBandPairs]]' pair expansion —
-  * three shapes, disambiguated by which arrays are empty:
-  *  - PRECOMPUTED (`ib` nonempty, `sb` empty): the hot path — an
-  *    in-cap bucket verified inside the FIRST kernel; `ia` = id_a,
-  *    `sa` = id_b, `ib` = hamming per surviving pair. Buckets with
-  *    no surviving pair emit NOTHING at all.
-  *  - DIAGONAL chunk (`ib` and `sb` empty): a cap-sized slice of an
-  *    oversized bucket; `ia`/`sa` = ids/sigs, upper triangle verifies
-  *    in the second kernel.
-  *  - CROSS chunk (`sb` nonempty): two slices of an oversized bucket;
-  *    full cross product verifies in the second kernel. */
-final case class SigChunkPair(ia: Array[Long], sa: Array[Long],
-    ib: Array[Long], sb: Array[Long])
 
 object Dedup {
 
@@ -129,8 +109,7 @@ object Dedup {
     * two signatures within Hamming distance `maxHamming` ≤ 3 MUST agree
     * on at least one whole band (pigeonhole: 3 differing bits cannot
     * touch all 4 bands), so the band-equality join has EXACT recall.
-    * Candidates then verify with the codegen'd builtin
-    * `bit_count(a XOR b)`.
+    * Candidates then verify in [[hammingBandPairs]]' bucket kernel.
     *
     * Scale shape: one exchange on `(band, band_val)` — 4×2^16 buckets,
     * so bucket population is ~n/2^16 per band (vs 256 top-byte buckets
@@ -146,8 +125,8 @@ object Dedup {
     * [[simhashPairs]], reused verbatim by image dHash dedup
     * ([[Multimodal.dhashBmp]]): two signatures within Hamming ≤ 3
     * must agree on a whole band (pigeonhole), so the band-equality
-    * join has EXACT recall; candidates verify with the codegen'd
-    * builtin `bit_count(a XOR b)`. One exchange on `(band, band_val)`
+    * join has EXACT recall; candidates verify inside the shared
+    * [[chunkedPairs]] kernel. One exchange on `(band, band_val)`
     * — 4×2¹⁶ buckets, population ~n/2¹⁶ per band. Returns
     * `(id_a < id_b, hamming)` distinct. */
   def hammingBandPairs(df: DataFrame, idCol: Column, sigCol: Column,
@@ -170,124 +149,18 @@ object Dedup {
         col("bk.band").as("band"), col("bk.band_val").as("band_val"))
     // r21: in-bucket pair expansion + compiled Hamming verification
     // instead of the band-keyed self-join — the same (band, band_val)
-    // exchange builds (id, sig) buckets and the kernel emits only the
-    // verified i<j pairs, dropping the self-join's two sorts over the
-    // 4n banded stream and the unverified-collision materialization.
-    // ids are unique within a bucket (one row per (id, band)); the
-    // kernel sorts by id so id_a < id_b exactly like the old filter,
-    // and bit_count ≡ Long.bitCount. A pair sharing several bands
-    // repeats with the same hamming — the terminal distinct dedups,
-    // as before.
-    // Oversized-bucket guard (r21 ADVICE, medium): a degenerate hot
-    // band value (e.g. the all-zero signature of trivial docs) would
-    // make a single kernel call build O(bucket²) pairs in one
-    // in-memory array. Same streamed chunk decomposition as
-    // bucketPairCounts: sort once, split into cap-sized chunks, one
-    // (i ≤ j) chunk-pair row per kernel call — ≤ cap² verified pairs
-    // materialized at once whatever the bucket size, in-kernel
-    // Hamming verification unchanged, single-call path for every
-    // bucket within the cap.
-    val cap = df.sparkSession.conf
-      .get("graft.bucket.kernelCap", "1024").toInt
-    val empty = Array.emptyLongArray
-    val noChunks = Array.empty[SigChunkPair]
-    val chunkPairs = udf { (members: Seq[org.apache.spark.sql.Row]) =>
-      val m = members.toArray.sortBy(_.getLong(0))
-      val n = m.length
-      if (n <= cap) {
-        // hot path: verify HERE, emit one PRECOMPUTED row holding
-        // only the surviving pairs — or nothing at all (the common
-        // case: random band collisions with no near-dup)
-        val ida = Array.newBuilder[Long]
-        val idb = Array.newBuilder[Long]
-        val hms = Array.newBuilder[Long]
-        var i = 0
-        while (i < n) {
-          var j = i + 1
-          val (a, sga) = (m(i).getLong(0), m(i).getLong(1))
-          while (j < n) {
-            val ham = java.lang.Long.bitCount(sga ^ m(j).getLong(1))
-            if (ham <= maxHamming) {
-              ida += a; idb += m(j).getLong(0); hms += ham.toLong
-            }
-            j += 1
-          }
-          i += 1
-        }
-        val hs = hms.result()
-        if (hs.isEmpty) noChunks
-        else Array(SigChunkPair(ida.result(), idb.result(), hs, empty))
-      } else {
-        val ids = new Array[Long](n)
-        val sgs = new Array[Long](n)
-        var x = 0
-        while (x < n) {
-          ids(x) = m(x).getLong(0); sgs(x) = m(x).getLong(1); x += 1
-        }
-        val nc = (n + cap - 1) / cap
-        def sl(a: Array[Long], c: Int) = java.util.Arrays
-          .copyOfRange(a, c * cap, math.min((c + 1) * cap, n))
-        val out = Array.newBuilder[SigChunkPair]
-        var i = 0
-        while (i < nc) {
-          out += SigChunkPair(sl(ids, i), sl(sgs, i), empty, empty)
-          var j = i + 1
-          while (j < nc) {
-            out += SigChunkPair(sl(ids, i), sl(sgs, i),
-              sl(ids, j), sl(sgs, j))
-            j += 1
-          }
-          i += 1
-        }
-        out.result()
-      }
-    }
-    val expandVerify = udf { (ia: Seq[Long], sa: Seq[Long],
-        ib: Seq[Long], sb: Seq[Long]) =>
-      val out = Array.newBuilder[HamPair]
-      if (sb.nonEmpty) {
-        // cross chunk: full verified cross product
-        var i = 0
-        while (i < ia.length) {
-          var j = 0
-          while (j < ib.length) {
-            val ham = java.lang.Long.bitCount(sa(i) ^ sb(j))
-            if (ham <= maxHamming) out += HamPair(ia(i), ib(j), ham)
-            j += 1
-          }
-          i += 1
-        }
-      } else if (ib.nonEmpty) {
-        // precomputed: (id_a, id_b, hamming) zip
-        var i = 0
-        while (i < ia.length) {
-          out += HamPair(ia(i), sa(i), ib(i).toInt)
-          i += 1
-        }
-      } else {
-        // diagonal chunk: verified upper triangle
-        var i = 0
-        while (i < ia.length) {
-          var j = i + 1
-          while (j < ia.length) {
-            val ham = java.lang.Long.bitCount(sa(i) ^ sa(j))
-            if (ham <= maxHamming) out += HamPair(ia(i), ia(j), ham)
-            j += 1
-          }
-          i += 1
-        }
-      }
-      out.result()
-    }
-    bands.groupBy("band", "band_val")
-      .agg(collect_list(struct(col("id"), col("_sig"))).as("ms"))
+    // exchange builds (id, sig) buckets sorted by id and the kernel
+    // emits only the verified i<j pairs, dropping the self-join's two
+    // sorts over the 4n banded stream and the unverified-collision
+    // materialization. ids are unique within a bucket (one row per
+    // (id, band)), so id_a < id_b exactly like the old filter, and
+    // bit_count ≡ Long.bitCount. A pair sharing several bands repeats
+    // with the same hamming — the terminal distinct dedups, as before.
+    val buckets = bands.groupBy("band", "band_val")
+      .agg(sort_array(collect_list(array(col("id"), col("_sig")))).as("ms"))
       .filter(size(col("ms")) >= 2)
-      .select(explode(chunkPairs(col("ms"))).as("c"))
-      .select(explode(expandVerify(col("c.ia"), col("c.sa"),
-        col("c.ib"), col("c.sb"))).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
-        col("p.hamming").as("hamming"))
-      .distinct()
+    chunkedPairs(buckets, flatten(col("ms")), stride = 2, maxHamming)
+      .select("p.*").distinct()
   }
 
   /** Connected components over a near-dup pair list — the
@@ -566,87 +439,98 @@ object Dedup {
   /** Occupancy-banded bucket pair counts over an already-exploded
     * `(id, key)` occurrence stream: buckets whose occupancy (ROW
     * count, occurrences not distinct ids) lies in `[minDf, maxDf]`
-    * expand their i<j member pairs in a compiled kernel and shared
-    * buckets are counted per pair — the winnowing-overlap rows' core,
-    * replacing their aggregate + join-back + fp-keyed self-join (the
-    * occurrence stream evaluated ~twice, three exchanges) with
-    * [[ngramJaccardPairs]]'s proven one-exchange bucket shape.
+    * expand their i<j member pairs in the shared [[chunkedPairs]]
+    * kernel and shared buckets are counted per pair — the
+    * winnowing-overlap rows' core, replacing their aggregate +
+    * join-back + fp-keyed self-join (the occurrence stream evaluated
+    * ~twice, three exchanges) with [[ngramJaccardPairs]]'s proven
+    * one-exchange bucket shape.
     *
     * Exact self-join equivalence: a bucket holding an id k times
-    * pairs it with another id's m occurrences k·m times (duplicates
-    * sit adjacent in the sorted list; equal ids never self-pair),
-    * which is precisely the row count the fp-keyed equi-join
-    * produced under `id_a < id_b`. Returns `(id_a, id_b, n_shared)`.
+    * pairs it with another id's m occurrences k·m times (equal ids
+    * never self-pair), which is precisely the row count the fp-keyed
+    * equi-join produced under `id_a < id_b`. Returns
+    * `(id_a, id_b, n_shared)`.
     *
     * Precondition: `idCol` must be NON-NULL (r21 ADVICE) — occupancy
     * is the size of the collected id list, and `collect_list` drops
     * nulls, so a null id would silently shift its bucket across the
     * `[minDf, maxDf]` band boundary relative to a row count. Every
-    * registered caller keys on non-null doc ids.
-    *
-    * Oversized-bucket guard (r21 ADVICE, medium): callers with an
-    * unbounded `maxDf` (minhash LSH) would otherwise build a
-    * degenerate hot bucket's O(occupancy²) pairs in ONE in-memory
-    * array inside one kernel call — an executor OOM at scale where
-    * the old self-join merely went slow. The expansion therefore
-    * STREAMS as a chunk decomposition: the sorted bucket splits into
-    * consecutive chunks of `graft.bucket.kernelCap` ids (session
-    * conf, default 1024), every (i ≤ j) chunk pair explodes to its
-    * own row, and the pair kernel expands one chunk pair per call —
-    * ≤ cap² pairs (≈0.5M objects, tens of MB) materialized at once
-    * whatever the bucket size, with the chunk-pair rows themselves
-    * streaming through the Generate. Chunk pairs partition the
-    * bucket's index pairs exactly, so the multiset is unchanged;
-    * buckets within the cap expand in a single call exactly as
-    * before. (A filter-split join fallback was measured first and
-    * rejected: the second pass over the bucket aggregate plus the
-    * branch stages cost 1.1-1.25× on EVERY consumer row even with
-    * the fallback branch empty.) */
+    * registered caller keys on non-null doc ids. */
   def bucketPairCounts(occ: DataFrame, idCol: Column, keyCol: Column,
       minDf: Int, maxDf: Int): DataFrame = {
-    val cap = occ.sparkSession.conf
-      .get("graft.bucket.kernelCap", "1024").toInt
     val buckets = occ.select(keyCol.as("_k"), idCol.as("id"))
       .groupBy("_k").agg(sort_array(collect_list(col("id"))).as("ids"))
       .filter(size(col("ids")).between(minDf, maxDf))
-    val empty = Array.emptyLongArray
-    val chunkPairs = udf { (ids: Seq[Long]) =>
-      val n = ids.length
-      if (n <= cap) Array(IdChunkPair(ids.toArray, empty))
+    chunkedPairs(buckets, col("ids"), stride = 1, maxHamming = 0)
+      .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+      .agg(count(lit(1)).as("n_shared"))
+  }
+
+  /** The in-bucket pair expansion shared by [[hammingBandPairs]] and
+    * [[bucketPairCounts]]: `members` is a bucket's flat member array
+    * sorted by id, `stride` longs per member — the id, then (stride 2)
+    * its 64-bit signature. Returns one [[HamPair]] row `p` per member
+    * pair with distinct ids, `id_a` from the earlier member;
+    * with signatures only pairs within `maxHamming` survive and
+    * `hamming` records the distance, without them it is 0.
+    *
+    * Oversized-bucket guard (r21 ADVICE, medium): a degenerate hot
+    * bucket (the all-zero signature of trivial docs, an unbounded-`maxDf`
+    * minhash band) would otherwise build its O(occupancy²) pairs in ONE
+    * in-memory array inside one kernel call — an executor OOM at scale
+    * where the old self-join merely went slow. The expansion therefore
+    * STREAMS as a chunk decomposition: the CHUNKER splits the sorted
+    * bucket into consecutive chunks of `graft.bucket.kernelCap` members
+    * (session conf, default 1024) and emits one row per (i ≤ j) chunk
+    * pair — one chunk on the diagonal, two across — and the KERNEL
+    * expands one chunk pair per call over primitive `Array[Long]`s: the
+    * diagonal's upper triangle, or the full cross product. ≤ cap² pairs
+    * (≈0.5M objects, tens of MB) are materialized at once whatever the
+    * bucket size, with the chunk-pair rows themselves streaming through
+    * the Generate. Chunk pairs partition the bucket's index pairs
+    * exactly, so the pair multiset is unchanged; a bucket within the
+    * cap is a single diagonal chunk. (A filter-split join fallback was
+    * measured first and rejected: the second pass over the bucket
+    * aggregate plus the branch stages cost 1.1-1.25× on EVERY consumer
+    * row even with the fallback branch empty.) */
+  private def chunkedPairs(buckets: DataFrame, members: Column,
+      stride: Int, maxHamming: Int): DataFrame = {
+    val cap = buckets.sparkSession.conf
+      .get("graft.bucket.kernelCap", "1024").toInt
+    val chunker = udf { (m: Seq[Long]) =>
+      val all = m.toArray
+      val n = all.length / stride
+      if (n <= cap) Array(Array(all))
       else {
-        val a = ids.toArray
-        val nc = (n + cap - 1) / cap
-        def sl(c: Int) = java.util.Arrays
-          .copyOfRange(a, c * cap, math.min((c + 1) * cap, n))
-        val out = Array.newBuilder[IdChunkPair]
-        var i = 0
-        while (i < nc) {
-          out += IdChunkPair(sl(i), empty)
-          var j = i + 1
-          while (j < nc) { out += IdChunkPair(sl(i), sl(j)); j += 1 }
-          i += 1
-        }
-        out.result()
+        val chunks = Array.tabulate((n + cap - 1) / cap)(c =>
+          java.util.Arrays.copyOfRange(all, c * cap * stride,
+            math.min((c + 1) * cap, n) * stride))
+        chunks.indices.flatMap(i => chunks.indices.drop(i).map(j =>
+          if (i == j) Array(chunks(i)) else Array(chunks(i), chunks(j))))
+          .toArray
       }
     }
-    val expandPairs = udf { (a: Seq[Long], b: Seq[Long]) =>
-      val same = b.isEmpty
-      val jb = if (same) a else b
-      val out = Array.newBuilder[IdPair]
+    val kernel = udf { (c: Seq[Seq[Long]]) =>
+      val diagonal = c.length == 1
+      val a = c.head.toArray
+      val b = if (diagonal) a else c(1).toArray
+      val out = Array.newBuilder[HamPair]
       var i = 0
       while (i < a.length) {
-        var j = if (same) i + 1 else 0
-        while (j < jb.length) {
-          if (a(i) != jb(j)) out += IdPair(a(i), jb(j))
-          j += 1
+        var j = if (diagonal) i + stride else 0
+        while (j < b.length) {
+          val ham = if (stride == 1) 0
+            else java.lang.Long.bitCount(a(i + 1) ^ b(j + 1))
+          if (a(i) != b(j) && ham <= maxHamming)
+            out += HamPair(a(i), b(j), ham)
+          j += stride
         }
-        i += 1
+        i += stride
       }
       out.result()
     }
-    buckets.select(explode(chunkPairs(col("ids"))).as("c"))
-      .select(explode(expandPairs(col("c.a"), col("c.b"))).as("p"))
-      .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
+    buckets.select(explode(chunker(members)).as("c"))
+      .select(explode(kernel(col("c"))).as("p"))
   }
 }

@@ -12,8 +12,9 @@ import graft.functions.FloatVecDot
   * cosine near-duplicate pairs.
   *
   * Numerics: products and sums run in DOUBLE, accumulated strictly
-  * left-to-right ([[FloatVecDot]]), so results are bit-deterministic —
-  * independent of partitioning, and reproducible against any engine
+  * left-to-right ([[graft.functions.VecDot]]), so results are
+  * bit-deterministic — independent of partitioning, and reproducible
+  * against any engine
   * that folds left-to-right in double (float32 inputs convert exactly).
   *
   * Performance: the dot product is a custom codegen'd Catalyst

@@ -103,12 +103,6 @@ object TaskStates {
         .otherwise(t)
     })
 
-  /** Batch finalisation verdict over a message's combined task arrays:
-    * fully-finalised messages advance, anything else replays
-    * (`test/kinesis-consumer.test.js:1272-1380` vs `1386-1491`). */
-  def isFullyFinalised(tasks: Column): Column =
-    forall(tasks, t => finalised(t))
-
   /** T4 — master/slave propagation: a processAll master task's
     * finalised state fans out to each message's slave task, EXCEPT
     * where the slave already finalised on its own (per-message

@@ -160,8 +160,12 @@ class BucketPairsSpec extends SparkSpec {
       Tables.documents(spark, sf0001).select(
         (col("doc_id") + 1000L).as("doc_id"), col("text")))
     import spark.implicits._
+    // k6: id 2's two occurrences straddle the cap-2 chunk boundary
+    // ([1,2] and [2,3]), so only the cross-chunk equal-id skip keeps
+    // (2,2) out
     val occ = (Seq((1L, "k1"), (2L, "k1"), (3L, "k1"),
-      (1L, "k2"), (1L, "k2"), (2L, "k2"), (3L, "k2")) ++
+      (1L, "k2"), (1L, "k2"), (2L, "k2"), (3L, "k2"),
+      (1L, "k6"), (2L, "k6"), (2L, "k6"), (3L, "k6")) ++
       (1L to 9L).map(i => (i, "k4"))).toDF("doc_id", "fp")
     val defHam = Dedup.simhashPairs(docs, col("doc_id"), col("text"),
       maxHamming = 3).collect().map(_.toString).sorted.toSeq
@@ -180,6 +184,10 @@ class BucketPairsSpec extends SparkSpec {
       assert(Dedup.bucketPairCounts(occ, col("doc_id"), col("fp"),
         2, 50).collect().map(_.toString).sorted.toSeq
         === defBpc, "bucketPairCounts fallback diverged")
+      val k6 = Dedup.bucketPairCounts(occ.filter(col("fp") === "k6"),
+        col("doc_id"), col("fp"), 2, 50).orderBy("id_a", "id_b")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      assert(k6.toSeq === Seq((1L, 2L, 2L), (1L, 3L, 1L), (2L, 3L, 2L)))
     } finally spark.conf.unset("graft.bucket.kernelCap")
   }
 
