@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions.udaf
 
 /** Typed `Aggregator` for the KMV (k-minimum-values) sketch: keeps
   * the k smallest DISTINCT 60-bit hash values per group as a bounded
-  * sorted buffer — the aggregate-function tier of SURVEY §7.3, the
-  * [[TopKByAgg]] shape applied to sketch state.
+  * sorted buffer — the aggregate-function tier of SURVEY §7.3
+  * (custom `TypedColumn` / aggregate functions), complementing
+  * [[VecDot]] (expression tier) and [[graft.plans.TopKPerGroupExec]]
+  * (physical-operator tier).
   *
   * Selection of the k smallest distinct values over a total order is
   * associative + commutative, so Spark runs it as a normal two-phase

@@ -34,8 +34,9 @@ private[functions] final case class CompiledRule(
   * to its leftmost occurrence after the previous one, and the last
   * segment anchors with `endsWith` (anchored) or any later occurrence
   * (unanchored prefix-match semantics). `RobotsPropsSpec` pins the
-  * kernel row-identical to the LIKE-translation reference on the
-  * registered rows' pattern grammar and on adversarial paths.
+  * kernel row-identical to an independent regex RFC 9309 matcher on
+  * random patterns and adversarial paths. The batch robots rows and
+  * the streaming [[graft.streaming.CrawlScheduler]] gate share it.
   */
 object RobotsMatch {
 

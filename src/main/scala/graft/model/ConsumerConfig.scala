@@ -15,7 +15,6 @@ package graft.model
   *                             (vs one chain per shard)
   * @param batchKeyedOnEventID  batch identity `E|<eventID>` instead of
   *                             `S|<shardId>`
-  * @param kplEncoded           payloads are KPL protobuf aggregates
   * @param idPropertyNames      compound (dotted) property names → `ids`
   * @param keyPropertyNames     compound property names → `keys`
   * @param seqNoPropertyNames   compound property names → `seqNos`
@@ -36,10 +35,6 @@ package graft.model
   *                             still hold legacy rows; set false once
   *                             migration is complete so steady-state
   *                             batches skip the migration join entirely
-  * @param batchStateTableName  state-store table (per-stage suffixing is the
-  *                             deployment's concern)
-  * @param deadRecordQueueName  DRQ sink name
-  * @param deadMessageQueueName DMQ sink name
   */
 final case class ConsumerConfig(
     streamName: String = "events",
@@ -47,16 +42,12 @@ final case class ConsumerConfig(
     sequencingRequired: Boolean = true,
     sequencingPerKey: Boolean = false,
     batchKeyedOnEventID: Boolean = false,
-    kplEncoded: Boolean = false,
     idPropertyNames: Seq[String] = Nil,
     keyPropertyNames: Seq[String] = Nil,
     seqNoPropertyNames: Seq[String] = Nil,
     strict: Boolean = false,
     migrateLegacyStateKeys: Boolean = true,
-    maxNumberOfAttempts: Int = 10,
-    batchStateTableName: String = "batch_state",
-    deadRecordQueueName: String = "dead_records",
-    deadMessageQueueName: String = "dead_messages") {
+    maxNumberOfAttempts: Int = 10) {
 
   // Conflict matrix (reference kinesis-processing.js:405-456):
   require(sequencingRequired || !sequencingPerKey,

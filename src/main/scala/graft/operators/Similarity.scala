@@ -24,11 +24,12 @@ import graft.functions.FloatVecDot
   * computed ONCE per row before any join, never per pair.
   *
   * Scale design: queries are broadcast (collect-free plan, one scan of
-  * the vector table); top-k uses a per-query window — with Q queries and
-  * N vectors the shuffled pair set is Q·N rows, so batch Q accordingly
-  * or pre-prune with [[probedScores]] which probes only the query's coarse
-  * cell (partition pruning on the cell column cuts both scan and pair
-  * count by the cell fan-out). Near-dup pairing never goes all-pairs:
+  * the vector table); the serving rows rank with [[TopK.perGroup]],
+  * whose exchange carries ≤ partitions×Q×k rows, while the
+  * window-ranked reference [[bruteForceTopK]] shuffles all Q·N pairs.
+  * [[probedScores]] pre-prunes by probing only the query's coarse cell
+  * (partition pruning on the cell column cuts both scan and pair count
+  * by the cell fan-out). Near-dup pairing never goes all-pairs:
   * candidates are restricted to a bucket column (coarse cluster id,
   * LSH band, …).
   */
@@ -43,8 +44,8 @@ object Similarity {
     dot(a, b) / (norm(a) * norm(b))
 
   /** All (vector, query) cosine pairs with pre-hoisted norms — the
-    * scoring stage shared by the window-ranked and two-phase
-    * ([[TopK.perGroup]]) top-k paths. */
+    * scoring stage of the exact top-k, ranked by [[TopK.perGroup]] in
+    * the query rows and by a window in [[bruteForceTopK]]. */
   def scoredPairs(vectors: DataFrame, idCol: Column, vecCol: Column,
       queries: DataFrame, queryIdCol: Column,
       queryVecCol: Column): DataFrame = {
@@ -56,21 +57,18 @@ object Similarity {
       .drop("_vnorm", "_qnorm")
   }
 
-  /** Exact top-k neighbours per query vector. `queries` must be small
-    * enough to broadcast (it is the driver of the Q·N pair count). */
+  /** Exact top-k neighbours per query vector, ranked by a window — the
+    * specs' reference for the [[TopK.perGroup]] paths. `queries` must be
+    * small enough to broadcast (it is the driver of the Q·N pair
+    * count). */
   def bruteForceTopK(vectors: DataFrame, idCol: Column, vecCol: Column,
       queries: DataFrame, queryIdCol: Column, queryVecCol: Column,
       k: Int): DataFrame = {
-    val vecs = vectors.withColumn("_vnorm", norm(vecCol))
-    val qs = queries.withColumn("_qnorm", norm(queryVecCol))
     val w = Window.partitionBy(queryIdCol)
       .orderBy(col("cosine").desc, idCol)
-    vecs.crossJoin(broadcast(qs))
-      .withColumn("cosine",
-        dot(vecCol, queryVecCol) / (col("_vnorm") * col("_qnorm")))
+    scoredPairs(vectors, idCol, vecCol, queries, queryIdCol, queryVecCol)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
-      .drop("_vnorm", "_qnorm")
   }
 
   /** Train an IVF coarse quantizer: Lloyd's k-means over the vector
@@ -304,19 +302,6 @@ object Similarity {
       .join(broadcast(probes.withColumn("_qn", norm(qvecCol))), key)
       .withColumn("cosine",
         dot(vecCol, qvecCol) / (col("_vn") * col("_qn")))
-
-  /** IVF-style probed top-k: [[probedScores]] on `cellCol`, ranked per
-    * query by a window — only same-cell vectors are scored. */
-  def ivfTopK(vectors: DataFrame, idCol: Column, vecCol: Column,
-      cellCol: String, queries: DataFrame, queryIdCol: Column,
-      queryVecCol: Column, k: Int): DataFrame = {
-    val w = Window.partitionBy(queryIdCol)
-      .orderBy(col("cosine").desc, idCol)
-    probedScores(vectors, vecCol, queries, queryVecCol, cellCol)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .drop("_vn", "_qn")
-  }
 
   /** Product-quantization codes (Jégou et al., TPAMI'11): for each
     * subspace `m`, the nearest row ([[assignCells]]) of `codebooks(m)`

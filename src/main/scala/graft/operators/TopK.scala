@@ -1,12 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 
-/** Two-phase top-k per group: a bounded in-partition selection prunes
-  * each partition to ≤ k candidates per group BEFORE the shuffle, then
-  * the global rank runs over the pruned set.
+/** Top-k rows per group through the native plan node
+  * ([[graft.plans.TopKPerGroupLogical]] → [[graft.plans.TopKPerGroupExec]]
+  * partial/final, planned by [[graft.plans.TopKStrategy]]): a bounded
+  * heap per group before AND after a Catalyst-planned hash exchange.
   *
   * The naive `row_number().over(partitionBy(g).orderBy(s))` + `rank<=k`
   * shuffles and SORTS every input row; here the exchange carries at
@@ -15,66 +18,21 @@ import org.apache.spark.sql.functions._
   * scored pairs and shuffling Q·k·P — at 100 TB the only viable shape.
   *
   * Determinism: selection order is (score DESC, id ASC) — a total
-  * order, so local-prune-then-global-rank is EXACTLY the global
-  * top-k (pinned against the window form by the ann_topk_brute
-  * oracle query).
+  * order once ids are unique per group, so local-prune-then-global-
+  * rank is EXACTLY the global top-k (pinned against the window form
+  * by `NativeTopKSpec` and by the ANN rows' oracles).
   */
 object TopK {
 
   /** Top-k rows per group of `(group, id, score)`, ranked
-    * `(score desc, id asc)`. Output columns: group, id, score, rank. */
+    * `(score desc, id asc)`. Output columns: group, id, score, rank.
+    * No casts: the exec keys and orders arbitrary expressions
+    * (UnsafeProjection + RowOrdering), so string groups / integer
+    * scores pass through with their input types intact. The trailing
+    * `row_number` window only ranks the ≤ groups×k survivors — a
+    * negligible sort over the answer, not the corpus. */
   def perGroup(df: DataFrame, groupCol: String, idCol: String,
       scoreCol: String, k: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val typed: Dataset[(Long, Long, Double)] = df.select(
-      col(groupCol).cast("long"), col(idCol).cast("long"),
-      col(scoreCol).cast("double")).as[(Long, Long, Double)]
-
-    implicit val ord: Ordering[(Long, Long, Double)] =
-      Ordering.by { case (_, id, score) => (-score, id) }
-
-    val pruned = typed.mapPartitions { it =>
-      // bounded selection per group: keep the k best seen so far
-      val heaps = scala.collection.mutable.Map
-        .empty[Long, scala.collection.mutable.PriorityQueue[(Long, Long, Double)]]
-      it.foreach { row =>
-        // max-heap on the WORST element (reverse ordering) so the head
-        // is the candidate to evict
-        val h = heaps.getOrElseUpdate(row._1,
-          scala.collection.mutable.PriorityQueue.empty[(Long, Long, Double)])
-        if (h.size < k) h.enqueue(row)
-        else if (ord.lt(row, h.head)) { h.dequeue(); h.enqueue(row) }
-      }
-      heaps.valuesIterator.flatMap(_.iterator)
-    }
-
-    val w = Window.partitionBy(col("_1"))
-      .orderBy(col("_3").desc, col("_2"))
-    pruned.toDF("_1", "_2", "_3")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("_1").as(groupCol), col("_2").as(idCol),
-        col("_3").as(scoreCol), col("rank"))
-  }
-
-  /** The same top-k contract through the NATIVE plan node
-    * ([[graft.plans.TopKPerGroupLogical]] →
-    * [[graft.plans.TopKPerGroupExec]] partial/final, planned by
-    * [[graft.plans.TopKStrategy]]): bounded heaps before AND after a
-    * Catalyst-planned hash exchange, `EXPLAIN`-visible, no
-    * (Long, Long, Double) encoding restriction. The trailing
-    * `row_number` window only ranks the ≤ groups×k survivors — a
-    * negligible sort over the answer, not the corpus. Result is
-    * column-for-column the window form's (pinned by `ann_topk_native`
-    * hash-matching `ann_topk_brute`'s oracle). */
-  def perGroupNative(df: DataFrame, groupCol: String, idCol: String,
-      scoreCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
-    import org.apache.spark.sql.graft.bridge
-    // No casts: the exec keys and orders arbitrary expressions
-    // (UnsafeProjection + RowOrdering), so string groups / integer
-    // scores pass through with their input types intact.
     val typed = df.select(col(groupCol), col(idCol), col(scoreCol))
     val child = bridge.analyzed(typed)
     def attr(n: String) = child.output.find(_.name == n).get

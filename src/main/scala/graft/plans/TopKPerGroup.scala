@@ -20,13 +20,12 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * reduces each input partition to ≤ k rows per group with a bounded
   * heap (O(n log k), no sort buffer), so the exchange carries at most
   * `partitions × groups × k` rows — at 100 TB the difference between
-  * shuffling the corpus and shuffling the answer. The same shape as
-  * [[graft.operators.TopK.perGroup]]'s mapPartitions version, but as a
-  * first-class plan node: Catalyst plans the exchange via
+  * shuffling the corpus and shuffling the answer. It is the engine's
+  * one top-k-per-group operator, reached through
+  * [[graft.operators.TopK.perGroup]]: Catalyst plans the exchange via
   * `requiredChildDistribution` (AQE coalesces it like any aggregate
   * shuffle), `EXPLAIN` shows `TopKPerGroup(partial=...)`, and the
-  * operator works over arbitrary expressions, not a hardcoded
-  * (Long, Long, Double) encoding.
+  * operator works over arbitrary expressions and input types.
   *
   * Semantics: keep the first k rows per group in `order`'s total order.
   * Callers must make the order total (trailing unique tiebreak) for
@@ -97,12 +96,17 @@ case class TopKPerGroupExec(groupExprs: Seq[Expression],
 
 /** Plans [[TopKPerGroupLogical]] as final-over-partial, mirroring how
   * Spark plans hash aggregation; the exchange between the two is
-  * Catalyst's job (`EnsureRequirements`), not ours. */
+  * Catalyst's job (`EnsureRequirements`), not ours. Floating-point group
+  * keys are normalized first (the optimizer does this for aggregate and
+  * window keys, but never sees this node's): the heaps and the exchange
+  * key on binary rows, so -0.0 and 0.0, or two NaN bit patterns, would
+  * otherwise form two groups and return up to 2k rows for one. */
 case class TopKStrategy() extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerGroupLogical(g, o, k, child) =>
-      TopKPerGroupExec(g, o, k, partial = false,
-        TopKPerGroupExec(g, o, k, partial = true, planLater(child))) :: Nil
+      val keys = g.map(org.apache.spark.sql.graft.bridge.normalizedKey)
+      TopKPerGroupExec(keys, o, k, partial = false,
+        TopKPerGroupExec(keys, o, k, partial = true, planLater(child))) :: Nil
     case _ => Nil
   }
 }

@@ -371,7 +371,7 @@ object MultimodalQueries {
           bit_count(col("dhash").bitwiseXOR(col("qhash"))).cast("int"))
         .withColumn("score", -col("hamming").cast("double"))
         .select("query_id", "doc_id", "hamming", "score")
-      graft.operators.TopK.perGroupNative(scored
+      graft.operators.TopK.perGroup(scored
           .select("query_id", "doc_id", "score"),
           "query_id", "doc_id", "score", k = 5)
         .join(scored.select("query_id", "doc_id", "hamming"),

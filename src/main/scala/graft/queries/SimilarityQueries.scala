@@ -51,7 +51,7 @@ object SimilarityQueries {
     (String, Int, Int, Int, Int), Array[Array[Array[Float]]]]()
 
   private[graft] def pqCodebookPath(dir: String): String =
-    s"$artifactRoot/pq_codebooks_${new java.io.File(dir).getName}.parquet"
+    artifactPath("pq_codebooks", dir)
 
   private[graft] def pqCodebooks(s: org.apache.spark.sql.SparkSession,
       dir: String): Array[Array[Array[Float]]] =
@@ -110,28 +110,27 @@ object SimilarityQueries {
     * bit-deterministic (quantized-long sums end to end), so re-runs at
     * the same SF rewrite identical values. */
   private[graft] def centroidExportPath(dir: String): String =
-    s"$artifactRoot/ivf_centroids_${new java.io.File(dir).getName}.parquet"
+    artifactPath("ivf_centroids", dir)
 
   /** The sampled-training quantizer's export path — separate from
     * [[centroidExportPath]] because a 0.5-pool quantizer is a
     * DIFFERENT (equally deterministic) centroid matrix. */
   private[graft] def centroidExportPathSampled(dir: String): String =
-    s"$artifactRoot/ivf_centroids_sampled_${new java.io.File(dir).getName}" +
-      ".parquet"
+    artifactPath("ivf_centroids_sampled", dir)
 
   /** Where ann_topk_ivf_pruned lays the corpus out cell-partitioned
     * (one directory per IVF cell), SF-suffixed like the centroid
     * export. */
   private def ivfLayoutPath(dir: String): String =
-    s"$artifactRoot/ivf_layout_${new java.io.File(dir).getName}.parquet"
+    artifactPath("ivf_layout", dir)
 
   /** ann_topk_quantized's int8 cell-partitioned layout. */
   private def int8LayoutPath(dir: String): String =
-    s"$artifactRoot/int8_layout_${new java.io.File(dir).getName}.parquet"
+    artifactPath("int8_layout", dir)
 
   /** ann_topk_ivfpq_pruned's PQ-code cell-partitioned layout. */
   private def ivfPqLayoutPath(dir: String): String =
-    s"$artifactRoot/ivfpq_layout_${new java.io.File(dir).getName}.parquet"
+    artifactPath("ivfpq_layout", dir)
 
   /** Centroids as (cell INT, cvec ARRAY<DOUBLE>) — doubles carry the
     * float values EXACTLY, so DuckDB reproduces the kernels'
@@ -155,9 +154,6 @@ object SimilarityQueries {
   private[graft] def cosSql(a: String, b: String): String =
     s"(${dotSql(a, b)}) / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))"
 
-  /** A top-k operator of [[TopK]]: `(df, group, id, score, k)`. */
-  private type TopKOp = (DataFrame, String, String, String, Int) => DataFrame
-
   /** The 5 query vectors as `(query_id, qvec)`, then `extra`. */
   private[graft] def queryFrame(e: DataFrame, extra: Column*): DataFrame =
     e.filter(col("vec_id") < 5)
@@ -177,10 +173,9 @@ object SimilarityQueries {
     df.withColumn("cell", Similarity.assignCells(col("embedding"), cents))
 
   /** Per query, the `k` best rows of a `(query_id, vec_id, score)` frame
-    * through `topK`. */
-  private def perQuery(scored: DataFrame, topK: TopKOp,
-      k: Int = 10): DataFrame =
-    topK(scored, "query_id", "vec_id", scored.columns.last, k)
+    * through [[TopK.perGroup]]. */
+  private def perQuery(scored: DataFrame, k: Int = 10): DataFrame =
+    TopK.perGroup(scored, "query_id", "vec_id", scored.columns.last, k)
 
   /** `(query_id, vec_id, cosine)` of the corpus `vectors` against the
     * query frame `qs`, joined on `key`. */
@@ -193,15 +188,13 @@ object SimilarityQueries {
     * against the [[probes]] frame, native top-10. */
   private[graft] def ivfTop10(vectors: DataFrame,
       probed: DataFrame): DataFrame =
-    perQuery(probedCosines(vectors, probed, "cell"), TopK.perGroupNative)
+    perQuery(probedCosines(vectors, probed, "cell"))
 
-  /** The exact top-10 of the whole corpus for the query frame `q`
-    * through `topK`: `(query_id, vec_id, cosine, rank)`. */
-  private[graft] def bruteTop10(e: DataFrame, q: DataFrame,
-      topK: TopKOp = TopK.perGroup): DataFrame =
+  /** The exact top-10 of the whole corpus for the query frame `q`:
+    * `(query_id, vec_id, cosine, rank)`. */
+  private[graft] def bruteTop10(e: DataFrame, q: DataFrame): DataFrame =
     perQuery(Similarity.scoredPairs(e, col("vec_id"), col("embedding"), q,
-        col("query_id"), col("qvec")).select("query_id", "vec_id", "cosine"),
-      topK)
+      col("query_id"), col("qvec")).select("query_id", "vec_id", "cosine"))
 
   /** How many `truth` rows `found` returned, per `by`, and that count in
     * permille of `outOf`: `(by, n_hits, recall_permille)`. Both frames
@@ -261,30 +254,29 @@ object SimilarityQueries {
   val all: Map[String, Q] = Map(
 
     // Exact brute-force cosine top-10 for 5 broadcast query vectors,
-    // through the TWO-PHASE top-k (bounded in-partition selection →
-    // shuffle carries ≤ partitions×Q×k rows, not Q·N) — hash-matching
-    // the oracle's windowed form proves the pruning exact.
+    // through the bounded top-k node (partial selection before the
+    // exchange → shuffle carries ≤ partitions×Q×k rows, not Q·N) —
+    // hash-matching the oracle's windowed form proves the pruning exact.
     "ann_topk_brute" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
       bruteTop10(e, queryFrame(e)).orderBy("query_id", "rank")
     },
 
-    // The SAME brute-force contract through the NATIVE top-k plan node
-    // (TopKPerGroupLogical → partial/final TopKPerGroupExec with a
-    // Catalyst-planned exchange, SURVEY §7.3 tier c) — hash-matching
-    // the identical oracle proves the custom operator end-to-end.
+    // The SAME brute-force contract, kept as the row that names the
+    // native top-k plan node (TopKPerGroupLogical → partial/final
+    // TopKPerGroupExec with a Catalyst-planned exchange, SURVEY §7.3
+    // tier c) — hash-matching the identical oracle proves the custom
+    // operator end-to-end.
     "ann_topk_native" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      bruteTop10(e, queryFrame(e), TopK.perGroupNative)
-        .orderBy("query_id", "rank")
+      bruteTop10(e, queryFrame(e)).orderBy("query_id", "rank")
     },
 
     // IVF-style probe: only the query's coarse cell (label) is scored
-    // (partition-pruned), then the two-phase bounded top-k.
+    // (partition-pruned), then the bounded top-k.
     "ann_topk_ivf" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      perQuery(probedCosines(e, queryFrame(e, col("label")), "label"),
-          TopK.perGroup)
+      perQuery(probedCosines(e, queryFrame(e, col("label")), "label"))
         .orderBy("query_id", "rank")
     },
 
@@ -298,8 +290,8 @@ object SimilarityQueries {
     // Integer hits and a permille rate keep the oracle exact.
     "ann_recall_report" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      val ivf = perQuery(
-        probedCosines(e, queryFrame(e, col("label")), "label"), TopK.perGroup)
+      val ivf =
+        perQuery(probedCosines(e, queryFrame(e, col("label")), "label"))
       recallReport(bruteTop10(e, queryFrame(e)).select("query_id", "vec_id"),
         ivf.select("query_id", "vec_id"))
     },
@@ -421,7 +413,7 @@ object SimilarityQueries {
           (sqrt(DoubleVecDot(col("dq"), col("dq"))) *
             sqrt(DoubleVecDot(col("qvd"), col("qvd")))))
         .select("query_id", "vec_id", "cosine")
-      perQuery(scored, TopK.perGroupNative).orderBy("query_id", "rank")
+      perQuery(scored).orderBy("query_id", "rank")
     },
 
     // PRODUCT quantization top-k (Jégou et al., TPAMI'11): M=4
@@ -443,8 +435,7 @@ object SimilarityQueries {
     // codebooks — hash-matching scores, not just ranks.
     "ann_topk_pq" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      perQuery(pqBrute(e, pqCodebooks(s, dir)), TopK.perGroupNative)
-        .orderBy("query_id", "rank")
+      perQuery(pqBrute(e, pqCodebooks(s, dir))).orderBy("query_id", "rank")
     },
 
     // PQ recall@10 vs the exact float top-10 — the diagnostic that
@@ -455,7 +446,7 @@ object SimilarityQueries {
     // top-k-sized. Integer hits + permille keep the oracle exact.
     "ann_recall_pq" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      val pq = perQuery(pqBrute(e, pqCodebooks(s, dir)), TopK.perGroupNative)
+      val pq = perQuery(pqBrute(e, pqCodebooks(s, dir)))
       recallReport(bruteTop10(e, queryFrame(e)).select("query_id", "vec_id"),
         pq.select("query_id", "vec_id"))
     },
@@ -473,15 +464,14 @@ object SimilarityQueries {
     // never a second corpus scan.
     "ann_topk_pq_rerank" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      val shortlist = perQuery(pqBrute(e, pqCodebooks(s, dir)),
-          TopK.perGroupNative, k = 100)
+      val shortlist = perQuery(pqBrute(e, pqCodebooks(s, dir)), k = 100)
         .select("query_id", "vec_id")
       val exact = rescored(
         e.withColumn("_vn", Similarity.norm(col("embedding"))), shortlist,
         queryFrame(e).withColumn("_qn2", Similarity.norm(col("qvec"))),
         Similarity.dot(col("embedding"), col("qvec"))
           / (col("_vn") * col("_qn2")))
-      perQuery(exact, TopK.perGroupNative).orderBy("query_id", "rank")
+      perQuery(exact).orderBy("query_id", "rank")
     },
 
     // The STORAGE tier of the embedding pipeline: per-vector int8
@@ -531,8 +521,7 @@ object SimilarityQueries {
       val coded = e.select(Seq(col("vec_id"),
         Similarity.assignCells(col("embedding"), cents).as("cell")) ++
         Similarity.pqCodes(col("embedding"), books): _*)
-      perQuery(pqScores(coded, books, pqProbes(e, cents))(_.join(_, "cell")),
-          TopK.perGroupNative)
+      perQuery(pqScores(coded, books, pqProbes(e, cents))(_.join(_, "cell")))
         .orderBy("query_id", "rank")
     },
 
@@ -560,8 +549,7 @@ object SimilarityQueries {
       CorpusWriter.writePartitioned(coded, path,
         partitionCol = "cell", sortCols = Seq("vec_id"))
       perQuery(pqScores(s.read.parquet(path), books, pqProbes(e, cents))(
-          _.join(_, "cell")), TopK.perGroupNative)
-        .orderBy("query_id", "rank")
+          _.join(_, "cell"))).orderBy("query_id", "rank")
     },
 
     // APPEND-ONLY serving with a FROZEN quantizer — the daily-ingest
@@ -742,7 +730,7 @@ object SimilarityQueries {
       val swept = scored.join(broadcast(np),
           col("probe_rank") <= col("nprobe"))
         .withColumn("grp", col("nprobe") * 1000 + col("query_id"))
-      val ivf = TopK.perGroupNative(swept, "grp", "vec_id", "cosine", k = 10)
+      val ivf = TopK.perGroup(swept, "grp", "vec_id", "cosine", k = 10)
         .select(expr("grp div 1000").as("nprobe"),
           pmod(col("grp"), lit(1000)).as("query_id"), col("vec_id"))
       recallReport(bruteTop10(e, queryFrame(e)).select("query_id", "vec_id")
@@ -798,7 +786,7 @@ object SimilarityQueries {
         .withColumn("cosine", Similarity.dot(col("va"), col("vb"))
           / (col("_na") * col("_nb")))
         .select("vec_id", "nn_id", "cosine")
-      TopK.perGroupNative(scored, "vec_id", "nn_id", "cosine", k = 1)
+      TopK.perGroup(scored, "vec_id", "nn_id", "cosine", k = 1)
         .select("vec_id", "nn_id", "cosine")
         .orderBy("vec_id")
     },
@@ -899,10 +887,10 @@ object SimilarityQueries {
           slice(col("qvec"), 1, 16).as("q16"))))
         .withColumn("c16", Similarity.cosine(col("v16"), col("q16")))
         .select("query_id", "vec_id", "c16")
-      val shortlist = perQuery(coarse, TopK.perGroupNative, k = 50)
+      val shortlist = perQuery(coarse, k = 50)
         .select("query_id", "vec_id")
       perQuery(rescored(e, shortlist, q,
-          Similarity.cosine(col("embedding"), col("qvec"))), TopK.perGroup)
+          Similarity.cosine(col("embedding"), col("qvec"))))
         .orderBy("query_id", "rank")
     },
 
@@ -931,7 +919,7 @@ object SimilarityQueries {
           bit_count(col("hi").bitwiseXOR(col("qhi"))) <= 24)
         .select("query_id", "vec_id")
       perQuery(rescored(e, cand, queryFrame(e),
-          Similarity.cosine(col("embedding"), col("qvec"))), TopK.perGroup)
+          Similarity.cosine(col("embedding"), col("qvec"))))
         .orderBy("query_id", "rank")
     },
 
@@ -1008,9 +996,9 @@ object SimilarityQueries {
     s"(${dotSqlK(a, b, k)}) / " +
       s"(sqrt(${dotSqlK(a, a, k)}) * sqrt(${dotSqlK(b, b, k)}))"
 
-  /** Shared by ann_topk_brute and ann_topk_native: same contract, two
-    * engine paths (two-phase mapPartitions vs native plan node) — both
-    * must hash-match this ONE oracle. */
+  /** Shared by ann_topk_brute and ann_topk_native: the same contract
+    * through the same bounded top-k node — both must hash-match this
+    * ONE oracle. */
   private val bruteTopKSql =
     s"""WITH q AS (
       |  SELECT vec_id AS query_id, embedding AS qvec

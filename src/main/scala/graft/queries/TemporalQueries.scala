@@ -150,8 +150,7 @@ object TemporalQueries {
     * — it recomputes per-day registers from `events` (parquet
     * round-trips the integers losslessly). */
   private def hllDayExportPath(dir: String): String =
-    s"$artifactRoot/hll_day_regs_${new java.io.File(dir).getName}" +
-      ".parquet"
+    artifactPath("hll_day_regs", dir)
 
   /** hdr_sliding_from_table's persisted per-day bucket-histogram
     * table — the [[hllDayExportPath]] layout for the HDR family
@@ -166,8 +165,7 @@ object TemporalQueries {
     * the read-back merge exists for SHARD-split appends of one day,
     * never for re-delivered history. */
   private def hdrDayExportPath(dir: String): String =
-    s"$artifactRoot/hdr_day_hist_${new java.io.File(dir).getName}" +
-      ".parquet"
+    artifactPath("hdr_day_hist", dir)
 
   /** The sliding-estimate oracle — shared verbatim by
     * hll_sliding_estimate (localCheckpoint answer path) and

@@ -583,8 +583,7 @@ object TrainingQueries {
       .select("lang", "k_alloc")
     val draws = d.withColumn("draw",
       md5(concat(lit("samp:"), col("doc_id").cast("string"))))
-    graft.operators.TopK.perGroupNative(
-        draws, "lang", "doc_id", "draw", k)
+    graft.operators.TopK.perGroup(draws, "lang", "doc_id", "draw", k)
       .withColumnRenamed("rank", "rk")
       .join(alloc, "lang")
       .filter(col("rk") <= col("k_alloc"))
@@ -1556,8 +1555,7 @@ object TrainingQueries {
       val d = Tables.documents(s, dir)
         .select(col("source"), col("doc_id"),
           TextAnalysis.tokenCount(col("text")).as("tokens"))
-      graft.operators.TopK.perGroupNative(
-          d, "source", "doc_id", "tokens", k = 5)
+      graft.operators.TopK.perGroup(d, "source", "doc_id", "tokens", k = 5)
         .select(col("source"), col("doc_id"),
           col("tokens").cast("long").as("tokens"), col("rank"))
         .orderBy("source", "rank")
@@ -3443,7 +3441,7 @@ object TrainingQueries {
     * overwriting each other's layout mid-read). */
   /** dedup_lsh_probe's persisted band-signature index. */
   private def lshIndexPath(dir: String): String =
-    s"$artifactRoot/lsh_index_${new java.io.File(dir).getName}.parquet"
+    artifactPath("lsh_index", dir)
 
   /** mixture_temperature's one float op — √share in micro-units; ONE
     * SQL string for both engines (sqrt is correctly rounded by IEEE,
@@ -3452,7 +3450,7 @@ object TrainingQueries {
     "CAST(FLOOR(1e6 * sqrt(CAST(toks AS DOUBLE) / t)) AS BIGINT)"
 
   private def corpusExportPath(dir: String): String =
-    s"$artifactRoot/corpus_${new java.io.File(dir).getName}.parquet"
+    artifactPath("corpus", dir)
 
   /** hll_pair_from_table's persisted per-source register table —
     * SF-suffixed like every at-rest layout (cross-SF clobber guard);
@@ -3483,17 +3481,17 @@ object TrainingQueries {
     * sharing this pattern (hll/kmv/cms ingest, pair-from-table,
     * sliding-from-table). */
   private def hllRegExportPath(dir: String): String =
-    s"$artifactRoot/hll_regs_${new java.io.File(dir).getName}.parquet"
+    artifactPath("hll_regs", dir)
 
   /** hll_table_ingest's at-rest "existing corpus" register table. */
   private def hllIngestExportPath(dir: String): String =
-    s"$artifactRoot/hll_ingest_${new java.io.File(dir).getName}.parquet"
+    artifactPath("hll_ingest", dir)
 
   /** kmv_pair_from_table's persisted per-source bottom-k table (r19
     * verdict task #2 — the [[hllRegExportPath]] pattern for the
     * engine's measured-better overlap estimator). */
   private def kmvSketchExportPath(dir: String): String =
-    s"$artifactRoot/kmv_sketch_${new java.io.File(dir).getName}.parquet"
+    artifactPath("kmv_sketch", dir)
 
   /** kmv_table_ingest's at-rest "existing corpus" bottom-k table —
     * the [[hllIngestExportPath]] pattern for the KMV family; extends
@@ -3501,7 +3499,7 @@ object TrainingQueries {
     * idempotent under overlapping re-ingest (like HLL's register-max,
     * unlike the CMS/HDR cell-adds). */
   private def kmvIngestExportPath(dir: String): String =
-    s"$artifactRoot/kmv_ingest_${new java.io.File(dir).getName}.parquet"
+    artifactPath("kmv_ingest", dir)
 
   /** cms_table_ingest's persisted d×w cell table (r20 — completes
     * durable at-rest coverage across all four sketch families). Like
@@ -3510,7 +3508,7 @@ object TrainingQueries {
     * at-most-once per batch (disjoint slices; in production a
     * per-batch partition overwrite / atomic rename). */
   private def cmsCellExportPath(dir: String): String =
-    s"$artifactRoot/cms_cells_${new java.io.File(dir).getName}.parquet"
+    artifactPath("cms_cells", dir)
 
   /** Serializes same-path sketch-table writes within this JVM
     * (see the concurrency contract on [[hllRegExportPath]]): one lock

@@ -254,9 +254,8 @@ object WebQueries {
     // replaced broadcast join assumed) — so the LIKE translation, the
     // per-row regex compile of a non-foldable LIKE pattern, the ~5×
     // rule-join fan-out of the URL scan AND the corpus-scale
-    // (doc_id, domain) max_by exchange are all gone (the general
-    // streaming-API translation with `\`-escaping stays in
-    // CrawlScheduler.compileRules). The
+    // (doc_id, domain) max_by exchange are all gone (the streaming
+    // crawl gate, CrawlScheduler.verdicts, calls the same kernel). The
     // wildcard tiers extend the seeded rule synthesis: ~half the
     // domains (md5 residue b3) block slugs ending in 7, and ~half of
     // those (b4) re-allow ...77.html via a longer pattern —
@@ -464,8 +463,7 @@ object WebQueries {
           Seq("target_id"), "left_semi")
       val counts = anchors.groupBy("target_id", "term")
         .agg(count(lit(1)).as("n"))
-      graft.operators.TopK.perGroupNative(counts, "target_id", "term",
-          "n", 3)
+      graft.operators.TopK.perGroup(counts, "target_id", "term", "n", 3)
         .filter(col("rank") <= 3)
         .select(col("target_id"), col("term"), col("n"), col("rank"))
         .orderBy("target_id", "rank")
@@ -593,7 +591,7 @@ object WebQueries {
       val allowed = canon
         .join(broadcast(blocklist), Seq("domain"), "left_anti")
         .select("domain", "doc_id", "n_chars")
-      graft.operators.TopK.perGroupNative(
+      graft.operators.TopK.perGroup(
           allowed, "domain", "doc_id", "n_chars", k = 3)
         .select(col("domain"), col("doc_id"), col("n_chars"),
           col("rank"))

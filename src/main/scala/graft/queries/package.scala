@@ -87,6 +87,12 @@ package object queries {
       s"/tmp/graft_${java.lang.ProcessHandle.current().pid()}"
     })
 
+  /** `<artifactRoot>/<name>_<sf>.parquet`, `<sf>` being the last path
+    * element of the table directory `dir`: one at-rest artifact per
+    * scale factor, so runs at two SFs never overwrite each other's. */
+  def artifactPath(name: String, dir: String): String =
+    s"$artifactRoot/${name}_${new java.io.File(dir).getName}.parquet"
+
   /** Age-guarded (r15 ADVICE): the oracle replay reads a dead pid's
     * tree in the window between Verify's exit and check_oracle.py's
     * run, and pid reuse can keep a dead tree "alive" — so only trees

@@ -31,13 +31,13 @@ import org.apache.spark.sql.functions._
   * exactly-once emission contract covers the envelopes too
   * (CrawlSchedulerSpec's restart test pins no double-write).
   *
-  * The gate deliberately carries NO streaming aggregation: the rules
-  * frame pre-collapses to one array row per domain (batch-side,
-  * domains-sized, broadcast into the stream-static join), and the
-  * verdict is a per-row `aggregate` lambda over the ≤ rules-per-domain
-  * array — so the stream stays a chain of stateful transforms + maps
-  * that Spark can run in ONE query, and at scale the gate costs one
-  * broadcast join however fast the frontier admits.
+  * The gate deliberately carries NO streaming aggregation and no join:
+  * the rules frame (batch-side, domains-sized) is collected once into
+  * the broadcast rule map of the compiled [[graft.functions.RobotsMatch]]
+  * kernel — the matcher the batch robots rows use — and the verdict is
+  * one row-local kernel call per URL, so the stream stays a chain of
+  * stateful transforms + maps that Spark can run in ONE query, however
+  * fast the frontier admits.
   *
   * Scale shape: each phase keeps its own bound — frontier state is
   * the live admit window, gate state is zero, limiter state is one
@@ -49,56 +49,23 @@ import org.apache.spark.sql.functions._
 object CrawlScheduler {
 
   /** Rules frame columns: domain, pattern (RFC 9309 grammar), allow.
-    * Pre-collapses to one row per domain with the LIKE-translated
-    * patterns and specificity keys — the broadcastable gate side.
-    *
-    * Translation escapes LIKE's own metacharacters BEFORE mapping the
-    * RFC 9309 `*` to `%` (r17 ADVICE): real robots.txt paths routinely
-    * carry `_` (LIKE: any single char — `Disallow: /wp_admin` must NOT
-    * also block `/wpXadmin`) and `%` from percent-encoding (LIKE: an
-    * unintended wildcard); both — plus a defensive `\` — are escaped
-    * with `\` and [[verdicts]] matches with `ESCAPE '\'`. The RFC `$`
-    * end-anchor is stripped first ( `$` is literal in LIKE, so it
-    * needs no escaping once consumed as the anchor marker). */
-  def compileRules(rules: DataFrame): DataFrame = {
-    val anchored = col("pattern").endsWith("$")
-    val body = when(anchored,
-        expr("substring(pattern, 1, length(pattern) - 1)"))
-      .otherwise(col("pattern"))
-    // \ -> \\, % -> \%, _ -> \_ (one pass; $1 is the matched char),
-    // THEN the RFC wildcard * -> % (never touched by the escape pass)
-    val escaped = regexp_replace(body, "([\\\\%_])", "\\\\$1")
-    val translated = replace(escaped, lit("*"), lit("%"))
-    rules
-      .withColumn("lp", when(anchored, translated)
-        .otherwise(concat(translated, lit("%"))))
-      .withColumn("spec", expr(
-        "CAST(length(pattern) * 2 + IF(allow, 1, 0) AS BIGINT)"))
-      .groupBy("domain")
-      // sort_array (r18 ADVICE): collect_list order after a groupBy is
-      // nondeterministic, and verdicts' strict `r.spec > acc.spec`
-      // fold keeps the FIRST max-spec rule it meets — so two rules
-      // with equal spec could alternate the winning `pat` (and the
-      // dead-letter reason string) across runs/replays even though the
-      // allow/deny verdict is stable. Sorting the struct array makes
-      // the fold order — hence the tie winner (lexicographically
-      // smallest (lp, spec, allow, pat) among max-spec matches) —
-      // deterministic.
-      .agg(sort_array(collect_list(struct(col("lp"), col("spec"),
-        col("allow"), col("pattern").as("pat")))).as("rules"))
-  }
-
-  private val NoRuleVerdict =
-    "named_struct('spec', CAST(-1 AS BIGINT), 'allow', true," +
-      " 'pat', CAST(NULL AS STRING))"
+    * Attaches each rule's specificity `spec = 2·length(pattern) +
+    * allow-bit` — the rules side [[graft.functions.RobotsMatch.decide]]
+    * reads. The kernel matches the RFC grammar directly, so `_` and
+    * `%` in a robots path stay literal. */
+  def compileRules(rules: DataFrame): DataFrame =
+    rules.withColumn("spec",
+      expr("CAST(length(pattern) * 2 + IF(allow, 1, 0) AS BIGINT)"))
 
   /** Attaches the RFC 9309 verdict to a frame carrying `canonicalUrl`:
     * adds `robots_allowed` and `robots_rule` (the winning pattern;
     * null when no rule applied — RFC 9309 default allow). `compiled`
-    * is [[compileRules]]' output. Works on streams (stream-static
-    * left join + per-row lambda, no aggregation) and on batch frames
-    * alike. A path-less canonical URL (`https://a.com`) matches as
-    * path `/` — RFC 9309 treats the empty path as the root, so a
+    * is [[compileRules]]' output, collected once when the verdict
+    * column is built. Equal-spec ties resolve to the lexicographically
+    * smallest pattern, the batch robots rows' rule. Works on streams
+    * (a per-row kernel call, no join, no aggregation) and on batch
+    * frames alike. A path-less canonical URL (`https://a.com`) matches
+    * as path `/` — RFC 9309 treats the empty path as the root, so a
     * domain-wide `Disallow: /` blocks it (r17 ADVICE). */
   def verdicts(frame: DataFrame, compiled: DataFrame): DataFrame =
     frame
@@ -112,17 +79,11 @@ object CrawlScheduler {
           "^https?://[^/#]+(/[^#]*)", 1))
       .withColumn("path",
         when(col("path") === "", lit("/")).otherwise(col("path")))
-      .join(broadcast(compiled), Seq("domain"), "left")
-      .withColumn("rv", coalesce(expr(
-        "aggregate(filter(rules, r -> path LIKE r.lp ESCAPE '\\\\')," +
-          s" $NoRuleVerdict," +
-          " (acc, r) -> IF(r.spec > acc.spec," +
-          " named_struct('spec', r.spec, 'allow', r.allow," +
-          " 'pat', r.pat), acc))"),
-        expr(NoRuleVerdict)))
-      .withColumn("robots_allowed", col("rv.allow"))
+      .withColumn("rv", graft.functions.RobotsMatch.decide(compiled,
+        col("domain"), col("path")))
+      .withColumn("robots_allowed", coalesce(col("rv.allow"), lit(true)))
       .withColumn("robots_rule", col("rv.pat"))
-      .drop("rules", "rv", "host")
+      .drop("rv", "host")
 
   /** Filters a frame carrying `canonicalUrl` down to robots-allowed
     * rows — [[verdicts]] without the envelope, for batch callers that
@@ -170,6 +131,6 @@ object CrawlScheduler {
           .otherwise(concat(lit("robots:"), col("robots_rule")))
           .as("reason"))
     PolitenessLimiter.limitGated(judged, gapUs, burst, maxPending,
-      maxDelay, inheritWatermark = true)
+      maxDelay)
   }
 }

@@ -105,32 +105,33 @@ object PolitenessLimiter {
     *                   back-to-back before spacing kicks in
     * @param maxPending deferral queue bound per host; beyond it,
     *                   requests drop (re-offered by the next refresh)
-    * @param maxDelay   watermark delay for late requests
-    * @param inheritWatermark when the limiter sits DOWNSTREAM of
-    *                   another stateful operator in the same query
-    *                   (the [[CrawlScheduler]] composition), the
-    *                   lineage already carries a watermark and Spark
-    *                   forbids redefining it — pass true to reuse the
-    *                   upstream one (event-time timers still fire off
-    *                   the propagated watermark); `maxDelay` is then
-    *                   ignored */
+    * @param maxDelay   watermark delay for late requests; ignored when
+    *                   the lineage already defines a watermark (see
+    *                   [[limitGated]]) */
   def limit(reqs: Dataset[FetchRequest], gapUs: Long, burst: Int = 1,
-      maxPending: Int = 64, maxDelay: String = "10 minutes",
-      inheritWatermark: Boolean = false): Dataset[FetchDecision] =
+      maxPending: Int = 64,
+      maxDelay: String = "10 minutes"): Dataset[FetchDecision] =
     limitGated(reqs.toDF("url", "tsUs")
         .withColumn("allowed", lit(true))
         .withColumn("reason", lit("")),
-      gapUs, burst, maxPending, maxDelay, inheritWatermark)
+      gapUs, burst, maxPending, maxDelay)
 
   /** [[limit]] over a PRE-GATED frame carrying `url, tsUs, allowed,
     * reason`: rows with `allowed = false` pass straight through as
     * `kind = "disallowed"` envelopes (no token consumed, no state
     * touched) — the [[CrawlScheduler]] dead-letter path, kept inside
     * the one stateful operator so the composed pipeline stays a
-    * single streaming query and exactly-once covers the envelopes. */
+    * single streaming query and exactly-once covers the envelopes.
+    *
+    * Watermark: when the limiter sits DOWNSTREAM of another stateful
+    * operator in the same query (the [[CrawlScheduler]] composition),
+    * the lineage already carries a watermark and Spark forbids
+    * redefining it, so the limiter reuses it (event-time timers fire
+    * off the propagated watermark). Otherwise it defines one on the
+    * request time with `maxDelay`. */
   private[streaming] def limitGated(reqs: DataFrame, gapUs: Long,
-      burst: Int, maxPending: Int, maxDelay: String,
-      inheritWatermark: Boolean): Dataset[FetchDecision] = {
+      burst: Int, maxPending: Int,
+      maxDelay: String): Dataset[FetchDecision] = {
     require(gapUs >= 1000, s"gapUs must be >= 1000 (1 ms), got $gapUs")
     require(burst >= 1, s"burst must be >= 1, got $burst")
     require(maxPending >= 0, s"maxPending must be >= 0, got $maxPending")
@@ -138,22 +139,12 @@ object PolitenessLimiter {
     val timed = reqs
       .withColumn("host", host(col("url")))
       .withColumn("eventTime", timestamp_micros(col("tsUs")))
-    val src = if (inheritWatermark) {
-      // inheritWatermark only REUSES a watermark — it cannot conjure
-      // one. If the upstream lineage carries none, the event-time
-      // timers never fire, parked deferrals never release, and
-      // per-host state grows unboundedly with NO error — so fail loud
-      // at construction instead (r17 ADVICE).
-      require(timed.queryExecution.analyzed.exists {
-          case _: EventTimeWatermark => true
-          case _ => false
-        },
-        "inheritWatermark = true but the upstream lineage defines no " +
-          "watermark: add withWatermark upstream in the same query, " +
-          "or pass inheritWatermark = false to let the limiter " +
-          "define one from maxDelay")
-      timed
-    } else timed.withWatermark("eventTime", maxDelay)
+    val upstream = timed.queryExecution.analyzed.exists {
+      case _: EventTimeWatermark => true
+      case _ => false
+    }
+    val src = if (upstream) timed
+      else timed.withWatermark("eventTime", maxDelay)
     src
       .as[HostReq](Encoders.product[HostReq])
       .groupByKey(_.host)(Encoders.STRING)

@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -15,6 +16,11 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object bridge {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `e` with -0.0/0.0 and every NaN folded to one value each — the
+    * form the optimizer gives aggregate, join and window keys. */
+  def normalizedKey(e: Expression): Expression =
+    NormalizeFloatingNumbers.normalize(e)
 
   /** Wrap a custom logical node as a DataFrame (for operators that are
     * whole plan nodes, e.g. [[graft.plans.TopKPerGroupLogical]]). */

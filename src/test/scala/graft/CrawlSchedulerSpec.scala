@@ -290,22 +290,29 @@ class CrawlSchedulerSpec extends SparkSpec {
       "smallest matching rule — the dead-letter reason string cannot " +
       "drift across runs or replays") {
     import spark.implicits._
-    // '/a*' and '/ab' both match '/ab/x' with EQUAL spec
-    // (2·3 + 0 = 6); '/' allow is the lower-spec default
+    // each domain has two disallow rules of EQUAL spec (2·3 + 0 = 6)
+    // that both match its URL; '/' allow is the lower-spec default.
+    // The lexicographically smallest pattern wins: '*' < 'b' and
+    // '%' < '*'.
     val rules = Seq(
       ("g.com", "/ab", false),
       ("g.com", "/a*", false),
-      ("g.com", "/", true)).toDF("domain", "pattern", "allow")
-    val urls = Seq("https://g.com/ab/x").toDF("canonicalUrl")
+      ("g.com", "/", true),
+      ("h.com", "/a*", false),
+      ("h.com", "/a%", false),
+      ("h.com", "/", true)).toDF("domain", "pattern", "allow")
+    val urls = Seq("https://g.com/ab/x", "https://h.com/a%25x")
+      .toDF("canonicalUrl")
       .withColumn("tsUs", lit(0L))
     (1 to 5).foreach { _ =>
       val got = CrawlScheduler.verdicts(urls,
           CrawlScheduler.compileRules(rules))
-        .select("robots_allowed", "robots_rule").collect().head
-      assert(got.getBoolean(0) === false, "allow/deny verdict wrong")
-      // sorted rule array: lp '/a%%' < '/ab%', so '/a*' wins the tie
-      assert(got.getString(1) === "/a*",
-        s"tie winner drifted: ${got.getString(1)}")
+        .select("canonicalUrl", "robots_allowed", "robots_rule")
+        .as[(String, Boolean, String)].collect().sorted.toSeq
+      assert(got === Seq(
+        ("https://g.com/ab/x", false, "/a*"),
+        ("https://h.com/a%25x", false, "/a%")),
+        s"tie verdict or winner drifted: $got")
     }
   }
 }

@@ -246,20 +246,6 @@ class PolitenessLimiterSpec extends SparkSpec {
     }
   }
 
-  test("inheritWatermark = true without an upstream withWatermark " +
-      "fails fast at construction: timers would never fire and " +
-      "parked deferrals would leak silently otherwise") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[FetchRequest]
-    val e = intercept[IllegalArgumentException] {
-      PolitenessLimiter.limit(input.toDS(), gapUs = g,
-        inheritWatermark = true)
-    }
-    assert(e.getMessage.contains("no watermark"),
-      s"wrong failure message: ${e.getMessage}")
-  }
-
   test("host() extracts the lowercased politeness key: scheme, port " +
       "and path are not who we are hammering") {
     import spark.implicits._

@@ -6,11 +6,12 @@ import org.apache.spark.sql.functions._
 
 import graft.streaming.CrawlScheduler
 
-/** Property-style cross-check of [[CrawlScheduler.compileRules]]'
-  * LIKE translation: for RANDOM robots patterns — deliberately
-  * including the LIKE metachars `%`, `_`, `\` next to the RFC 9309
-  * `*`/`$` grammar — the gate's verdict must equal an independent
-  * JVM matcher that implements RFC 9309 §2.2.3 directly via regex
+/** Property-style cross-check of the robots gate
+  * ([[CrawlScheduler.gate]] over the compiled
+  * [[graft.functions.RobotsMatch]] kernel): for RANDOM robots patterns
+  * — deliberately including the LIKE metachars `%`, `_`, `\` next to
+  * the RFC 9309 `*`/`$` grammar — the gate's verdict must equal an
+  * independent JVM matcher that implements RFC 9309 §2.2.3 via regex
   * (quote every literal char, `*` → `.*`, `$` → end anchor,
   * prefix match otherwise), with most-specific-match resolution
   * (spec = 2·length + allow-bit, max wins). Seeded generator, 40

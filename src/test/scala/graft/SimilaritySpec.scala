@@ -2,9 +2,10 @@ package graft
 
 import scala.util.Random
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, Similarity, TopK}
 
 /** Property pins for the two operators with non-obvious exactness
   * arguments: the chord-bound grid refinement in
@@ -14,6 +15,14 @@ import graft.operators.{Dedup, Similarity}
   * [[Dedup.connectedComponents]] (must produce the same components as
   * pure propagation on arbitrary random graphs, not just paths). */
 class SimilaritySpec extends SparkSpec {
+
+  /** The IVF rows' composition: `probes` (carrying `query_id`, `qvec`,
+    * `cell`) scored against the same-cell rows of `indexed`, then the
+    * top `k` per query through the native top-k node. */
+  private def ivfTop(indexed: DataFrame, probes: DataFrame,
+      k: Int): DataFrame =
+    TopK.perGroup(Similarity.probedScores(indexed, col("embedding"), probes,
+      col("qvec"), "cell"), "query_id", "vec_id", "cosine", k)
 
   test("cosineDupPairs grid refinement returns exactly the naive " +
       "bucket-join pair set on random vectors (seeded)") {
@@ -209,8 +218,7 @@ class SimilaritySpec extends SparkSpec {
     val queries = indexed.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"),
         col("cell"))
-    val ivf = Similarity.ivfTopK(indexed, col("vec_id"), col("embedding"),
-        "cell", queries, col("query_id"), col("qvec"), k = 10)
+    val ivf = ivfTop(indexed, queries, k = 10)
       .select(col("query_id"), col("vec_id"), col("rank"))
       .as[(Long, Long, Int)].collect().toSet
     val brute = Similarity.bruteForceTopK(df, col("vec_id"),
@@ -252,9 +260,7 @@ class SimilaritySpec extends SparkSpec {
       val probes = qDf.select(col("query_id"), col("qvec"),
         explode(Similarity.probeCells(col("qvec"), cents, nprobe))
           .as("cell"))
-      Similarity.ivfTopK(indexed, col("vec_id"), col("embedding"),
-          "cell", probes, col("query_id"), col("qvec"), k = 10)
-        .select("vec_id").as[Long].collect().toSet
+      ivfTop(indexed, probes, k = 10).select("vec_id").as[Long].collect().toSet
     }
     // nprobe=1 sees only one side of the boundary; nprobe=2 is exact
     val one = probed(1)
