@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.bridge
 
 /** Lineage truncation for iterative loops (components, star
   * contraction, BFS, pointer doubling) with a configurable
@@ -55,16 +56,18 @@ object Checkpoints {
   }
 
   /** Releases a [[truncate]]d frame its successor no longer reads:
-    * unpersists it and, in reliable mode, deletes its checkpoint
-    * directory (nothing to delete if it was never materialized). */
-  def release(df: DataFrame): Unit = {
-    df.unpersist()
+    * unpersists the RDD it scans (a local checkpoint's blocks) and, in
+    * reliable mode, deletes its checkpoint directory (nothing to delete
+    * if it was never materialized). */
+  def release(df: DataFrame): Unit =
     df.queryExecution.logical.collectFirst {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.flatMap(_.getCheckpointFile).foreach { dir =>
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-        .delete(p, true)
+    }.foreach { rdd =>
+      bridge.unpersistQuietly(rdd)
+      rdd.getCheckpointFile.foreach { dir =>
+        val p = new org.apache.hadoop.fs.Path(dir)
+        p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+          .delete(p, true)
+      }
     }
-  }
 }

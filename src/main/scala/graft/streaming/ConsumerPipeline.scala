@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.model.{ConsumerConfig, TaskStatus}
-import graft.operators.{Batching, Decode, DeadLetters, Identify}
+import graft.operators.{Batching, Checkpoints, Decode, DeadLetters,
+  Identify}
 import graft.sources.StateStore
 
 /** The reference's `processStreamEvent` phase structure
@@ -75,28 +76,33 @@ object ConsumerPipeline {
     * matching, `test/persisting.test.js:17-21`): a replay that re-keys
     * eventIDs but redelivers the same payloads still resumes.
     *
-    * Each intermediate result is cached once per delivery (decoded
-    * records, the sequenced messages, the resolved prior state, the
-    * chain fold's outcomes and the dead letters) and released when the
-    * delivery ends, normally or not. One delivery runs these Spark
-    * actions, in order:
+    * Each intermediate result that later steps read more than once (the
+    * decoded records, the sequenced messages, the resolved prior state,
+    * the chain fold's outcomes and the dead letters) is a lazy local
+    * checkpoint, released when the delivery ends, normally or not.
+    * Every frame built on one plans from its RDD scan, not from the
+    * whole decode → identify → sequence → cogroup tree beneath it. AQE
+    * runs a kept frame's shuffle and broadcast stages when it is kept;
+    * its last stage runs inside the first job that reads it. One
+    * delivery runs these Spark actions, in order:
     *
     *  1. only on the default event-seqNo path with required sequencing:
     *     the heterogeneous-seqNo check in [[Identify.sequence]] (a
     *     collect);
+    *  1. the chain fold: one job that materializes the outcomes, so the
+    *     task trees run exactly once per delivery;
     *  1. only with `processAll`: the master-task cogroup (a collect);
     *  1. the tally: one collect that counts every [[BatchResult]] field
-    *     and the new dead letters. It is the first action over the
-    *     caches, so the task trees run inside it;
+    *     and the new dead letters;
     *  1. only when there are new dead letters: one append from the
-    *     cached letters;
+    *     kept letters;
     *  1. the state save: the upsert written to a sibling directory,
     *     then swapped in.
     *
-    * With AQE each shuffle or broadcast stage and each cache is a job
-    * of its own; `ConsumerPipelineSpec` pins the total at 16 jobs for a
-    * clean batch, 17 for a first delivery that writes DR and DM letters
-    * and 18 for a replay.
+    * With AQE each shuffle or broadcast stage is a job of its own;
+    * `ConsumerPipelineSpec` pins the total at 11 jobs for a clean
+    * batch, 12 for a first delivery that writes DR and DM letters and
+    * 13 for a replay (9, 10 and 11 measured).
     *
     * @param cfg        consumer configuration (sequencing mode, retry cap)
     * @param tasks      processOne task definitions (non-empty registry)
@@ -121,12 +127,20 @@ object ConsumerPipeline {
     val spark = batch.sparkSession
     import spark.implicits._
 
-    // Every frame cached below is released in the `finally`, whatever
-    // the delivery does: a task that throws, a failed letters append or
-    // a failed state save must not leave cache entries behind for every
-    // later plan to look up.
-    val cached = mutable.ArrayBuffer.empty[Dataset[_]]
-    def keep[T](ds: Dataset[T]): Dataset[T] = { cached += ds; ds.cache() }
+    // Every kept frame is registered before any action materializes it
+    // and released in the `finally`, whatever the delivery does: a task
+    // that throws, a failed letters append or a failed state save must
+    // not leave persisted blocks behind. Always a local checkpoint, never
+    // `Checkpoints.truncate`'s reliable mode: a lazy reliable checkpoint
+    // writes in a second job that recomputes the fold, running every task
+    // twice, and a delivery that loses an executor just fails and is
+    // redelivered.
+    val kept = mutable.ArrayBuffer.empty[DataFrame]
+    def keep[T](ds: Dataset[T]): Dataset[T] = {
+      val t = ds.localCheckpoint(eager = false)
+      kept += t.toDF()
+      t
+    }
     try {
       // ----- initiate: decode → identify → sequence -----
       val scid = Batching.streamConsumerId(lit(cfg.streamName),
@@ -135,7 +149,7 @@ object ConsumerPipeline {
       val recordJson = to_json(struct(col("eventID"), col("shardId"),
         col("partitionKey"), col("data")))
       // decoded feeds sequencing, the dead letters, the state markers and
-      // the counts, each read in a different action — cached so decode
+      // the counts, each read in a different action — kept so decode
       // runs once per delivery.
       val decoded = keep(Decode.extractJsonMessages(batch, col("data"))
         .withColumn("streamConsumerId", scid)
@@ -222,7 +236,7 @@ object ConsumerPipeline {
       // broadcast-hash equality probe on the msgId column the state load
       // scans anyway. Once a deployment knows all legacy rows are gone it
       // sets `migrateLegacyStateKeys = false` and the join disappears
-      // from the plan entirely. Cached: the chain fold, the once-only
+      // from the plan entirely. Kept: the chain fold, the once-only
       // guard, processAll and the upsert all read it, and the state scan
       // plus the migration join should run once per delivery.
       val prior = keep(resolvePriorState(loaded, sequenced,
@@ -242,6 +256,9 @@ object ConsumerPipeline {
           (_, ms, ps) =>
             foldChain(ps.toSeq, ms.toSeq, registry, maxAttempts).iterator
         })
+      // The fold runs the user tasks, so it runs in one job of its own,
+      // exactly once per delivery; every later action reads its blocks.
+      outcomes.foreachPartition((_: Iterator[ChainOutcome]) => ())
       val nodes = outcomes.filter(col("node").isNotNull).select("node.*")
       val verdicts = outcomes.filter(col("msg").isNotNull).select("msg.*")
 
@@ -318,7 +335,7 @@ object ConsumerPipeline {
         .select("kind", "envelope").unionByName(deadMessages))
 
       // Every count of the result, and the letters gate, in one action
-      // over the cached frames.
+      // over the kept frames.
       val tally = verdicts.filter(col("first")).select(col("verdict").as("k"))
         .unionByName(unusableRecs.select(lit(Unusable).as("k")))
         .unionByName(rejectedMsgs.select(lit(RejectedMsg).as("k")))
@@ -370,7 +387,7 @@ object ConsumerPipeline {
           s"batch $batchId incomplete: ${result.failed} failed, " +
             s"${result.blocked} blocked — replaying")
       result
-    } finally cached.foreach(_.unpersist())
+    } finally kept.foreach(Checkpoints.release)
   }
 
   /** A delivered message on its way into the chain fold: the

@@ -99,6 +99,20 @@ class CheckpointsSpec extends SparkSpec {
     }
   }
 
+  test("release frees a local checkpoint's blocks: the persistent-RDD " +
+      "count returns to its value before truncate") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.size
+    val t = Checkpoints.truncate(spark.range(10).toDF())
+    val id = t.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.get
+    assert(sc.getPersistentRDDs.contains(id))
+    Checkpoints.release(t)
+    assert(!sc.getPersistentRDDs.contains(id))
+    assert(sc.getPersistentRDDs.size === before)
+  }
+
   test("crawl_depth_bfs and redirect_resolve are hash-identical " +
       "under the reliable strategy at sf0.001") {
     val dir = "/root/testdata/sf0.001"

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import java.util.Base64
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.util.{Failure, Try}
 
@@ -188,12 +189,12 @@ class ConsumerPipelineSpec extends SparkSpec {
     info(s"jobs: clean $cleanJobs, first $firstJobs, replay $replayJobs")
     assert(spark.read.parquet(s"$dir/mixed-dlq").count() === 2,
       "the first delivery should have written one DR and one DM letter")
-    // these deliveries run 14, 15 and 16 jobs; each ceiling allows two
+    // these deliveries run 9, 10 and 11 jobs; each ceiling allows two
     // more, so a changed AQE choice passes but a re-run plan does not
     assert(cleanJobs >= 1 && firstJobs >= 1 && replayJobs >= 1)
-    assert(cleanJobs <= 16, s"clean batch ran $cleanJobs jobs")
-    assert(firstJobs <= 17, s"first delivery ran $firstJobs jobs")
-    assert(replayJobs <= 18, s"replay ran $replayJobs jobs")
+    assert(cleanJobs <= 11, s"clean batch ran $cleanJobs jobs")
+    assert(firstJobs <= 12, s"first delivery ran $firstJobs jobs")
+    assert(replayJobs <= 13, s"replay ran $replayJobs jobs")
   }
 
   test("a third delivery cycle over the four routes reuses its compiled " +
@@ -221,6 +222,26 @@ class ConsumerPipelineSpec extends SparkSpec {
     assert(n <= 24L, s"the warm cycle compiled $n classes")
   }
 
+  test("the chain fold runs once per delivery: exact task invocations " +
+      "over the first delivery, its replay, the discard and a clean batch") {
+    val dir = Files.createTempDirectory("graft-task-calls").toString
+    val registry = Seq(TaskDef("process", ConsumerPipelineSpec.countedTask))
+    def calls(state: String, b: DataFrame, id: Long): Long = {
+      val before = ConsumerPipelineSpec.taskCalls.get()
+      ConsumerPipeline.multi(cfg, registry, s"$dir/$state",
+        s"$dir/$state-dlq")(b, id)
+      ConsumerPipelineSpec.taskCalls.get() - before
+    }
+    val mixedB = batch(mixed: _*)
+    // m1, m2 (fails) and m4 run; m3 waits behind m2
+    assert(calls("mixed", mixedB, 1L) === 3L)
+    // only m2 is retried; m1 and m4 resume as completed
+    assert(calls("mixed", mixedB, 2L) === 1L)
+    // m2 at the cap is discarded without running, which unblocks m3
+    assert(calls("mixed", mixedB, 3L) === 1L)
+    assert(calls("clean", batch(clean: _*), 1L) === 3L)
+  }
+
   test("a delivery whose task throws leaves no cached frame behind") {
     val dir = Files.createTempDirectory("graft-leak").toString
     val throwing: String => Try[Unit] =
@@ -233,5 +254,18 @@ class ConsumerPipelineSpec extends SparkSpec {
     }
     assert(sc.getPersistentRDDs.size === before,
       "a thrown delivery leaked cached frames")
+  }
+}
+
+object ConsumerPipelineSpec {
+  /** Invocations of [[countedTask]]: in local mode every task runs in
+    * this JVM, so this counter sees all of them. */
+  val taskCalls = new AtomicLong
+
+  /** The poison task, counting its calls. */
+  val countedTask: String => Try[Unit] = p => {
+    taskCalls.incrementAndGet()
+    if (p.contains("poison")) Failure(new RuntimeException("poison message"))
+    else Try(())
   }
 }

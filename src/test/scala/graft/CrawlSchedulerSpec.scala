@@ -256,10 +256,9 @@ class CrawlSchedulerSpec extends SparkSpec {
       s"envelopes wrong or conforming decisions leaked in: $parsed")
   }
 
-  test("compileRules escapes LIKE metachars in robots literals " +
-      "(_ matches only itself, % from percent-encoding is no " +
-      "wildcard) and a path-less URL matches as path '/' per " +
-      "RFC 9309") {
+  // RFC 9309: an empty path matches as '/'
+  test("robots patterns match _ and % literally, and a path-less URL " +
+      "as path '/'") {
     import spark.implicits._
     val rules = Seq(
       ("e.io", "/", true),
@@ -284,11 +283,9 @@ class CrawlSchedulerSpec extends SparkSpec {
       "https://e.io/wpXadmin/x"), s"gate verdicts wrong: $got")
   }
 
-  test("equal-specificity robots ties resolve deterministically " +
-      "(r18 advice): compileRules sort_arrays the rule structs, so " +
-      "the strict max-spec fold always lands on the lexicographically " +
-      "smallest matching rule — the dead-letter reason string cannot " +
-      "drift across runs or replays") {
+  // the dead-letter reason string cannot drift across runs or replays
+  test("equal-specificity robots ties resolve to the smallest matching " +
+      "pattern") {
     import spark.implicits._
     // each domain has two disallow rules of EQUAL spec (2·3 + 0 = 6)
     // that both match its URL; '/' allow is the lower-spec default.
