@@ -252,23 +252,16 @@ object Identify {
     }
   }
 
-  /** Q4–Q6 mode selection from config: sequencing honoring the
-    * validation matrix already enforced by [[ConsumerConfig]]. Key parts
-    * are extracted from the configured key property names; seqNo parts
-    * from the configured (or defaulted) seqNo property names, each
-    * normalized via [[Sequencing.sortKey]]. When sequencing is required
-    * on the data-driven default seqNo path, heterogeneous part names
-    * fail fast (see [[failFastOnHeterogeneousSeqNos]]). */
-  def sequence(cfg: ConsumerConfig, df: DataFrame, shardCol: Column,
-      message: Column, userRecord: Column, record: Column,
-      eventSeqNo: Column, idCol: Column): DataFrame = {
-    val sources = Seq(message, userRecord, record)
-    val parts =
-      if (cfg.seqNoPropertyNames.nonEmpty)
-        cfg.seqNoPropertyNames.map(n =>
-          Sequencing.sortKey(propertyValue(n, sources)))
-      else Seq(Sequencing.sortKey(eventSeqNo))
-    if (!cfg.sequencingRequired) Sequencing.none(df)
+  /** The order of one chain's messages (SURVEY §2.4 Q4–Q6): each seqNo
+    * part normalized via [[Sequencing.sortKey]], then `idCol` to break
+    * ties by arrival. `Nil` when sequencing is not required, where no
+    * chain has an order. When sequencing is required on the data-driven
+    * default seqNo path, heterogeneous part names in `df` fail fast (see
+    * [[failFastOnHeterogeneousSeqNos]]). [[sequence]]'s window sorts by
+    * it, and the consumer's chain fold sorts each chain by it. */
+  def chainOrder(cfg: ConsumerConfig, df: DataFrame, seqNoParts: Seq[Column],
+      idCol: Column): Seq[Column] =
+    if (!cfg.sequencingRequired) Nil
     else {
       // The eager check collects — illegal on a genuine streaming
       // DataFrame (AnalysisException at plan time). Skip it there: the
@@ -280,11 +273,29 @@ object Identify {
       if (cfg.seqNoPropertyNames.isEmpty && !df.isStreaming &&
           df.columns.contains("seqNos"))
         failFastOnHeterogeneousSeqNos(df)
+      seqNoParts.map(Sequencing.sortKey) :+ idCol
+    }
+
+  /** Q4–Q6 mode selection from config: sequencing honoring the
+    * validation matrix already enforced by [[ConsumerConfig]]. Key parts
+    * are extracted from the configured key property names; seqNo parts
+    * from the configured (or defaulted) seqNo property names, each
+    * ordered by [[chainOrder]]. */
+  def sequence(cfg: ConsumerConfig, df: DataFrame, shardCol: Column,
+      message: Column, userRecord: Column, record: Column,
+      eventSeqNo: Column, idCol: Column): DataFrame = {
+    val sources = Seq(message, userRecord, record)
+    val parts =
+      if (cfg.seqNoPropertyNames.nonEmpty)
+        cfg.seqNoPropertyNames.map(n => propertyValue(n, sources))
+      else Seq(eventSeqNo)
+    val keyCols =
       if (cfg.sequencingPerKey)
-        Sequencing.perKey(df, shardCol,
-          cfg.keyPropertyNames.map(n => propertyValue(n, sources)), parts,
-          idCol)
-      else Sequencing.perShard(df, shardCol, parts, idCol)
+        cfg.keyPropertyNames.map(n => propertyValue(n, sources))
+      else Nil
+    chainOrder(cfg, df, parts, idCol) match {
+      case Nil => Sequencing.none(df)
+      case order => Sequencing.chain(df, shardCol +: keyCols, order, idCol)
     }
   }
 }

@@ -88,11 +88,11 @@ object Sequencing {
     * calls would each extract computed partition/order expressions
     * under a fresh `_w0` alias, which Catalyst cannot match across
     * Window operators, so per-key chains over computed key columns
-    * would shuffle the same rows once per column. */
-  private def chain(df: DataFrame, partitionCols: Seq[Column],
-      seqNoParts: Seq[Column], idCol: Column): DataFrame = {
-    val w = Window.partitionBy(partitionCols: _*)
-      .orderBy(seqNoParts :+ idCol: _*)
+    * would shuffle the same rows once per column. `order` sorts each
+    * chain (its seqNo parts, then `idCol`); `idCol` names the links. */
+  private[graft] def chain(df: DataFrame, partitionCols: Seq[Column],
+      order: Seq[Column], idCol: Column): DataFrame = {
+    val w = Window.partitionBy(partitionCols: _*).orderBy(order: _*)
     df.select(col("*"), row_number().over(w).as("seq_rn"),
         lag(idCol, 1).over(w).as("prev_id"),
         lead(idCol, 1).over(w).as("next_id"))
@@ -106,13 +106,13 @@ object Sequencing {
     */
   def perShard(df: DataFrame, shardCol: Column, seqNoParts: Seq[Column],
       idCol: Column): DataFrame =
-    chain(df, Seq(shardCol), seqNoParts, idCol)
+    chain(df, Seq(shardCol), seqNoParts :+ idCol, idCol)
 
   /** Q5 — one chain per distinct key tuple; heads of all K chains are
     * processed in parallel, members of one chain strictly in order. */
   def perKey(df: DataFrame, shardCol: Column, keyCols: Seq[Column],
       seqNoParts: Seq[Column], idCol: Column): DataFrame =
-    chain(df, shardCol +: keyCols, seqNoParts, idCol)
+    chain(df, shardCol +: keyCols, seqNoParts :+ idCol, idCol)
 
   /** Q6 — unsequenced: no chains; every message is a head. */
   def none(df: DataFrame): DataFrame =

@@ -13,13 +13,17 @@ import org.apache.spark.sql.types.StructType
   * The put→update fallback (optimistic concurrency) is subsumed by the
   * upsert: last write for a key wins atomically within the job.
   *
-  * Scale notes: the upsert is one shuffle on the key columns for each
-  * side. At 100 TB the state table is far smaller than the data (one row
-  * per shard/batch, not per message) — Spark will broadcast the updates
-  * side automatically when it is under the broadcast threshold, so the
-  * common case is a broadcast anti-join, no full shuffle of prior state.
-  * In streaming mode this whole module is replaced by checkpointed
-  * `GroupState` (see graft.streaming).
+  * Scale notes: the consumer's table holds one row per task node of
+  * every message ever seen, plus one marker per unusable record or
+  * rejected message and one row per processAll group. Nothing deletes a
+  * row, so a delivery loads and rewrites all of history (ROADMAP item 1
+  * reads and writes only the delivered chains). The upsert's anti-join
+  * is planned as a sort-merge join, a shuffle on the key columns for
+  * each side: the consumer's kept frames carry the pre-execution size
+  * estimates of the plans they truncated, which are over the broadcast
+  * threshold, so AQE turns it into a broadcast join only after both
+  * shuffles have written. In streaming mode this whole module is
+  * replaced by checkpointed `GroupState` (see graft.streaming).
   */
 object StateStore {
 

@@ -18,9 +18,10 @@ import graft.sources.StateStore
   * body:
   *
   * {{{
-  * initiateBatch   decode (D1/D2) → identify (I3) → sequence (Q4–Q6)
+  * initiateBatch   decode (D1/D2) → identify (I3) → chain order (Q4–Q6)
   *                 → load prior state (S2) → revive (T2)
-  * processBatch    ordered multi-task execution with resume (T3, Q5)
+  * processBatch    ordered multi-task execution with resume (T3, Q5),
+  *                 each chain sorted inside the fold's shuffle
   * finaliseBatch   DRQ/DMQ envelopes (S4/S5) → state upsert (S3)
   *                 → replay verdict (reject ⇒ source redelivers)
   * }}}
@@ -77,17 +78,18 @@ object ConsumerPipeline {
     * eventIDs but redelivers the same payloads still resumes.
     *
     * Each intermediate result that later steps read more than once (the
-    * decoded records, the sequenced messages, the resolved prior state,
-    * the chain fold's outcomes and the dead letters) is a lazy local
-    * checkpoint, released when the delivery ends, normally or not.
-    * Every frame built on one plans from its RDD scan, not from the
-    * whole decode → identify → sequence → cogroup tree beneath it. AQE
-    * runs a kept frame's shuffle and broadcast stages when it is kept;
-    * its last stage runs inside the first job that reads it. One
-    * delivery runs these Spark actions, in order:
+    * identified records, the resolved prior state, the chain fold's
+    * outcomes and the dead letters) is a lazy local checkpoint, released
+    * when the delivery ends, normally or not. Every frame built on one
+    * plans from its RDD scan, not from the whole decode → identify →
+    * cogroup tree beneath it. AQE runs a kept frame's shuffle and
+    * broadcast stages when it is kept; its last stage runs inside the
+    * first job that reads it. The chain fold's shuffle sorts each chain
+    * by [[Identify.chainOrder]], the order [[Identify.sequence]]'s window
+    * gives. One delivery runs these Spark actions, in order:
     *
     *  1. only on the default event-seqNo path with required sequencing:
-    *     the heterogeneous-seqNo check in [[Identify.sequence]] (a
+    *     the heterogeneous-seqNo check in [[Identify.chainOrder]] (a
     *     collect);
     *  1. the chain fold: one job that materializes the outcomes, so the
     *     task trees run exactly once per delivery;
@@ -100,9 +102,9 @@ object ConsumerPipeline {
     *     then swapped in.
     *
     * With AQE each shuffle or broadcast stage is a job of its own;
-    * `ConsumerPipelineSpec` pins the total at 11 jobs for a clean
-    * batch, 12 for a first delivery that writes DR and DM letters and
-    * 13 for a replay (9, 10 and 11 measured).
+    * `ConsumerPipelineSpec` pins the total at 10 jobs for a clean
+    * batch, 11 for a first delivery that writes DR and DM letters and
+    * 12 for a replay (8, 9 and 10 measured).
     *
     * @param cfg        consumer configuration (sequencing mode, retry cap)
     * @param tasks      processOne task definitions (non-empty registry)
@@ -142,31 +144,12 @@ object ConsumerPipeline {
       t
     }
     try {
-      // ----- initiate: decode → identify → sequence -----
+      // ----- initiate: decode → identify → chain order -----
       val scid = Batching.streamConsumerId(lit(cfg.streamName),
         lit(cfg.consumerId))
       val soid = Batching.shardOrEventID(cfg, col("shardId"), col("eventID"))
       val recordJson = to_json(struct(col("eventID"), col("shardId"),
         col("partitionKey"), col("data")))
-      // decoded feeds sequencing, the dead letters, the state markers and
-      // the counts, each read in a different action — kept so decode
-      // runs once per delivery.
-      val decoded = keep(Decode.extractJsonMessages(batch, col("data"))
-        .withColumn("streamConsumerId", scid)
-        .withColumn("shardOrEventID", soid))
-      val identified = Identify.idsKeysSeqNos(cfg, decoded, col("message"),
-        lit(null).cast("string"), recordJson, col("eventID"),
-        lit(null).cast("int"))
-      val usable = identified.filter(col("reason_unusable").isNull &&
-        col("reason_rejected").isNull)
-      val unusableRecs = decoded.filter(col("reason_unusable").isNotNull)
-      // F2 — messages the identify phase rejected (unresolvable keys /
-      // seqNos): they skip task execution entirely and are discarded to
-      // the DMQ with their REAL reasonRejected during finalise
-      // (the reference's `kinesis-processing.js:708-724` discarding
-      // `batch.rejectedMessages`).
-      val rejectedMsgs = identified.filter(col("reason_unusable").isNull &&
-        col("reason_rejected").isNotNull)
       // BFK state identity: resolvable ids ⇒ `B|id|key|seqNo|md5(msg)`,
       // else the eventID (toMessageBFK fallback). The md5 tiebreak mirrors
       // the reference's BFK carrying the message md5s alongside id/key/
@@ -176,8 +159,8 @@ object ConsumerPipeline {
       // redelivers the same payload still matches its prior row. The
       // all-ids-resolved test is a plain non-null conjunction over the
       // id property values (codegen'd — no interpreted `forall` in the
-      // per-batch hot path). Unusable records never reach here, so their
-      // markers stay keyed by eventID below.
+      // per-batch hot path). Unusable records never reach the fold, so
+      // their markers stay keyed by eventID below.
       val idSources = Seq(col("message"), lit(null).cast("string"), recordJson)
       val stateKey =
         if (cfg.idPropertyNames.isEmpty) col("eventID")
@@ -187,19 +170,45 @@ object ConsumerPipeline {
             concat_ws("|", lit("B"), col("id"), col("key"), col("seqNo"),
               md5(col("message").cast("binary"))))
           .otherwise(col("eventID"))
-      val sequenced = keep(Identify.sequence(cfg, usable,
-          col("shardOrEventID"), col("message"), lit(null).cast("string"),
-          recordJson, col("eventID"), col("eventID"))
+      // The identified records feed the chain fold, the dead letters, the
+      // state markers and the counts, each read in a different action —
+      // kept so decode and identify (its JSON property lookups) run once
+      // per delivery. Every subset below is a narrow filter over it.
+      val identified = keep(Identify.idsKeysSeqNos(cfg,
+          Decode.extractJsonMessages(batch, col("data"))
+            .withColumn("streamConsumerId", scid)
+            .withColumn("shardOrEventID", soid),
+          col("message"), lit(null).cast("string"), recordJson,
+          col("eventID"), lit(null).cast("int"))
         .withColumn("stateKey", stateKey))
+      val usable = identified.filter(col("reason_unusable").isNull &&
+        col("reason_rejected").isNull)
+      val unusableRecs = identified.filter(col("reason_unusable").isNotNull)
+      // F2 — messages the identify phase rejected (unresolvable keys /
+      // seqNos): they skip task execution entirely and are discarded to
+      // the DMQ with their REAL reasonRejected during finalise
+      // (the reference's `kinesis-processing.js:708-724` discarding
+      // `batch.rejectedMessages`).
+      val rejectedMsgs = identified.filter(col("reason_unusable").isNull &&
+        col("reason_rejected").isNotNull)
+      // Each chain's order, over the seqNo values identify resolved (the
+      // `seqNos` pairs hold the configured properties in order, or the
+      // event seqNo), so the fold looks up no JSON property again.
+      val seqNoParts =
+        if (cfg.seqNoPropertyNames.isEmpty) Seq(col("eventID"))
+        else cfg.seqNoPropertyNames.indices.map(i =>
+          col("seqNos").getItem(i).getField("value"))
+      val order = Identify.chainOrder(cfg, usable, seqNoParts, col("eventID"))
       val chainKeyCol =
         if (cfg.sequencingPerKey)
           concat_ws("|", col("shardOrEventID"), col("key"))
         else col("shardOrEventID")
-
-      val msgs = sequenced.select(
-          chainKeyCol.as("chainKey"), col("stateKey").as("msgId"),
-          col("seq_rn").cast("long").as("seqNo"),
-          col("message").as("payload"), col("shardOrEventID"))
+      // `seqNo` is a placeholder: the fold numbers a sorted chain, and an
+      // unsequenced chain runs by msgId.
+      val msgs = usable.select(Seq(chainKeyCol.as("chainKey"),
+          col("stateKey").as("msgId"), lit(1L).as("seqNo"),
+          col("message").as("payload"), col("shardOrEventID")) ++
+          order.zipWithIndex.map { case (c, i) => c.as(s"order$i") }: _*)
         .as[ChainMsg]
 
       // ----- load prior state + process: resumable ordered execution -----
@@ -239,7 +248,7 @@ object ConsumerPipeline {
       // from the plan entirely. Kept: the chain fold, the once-only
       // guard, processAll and the upsert all read it, and the state scan
       // plus the migration join should run once per delivery.
-      val prior = keep(resolvePriorState(loaded, sequenced,
+      val prior = keep(resolvePriorState(loaded, usable,
         cfg.migrateLegacyStateKeys)).as[TaskRun]
 
       val registry = tasks
@@ -250,11 +259,19 @@ object ConsumerPipeline {
       // §7.4), never by corpus size: more data means more chains, not
       // longer ones. The fold also settles each message's verdict and
       // once-only DMQ decision, since the group already holds every node
-      // row of the message and every prior row of its chain.
+      // row of the message and every prior row of its chain. The shuffle
+      // sorts each chain by `order`, and the fold numbers it 1..n in that
+      // order.
+      val sequenced = order.nonEmpty
       val outcomes = keep(msgs.groupByKey(_.chainKey)(Encoders.STRING)
-        .cogroup(prior.groupByKey(_.chainKey)(Encoders.STRING)) {
+        .cogroupSorted(prior.groupByKey(_.chainKey)(Encoders.STRING))(
+          order.indices.map(i => col(s"order$i")): _*)() {
           (_, ms, ps) =>
-            foldChain(ps.toSeq, ms.toSeq, registry, maxAttempts).iterator
+            val chain =
+              if (sequenced) ms.zipWithIndex.map { case (m, i) =>
+                m.copy(seqNo = i + 1L) }
+              else ms
+            foldChain(ps.toSeq, chain.toSeq, registry, maxAttempts).iterator
         })
       // The fold runs the user tasks, so it runs in one job of its own,
       // exactly once per delivery; every later action reads its blocks.
@@ -270,7 +287,7 @@ object ConsumerPipeline {
         case Some(runAll) =>
           val fn = runAll
           val max = cfg.maxNumberOfAttempts
-          val groups = sequenced
+          val groups = usable
             .select(col("shardOrEventID"), col("message"))
             .as[(String, String)]
           val priorMaster = prior
@@ -283,18 +300,19 @@ object ConsumerPipeline {
               val attempts = prev.map(_.attempts).getOrElse(0)
               val state = prev.map(_.state)
                 .getOrElse(TaskStatus.Unstarted)
-              val key = MasterKeyPrefix + soid
-              if (TaskStatus.isFinalised(state)) prev.iterator
-              else if (attempts >= max)
-                Iterator(TaskRun(key, "processAll", "processAll",
-                  TaskStatus.Discarded, attempts))
+              def master(state: String, attempts: Int) = Iterator(TaskRun(
+                MasterKeyPrefix + soid, "processAll", "processAll", state,
+                attempts))
+              // A group this delivery does not carry runs nothing; its
+              // prior row survives the upsert.
+              if (!ms.hasNext) Iterator.empty
+              else if (TaskStatus.isFinalised(state)) prev.iterator
+              else if (attempts >= max) master(TaskStatus.Discarded, attempts)
               else fn(soid, ms.map(_._2).toSeq) match {
                 case scala.util.Success(_) =>
-                  Iterator(TaskRun(key, "processAll", "processAll",
-                    TaskStatus.Completed, attempts + 1))
+                  master(TaskStatus.Completed, attempts + 1)
                 case scala.util.Failure(_) =>
-                  Iterator(TaskRun(key, "processAll", "processAll",
-                    TaskStatus.Failed, attempts + 1))
+                  master(TaskStatus.Failed, attempts + 1)
               }
             }.collect().toSeq
       }
@@ -391,7 +409,9 @@ object ConsumerPipeline {
   }
 
   /** A delivered message on its way into the chain fold: the
-    * [[StreamMsg]] plus the batch key its dead-message envelope names. */
+    * [[StreamMsg]] plus the batch key its dead-message envelope names.
+    * `seqNo` is the message's position in its sorted chain, or the same
+    * for every message of an unsequenced chain, which runs by `msgId`. */
   private[graft] final case class ChainMsg(chainKey: String, msgId: String,
       seqNo: Long, payload: String, shardOrEventID: String) {
     def msg: StreamMsg = StreamMsg(chainKey, msgId, seqNo, payload)
@@ -488,9 +508,9 @@ object ConsumerPipeline {
     * broadcast. Package-visible so the spec can assert on the plan of
     * exactly the fragment the pipeline runs. */
   private[graft] def resolvePriorState(loaded: DataFrame,
-      sequenced: DataFrame, migrate: Boolean): DataFrame =
+      usable: DataFrame, migrate: Boolean): DataFrame =
     if (!migrate) loaded else {
-      val legacyMap = sequenced
+      val legacyMap = usable
         .filter(col("stateKey").startsWith("B|"))
         .select(col("stateKey").as("_newKey"),
           regexp_replace(col("stateKey"), "\\|[0-9a-f]{32}$", "")

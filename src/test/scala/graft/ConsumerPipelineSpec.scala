@@ -2,12 +2,19 @@ package graft
 
 import java.nio.file.Files
 import java.util.Base64
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch,
+  TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Try}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+  QueryStageExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.model.{ConsumerConfig, TaskStatus}
 import graft.streaming.{ConsumerPipeline, TaskDef, TaskRun}
@@ -15,9 +22,10 @@ import graft.streaming.ConsumerPipeline.{BatchResult, ChainMsg}
 
 /** What one `ConsumerPipeline` delivery reports and what it costs: every
   * `BatchResult` field across a first delivery, its replay and the
-  * discarding delivery; a Spark-job ceiling per delivery route; no
-  * compiled class once the routes are warm; and no cached frame left
-  * behind when a delivery throws. */
+  * discarding delivery; a Spark-job ceiling per delivery route; one
+  * executed plan that looks up JSON properties; no compiled class once
+  * the routes are warm; and no cached frame left behind when a delivery
+  * throws. */
 class ConsumerPipelineSpec extends SparkSpec {
 
   private def b64(s: String) =
@@ -189,12 +197,67 @@ class ConsumerPipelineSpec extends SparkSpec {
     info(s"jobs: clean $cleanJobs, first $firstJobs, replay $replayJobs")
     assert(spark.read.parquet(s"$dir/mixed-dlq").count() === 2,
       "the first delivery should have written one DR and one DM letter")
-    // these deliveries run 9, 10 and 11 jobs; each ceiling allows two
-    // more, so a changed AQE choice passes but a re-run plan does not
+    // these deliveries run 8, 9 and 10 jobs; each ceiling allows two
+    // more, so a changed AQE choice passes but a re-run plan or a
+    // sequencing window stage does not
     assert(cleanJobs >= 1 && firstJobs >= 1 && replayJobs >= 1)
-    assert(cleanJobs <= 11, s"clean batch ran $cleanJobs jobs")
-    assert(firstJobs <= 12, s"first delivery ran $firstJobs jobs")
-    assert(replayJobs <= 13, s"replay ran $replayJobs jobs")
+    assert(cleanJobs <= 10, s"clean batch ran $cleanJobs jobs")
+    assert(firstJobs <= 11, s"first delivery ran $firstJobs jobs")
+    assert(replayJobs <= 12, s"replay ran $replayJobs jobs")
+  }
+
+  /** Executed plans of the SQL actions `body` ran. A sentinel query run
+    * after `body` marks the end: listener events arrive in order. */
+  private def plansDuring(body: => Unit): Seq[SparkPlan] = {
+    val sentinel = "plans-during-sentinel"
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val done = new CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (qe.executedPlan.toString.contains(sentinel)) done.countDown()
+        else plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).select(lit(sentinel)).collect()
+      assert(done.await(30, TimeUnit.SECONDS), "the sentinel never arrived")
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  /** Every node of an executed plan, through AQE's final plan, its query
+    * stages and subqueries. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => planNodes(q.plan)
+    case n => n +: (n.children ++ n.subqueries).flatMap(planNodes)
+  }
+
+  test("a warm delivery runs identify once: one executed plan looks up " +
+      "JSON properties") {
+    val dir = Files.createTempDirectory("graft-identify-once").toString
+    val registry = Seq(TaskDef("process", poisonTask))
+    // an RDD-backed batch, as a stream source delivers it: over a local
+    // relation the optimizer would evaluate identify on the driver
+    def deliver(state: String) = {
+      import spark.implicits._
+      ConsumerPipeline.multi(cfg, registry, s"$dir/$state",
+        s"$dir/$state-dlq")(spark.sparkContext.parallelize(mixed)
+        .toDF("eventID", "shardId", "partitionKey", "data"), 1L)
+    }
+    deliver("warm")
+    // a first delivery writing DR and DM letters runs every action
+    val plans = plansDuring(deliver("pinned"))
+    val identifying = plans.filter(p => planNodes(p).exists(
+      _.expressions.exists(_.toString.contains("get_json_object"))))
+    assert(plans.length > 1)
+    assert(identifying.length === 1,
+      s"${identifying.length} executed plans look up JSON properties:\n" +
+        identifying.mkString("\n"))
   }
 
   test("a third delivery cycle over the four routes reuses its compiled " +

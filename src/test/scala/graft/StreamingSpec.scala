@@ -124,6 +124,47 @@ class StreamingSpec extends SparkSpec {
     assert(StreamingSpec.masterRuns.get("S|shard-1") === 1)
   }
 
+  test("processAll runs only the groups a delivery carries: another " +
+      "shard's failed master neither runs nor replays the batch") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-pall-groups").toString
+    val cfg = ConsumerConfig(maxNumberOfAttempts = 3)
+    def batch(rows: (String, String)*) = rows.map { case (e, shard) =>
+      (e, shard, "pk", b64(s"""{"v":"$e"}"""))
+    }.toDF("eventID", "shardId", "partitionKey", "data")
+    StreamingSpec.masterRuns.clear()
+    def runs(soid: String): Int =
+      Option(StreamingSpec.masterRuns.get(soid)).fold(0)(_.intValue)
+    val master: (String, Seq[String]) => Try[Unit] = (soid, msgs) => {
+      StreamingSpec.masterRuns.merge(soid, 1, (a, b) => a + b)
+      assert(msgs.nonEmpty)
+      if (soid == "S|shard-0" &&
+          StreamingSpec.masterRuns.get("S|shard-0") <= 1)
+        scala.util.Failure(new RuntimeException("master boom"))
+      else Try(())
+    }
+    val p = ConsumerPipeline(cfg, _ => Try(()), s"$dir/state", s"$dir/dlq",
+      processAll = Some(master)) _
+    def shard0Master() = spark.read.parquet(s"$dir/state")
+      .filter(col("chainKey") === "ALL|S|shard-0")
+      .select("state", "attempts").as[(String, Int)].collect().toSeq
+
+    val r1 = p(batch(("e1", "shard-0"), ("e2", "shard-0")), 1L)
+    assert(r1.processAllFailed === 1 && r1.replay)
+    // shard-1 alone: only its own master runs, and the batch completes
+    val r2 = p(batch(("e3", "shard-1")), 2L)
+    assert(r2.processAllCompleted === 1 && r2.processAllFailed === 0)
+    assert(!r2.replay)
+    assert(runs("S|shard-0") === 1 && runs("S|shard-1") === 1)
+    assert(shard0Master() === Seq((TaskStatus.Failed, 1)))
+    // shard-0 redelivered: its master retries on attempt 2
+    val r3 = p(batch(("e1", "shard-0"), ("e2", "shard-0")), 3L)
+    assert(r3.processAllCompleted === 1 && r3.processAllFailed === 0)
+    assert(!r3.replay)
+    assert(runs("S|shard-0") === 2 && runs("S|shard-1") === 1)
+    assert(shard0Master() === Seq((TaskStatus.Completed, 2)))
+  }
+
   test("real writeStream.foreachBatch wiring: trigger runs the pipeline") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
