@@ -35,8 +35,8 @@ private[functions] final case class CompiledRule(
   * segment anchors with `endsWith` (anchored) or any later occurrence
   * (unanchored prefix-match semantics). `RobotsPropsSpec` pins the
   * kernel row-identical to an independent regex RFC 9309 matcher on
-  * random patterns and adversarial paths. The batch robots rows and
-  * the streaming [[graft.streaming.CrawlScheduler]] gate share it.
+  * random patterns and adversarial paths. Both robots rows
+  * (`robots_policy`, `robots_wildcard`) call it.
   */
 object RobotsMatch {
 

@@ -316,8 +316,9 @@ object BatchQueries {
         .orderBy("event_id")
     },
 
-    // Event-time tumbling windows in batch mode (same window() op the
-    // streaming WindowedCounts uses): per-hour, per-type rollups.
+    // Event-time tumbling windows in batch mode (Spark's window(), the
+    // same op a streaming query would group by): per-hour, per-type
+    // rollups.
     "windowed_counts" -> { (s, dir) =>
       val tsCol = timestamp_micros(expr("ts div 1000"))
       Tables.events(s, dir)

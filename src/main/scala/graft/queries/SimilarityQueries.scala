@@ -254,19 +254,23 @@ object SimilarityQueries {
   val all: Map[String, Q] = Map(
 
     // Exact brute-force cosine top-10 for 5 broadcast query vectors,
-    // through the bounded top-k node (partial selection before the
-    // exchange → shuffle carries ≤ partitions×Q×k rows, not Q·N) —
-    // hash-matching the oracle's windowed form proves the pruning exact.
+    // ranked by a window over all Q·N pairs — the specs' reference
+    // (Similarity.bruteForceTopK), so the oracle checks the reference
+    // the top-k specs compare against.
     "ann_topk_brute" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      bruteTop10(e, queryFrame(e)).orderBy("query_id", "rank")
+      Similarity.bruteForceTopK(e, col("vec_id"), col("embedding"),
+          queryFrame(e), col("query_id"), col("qvec"), 10)
+        .select("query_id", "vec_id", "cosine", "rank")
+        .orderBy("query_id", "rank")
     },
 
-    // The SAME brute-force contract, kept as the row that names the
-    // native top-k plan node (TopKPerGroupLogical → partial/final
-    // TopKPerGroupExec with a Catalyst-planned exchange, SURVEY §7.3
-    // tier c) — hash-matching the identical oracle proves the custom
-    // operator end-to-end.
+    // The SAME brute-force contract through the native top-k plan node
+    // (TopKPerGroupLogical → partial/final TopKPerGroupExec with a
+    // Catalyst-planned exchange, SURVEY §7.3 tier c): partial selection
+    // before the exchange, so the shuffle carries ≤ partitions×Q×k rows,
+    // not Q·N — hash-matching the same oracle as ann_topk_brute proves
+    // the pruning exact.
     "ann_topk_native" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
       bruteTop10(e, queryFrame(e)).orderBy("query_id", "rank")
@@ -286,7 +290,7 @@ object SimilarityQueries {
     // (brute ground truth, label-IVF candidate) and reduces to a
     // (query, vec) equi-join of two 10-row-per-query sets — the
     // ground-truth side is the expensive half and is exactly the
-    // ann_topk_brute plan; the report adds only a top-k-sized join.
+    // ann_topk_native plan; the report adds only a top-k-sized join.
     // Integer hits and a permille rate keep the oracle exact.
     "ann_recall_report" -> { (s, dir) =>
       val e = Tables.embeddings(s, dir)
@@ -996,9 +1000,9 @@ object SimilarityQueries {
     s"(${dotSqlK(a, b, k)}) / " +
       s"(sqrt(${dotSqlK(a, a, k)}) * sqrt(${dotSqlK(b, b, k)}))"
 
-  /** Shared by ann_topk_brute and ann_topk_native: the same contract
-    * through the same bounded top-k node — both must hash-match this
-    * ONE oracle. */
+  /** Shared by ann_topk_brute (window-ranked) and ann_topk_native (the
+    * bounded top-k node): one contract, two plans, and both must
+    * hash-match this ONE oracle. */
   private val bruteTopKSql =
     s"""WITH q AS (
       |  SELECT vec_id AS query_id, embedding AS qvec

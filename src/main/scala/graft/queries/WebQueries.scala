@@ -254,8 +254,7 @@ object WebQueries {
     // replaced broadcast join assumed) — so the LIKE translation, the
     // per-row regex compile of a non-foldable LIKE pattern, the ~5×
     // rule-join fan-out of the URL scan AND the corpus-scale
-    // (doc_id, domain) max_by exchange are all gone (the streaming
-    // crawl gate, CrawlScheduler.verdicts, calls the same kernel). The
+    // (doc_id, domain) max_by exchange are all gone. The
     // wildcard tiers extend the seeded rule synthesis: ~half the
     // domains (md5 residue b3) block slugs ending in 7, and ~half of
     // those (b4) re-allow ...77.html via a longer pattern —
@@ -304,12 +303,12 @@ object WebQueries {
         .orderBy("domain")
     },
 
-    // BATCH politeness schedule — the crawl-plan AUDIT twin of the
-    // streaming GCRA limiter (PolitenessLimiter.batchSchedule
-    // scaladoc: s_i = max(t_i, s_{i-1}+gap) has the closed form
+    // BATCH politeness schedule — the crawl-plan AUDIT of a burst=1
+    // GCRA limiter (PolitenessLimiter.batchSchedule scaladoc:
+    // s_i = max(t_i, s_{i-1}+gap) has the closed form
     // gap·i + prefix-max(t_j − gap·j), one per-host cumulative-max
-    // window — so the limiter's burst=1 semantics get an ORACLE row,
-    // and the spec pins batch == streaming decision-for-decision).
+    // window — an ORACLE row, and PolitenessLimiterSpec pins it to a
+    // sequential fold of the recurrence decision-for-decision).
     // Request log synthesis (mirrored in the oracle): waves 8 s apart
     // per host plus an md5 jitter in [0, 4 s) — inter-arrivals land
     // in [4 s, 12 s) around the 5 s gap, so conforming fetches,
@@ -505,9 +504,8 @@ object WebQueries {
         .orderBy("canonical_url")
     },
 
-    // Crawl-frontier REFRESH PLAN — the scheduling decision the
-    // frontier tier feeds (StreamingUrlFrontier admits per refresh
-    // interval; THIS query sets the interval): per registered domain,
+    // Crawl-frontier REFRESH PLAN — how often to re-crawl each
+    // domain: per registered domain,
     // URL volume, canonical-dedup rate, and observed change rate
     // (snapshot_diff's doc_id % 11 edit rule — the re-crawl delta
     // signal), combined by an integer policy into a refresh interval —

@@ -11,10 +11,9 @@ import org.apache.spark.sql.Dataset
   *
   * The permille needs the hour's TOTAL across shards, so the group key
   * is the hour bucket (not the shard): state per open hour is one
-  * count per shard seen. Counts are commutative, so unlike
-  * [[StreamingGaps]]/[[StreamingFunnel]] no event-time-ordered buffer
-  * is needed — stragglers inside the watermark horizon just
-  * increment, regardless of arrival order.
+  * count per shard seen. Counts are commutative, so no
+  * event-time-ordered buffer is needed — stragglers inside the
+  * watermark horizon just increment, regardless of arrival order.
   *
   * Emission is the [[ClosedHours]] fold: EXACTLY ONCE per (hour,
   * shard), when the watermark reaches the hour end, so the closed
@@ -32,7 +31,7 @@ object StreamingSkew {
       permille: Long)
 
   /** Checkpointed per-open-hour state: events seen per shard.
-    * Product-encoded (schema-ful state, see StreamingGaps). */
+    * Product-encoded, so the state schema is checked on restart. */
   private[streaming] case class SkewState(counts: Map[String, Long])
 
   val HourUs: Long = ClosedHours.HourUs

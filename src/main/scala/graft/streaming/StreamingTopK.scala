@@ -24,8 +24,8 @@ object StreamingTopK {
   case class TopKRow(hourBucket: Long, rank: Int, eventType: String,
       nEvents: Long)
 
-  /** Checkpointed per-open-hour state (product-encoded — schema-ful,
-    * evolvable; see StreamingGaps). */
+  /** Checkpointed per-open-hour state (product-encoded, so the state
+    * schema is checked on restart and can evolve). */
   private[streaming] case class TopKState(counts: Map[String, Long])
 
   val HourUs: Long = ClosedHours.HourUs

@@ -4,13 +4,10 @@ import scala.util.Random
 
 import org.apache.spark.sql.functions._
 
-import graft.streaming.CrawlScheduler
-
-/** Property-style cross-check of the robots gate
-  * ([[CrawlScheduler.gate]] over the compiled
-  * [[graft.functions.RobotsMatch]] kernel): for RANDOM robots patterns
+/** Property-style cross-check of the compiled
+  * [[graft.functions.RobotsMatch]] kernel: for RANDOM robots patterns
   * — deliberately including the LIKE metachars `%`, `_`, `\` next to
-  * the RFC 9309 `*`/`$` grammar — the gate's verdict must equal an
+  * the RFC 9309 `*`/`$` grammar — the kernel's verdict must equal an
   * independent JVM matcher that implements RFC 9309 §2.2.3 via regex
   * (quote every literal char, `*` → `.*`, `$` → end anchor,
   * prefix match otherwise), with most-specific-match resolution
@@ -51,51 +48,56 @@ class RobotsPropsSpec extends SparkSpec {
       .matcher(path).find()
   }
 
-  /** Most-specific-match verdict (spec = 2·len + allow; no rule →
-    * allow), the robots_wildcard contract. */
+  /** Most-specific-match verdict (spec = 2·len + allow; no matching
+    * rule → None), the robots_wildcard contract. */
   private def rfcVerdict(rules: Seq[(String, Boolean)],
-      path: String): Boolean = {
+      path: String): Option[Boolean] = {
     val applicable = rules.filter { case (p, _) => rfcMatches(p, path) }
-    if (applicable.isEmpty) true
-    else applicable.maxBy { case (p, allow) =>
+    if (applicable.isEmpty) None
+    else Some(applicable.maxBy { case (p, allow) =>
       p.length.toLong * 2 + (if (allow) 1 else 0)
-    }._2
+    }._2)
   }
 
-  test("gate() verdicts equal the independent regex RFC 9309 " +
-      "matcher on random patterns carrying LIKE metachars " +
-      "(%, _, \\) alongside * and $ — 5 seeded rounds x 40 domains") {
+  /** One seeded round over `domains`: 1-3 random rules each and one
+    * path per domain (half a rule's own path, forcing
+    * literal-vs-wildcard distinctions, half fresh fragments). decide()
+    * runs through a real Spark plan over the rules with
+    * robots_wildcard's spec column, and must give [[rfcVerdict]]. */
+  private def decideRound(domains: Seq[String]): Unit = {
     import spark.implicits._
-    (1 to 5).foreach { round =>
-      val domains = (1 to 40).map(i => s"d$round-$i.com")
-      val ruleSet: Map[String, Seq[(String, Boolean)]] =
-        domains.map { d =>
-          d -> (1 to 1 + rnd.nextInt(3)).map(_ =>
-            (randomPattern(), rnd.nextBoolean()))
-        }.toMap
-      // one URL per domain: half share a rule's own path (forcing
-      // literal-vs-wildcard distinctions), half are fresh fragments
-      val urls = domains.map { d =>
-        val p = ruleSet(d).head._1.stripSuffix("$").replace("*", frag())
-        val path = if (rnd.nextBoolean()) p else "/" + frag() + "/" + frag()
-        (d, s"https://$d$path")
-      }
-      val rulesDf = ruleSet.toSeq
-        .flatMap { case (d, rs) => rs.map { case (p, a) => (d, p, a) } }
-        .toDF("domain", "pattern", "allow")
-      val got = CrawlScheduler.gate(
-          urls.map(_._2).toDF("canonicalUrl")
-            .withColumn("tsUs", lit(0L)),
-          CrawlScheduler.compileRules(rulesDf))
-        .select("canonicalUrl").as[String].collect().toSet
-      urls.foreach { case (d, url) =>
-        val path = url.stripPrefix(s"https://$d")
-        val expected = rfcVerdict(ruleSet(d),
-          if (path.isEmpty) "/" else path)
-        assert(got.contains(url) === expected,
-          s"verdict diverged for $url against rules ${ruleSet(d)}")
-      }
+    val ruleSet: Map[String, Seq[(String, Boolean)]] =
+      domains.map { d =>
+        d -> (1 to 1 + rnd.nextInt(3)).map(_ =>
+          (randomPattern(), rnd.nextBoolean()))
+      }.toMap
+    val paths = domains.map { d =>
+      val p = ruleSet(d).head._1.stripSuffix("$").replace("*", frag())
+      (d, if (rnd.nextBoolean()) p else "/" + frag() + "/" + frag())
     }
+    val rulesDf = ruleSet.toSeq
+      .flatMap { case (d, rs) => rs.map { case (p, a) => (d, p, a) } }
+      .toDF("domain", "pattern", "allow")
+      .withColumn("spec", expr(
+        "CAST(length(pattern) * 2 + IF(allow, 1, 0) AS BIGINT)"))
+    val got = paths.toDF("domain", "path")
+      .withColumn("v", graft.functions.RobotsMatch.decide(
+        rulesDf, col("domain"), col("path")))
+      .select(col("domain"), col("path"), col("v.allow").as("allow"))
+      .collect()
+      .map(r => (r.getString(0), r.getString(1)) ->
+        Option(r.get(2)).map(_.asInstanceOf[Boolean]))
+      .toMap
+    paths.foreach { case (d, path) =>
+      assert(got((d, path)) === rfcVerdict(ruleSet(d), path),
+        s"decide diverged for ($d, $path) rules ${ruleSet(d)}")
+    }
+  }
+
+  test("RobotsMatch.decide equals the regex RFC 9309 matcher on rules " +
+      "with %, _ and \\") {
+    (1 to 5).foreach(round =>
+      decideRound((1 to 40).map(i => s"d$round-$i.com")))
   }
 
   test("RobotsMatch compiled kernel (r22 verdict #4): matches() " +
@@ -103,7 +105,6 @@ class RobotsPropsSpec extends SparkSpec {
       "path), and the decide() fold through Spark equals the " +
       "most-specific-match verdict (no-match -> NULL) on random " +
       "rule sets") {
-    import spark.implicits._
     // per-(pattern, path) parity of the greedy glob matcher
     val pats = (1 to 80).map(_ => randomPattern()) ++
       Seq("/", "/docs/", "/docs/index.html", "/docs/*7.html$",
@@ -116,42 +117,7 @@ class RobotsPropsSpec extends SparkSpec {
       assert(graft.functions.RobotsMatch.matches(u, p) ===
         rfcMatches(p, u), s"matches('$u', '$p') diverged")
     // decide() fold parity through a real Spark plan
-    (1 to 3).foreach { round =>
-      val domains = (1 to 30).map(i => s"k$round-$i.com")
-      val ruleSet: Map[String, Seq[(String, Boolean)]] =
-        domains.map { d =>
-          d -> (1 to 1 + rnd.nextInt(3)).map(_ =>
-            (randomPattern(), rnd.nextBoolean()))
-        }.toMap
-      val urls = domains.map { d =>
-        val p = ruleSet(d).head._1.stripSuffix("$").replace("*", frag())
-        val path = if (rnd.nextBoolean()) p
-          else "/" + frag() + "/" + frag()
-        (d, path)
-      }
-      val rulesDf = ruleSet.toSeq
-        .flatMap { case (d, rs) => rs.map { case (p, a) => (d, p, a) } }
-        .toDF("domain", "pattern", "allow")
-        .withColumn("spec", expr(
-          "CAST(length(pattern) * 2 + IF(allow, 1, 0) AS BIGINT)"))
-      val got = urls.toDF("domain", "path")
-        .withColumn("v", graft.functions.RobotsMatch.decide(
-          rulesDf, col("domain"), col("path")))
-        .select(col("domain"), col("path"), col("v.allow").as("allow"))
-        .collect()
-        .map(r => (r.getString(0), r.getString(1)) ->
-          Option(r.get(2)).map(_.asInstanceOf[Boolean]))
-        .toMap
-      urls.foreach { case (d, path) =>
-        val applicable = ruleSet(d).filter { case (p, _) =>
-          rfcMatches(p, path) }
-        val expected =
-          if (applicable.isEmpty) None
-          else Some(applicable.maxBy { case (p, allow) =>
-            p.length.toLong * 2 + (if (allow) 1 else 0) }._2)
-        assert(got((d, path)) === expected,
-          s"decide diverged for ($d, $path) rules ${ruleSet(d)}")
-      }
-    }
+    (1 to 3).foreach(round =>
+      decideRound((1 to 30).map(i => s"k$round-$i.com")))
   }
 }

@@ -37,7 +37,7 @@ class StreamingSkewSpec extends SparkSpec {
     try {
       // time-sorted chunks, reversed within each chunk: arrival order
       // is locally scrambled but every event stays inside the 1h
-      // watermark horizon (same discipline as StreamingGapsSpec)
+      // watermark horizon
       val sorted = ev.sortBy(_.tsUs)
       val chunks = sorted.grouped(math.max(1, sorted.length / 5 + 1))
         .map(_.reverse).toSeq

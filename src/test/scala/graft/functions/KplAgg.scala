@@ -5,10 +5,9 @@ import java.security.MessageDigest
 
 /** KPL record AGGREGATION — the inverse of [[KplDeagg]], emitting the
   * public aggregation wire format (magic `0xF3899AC2`, protobuf
-  * `AggregatedRecord` body, MD5 trailer). Exists so de-aggregation can
-  * be round-trip-tested against arbitrary payloads, and so pipelines
-  * can produce KPL-aggregated output for Kinesis sinks (fewer
-  * PUT records at scale). */
+  * `AggregatedRecord` body, MD5 trailer). A test fixture: it builds
+  * the producer-side blobs that de-aggregation is round-trip-tested
+  * against. */
 object KplAgg {
 
   private def writeVarint(out: ByteArrayOutputStream, v0: Long): Unit = {

@@ -2,6 +2,7 @@
 """Net lines of code between two git refs.
 
     python3 tools/loc.py <base-ref> <head-ref> [--files]
+    python3 tools/loc.py --reach [<ref>]
 
 Counts non-blank, non-comment lines of the source files (.scala, .java,
 .py, .sh) under src/main, src/test and tools at both refs, reading
@@ -15,6 +16,15 @@ a comment is code. `--files` also lists every file whose count changed.
 It then reports the configuration surface at both refs: the fields of
 `ConsumerConfig`, the `graft.*` Spark conf keys and the environment
 variables read under src/main.
+
+`--reach` lists instead the src/main files (at <ref>, default HEAD)
+that no root reaches, with their code-line counts. The roots are the
+entry points (SparkEntry, Verify, Bench, GraftExtensions,
+GraftSession), ConsumerPipeline, every `main` under graft/tools and the
+sources under perfbench/src. A file reaches another when its code (with
+comments removed as above) names a top-level type or object that the
+other file defines at column 0, bare or fully qualified. A package object
+is reached when a reached file sits in its package or names it.
 """
 import re
 import subprocess
@@ -40,15 +50,15 @@ def show(ref, path):
     return git("show", f"{ref}:{path}").decode("utf-8", "replace")
 
 
-def c_like_code_lines(text):
-    """Lines with code left after removing // and /* */ comments; string
+def c_like_code(text):
+    """The text of each line with // and /* */ comments removed; string
     and char literals are skipped so comment markers inside them are
     not mistaken for comments."""
-    n = 0
+    out = []
     depth = 0  # block-comment nesting (Scala nests them)
     quote = None  # '"' or '"""' while inside a string literal
     for line in text.splitlines():
-        code = False
+        kept = []
         i = 0
         while i < len(line):
             if depth:
@@ -61,36 +71,39 @@ def c_like_code_lines(text):
                 else:
                     i += 1
             elif quote:
-                if not line[i].isspace():
-                    code = True  # a multi-line string's body is code
-                if line[i] == "\\" and quote != '"""':
-                    i += 2
-                elif line.startswith(quote, i):
-                    i += len(quote)
+                # a multi-line string's body is code
+                step = 2 if line[i] == "\\" and quote != '"""' else 1
+                if line.startswith(quote, i):
+                    step = len(quote)
                     quote = None
-                else:
-                    i += 1
+                kept.append(line[i:i + step])
+                i += step
             elif line.startswith("//", i):
                 break
             elif line.startswith("/*", i):
+                kept.append(" ")
                 depth = 1
                 i += 2
             else:
+                step = 1
                 if line.startswith('"""', i):
                     quote = '"""'
+                    step = 3
                 elif line[i] == '"':
                     quote = '"'
                 elif re.match(r"'(\\.|[^\\'])'", line[i:i + 4]):
-                    i += line.index("'", i + 2) + 1 - i
-                    code = True
-                    continue
-                if not line[i].isspace():
-                    code = True
-                i += len(quote) if quote else 1
+                    step = line.index("'", i + 2) + 1 - i
+                kept.append(line[i:i + step])
+                i += step
         if quote != '"""':
             quote = None
-        n += code
-    return n
+        out.append("".join(kept))
+    return out
+
+
+def c_like_code_lines(text):
+    """Lines with code left after removing comments (see c_like_code)."""
+    return sum(1 for line in c_like_code(text) if line.strip())
 
 
 def hash_code_lines(text):
@@ -137,8 +150,83 @@ def surface(ref):
             "environment variables": env}
 
 
+ROOTS = ("SparkEntry", "Verify", "Bench", "GraftExtensions",
+         "GraftSession", "ConsumerPipeline")
+TOOLS = "src/main/scala/graft/tools/"
+TOP_LEVEL = re.compile(
+    r"^(?:(?:private|protected)(?:\[\w+\])?\s+|final\s+|sealed\s+|"
+    r"abstract\s+|implicit\s+|case\s+)*(?:object|class|trait|type)\s+"
+    r"(\w+)", re.M)
+IDENT = re.compile(r"[A-Za-z_]\w*")
+
+
+def package_of(code):
+    """The package a file's chained `package a.b` clauses declare."""
+    return ".".join(re.findall(r"^package\s+(?!object\b)([\w.]+)", code,
+                               re.M))
+
+
+def reach(ref):
+    """(reached src/main files, unreached src/main files -> code lines)."""
+    out = git("ls-tree", "-r", "--name-only", ref, "--", "src/main",
+              "perfbench/src")
+    srcs = {}
+    for f in out.decode().splitlines():
+        if f.endswith(".scala"):
+            srcs[f] = "\n".join(c_like_code(show(ref, f)))
+    info = {}
+    for f, code in srcs.items():
+        pkg_obj = re.search(r"^package\s+object\s+(\w+)", code, re.M)
+        pkg = package_of(code)
+        info[f] = {
+            "pkg": pkg,
+            "defines": set(TOP_LEVEL.findall(code)),
+            "tokens": set(IDENT.findall(code)),
+            "pkg_object": f"{pkg}.{pkg_obj.group(1)}" if pkg_obj else None,
+        }
+    main = [f for f in srcs if f.startswith("src/main/")]
+    roots = [f for f in srcs if not f.startswith("src/main/")
+             or info[f]["defines"] & set(ROOTS)
+             or (f.startswith(TOOLS) and re.search(r"\bdef main\(",
+                                                   srcs[f]))]
+    reached, todo = set(roots), list(roots)
+    while todo:
+        a = todo.pop()
+        for b in main:
+            if b in reached:
+                continue
+            ib = info[b]
+            if ib["pkg_object"]:
+                hit = (info[a]["pkg"] == ib["pkg_object"]
+                       or ib["pkg_object"] in srcs[a])
+            else:
+                hit = bool(ib["defines"] & info[a]["tokens"])
+            if hit:
+                reached.add(b)
+                todo.append(b)
+    unreached = {f: sum(1 for line in srcs[f].splitlines() if line.strip())
+                 for f in main if f not in reached}
+    return reached, unreached
+
+
+def report_reach(ref):
+    reached, unreached = reach(ref)
+    n_main = sum(1 for f in reached if f.startswith("src/main/"))
+    print(f"reach at {ref}: {n_main} of {n_main + len(unreached)} "
+          f"src/main files reached from the roots")
+    for f in sorted(unreached):
+        print(f"{unreached[f]:>6}  {f}")
+    print(f"unreached: {len(unreached)} files, "
+          f"{sum(unreached.values())} code lines")
+
+
 def main(argv):
     args = [a for a in argv if not a.startswith("--")]
+    if "--reach" in argv:
+        if len(args) > 1:
+            sys.exit(__doc__)
+        report_reach(args[0] if args else "HEAD")
+        return
     if len(args) != 2:
         sys.exit(__doc__)
     base, head = args
