@@ -57,18 +57,6 @@ object HeavyHitters {
     counts.iterator
   }
 
-  /** One Misra-Gries step over an IMMUTABLE counter map — the
-    * streaming-state twin of [[mgSummary]] (which keeps a mutable
-    * fast path for the batch scan). Folding a stream through this is
-    * defined to equal mgSummary on the same iterator — pinned in
-    * HeavyHittersSpec — so the streaming candidates inherit the same
-    * undercount bound and no-false-negative guarantee. */
-  private[graft] def mgUpdate(counts: Map[Long, Long], k: Long,
-      capacity: Int): Map[Long, Long] =
-    if (counts.contains(k)) counts.updated(k, counts(k) + 1L)
-    else if (counts.size < capacity) counts.updated(k, 1L)
-    else counts.collect { case (key, c) if c > 1L => key -> (c - 1L) }
-
   /** Keys of `keyCol` (long-valued; hash string keys to long with
     * xxhash64 and join the labels back) holding at least
     * `thresholdPpm` parts-per-million of all rows, with exact counts.

@@ -338,7 +338,7 @@ object Sketches {
     * of occurrences per cell). NOT the production ingest shape: a
     * vocabulary aggregate's exchange is vocab-sized, where
     * [[cmsCells]]' stays capped at d×w rows per partition whatever
-    * the corpus — keep the streaming/ingest rows on [[cmsCells]]. */
+    * the corpus — keep the ingest rows on [[cmsCells]]. */
   def cmsCellsFromCounts(counts: DataFrame, d: Int, w: Int): DataFrame =
     cmsCellTable(counts, Nil, Seq("cnt"), d, w)(sum("cnt"))
 

@@ -485,8 +485,7 @@ object ConsumerQueries {
         .orderBy("event_type")
     },
 
-    // Per-hour top-3 event types — the batch half of
-    // streaming.StreamingTopK (the live traffic-composition panel):
+    // Per-hour top-3 event types (the traffic-composition panel):
     // hourly per-type counts, ranked (count desc, type asc — total
     // order), rank ≤ 3. The cut compiles to WindowGroupLimit
     // (partial per-hour top-k before the rank exchange, like

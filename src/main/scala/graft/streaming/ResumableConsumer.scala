@@ -244,11 +244,4 @@ object ResumableConsumer {
           out.iterator
       }
   }
-
-  /** Single-task streaming convenience (one anonymous `processOne` task
-    * per message) over [[streamTasks]]. */
-  def stream(msgs: Dataset[StreamMsg], run: String => Try[Unit],
-      maxAttempts: Int, retainTriggers: Long = 100L): Dataset[MsgState] =
-    streamTasks(msgs, Seq(TaskDef("processOne", run)), maxAttempts,
-      retainTriggers)
 }

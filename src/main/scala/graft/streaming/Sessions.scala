@@ -21,10 +21,11 @@ import org.apache.spark.sql.functions._
   * hashes on the user key only — 10× events per user means bigger
   * partials, not more shuffle rows per session.
   *
-  * Streaming: pass `watermark` and run the query in append mode — a
-  * session emits once the watermark passes its end (no further event
-  * can extend it), and its state is evicted; state is bounded by the
-  * watermark horizon, never corpus-sized.
+  * Streaming: the caller watermarks the input
+  * (`df.withWatermark(timeCol, ...)`) and runs the query in append
+  * mode — a session emits once the watermark passes its end (no
+  * further event can extend it), and its state is evicted; state is
+  * bounded by the watermark horizon, never corpus-sized.
   */
 object Sessions {
 
@@ -33,19 +34,14 @@ object Sessions {
     * @param keyCol    session key column name
     * @param gap       session gap, e.g. "6 hours"
     * @param aggs      per-session aggregates (beyond the window itself)
-    * @param watermark max lateness for streaming append mode; None for
-    *                  batch
     */
   def gapSessions(
       df: DataFrame, timeCol: String, keyCol: String, gap: String,
-      aggs: Seq[Column],
-      watermark: Option[String] = None): DataFrame = {
-    val src = watermark.fold(df)(d => df.withWatermark(timeCol, d))
-    src
+      aggs: Seq[Column]): DataFrame =
+    df
       .groupBy(col(keyCol), session_window(col(timeCol), gap).as("w"))
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("session_start", col("w.start"))
       .withColumn("session_end", col("w.end"))
       .drop("w")
-  }
 }

@@ -25,10 +25,10 @@ class StreamingSessionSpec extends SparkSpec {
     val input = MemoryStream[(Long, Long)] // (user, epoch-second)
     val events = input.toDS().toDF("user", "sec")
       .withColumn("ts", timestamp_seconds(col("sec"))).drop("sec")
+      .withWatermark("ts", "5 seconds")
     val out = Sessions.gapSessions(
       events, timeCol = "ts", keyCol = "user", gap = "10 seconds",
-      aggs = Seq(count(lit(1)).as("n_events")),
-      watermark = Some("5 seconds"))
+      aggs = Seq(count(lit(1)).as("n_events")))
     val q = out.writeStream.format("memory").queryName("sess_out")
       .outputMode("append").start()
     def emitted(): Seq[(Long, Long, Long, Long)] =
@@ -70,10 +70,10 @@ class StreamingSessionSpec extends SparkSpec {
     def startQuery() = {
       val events = input.toDS().toDF("user", "sec")
         .withColumn("ts", timestamp_seconds(col("sec"))).drop("sec")
+        .withWatermark("ts", "5 seconds")
       Sessions.gapSessions(
           events, timeCol = "ts", keyCol = "user", gap = "10 seconds",
-          aggs = Seq(count(lit(1)).as("n_events")),
-          watermark = Some("5 seconds"))
+          aggs = Seq(count(lit(1)).as("n_events")))
         .select(col("user"), unix_timestamp(col("session_start")).as("s"),
           unix_timestamp(col("session_end")).as("e"), col("n_events"))
         .writeStream

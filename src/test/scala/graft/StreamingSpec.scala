@@ -9,7 +9,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.model.{ConsumerConfig, TaskStatus}
-import graft.streaming.{ConsumerPipeline, MsgState, ResumableConsumer, StreamMsg}
+import graft.streaming.{ConsumerPipeline, MsgState, ResumableConsumer, StreamMsg,
+  TaskDef}
 
 class StreamingSpec extends SparkSpec {
 
@@ -224,7 +225,8 @@ class StreamingSpec extends SparkSpec {
         scala.util.Failure(new RuntimeException("first try fails"))
       else Try(())
     }
-    val out = ResumableConsumer.stream(input.toDS(), task, maxAttempts = 5)
+    val out = ResumableConsumer.streamTasks(input.toDS(),
+      Seq(TaskDef("processOne", task)), maxAttempts = 5)
     val q = out.writeStream.format("memory").queryName("outcomes")
       .outputMode("update").start()
     try {

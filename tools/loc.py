@@ -24,7 +24,9 @@ GraftSession), ConsumerPipeline, every `main` under graft/tools and the
 sources under perfbench/src. A file reaches another when its code (with
 comments removed as above) names a top-level type or object that the
 other file defines at column 0, bare or fully qualified. A package object
-is reached when a reached file sits in its package or names it.
+is reached when a reached file sits in its package or names it. The
+list must be empty: `--reach` exits 1 when it lists any file, 0 when
+it lists none.
 """
 import re
 import subprocess
@@ -218,6 +220,7 @@ def report_reach(ref):
         print(f"{unreached[f]:>6}  {f}")
     print(f"unreached: {len(unreached)} files, "
           f"{sum(unreached.values())} code lines")
+    return not unreached
 
 
 def main(argv):
@@ -225,8 +228,7 @@ def main(argv):
     if "--reach" in argv:
         if len(args) > 1:
             sys.exit(__doc__)
-        report_reach(args[0] if args else "HEAD")
-        return
+        sys.exit(0 if report_reach(args[0] if args else "HEAD") else 1)
     if len(args) != 2:
         sys.exit(__doc__)
     base, head = args
