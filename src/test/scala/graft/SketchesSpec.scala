@@ -8,10 +8,8 @@ import graft.sources.Tables
 /** Pins [[Sketches]] beyond the hll_shingle_report oracle row: the
   * MERGE law that makes the sketch distributable (registers of a
   * union = element-wise max of the parts' registers — why the
-  * aggregate is partial and a 1000-executor fan-in is exact), the
-  * raw-regime accuracy the report's p choice depends on, and the HLL
-  * register, CMS cell and HDR bucket SQL derivations value-for-value
-  * against compiled driver-side reference kernels. */
+  * aggregate is partial and a 1000-executor fan-in is exact), and the
+  * raw-regime accuracy the report's p choice depends on. */
 class SketchesSpec extends SparkSpec {
 
   private def shingleStream(dir: String) =
@@ -328,112 +326,6 @@ class SketchesSpec extends SparkSpec {
         s"$k: a sketch was not exhaustive")
       assert(r.getAs[Double]("inter_est") === exact.getOrElse(k, 0L).toDouble,
         s"$k: exhaustive pair estimate is not the exact intersection")
-    }
-  }
-
-  // Driver-side reference kernels for the three parity pins below: each
-  // re-derives a batch SQL expression in compiled JVM code, so the SQL
-  // is checked against an independent implementation.
-
-  private val P = 8
-  private val WBits = 60 - P
-  private val Top = WBits + 1
-
-  /** EXACTLY the register derivation of Sketches.hllRegisters (md5 →
-    * first 15 hex = 60 bits → top p register bits, remaining-bit
-    * leading-zero rank). */
-  private def registerAndRho(value: String): (Int, Int) = {
-    val h = graft.functions.TextShingles.hash60(value)
-    val reg = (h >>> WBits).toInt
-    val w = h & ((1L << WBits) - 1)
-    val rho = if (w == 0L) Top
-      else Top - (64 - java.lang.Long.numberOfLeadingZeros(w))
-    (reg, rho)
-  }
-
-  /** EXACTLY the cell derivation of Sketches.cmsCell (md5 of
-    * "r:cms:key" → first 15 hex = 60 bits → mod w). */
-  private def cell(r: Int, key: String, w: Int): Long =
-    graft.functions.TextShingles.hash60(s"$r:cms:$key") % w
-
-  /** EXACTLY Sketches.hdrBucketSql's bucket index (values < 32 are
-    * their own buckets; above, (exponent − 5)·16 + top-5 bits), with
-    * numberOfLeadingZeros standing in for the SQL length(bin(v))
-    * exponent probe. */
-  private def bucket(vi: Long): Long =
-    if (vi < 32L) vi
-    else {
-      val len = 64 - java.lang.Long.numberOfLeadingZeros(vi)
-      (len - 5).toLong * 16L + (vi >>> (len - 5))
-    }
-
-  /** Inclusive lower bound of bucket `b`: small buckets are their own
-    * value; a larger bucket b holds the top-5-bit pattern 16 + b%16
-    * shifted up by its exponent b/16 - 1. */
-  private def floorOf(b: Long): Long =
-    if (b < 32L) b else (16L + b % 16L) << (b / 16L - 1L)
-
-  /** EXACTLY Sketches.hdrBucketLoSql's inclusive bucket lower bound. */
-  private def bucketLo(vi: Long): Long = floorOf(bucket(vi))
-
-  private def hllCorpus: Seq[String] =
-    (1 to 3000).map(i => s"value-$i-${i * 7919}")
-
-  private def cmsCorpus: Seq[String] =
-    (1 to 2000).map(i => s"url-${i % 97}-${(i * 7919) % 31}")
-
-  // spans the exact small-bucket regime (< 32), the boundary, and
-  // several exponent decades up to > 2^40
-  private def hdrCorpus: Seq[Long] =
-    (0L to 40L) ++ (1 to 1500).map(i =>
-      (i.toLong * 7919L * (1L << (i % 28))) % (1L << 44))
-
-  test("compiled registerAndRho equals Sketches.hllRegisters' SQL " +
-      "derivation for every corpus value (same md5, same 60-bit " +
-      "slice, same rank)") {
-    import spark.implicits._
-    val df = hllCorpus.toDF("v")
-    // key = the value itself → one (register, m) row per value, no
-    // max-merging: the per-value derivation laid bare
-    val sql = Sketches.hllRegisters(df, col("v"), col("v"), 8)
-      .collect().map(r => r.getAs[String]("key") ->
-        (r.getAs[Long]("register").toInt, r.getAs[Int]("m"))).toMap
-    hllCorpus.foreach { v =>
-      assert(registerAndRho(v) === sql(v),
-        s"register/rho diverged for '$v'")
-    }
-  }
-
-  test("compiled cell() equals Sketches.cmsCell's SQL derivation " +
-      "for every (row, key) pair (same md5 text, same 60-bit slice, " +
-      "same modulus)") {
-    import spark.implicits._
-    val df = cmsCorpus.distinct.toDF("key")
-      .select(col("key"), explode(sequence(lit(0), lit(2))).as("r"))
-    val sql = df
-      .withColumn("c", Sketches.cmsCell(col("r"), col("key"), 256))
-      .collect()
-      .map(x => (x.getAs[String]("key"), x.getAs[Int]("r")) ->
-        x.getAs[Long]("c")).toMap
-    sql.keys.foreach { case (key, r) =>
-      assert(cell(r, key, 256) === sql((key, r)),
-        s"cell diverged for r=$r key='$key'")
-    }
-  }
-
-  test("compiled bucket()/bucketLo() equal Sketches.hdrBucketSql / " +
-      "hdrBucketLoSql for every corpus value") {
-    import spark.implicits._
-    val rows = hdrCorpus.distinct.toDF("vi")
-      .withColumn("bucket", expr(Sketches.hdrBucketSql("vi")))
-      .withColumn("lo", expr(Sketches.hdrBucketLoSql("vi")))
-      .collect()
-    rows.foreach { r =>
-      val vi = r.getAs[Long]("vi")
-      assert(bucket(vi) === r.getAs[Long]("bucket"),
-        s"bucket diverged for $vi")
-      assert(bucketLo(vi) === r.getAs[Long]("lo"),
-        s"bucketLo diverged for $vi")
     }
   }
 }

@@ -1,21 +1,13 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.Sketches
-import graft.streaming.StreamingCms
-import graft.streaming.StreamingCms.{KeyedEvent, SaltedCell}
 
-/** Pins [[StreamingCms]]: the compiled cell derivation equals the
-  * batch sketch's SQL derivation value-for-value, a closed hour's
-  * merged per-salt cell tables equal the batch `cmsCells` of the same
-  * data (scrambled arrival — cell increments are commutative),
-  * emission is exactly-once per (hour, salt) at watermark close with
-  * nothing provisional before, each salt group honours the d×w bound
-  * that makes the operator safe under unbounded key cardinality, and
-  * salted-vs-unsalted outputs merge to the SAME sketch (the r16
-  * throughput fix's exactness law). */
+/** Pins the Count-Min cell derivation of [[Sketches.cmsCell]] against
+  * the compiled [[SketchKernels.cell]]. The suite keeps the name of
+  * the streaming CMS operator whose kernel this pin first checked; the
+  * operator is gone, the batch derivation it mirrored stays. */
 class StreamingCmsSpec extends SparkSpec {
 
   private def corpusKeys: Seq[String] =
@@ -33,154 +25,8 @@ class StreamingCmsSpec extends SparkSpec {
       .map(x => (x.getAs[String]("key"), x.getAs[Int]("r")) ->
         x.getAs[Long]("c")).toMap
     sql.keys.foreach { case (key, r) =>
-      assert(StreamingCms.cell(r, key, 256) === sql((key, r)),
+      assert(SketchKernels.cell(r, key, 256) === sql((key, r)),
         s"cell diverged for r=$r key='$key'")
     }
-  }
-
-  test("a closed hour's merged per-salt cell tables equal the batch " +
-      "CMS of the same keys (scrambled batches), emission is " +
-      "exactly-once per (hour, salt), and no salt group exceeds d*w " +
-      "cells") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = StreamingCms.HourUs * 700
-    val keys = corpusKeys
-    val (a, rest) = keys.splitAt(700)
-    val (b, c) = rest.splitAt(700)
-    val input = MemoryStream[KeyedEvent]
-    val out = StreamingCms.cells(input.toDS(), salts = 4,
-      maxDelay = "1 second")
-    val q = out.writeStream.format("memory").queryName("scms_out")
-      .outputMode("update").start()
-    def events(): Seq[SaltedCell] =
-      spark.table("scms_out").as[SaltedCell].collect().toSeq
-    try {
-      input.addData(b.map(k => KeyedEvent(k, t0 + 1000)): _*)
-      q.processAllAvailable()
-      input.addData((c ++ b.take(200)).map(k =>
-        KeyedEvent(k, t0 + 2000)): _*)
-      q.processAllAvailable()
-      input.addData((a ++ c.take(100)).map(k =>
-        KeyedEvent(k, t0 + 3000)): _*)
-      q.processAllAvailable()
-      assert(events().isEmpty, "open hour emitted a provisional row")
-
-      input.addData(KeyedEvent("flush-1",
-        t0 + StreamingCms.HourUs + 2000000))
-      q.processAllAvailable()
-      input.addData(KeyedEvent("flush-2",
-        t0 + StreamingCms.HourUs + 3000000))
-      q.processAllAvailable()
-      val closed = events()
-      assert(closed.nonEmpty && closed.forall(_.hourBucket === 700L),
-        s"expected exactly one closed hour: ${closed.take(5)}")
-      assert(closed.map(sc => (sc.salt, sc.r, sc.c)).distinct.size ===
-        closed.size, "duplicate (salt, cell) rows — a group closed " +
-        "twice?")
-      closed.groupBy(_.salt).foreach { case (salt, rows) =>
-        assert(rows.size <= StreamingCms.D * StreamingCms.W,
-          s"salt group $salt outgrew the d*w state bound")
-      }
-      assert(closed.map(_.salt).distinct.size > 1,
-        "salting routed every key to one group — no parallelism " +
-        "was exercised")
-
-      // batch parity of the MERGED tables on identical keys
-      // (duplicates and all)
-      val merged = StreamingCms.merge(
-          spark.table("scms_out").as[SaltedCell])
-        .collect()
-        .map(cc => (cc.r, cc.c.toInt) -> cc.cnt).toMap
-      val batch = Sketches.cmsCells(
-          (b ++ c ++ b.take(200) ++ a ++ c.take(100)).toDF("key"),
-          col("key"), StreamingCms.D, StreamingCms.W)
-        .collect()
-        .map(x => (x.getAs[Int]("r"), x.getAs[Long]("c").toInt) ->
-          x.getAs[Long]("cnt")).toMap
-      assert(merged === batch,
-        "merged streamed cell tables diverged from batch cmsCells")
-    } finally q.stop()
-  }
-
-  test("salted and unsalted runs over identical input merge to the " +
-      "same cell table (cell-wise addition is exact for any salt " +
-      "assignment)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = StreamingCms.HourUs * 701
-    val keys = corpusKeys.take(600)
-    def run(name: String, salts: Int): Map[(Int, Long), Long] = {
-      val input = MemoryStream[KeyedEvent]
-      val q = StreamingCms.cells(input.toDS(), salts = salts,
-          maxDelay = "1 second")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        input.addData(keys.map(k => KeyedEvent(k, t0 + 1000)): _*)
-        q.processAllAvailable()
-        input.addData(KeyedEvent("flush-1",
-          t0 + StreamingCms.HourUs + 2000000))
-        q.processAllAvailable()
-        input.addData(KeyedEvent("flush-2",
-          t0 + StreamingCms.HourUs + 3000000))
-        q.processAllAvailable()
-        StreamingCms.merge(spark.table(name).as[SaltedCell])
-          .collect().filter(_.hourBucket == 701L)
-          .map(cc => (cc.r, cc.c) -> cc.cnt).toMap
-      } finally q.stop()
-    }
-    val unsalted = run("scms_par1", salts = 1)
-    val salted = run("scms_par8", salts = 8)
-    assert(salted === unsalted,
-      "merged salted cells diverged from the single-group sketch")
-  }
-
-  test("LIVE per-source cells (r19): keyedCells streams one d*w " +
-      "sketch per (source, salt), mergeKeyed folds the salts at hour " +
-      "close, and every per-(source, hour) cell table equals the " +
-      "batch cmsCells of that source's items — live per-source " +
-      "frequency monitoring is batch-exact") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = StreamingCms.HourUs * 720
-    val data = Seq("src0" -> 0, "src1" -> 3).flatMap { case (s, off) =>
-      (1 to 900).map(i => (s, s"url-${(i + off) % 97}-${(i * 7919) % 31}"))
-    }
-    val input = MemoryStream[StreamingCms.KeyedSeen]
-    val q = StreamingCms.keyedCells(input.toDS(), salts = 4,
-        maxDelay = "1 second")
-      .writeStream.format("memory").queryName("scms_keyed")
-      .outputMode("update").start()
-    try {
-      input.addData(data.map { case (s, v) =>
-        StreamingCms.KeyedSeen(s, v, t0 + 1000) }: _*)
-      q.processAllAvailable()
-      input.addData(StreamingCms.KeyedSeen("flush", "f1",
-        t0 + StreamingCms.HourUs + 2000000))
-      q.processAllAvailable()
-      input.addData(StreamingCms.KeyedSeen("flush", "f2",
-        t0 + StreamingCms.HourUs + 3000000))
-      q.processAllAvailable()
-      val cells = spark.table("scms_keyed")
-        .as[StreamingCms.KeyedSaltedCell]
-        .collect().toSeq.filter(_.hourBucket == 720L)
-      assert(cells.map(c => (c.key, c.salt, c.r, c.c)).distinct.size ===
-        cells.size, "a (key, salt, r, c) row was emitted twice")
-      val live = StreamingCms.mergeKeyed(cells.toDS())
-        .collect()
-        .map(r => (r.getAs[String]("key"), r.getAs[Int]("r"),
-          r.getAs[Long]("c")) -> r.getAs[Long]("cnt")).toMap
-      val batch = Seq("src0", "src1").flatMap { s =>
-        Sketches.cmsCells(
-            data.filter(_._1 == s).map(_._2).toDF("key"), col("key"),
-            StreamingCms.D, StreamingCms.W)
-          .collect()
-          .map(r => (s, r.getAs[Int]("r"), r.getAs[Long]("c")) ->
-            r.getAs[Long]("cnt"))
-      }.toMap
-      assert(live === batch,
-        "per-source live cell tables diverged from the batch sketches")
-    } finally q.stop()
   }
 }

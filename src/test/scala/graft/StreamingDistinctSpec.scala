@@ -1,18 +1,14 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.Sketches
-import graft.streaming.StreamingDistinct
-import graft.streaming.StreamingDistinct.{DistinctEstimate, SeenValue}
 
-/** Pins [[StreamingDistinct]]: the compiled register derivation
-  * equals the batch sketch's SQL derivation value-for-value, a closed
-  * hour's streamed summary equals the batch summary of the same data
-  * (scrambled arrival — register max is commutative), emission is
-  * exactly-once at watermark close with nothing provisional before,
-  * and the estimate lands within the raw-regime error band. */
+/** Pins the HLL register derivation of [[Sketches.hllRegisters]]
+  * against the compiled [[SketchKernels.registerAndRho]]. The suite
+  * keeps the name of the streaming distinct-count operator whose
+  * kernel this pin first checked; the operator is gone, the batch
+  * derivation it mirrored stays. */
 class StreamingDistinctSpec extends SparkSpec {
 
   private def corpusValues: Seq[String] =
@@ -29,237 +25,8 @@ class StreamingDistinctSpec extends SparkSpec {
       .collect().map(r => r.getAs[String]("key") ->
         (r.getAs[Long]("register").toInt, r.getAs[Int]("m"))).toMap
     corpusValues.foreach { v =>
-      assert(StreamingDistinct.registerAndRho(v) === sql(v),
+      assert(SketchKernels.registerAndRho(v) === sql(v),
         s"register/rho diverged for '$v'")
     }
-  }
-
-  test("a closed hour's streamed sketch equals the batch sketch of " +
-      "the same values (scrambled batches), emits exactly once at " +
-      "watermark close, and estimates within the raw-regime band") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = StreamingDistinct.HourUs * 500
-    val vals = corpusValues
-    // scrambled thirds, each value sighted 1-3 times (duplicates must
-    // not move registers)
-    val (a, rest) = vals.splitAt(1000)
-    val (b, c) = rest.splitAt(1000)
-    val input = MemoryStream[SeenValue]
-    val out = StreamingDistinct.report(input.toDS(),
-      maxDelay = "1 second")
-    val q = out.writeStream.format("memory").queryName("sdist_out")
-      .outputMode("update").start()
-    def events(): Seq[DistinctEstimate] =
-      spark.table("sdist_out").as[DistinctEstimate].collect().toSeq
-    try {
-      input.addData(b.map(v => SeenValue(v, t0 + 1000)): _*)
-      q.processAllAvailable()
-      input.addData((c ++ b.take(300)).map(v => SeenValue(v, t0 + 2000)): _*)
-      q.processAllAvailable()
-      input.addData((a ++ c.take(200)).map(v => SeenValue(v, t0 + 3000)): _*)
-      q.processAllAvailable()
-      assert(events().isEmpty, "open hour emitted a provisional row")
-
-      // advance the watermark past hour end (+1 s delay), twice so
-      // the timeout batch definitely runs
-      input.addData(SeenValue("flush-1",
-        t0 + StreamingDistinct.HourUs + 2000000))
-      q.processAllAvailable()
-      input.addData(SeenValue("flush-2",
-        t0 + StreamingDistinct.HourUs + 3000000))
-      q.processAllAvailable()
-      val closed = events()
-      assert(closed.size === 1, s"expected exactly one close: $closed")
-      val got = closed.head
-      assert(got.hourBucket === 500L)
-
-      // batch parity on identical values (duplicates and all)
-      val batch = Sketches.hllSummary(
-          Sketches.hllRegisters(
-            (b ++ c ++ b.take(300) ++ a ++ c.take(200)).toDF("v"),
-            lit("k"), col("v"), 8), 8)
-        .collect().head
-      assert(got.vZero === batch.getAs[Long]("v_zero"))
-      assert(got.sScaled === batch.getAs[Long]("s_scaled"))
-
-      val exact = vals.distinct.size.toDouble
-      assert(math.abs(got.estimate - exact) / exact < 0.20,
-        s"estimate ${got.estimate} vs exact $exact")
-    } finally q.stop()
-  }
-
-  test("salted per-(hour, salt) register tables merge to EXACTLY the " +
-      "single-group summary (element-wise max is exact for any salt " +
-      "assignment; estimates bit-equal), with every salt group " +
-      "register-bounded and exactly-once") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = StreamingDistinct.HourUs * 501
-    val vals = corpusValues.take(1200)
-    val saltedIn = MemoryStream[SeenValue]
-    val plainIn = MemoryStream[SeenValue]
-    val qs = StreamingDistinct.cells(saltedIn.toDS(), salts = 8,
-        maxDelay = "1 second")
-      .writeStream.format("memory").queryName("sdist_cells")
-      .outputMode("update").start()
-    val qp = StreamingDistinct.report(plainIn.toDS(),
-        maxDelay = "1 second")
-      .writeStream.format("memory").queryName("sdist_plain")
-      .outputMode("update").start()
-    try {
-      Seq(saltedIn, plainIn).foreach { in =>
-        in.addData(vals.map(v => SeenValue(v, t0 + 1000)): _*)
-      }
-      Seq(qs, qp).foreach(_.processAllAvailable())
-      Seq(saltedIn, plainIn).foreach { in =>
-        in.addData(SeenValue("flush-1",
-          t0 + StreamingDistinct.HourUs + 2000000))
-      }
-      Seq(qs, qp).foreach(_.processAllAvailable())
-      Seq(saltedIn, plainIn).foreach { in =>
-        in.addData(SeenValue("flush-2",
-          t0 + StreamingDistinct.HourUs + 3000000))
-      }
-      Seq(qs, qp).foreach(_.processAllAvailable())
-
-      val cells = spark.table("sdist_cells")
-        .as[StreamingDistinct.RegisterCell].collect()
-        .filter(_.hourBucket == 501L)
-      assert(cells.map(c => (c.salt, c.register)).distinct.size ===
-        cells.size, "duplicate (salt, register) rows — a group " +
-        "closed twice?")
-      assert(cells.map(_.salt).distinct.size > 1,
-        "salting routed every value to one group — no parallelism " +
-        "was exercised")
-      cells.groupBy(_.salt).foreach { case (salt, rows) =>
-        assert(rows.size <= 256,
-          s"salt group $salt outgrew the 2^p register bound")
-      }
-
-      val merged = StreamingDistinct.merge(
-          spark.table("sdist_cells")
-            .as[StreamingDistinct.RegisterCell])
-        .collect().filter(_.hourBucket == 501L)
-      val plain = spark.table("sdist_plain").as[DistinctEstimate]
-        .collect().filter(_.hourBucket == 501L)
-      assert(merged.length === 1 && plain.length === 1,
-        s"expected one summary each: ${merged.toSeq} / ${plain.toSeq}")
-      assert(merged.head === plain.head,
-        "merged salted summary diverged from the single-group report")
-    } finally { qs.stop(); qp.stop() }
-  }
-
-  test("LIVE per-source registers: keyedCells streams one sketch " +
-      "per (source, salt), mergeKeyed folds the salts at hour " +
-      "close, and the per-source register tables equal the batch " +
-      "hllRegisters derivation bit-exactly — the input the " +
-      "hll_pair_estimate register algebra consumes") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = StreamingDistinct.HourUs * 502
-    // overlapping per-source value ranges, duplicates included
-    val data = Seq("srcA" -> (1 to 900), "srcB" -> (500 to 1400))
-      .flatMap { case (s, r) =>
-        r.map(i => (s, s"value-$i-${i * 7919}")) }
-    val input = MemoryStream[StreamingDistinct.KeyedSeen]
-    val q = StreamingDistinct.keyedCells(input.toDS(), salts = 4,
-        maxDelay = "1 second")
-      .writeStream.format("memory").queryName("sdist_keyed")
-      .outputMode("update").start()
-    try {
-      input.addData(data.map { case (s, v) =>
-        StreamingDistinct.KeyedSeen(s, v, t0 + 1000) }: _*)
-      q.processAllAvailable()
-      input.addData(StreamingDistinct.KeyedSeen("flush", "f1",
-        t0 + StreamingDistinct.HourUs + 2000000))
-      q.processAllAvailable()
-      input.addData(StreamingDistinct.KeyedSeen("flush", "f2",
-        t0 + StreamingDistinct.HourUs + 3000000))
-      q.processAllAvailable()
-      val cells = spark.table("sdist_keyed")
-        .as[StreamingDistinct.KeyedRegisterCell].collect()
-        .filter(_.hourBucket == 502L)
-      assert(cells.nonEmpty, "no register rows emitted at hour close")
-      assert(cells.map(c => (c.key, c.salt, c.register)).distinct.size
-        === cells.size, "duplicate (key, salt, register) rows")
-      val live = StreamingDistinct.mergeKeyed(cells.toSeq.toDS())
-        .select("key", "register", "m")
-        .collect()
-        .map(r => (r.getString(0), r.getInt(1).toLong, r.getInt(2)))
-        .toSeq.sorted
-      val batch = graft.operators.Sketches.hllRegisters(
-          data.toDF("src", "v"), col("src"), col("v"), 8)
-        .collect()
-        .map(r => (r.getAs[String]("key"), r.getAs[Long]("register"),
-          r.getAs[Int]("m")))
-        .toSeq.sorted
-      assert(live === batch,
-        "per-source live registers diverged from the batch sketch")
-    } finally q.stop()
-  }
-
-  test("streamed hourly registers roll up to the per-day frame the " +
-      "sliding estimator consumes (r19): re-keying closed-hour " +
-      "keyedCells output by day and register-maxing equals the batch " +
-      "per-day hllRegisters bit-exactly — live ingest feeds " +
-      "hll_sliding_estimate's window algebra with zero recompute") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val day0 = 30L // day index; hours 720..791 span days 30..32
-    // three days, four active hours each, duplicated values across
-    // hours of the same day (register max must absorb them)
-    val data = for {
-      d <- 0 until 3
-      h <- Seq(1, 7, 13, 20)
-      i <- 1 to 150
-    } yield {
-      val hour = (day0 + d) * 24 + h
-      val uid = s"u-${d * 100 + i % 220}"
-      (uid, hour * StreamingDistinct.HourUs + 500000L * (i % 3 + 1))
-    }
-    val input = MemoryStream[StreamingDistinct.KeyedSeen]
-    val q = StreamingDistinct.keyedCells(input.toDS(), salts = 4,
-        maxDelay = "1 second")
-      .writeStream.format("memory").queryName("sdist_rollup")
-      .outputMode("update").start()
-    try {
-      // one constant sketch key: the day axis comes from event time
-      input.addData(data.map { case (u, ts) =>
-        StreamingDistinct.KeyedSeen("users", u, ts) }: _*)
-      q.processAllAvailable()
-      val endUs = (day0 + 3) * 24 * StreamingDistinct.HourUs
-      input.addData(StreamingDistinct.KeyedSeen("flush", "f1", endUs))
-      q.processAllAvailable()
-      input.addData(StreamingDistinct.KeyedSeen("flush", "f2",
-        endUs + StreamingDistinct.HourUs))
-      q.processAllAvailable()
-      val cells = spark.table("sdist_rollup")
-        .as[StreamingDistinct.KeyedRegisterCell].collect()
-        .filter(c => c.key == "users").toSeq
-      assert(cells.map(_.hourBucket).distinct.size === 12,
-        "expected all 12 active hours closed and emitted")
-      // hour -> day rollup: the SAME merge law, one more grain
-      val liveDaily = StreamingDistinct.mergeKeyed(cells.toDS())
-        .withColumn("day", expr("hourBucket div 24"))
-        .groupBy("day", "register")
-        .agg(org.apache.spark.sql.functions.max("m").as("m"))
-        .collect()
-        .map(r => (r.getAs[Long]("day"), r.getAs[Int]("register").toLong,
-          r.getAs[Int]("m")))
-        .toSeq.sorted
-      val batchDaily = graft.operators.Sketches.hllRegisters(
-          data.toDF("uid", "tsUs")
-            .select(expr(s"tsUs div ${24 * StreamingDistinct.HourUs}")
-              .as("day"), col("uid")),
-          col("day"), col("uid"), 8)
-        .collect()
-        .map(r => (r.getAs[Long]("key"), r.getAs[Long]("register"),
-          r.getAs[Int]("m")))
-        .toSeq.sorted
-      assert(liveDaily === batchDaily,
-        "hour->day register rollup diverged from the batch per-day " +
-          "sketch — the sliding estimator's input would drift")
-    } finally q.stop()
   }
 }

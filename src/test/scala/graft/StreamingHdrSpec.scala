@@ -1,21 +1,16 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.Sketches
-import graft.streaming.StreamingHdr
-import graft.streaming.StreamingHdr.{Measured, SaltedBucket}
 
-/** Pins [[StreamingHdr]]: the compiled bucket/lower-bound derivation
-  * equals the batch sketch's SQL derivation value-for-value (a
-  * leading-zero count vs the SQL length(bin(v)) probe), a closed
-  * hour's merged per-salt bucket tables equal the batch histogram of
-  * the same values (scrambled arrival — increments are commutative),
-  * emission is exactly-once per (hour, salt) at watermark close, the
-  * emitted closed-form lower bounds match the per-value floors, and
-  * salted-vs-unsalted outputs merge to the SAME histogram (the r16
-  * throughput fix's exactness law). */
+/** Pins the HDR bucket and lower-bound derivations of
+  * [[Sketches.hdrBucketSql]] / [[Sketches.hdrBucketLoSql]] against the
+  * compiled [[SketchKernels.bucket]] / [[SketchKernels.bucketLo]] (a
+  * leading-zero count vs the SQL length(bin(v)) probe). The suite
+  * keeps the name of the streaming histogram operator whose kernel
+  * this pin first checked; the operator is gone, the batch derivation
+  * it mirrored stays. */
 class StreamingHdrSpec extends SparkSpec {
 
   // spans the exact small-bucket regime (< 32), the boundary, and
@@ -33,155 +28,10 @@ class StreamingHdrSpec extends SparkSpec {
       .collect()
     rows.foreach { r =>
       val vi = r.getAs[Long]("vi")
-      assert(StreamingHdr.bucket(vi) === r.getAs[Long]("bucket"),
+      assert(SketchKernels.bucket(vi) === r.getAs[Long]("bucket"),
         s"bucket diverged for $vi")
-      assert(StreamingHdr.bucketLo(vi) === r.getAs[Long]("lo"),
+      assert(SketchKernels.bucketLo(vi) === r.getAs[Long]("lo"),
         s"bucketLo diverged for $vi")
     }
-  }
-
-  test("a closed hour's merged per-salt bucket tables equal the " +
-      "batch HDR histogram of the same values (scrambled batches), " +
-      "emission is exactly-once per (hour, salt), and the " +
-      "closed-form lower bounds match") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = StreamingHdr.HourUs * 900
-    val vals = corpusValues
-    val (a, rest) = vals.splitAt(500)
-    val (b, c) = rest.splitAt(500)
-    val input = MemoryStream[Measured]
-    val out = StreamingHdr.cells(input.toDS(), salts = 4,
-      maxDelay = "1 second")
-    val q = out.writeStream.format("memory").queryName("shdr_out")
-      .outputMode("update").start()
-    def events(): Seq[SaltedBucket] =
-      spark.table("shdr_out").as[SaltedBucket].collect().toSeq
-    try {
-      input.addData(b.map(v => Measured(v, t0 + 1000)): _*)
-      q.processAllAvailable()
-      input.addData((c ++ b.take(150)).map(v =>
-        Measured(v, t0 + 2000)): _*)
-      q.processAllAvailable()
-      input.addData((a ++ c.take(50)).map(v =>
-        Measured(v, t0 + 3000)): _*)
-      q.processAllAvailable()
-      assert(events().isEmpty, "open hour emitted a provisional row")
-
-      input.addData(Measured(1L, t0 + StreamingHdr.HourUs + 2000000))
-      q.processAllAvailable()
-      input.addData(Measured(2L, t0 + StreamingHdr.HourUs + 3000000))
-      q.processAllAvailable()
-      val closed = events()
-      assert(closed.nonEmpty && closed.forall(_.hourBucket === 900L),
-        s"expected exactly one closed hour: ${closed.take(5)}")
-      assert(closed.map(sb => (sb.salt, sb.bucket)).distinct.size ===
-        closed.size, "duplicate (salt, bucket) rows — a group " +
-        "closed twice?")
-      assert(closed.map(_.salt).distinct.size > 1,
-        "salting routed every value to one group — no parallelism " +
-        "was exercised")
-
-      // batch parity of the MERGED tables on identical values
-      // (duplicates and all)
-      val merged = StreamingHdr.merge(
-          spark.table("shdr_out").as[SaltedBucket])
-        .collect()
-        .map(cc => cc.bucket -> (cc.lo, cc.cnt)).toMap
-      val batch = (b ++ c ++ b.take(150) ++ a ++ c.take(50))
-        .toDF("vi")
-        .withColumn("bucket", expr(Sketches.hdrBucketSql("vi")))
-        .withColumn("lo", expr(Sketches.hdrBucketLoSql("vi")))
-        .groupBy("bucket").agg(min("lo").as("lo"),
-          count(lit(1)).as("cnt"))
-        .collect()
-        .map(r => r.getAs[Long]("bucket") ->
-          (r.getAs[Long]("lo"), r.getAs[Long]("cnt"))).toMap
-      assert(merged === batch,
-        "merged streamed bucket tables diverged from the batch " +
-        "histogram")
-    } finally q.stop()
-  }
-
-  test("salted and unsalted runs over identical input merge to the " +
-      "same bucket table (cell-wise addition is exact for any salt " +
-      "assignment)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = StreamingHdr.HourUs * 901
-    val vals = corpusValues.take(600)
-    def run(name: String, salts: Int): Map[Long, (Long, Long)] = {
-      val input = MemoryStream[Measured]
-      val q = StreamingHdr.cells(input.toDS(), salts = salts,
-          maxDelay = "1 second")
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-      try {
-        input.addData(vals.map(v => Measured(v, t0 + 1000)): _*)
-        q.processAllAvailable()
-        input.addData(Measured(1L, t0 + StreamingHdr.HourUs + 2000000))
-        q.processAllAvailable()
-        input.addData(Measured(2L, t0 + StreamingHdr.HourUs + 3000000))
-        q.processAllAvailable()
-        StreamingHdr.merge(spark.table(name).as[SaltedBucket])
-          .collect().filter(_.hourBucket == 901L)
-          .map(cc => cc.bucket -> (cc.lo, cc.cnt)).toMap
-      } finally q.stop()
-    }
-    val unsalted = run("shdr_par1", salts = 1)
-    val salted = run("shdr_par8", salts = 8)
-    assert(salted === unsalted,
-      "merged salted buckets diverged from the single-group " +
-      "histogram")
-  }
-
-  test("LIVE per-source buckets (r19): keyedCells streams one " +
-      "histogram per (source, salt), mergeKeyed folds the salts at " +
-      "hour close, and every per-(source, hour) bucket table equals " +
-      "the batch HDR histogram of that source's values — live " +
-      "per-source quantile monitoring is batch-exact") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = StreamingHdr.HourUs * 920
-    val data = Seq("src0" -> 1L, "src1" -> 13L).flatMap {
-      case (s, mult) => corpusValues.take(800).map(v =>
-        (s, (v * mult) % (1L << 44)))
-    }
-    val input = MemoryStream[StreamingHdr.KeyedMeasured]
-    val q = StreamingHdr.keyedCells(input.toDS(), salts = 4,
-        maxDelay = "1 second")
-      .writeStream.format("memory").queryName("shdr_keyed")
-      .outputMode("update").start()
-    try {
-      input.addData(data.map { case (s, v) =>
-        StreamingHdr.KeyedMeasured(s, v, t0 + 1000) }: _*)
-      q.processAllAvailable()
-      input.addData(StreamingHdr.KeyedMeasured("flush", 1L,
-        t0 + StreamingHdr.HourUs + 2000000))
-      q.processAllAvailable()
-      input.addData(StreamingHdr.KeyedMeasured("flush", 2L,
-        t0 + StreamingHdr.HourUs + 3000000))
-      q.processAllAvailable()
-      val cells = spark.table("shdr_keyed")
-        .as[StreamingHdr.KeyedSaltedBucket]
-        .collect().toSeq.filter(_.hourBucket == 920L)
-      assert(cells.map(c => (c.key, c.salt, c.bucket)).distinct.size ===
-        cells.size, "a (key, salt, bucket) row was emitted twice")
-      val live = StreamingHdr.mergeKeyed(cells.toDS())
-        .collect()
-        .map(r => (r.getAs[String]("key"), r.getAs[Long]("bucket"),
-          r.getAs[Long]("lo")) -> r.getAs[Long]("cnt")).toMap
-      val batch = Seq("src0", "src1").flatMap { s =>
-        data.filter(_._1 == s).map(_._2).toDF("vi")
-          .selectExpr(s"${Sketches.hdrBucketSql("vi")} AS bucket",
-            s"${Sketches.hdrBucketLoSql("vi")} AS lo")
-          .groupBy("bucket", "lo").agg(count(lit(1)).as("cnt"))
-          .collect()
-          .map(r => (s, r.getAs[Long]("bucket"), r.getAs[Long]("lo")) ->
-            r.getAs[Long]("cnt"))
-      }.toMap
-      assert(live === batch,
-        "per-source live histograms diverged from the batch buckets")
-    } finally q.stop()
   }
 }
