@@ -17,13 +17,12 @@ import org.apache.spark.sql.types.StructType
   * every message ever seen, plus one marker per unusable record or
   * rejected message and one row per processAll group. Nothing deletes a
   * row, so a delivery loads and rewrites all of history (ROADMAP item 1
-  * reads and writes only the delivered chains). The upsert's anti-join
-  * is planned as a sort-merge join, a shuffle on the key columns for
-  * each side: the consumer's kept frames carry the pre-execution size
-  * estimates of the plans they truncated, which are over the broadcast
-  * threshold, so AQE turns it into a broadcast join only after both
-  * shuffles have written. In streaming mode this whole module is
-  * replaced by checkpointed `GroupState` (see graft.streaming).
+  * reads and writes only the delivered chains). The consumer does not
+  * call [[upsert]]: its chain fold already groups each chain's prior
+  * rows with the chain's updates and merges them there
+  * (`ConsumerPipeline.foldChain`), so its save runs no join. In
+  * streaming mode this whole module is replaced by checkpointed
+  * `GroupState` (see graft.streaming).
   */
 object StateStore {
 
@@ -37,28 +36,45 @@ object StateStore {
     existing.join(updates.select(keys.map(updates(_)): _*), keys, "left_anti")
       .unionByName(updates)
 
+  /** The last committed table while [[save]] swaps a new one in. */
+  private def aside(path: String) = new Path(path + ".old")
+
   /** S2 — load prior state; an absent table is an empty state, not an
     * error (first run / short-circuit empty batch,
-    * `test/persisting.test.js:545-603`). */
+    * `test/persisting.test.js:545-603`). A save that stopped after moving
+    * the live table aside left it at the aside path, which is read
+    * instead. */
   def load(spark: SparkSession, path: String, schema: StructType): DataFrame = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    Seq(p, aside(path)).find(fs.exists) match {
+      case Some(q) => spark.read.schema(schema).parquet(q.toString)
+      case None => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    }
   }
 
-  /** Atomic-enough save for a table that is also the read source of the
-    * same job: write to a sibling tmp dir, then swap. (Parquet has no
-    * transactional MERGE; a real deployment would use a lakehouse table
-    * format — the operator semantics are identical.) */
+  /** Save for a table that is also the read source of the same job:
+    * write to a sibling tmp dir, move the live table aside, rename the
+    * tmp dir in, then delete the aside copy. A stop between any two steps
+    * leaves the last committed table readable by [[load]], live or
+    * aside. (Parquet has no transactional MERGE; a real deployment would
+    * use a lakehouse table format — the operator semantics are
+    * identical.) */
   def save(df: DataFrame, path: String): Unit = {
     val spark = df.sparkSession
     val tmp = new Path(path + ".tmp")
     val dst = new Path(path)
+    val old = aside(path)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     df.write.mode("overwrite").parquet(tmp.toString)
-    if (fs.exists(dst)) fs.delete(dst, true)
+    // With a live table, an aside copy is stale: clear it so the rename
+    // does not move the live table into it.
+    if (fs.exists(dst)) {
+      fs.delete(old, true)
+      fs.rename(dst, old)
+    }
     fs.rename(tmp, dst)
+    fs.delete(old, true)
   }
 }

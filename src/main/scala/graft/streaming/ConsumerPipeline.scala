@@ -21,8 +21,9 @@ import graft.sources.StateStore
   * initiateBatch   decode (D1/D2) → identify (I3) → chain order (Q4–Q6)
   *                 → load prior state (S2) → revive (T2)
   * processBatch    ordered multi-task execution with resume (T3, Q5),
-  *                 each chain sorted inside the fold's shuffle
-  * finaliseBatch   DRQ/DMQ envelopes (S4/S5) → state upsert (S3)
+  *                 each chain sorted inside the fold's shuffle, which
+  *                 also merges its state (S3) and its once-only letters
+  * finaliseBatch   DRQ/DMQ envelopes (S4/S5) → state save (S3)
   *                 → replay verdict (reject ⇒ source redelivers)
   * }}}
   *
@@ -77,16 +78,26 @@ object ConsumerPipeline {
     * matching, `test/persisting.test.js:17-21`): a replay that re-keys
     * eventIDs but redelivers the same payloads still resumes.
     *
-    * Each intermediate result that later steps read more than once (the
-    * identified records, the resolved prior state, the chain fold's
-    * outcomes and the dead letters) is a lazy local checkpoint, released
-    * when the delivery ends, normally or not. Every frame built on one
-    * plans from its RDD scan, not from the whole decode → identify →
-    * cogroup tree beneath it. AQE runs a kept frame's shuffle and
-    * broadcast stages when it is kept; its last stage runs inside the
-    * first job that reads it. The chain fold's shuffle sorts each chain
-    * by [[Identify.chainOrder]], the order [[Identify.sequence]]'s window
-    * gives. One delivery runs these Spark actions, in order:
+    * The chain fold settles the delivery. It cogroups every delivered
+    * record, unusable and rejected ones included, with every prior state
+    * row of its chain, sorts each chain by [[Identify.chainOrder]] (the
+    * order [[Identify.sequence]]'s window gives) and emits the merged
+    * state, the message verdicts and the once-only dead letters (see
+    * [[foldChain]]). The merged state is the prior table upserted on
+    * `(chainKey, msgId, task)`, so no join runs after the fold. The
+    * letters equal a once-only guard over the whole prior table except
+    * in one case: a prior message row in another per-key chain whose
+    * msgId is a bad record's eventID, which only a configuration changed
+    * between deliveries leaves behind.
+    *
+    * Two intermediate results are read by more than one action: the
+    * identified records and the fold's outcomes. Each is a lazy local
+    * checkpoint, released when the delivery ends, normally or not, so
+    * every frame built on one plans from its RDD scan, not from the
+    * whole decode → identify → cogroup tree beneath it. AQE runs a kept
+    * frame's shuffle and broadcast stages when it is kept; its last
+    * stage runs inside the first job that reads it. One delivery runs
+    * these Spark actions, in order:
     *
     *  1. only on the default event-seqNo path with required sequencing:
     *     the heterogeneous-seqNo check in [[Identify.chainOrder]] (a
@@ -96,15 +107,15 @@ object ConsumerPipeline {
     *  1. only with `processAll`: the master-task cogroup (a collect);
     *  1. the tally: one collect that counts every [[BatchResult]] field
     *     and the new dead letters;
-    *  1. only when there are new dead letters: one append from the
-    *     kept letters;
-    *  1. the state save: the upsert written to a sibling directory,
-    *     then swapped in.
+    *  1. only when there are new dead letters: one append, a narrow
+    *     read of the outcomes;
+    *  1. the state save: the outcomes' state rows, with processAll's new
+    *     master rows, written to a sibling directory, then swapped in.
     *
     * With AQE each shuffle or broadcast stage is a job of its own;
-    * `ConsumerPipelineSpec` pins the total at 10 jobs for a clean
-    * batch, 11 for a first delivery that writes DR and DM letters and
-    * 12 for a replay (8, 9 and 10 measured).
+    * `ConsumerPipelineSpec` pins the total at 7 jobs for a clean batch,
+    * 8 for a first delivery that writes DR and DM letters and 8 for a
+    * replay (5, 6 and 6 measured).
     *
     * @param cfg        consumer configuration (sequencing mode, retry cap)
     * @param tasks      processOne task definitions (non-empty registry)
@@ -159,8 +170,8 @@ object ConsumerPipeline {
       // redelivers the same payload still matches its prior row. The
       // all-ids-resolved test is a plain non-null conjunction over the
       // id property values (codegen'd — no interpreted `forall` in the
-      // per-batch hot path). Unusable records never reach the fold, so
-      // their markers stay keyed by eventID below.
+      // per-batch hot path). Unusable records have no ids, so their
+      // markers stay keyed by eventID below.
       val idSources = Seq(col("message"), lit(null).cast("string"), recordJson)
       val stateKey =
         if (cfg.idPropertyNames.isEmpty) col("eventID")
@@ -170,8 +181,8 @@ object ConsumerPipeline {
             concat_ws("|", lit("B"), col("id"), col("key"), col("seqNo"),
               md5(col("message").cast("binary"))))
           .otherwise(col("eventID"))
-      // The identified records feed the chain fold, the dead letters, the
-      // state markers and the counts, each read in a different action —
+      // The identified records feed the chain fold, processAll and the
+      // counts, each read in a different action —
       // kept so decode and identify (its JSON property lookups) run once
       // per delivery. Every subset below is a narrow filter over it.
       val identified = keep(Identify.idsKeysSeqNos(cfg,
@@ -209,6 +220,32 @@ object ConsumerPipeline {
           col("stateKey").as("msgId"), lit(1L).as("seqNo"),
           col("message").as("payload"), col("shardOrEventID")) ++
           order.zipWithIndex.map { case (c, i) => c.as(s"order$i") }: _*)
+      // Unusable records (DR) and identify-rejected messages (DM) join
+      // the fold under their own `shardOrEventID`, the key of their
+      // finalised state markers. Each carries its marker row and its
+      // envelope; no task runs for it.
+      val at = date_format(current_timestamp(),
+        "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
+      def bad(recs: DataFrame, kind: String, task: String, state: String,
+          reason: Column, envelope: Column) = recs.select(
+        col("shardOrEventID").as("chainKey"), col("eventID").as("msgId"),
+        lit(1L).as("seqNo"), col("shardOrEventID"),
+        struct(col("shardOrEventID").as("chainKey"),
+          col("eventID").as("msgId"), lit(task).as("task"),
+          lit(state).as("state"), lit(0).as("attempts"),
+          reason.as("reason")).as("marker"),
+        struct(lit(kind).as("kind"), envelope.as("envelope")).as("letter"))
+      val delivered = msgs
+        .unionByName(bad(unusableRecs, "DR", "unusableRecord",
+          TaskStatus.Discarded, col("reason_unusable"),
+          DeadLetters.deadRecordEnvelope(col("streamConsumerId"),
+            col("shardOrEventID"), recordJson, col("reason_unusable"), at)),
+          allowMissingColumns = true)
+        .unionByName(bad(rejectedMsgs, "DM", "rejectedMessage",
+          TaskStatus.Rejected, col("reason_rejected"),
+          DeadLetters.deadMessageEnvelope(col("streamConsumerId"),
+            col("shardOrEventID"), col("message"), col("reason_rejected"),
+            at)), allowMissingColumns = true)
         .as[ChainMsg]
 
       // ----- load prior state + process: resumable ordered execution -----
@@ -238,18 +275,16 @@ object ConsumerPipeline {
       // current messages sharing a legacy prefix each inherit the one
       // legacy row — exactly the shared-row semantics the old format had.
       // Rows whose message is not in this batch stay on the legacy key
-      // and migrate whenever it is next redelivered; the re-keyed rows
-      // flow through the upsert below, so migration is one-time per key.
+      // and migrate whenever it is next redelivered; the fold writes the
+      // re-keyed rows back, so migration is one-time per key.
       // The mapping is one row per B|-keyed message of the current
       // micro-batch — always broadcastable — and the join is a plain
       // broadcast-hash equality probe on the msgId column the state load
       // scans anyway. Once a deployment knows all legacy rows are gone it
       // sets `migrateLegacyStateKeys = false` and the join disappears
-      // from the plan entirely. Kept: the chain fold, the once-only
-      // guard, processAll and the upsert all read it, and the state scan
-      // plus the migration join should run once per delivery.
-      val prior = keep(resolvePriorState(loaded, usable,
-        cfg.migrateLegacyStateKeys)).as[TaskRun]
+      // from the plan entirely. Only the chain fold reads it.
+      val prior = resolvePriorState(loaded, usable,
+        cfg.migrateLegacyStateKeys).as[TaskRun]
 
       val registry = tasks
       val maxAttempts = cfg.maxNumberOfAttempts
@@ -257,13 +292,14 @@ object ConsumerPipeline {
       // chain execution (later links see earlier outcomes). Memory is
       // bounded by chain cardinality (messages per shard/key, SURVEY
       // §7.4), never by corpus size: more data means more chains, not
-      // longer ones. The fold also settles each message's verdict and
-      // once-only DMQ decision, since the group already holds every node
-      // row of the message and every prior row of its chain. The shuffle
-      // sorts each chain by `order`, and the fold numbers it 1..n in that
-      // order.
+      // longer ones. The fold settles the whole delivery: the group holds
+      // every delivered record of the chain and every prior row of it, so
+      // it writes the chain's merged state, its verdicts and its once-only
+      // dead letters. The shuffle sorts each chain by `order`, and the
+      // fold numbers it 1..n in that order (bad records, whose order is
+      // null, sort first and take numbers no task reads).
       val sequenced = order.nonEmpty
-      val outcomes = keep(msgs.groupByKey(_.chainKey)(Encoders.STRING)
+      val outcomes = keep(delivered.groupByKey(_.chainKey)(Encoders.STRING)
         .cogroupSorted(prior.groupByKey(_.chainKey)(Encoders.STRING))(
           order.indices.map(i => col(s"order$i")): _*)() {
           (_, ms, ps) =>
@@ -276,12 +312,14 @@ object ConsumerPipeline {
       // The fold runs the user tasks, so it runs in one job of its own,
       // exactly once per delivery; every later action reads its blocks.
       outcomes.foreachPartition((_: Iterator[ChainOutcome]) => ())
-      val nodes = outcomes.filter(col("node").isNotNull).select("node.*")
+      val states = outcomes.filter(col("node").isNotNull).select("node.*")
       val verdicts = outcomes.filter(col("msg").isNotNull).select("msg.*")
 
       // T4 — processAll master task, once per batch group, resumable:
       // a master finalised in prior state is skipped on replay; a failed
       // master forces the batch to replay exactly like a failed chain.
+      // Master rows never migrate (their msgId is `processAll`), so they
+      // are read from the raw load.
       val masterOutcomes: Seq[TaskRun] = processAll match {
         case None => Nil
         case Some(runAll) =>
@@ -290,8 +328,8 @@ object ConsumerPipeline {
           val groups = usable
             .select(col("shardOrEventID"), col("message"))
             .as[(String, String)]
-          val priorMaster = prior
-            .filter(_.chainKey.startsWith(MasterKeyPrefix))
+          val priorMaster = loaded
+            .filter(col("chainKey").startsWith(MasterKeyPrefix)).as[TaskRun]
           groups.groupByKey(_._1)(Encoders.STRING)
             .cogroup(priorMaster
               .groupByKey(_.chainKey.stripPrefix(MasterKeyPrefix))(
@@ -303,8 +341,8 @@ object ConsumerPipeline {
               def master(state: String, attempts: Int) = Iterator(TaskRun(
                 MasterKeyPrefix + soid, "processAll", "processAll", state,
                 attempts))
-              // A group this delivery does not carry runs nothing; its
-              // prior row survives the upsert.
+              // A group this delivery does not carry runs nothing; the
+              // fold carries its prior row.
               if (!ms.hasNext) Iterator.empty
               else if (TaskStatus.isFinalised(state)) prev.iterator
               else if (attempts >= max) master(TaskStatus.Discarded, attempts)
@@ -317,27 +355,14 @@ object ConsumerPipeline {
             }.collect().toSeq
       }
 
-      // ----- finalise: dead letters, state upsert, replay verdict -----
-      // Dead letters are written ONCE per record/message: the prior state
-      // remembers what was already discarded, so a replayed batch does not
-      // re-route the same envelope (mirrors the reference's persisted
+      // ----- finalise: dead letters, state save, replay verdict -----
+      // Dead letters are written ONCE per record/message: the fold writes
+      // a bad record's envelope only when its chain's prior rows do not
+      // hold its eventID (mirrors the reference's persisted
       // unusableRecordStates/rejectedMessageStates —
-      // test/persisting.test.js:339-398). Unusable records (DR) and
-      // identify-rejected messages (DM, with their REAL reasonRejected)
-      // share one anti-join against the prior ids.
-      val at = date_format(current_timestamp(),
-        "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
-      val priorIds = prior.select(col("msgId"))
-      val badRows = unusableRecs.select(col("eventID"), lit("DR").as("kind"),
-          DeadLetters.deadRecordEnvelope(col("streamConsumerId"),
-            col("shardOrEventID"), recordJson, col("reason_unusable"), at)
-            .as("envelope"))
-        .unionByName(rejectedMsgs.select(col("eventID"),
-          lit("DM").as("kind"), DeadLetters.deadMessageEnvelope(
-            col("streamConsumerId"), col("shardOrEventID"), col("message"),
-            col("reason_rejected"), at).as("envelope")))
-      // A message is discarded (→ DMQ) only when ALL its task nodes
-      // finalised with at least one rejected — never while a sibling
+      // test/persisting.test.js:339-398). A message is discarded (→ DMQ)
+      // only when ALL its task nodes finalised with at least one
+      // rejected — never while a sibling
       // task still has retry budget; the fold flags the delivery that
       // discards it. The envelope's reasonRejected is the first rejected
       // node's recorded failure cause, not a generic literal (reference
@@ -349,40 +374,28 @@ object ConsumerPipeline {
           scid, col("shardOrEventID"), col("payload"),
           coalesce(col("reasonRejected"), lit("Discarded after max attempts")),
           at).as("envelope"))
-      val letters = keep(onceOnly(badRows, badRows("eventID"), priorIds)
-        .select("kind", "envelope").unionByName(deadMessages))
+      val letters = outcomes.filter(col("letter").isNotNull)
+        .select("letter.*").unionByName(deadMessages)
 
       // Every count of the result, and the letters gate, in one action
       // over the kept frames.
       val tally = verdicts.filter(col("first")).select(col("verdict").as("k"))
         .unionByName(unusableRecs.select(lit(Unusable).as("k")))
         .unionByName(rejectedMsgs.select(lit(RejectedMsg).as("k")))
-        .unionByName(letters.select(lit(Letter).as("k")))
+        .unionByName(letters.select(lit(NewLetter).as("k")))
       val counts = countByValue(tally.as[String])
       def n(k: String) = counts.getOrElse(k, 0L)
 
-      if (n(Letter) > 0)
+      if (n(NewLetter) > 0)
         letters.write.mode("append").parquet(deadLetterPath)
 
-      // Unusable records and identify-rejected messages enter the state
-      // table as finalised markers so the DRQ/DMQ writes above stay
-      // once-only across replays.
-      val deadRecordMarkers = unusableRecs.select(
-        col("shardOrEventID").as("chainKey"), col("eventID").as("msgId"),
-        lit("unusableRecord").as("task"),
-        lit(TaskStatus.Discarded).as("state"), lit(0).as("attempts"),
-        col("reason_unusable").as("reason"))
-      val rejectedMarkers = rejectedMsgs.select(
-        col("shardOrEventID").as("chainKey"), col("eventID").as("msgId"),
-        lit("rejectedMessage").as("task"),
-        lit(TaskStatus.Rejected).as("state"), lit(0).as("attempts"),
-        col("reason_rejected").as("reason"))
-      val masterRows = masterOutcomes.toDF()
+      // The fold's rows are the merged state; a new master row replaces
+      // the carried one with its key.
+      val replaced = col("chainKey").isin(masterOutcomes.map(_.chainKey): _*)
+        .<=>(true) && col("msgId") <=> "processAll" &&
+        col("task") <=> "processAll"
       StateStore.save(
-        StateStore.upsert(prior.toDF(),
-          nodes.unionByName(deadRecordMarkers)
-            .unionByName(rejectedMarkers).unionByName(masterRows),
-          Seq("chainKey", "msgId", "task")),
+        states.filter(!replaced).unionByName(masterOutcomes.toDF()),
         statePath)
 
       val masterFailed = masterOutcomes
@@ -408,14 +421,20 @@ object ConsumerPipeline {
     } finally kept.foreach(Checkpoints.release)
   }
 
-  /** A delivered message on its way into the chain fold: the
-    * [[StreamMsg]] plus the batch key its dead-message envelope names.
-    * `seqNo` is the message's position in its sorted chain, or the same
-    * for every message of an unsequenced chain, which runs by `msgId`. */
+  /** A delivered record on its way into the chain fold: a message (the
+    * [[StreamMsg]] plus the batch key its dead-message envelope names),
+    * or an unusable or rejected record, which carries its state `marker`
+    * and its dead `letter` instead of a task run. `seqNo` is the
+    * message's position in its sorted chain, or the same for every
+    * message of an unsequenced chain, which runs by `msgId`. */
   private[graft] final case class ChainMsg(chainKey: String, msgId: String,
-      seqNo: Long, payload: String, shardOrEventID: String) {
+      seqNo: Long, payload: String, shardOrEventID: String,
+      marker: Option[TaskRun] = None, letter: Option[Letter] = None) {
     def msg: StreamMsg = StreamMsg(chainKey, msgId, seqNo, payload)
   }
+
+  /** A DRQ/DMQ row: its `kind` (`DR` or `DM`) and its envelope. */
+  private[graft] final case class Letter(kind: String, envelope: String)
 
   /** A delivered message's outcome, settled inside the chain fold.
     * `verdict` is [[ResumableConsumer.messageVerdict]] over the message's
@@ -428,15 +447,29 @@ object ConsumerPipeline {
       shardOrEventID: String, payload: String, verdict: String,
       reasonRejected: String, newlyDiscarded: Boolean, first: Boolean)
 
-  /** One row of the chain fold: a task-node row to persist, or a
-    * delivered message's verdict. */
+  /** One row of the chain fold: a state row to persist, a delivered
+    * message's verdict, or a bad record's once-only dead letter. */
   private[graft] final case class ChainOutcome(node: Option[TaskRun],
-      msg: Option[MsgVerdict])
+      msg: Option[MsgVerdict], letter: Option[Letter])
 
   /** One chain of one delivery: runs the delivered messages' task trees
     * in order over the chain's prior rows
-    * ([[ResumableConsumer.executeChainTasks]]) and emits every task-node
-    * row plus one [[MsgVerdict]] per delivered message.
+    * ([[ResumableConsumer.executeChainTasks]]) and emits the chain's
+    * merged state, one [[MsgVerdict]] per delivered message and the
+    * bad records' new dead letters.
+    *
+    * The merged state is every task-node row and bad-record marker of
+    * this delivery, plus every prior row whose `(msgId, task)` none of
+    * them has: `StateStore.upsert` on `(chainKey, msgId, task)`, scoped
+    * to the chain, which holds every update of its key. Keys with a null
+    * part never match, as in the upsert's anti-join. A bad record's
+    * letter is written only when no prior row of the chain has its
+    * eventID as msgId. That equals a guard over the whole prior table
+    * while the configuration stays the same: the record's earlier marker
+    * sits under the same `shardOrEventID`, and a message row keyed by
+    * its eventID is the same record read as usable, which only a changed
+    * configuration does (then a per-key chain holds it, outside this
+    * chain, and the letter is written again).
     *
     * A message is newly discarded when its verdict is Discarded and the
     * verdict over its prior rows in this chain was not. The guard is
@@ -453,28 +486,36 @@ object ConsumerPipeline {
   private[graft] def foldChain(prior: Seq[TaskRun], delivered: Seq[ChainMsg],
       registry: Seq[TaskDef], maxAttempts: Int): Seq[ChainOutcome] = {
     import ResumableConsumer.{findReasonRejected, messageVerdict}
+    val (bad, msgs) = delivered.partition(_.marker.isDefined)
     val priorByMsg = prior.groupBy(_.msgId)
     val runs = ResumableConsumer.executeChainTasks(
       priorByMsg.map { case (id, rs) => id -> rs.map(r => r.task -> r).toMap },
-      delivered.map(_.msg), registry, maxAttempts)
+      msgs.map(_.msg), registry, maxAttempts)
+    val updates = runs ++ bad.flatMap(_.marker)
+    val written = updates.collect { case r if r.chainKey != null &&
+      r.msgId != null => (r.msgId, r.task) }.toSet
+    val state = updates ++ prior.filterNot(r => written((r.msgId, r.task)))
+    val letters = bad.filterNot(b => b.msgId != null &&
+      priorByMsg.contains(b.msgId)).flatMap(_.letter)
     val runsByMsg = runs.groupBy(_.msgId)
     def wasDiscarded(id: String) = priorByMsg.get(id)
       .exists(rs => messageVerdict(rs.map(_.state)) == TaskStatus.Discarded)
     val seen = mutable.Set.empty[String]
-    runs.map(r => ChainOutcome(Some(r), None)) ++ delivered.map { m =>
-      val rs = runsByMsg(m.msgId)
-      val verdict = messageVerdict(rs.map(_.state))
-      val newly = verdict == TaskStatus.Discarded && !wasDiscarded(m.msgId)
-      ChainOutcome(None, Some(MsgVerdict(m.chainKey, m.msgId,
-        m.shardOrEventID, if (newly) m.payload else null, verdict,
-        findReasonRejected(rs).orNull, newly, seen.add(m.msgId))))
-    }
+    state.map(r => ChainOutcome(Some(r), None, None)) ++
+      letters.map(l => ChainOutcome(None, None, Some(l))) ++ msgs.map { m =>
+        val rs = runsByMsg(m.msgId)
+        val verdict = messageVerdict(rs.map(_.state))
+        val newly = verdict == TaskStatus.Discarded && !wasDiscarded(m.msgId)
+        ChainOutcome(None, Some(MsgVerdict(m.chainKey, m.msgId,
+          m.shardOrEventID, if (newly) m.payload else null, verdict,
+          findReasonRejected(rs).orNull, newly, seen.add(m.msgId))), None)
+      }
   }
 
   // Tally keys next to the message verdicts (never a TaskStatus name).
   private val Unusable = "unusable record"
   private val RejectedMsg = "rejected message"
-  private val Letter = "dead letter"
+  private val NewLetter = "dead letter"
 
   /** Occurrences of each key: each partition counts its own, and the
     * collected partial counts are summed. One Spark job, no shuffle. */
@@ -484,20 +525,6 @@ object ConsumerPipeline {
         m.updated(k, m.getOrElse(k, 0L) + 1)).iterator
     }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
       .collect().groupMapReduce(_._1)(_._2)(_ + _)
-
-  /** Once-only guard for DRQ/DMQ writes (S4/S5): rows whose id already
-    * appears in prior state are dropped by a LEFT-ANTI equi-join, so a
-    * replayed batch cannot re-route an envelope an earlier trigger
-    * already wrote (mirrors the reference's persisted
-    * unusableRecordStates/rejectedMessageStates —
-    * test/persisting.test.js:339-398). Package-visible so
-    * PipelineFidelitySpec can pin the plan: a hash/merge ANTI join on
-    * the id (AQE/stats pick the side), never a nested loop — at 100 TB
-    * the prior-id frame is state-sized and the letters frame is
-    * failure-sized, both tiny next to the batch scan. */
-  private[graft] def onceOnly(rows: DataFrame, idCol: Column,
-      priorIds: DataFrame): DataFrame =
-    rows.join(priorIds, idCol === priorIds("msgId"), "left_anti")
 
   /** Prior-state key resolution (T2 revive): identity when
     * `migrate = false` — the migration join must be ABSENT from the

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.operators.Batching
 import graft.sources.StateStore
@@ -57,6 +58,35 @@ class BatchingSpec extends SparkSpec {
       .select("shardOrEventID", "payload")
       .as[(String, String)].collect().toSeq
     assert(round === Seq(("S|0", "a"), ("S|1", "b2"), ("S|2", "c")))
+  }
+
+  test("a save stopped between its renames loads the last committed rows") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-state-crash").toString
+    def table(dir: String, vals: String*): Unit =
+      vals.toDF("v").write.parquet(dir)
+    def rows(dir: String) = StateStore.load(spark, dir,
+      StructType(Seq(StructField("v", StringType)))).as[String]
+      .collect().sorted.toSeq
+    // stopped after moving the live table aside: the aside copy is the
+    // last commit, next to a written tmp dir
+    val moved = s"$root/moved/state"
+    table(s"$moved.old", "a", "b")
+    table(s"$moved.tmp", "a", "b", "c")
+    assert(rows(moved) === Seq("a", "b"))
+    // stopped after renaming tmp in: the live table is the last commit,
+    // next to a stale aside copy
+    val renamed = s"$root/renamed/state"
+    table(renamed, "a", "b", "c")
+    table(s"$renamed.old", "a", "b")
+    assert(rows(renamed) === Seq("a", "b", "c"))
+    // the next save commits over either layout and leaves no aside copy
+    for (dir <- Seq(moved, renamed)) {
+      StateStore.save(rows(dir).toDF("v").union(Seq("d").toDF("v")), dir)
+      assert(!Files.exists(java.nio.file.Paths.get(s"$dir.old")))
+    }
+    assert(rows(moved) === Seq("a", "b", "d"))
+    assert(rows(renamed) === Seq("a", "b", "c", "d"))
   }
 
   test("absent state table loads as empty (first run short-circuit)") {

@@ -10,9 +10,13 @@ import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Try}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.LeftOuter
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
   QueryStageExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+  BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec,
+  ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -23,7 +27,8 @@ import graft.streaming.ConsumerPipeline.{BatchResult, ChainMsg}
 /** What one `ConsumerPipeline` delivery reports and what it costs: every
   * `BatchResult` field across a first delivery, its replay and the
   * discarding delivery; a Spark-job ceiling per delivery route; one
-  * executed plan that looks up JSON properties; no compiled class once
+  * executed plan that looks up JSON properties; no join but the
+  * legacy-key broadcast; no compiled class once
   * the routes are warm; and no cached frame left behind when a delivery
   * throws. */
 class ConsumerPipelineSpec extends SparkSpec {
@@ -197,13 +202,13 @@ class ConsumerPipelineSpec extends SparkSpec {
     info(s"jobs: clean $cleanJobs, first $firstJobs, replay $replayJobs")
     assert(spark.read.parquet(s"$dir/mixed-dlq").count() === 2,
       "the first delivery should have written one DR and one DM letter")
-    // these deliveries run 8, 9 and 10 jobs; each ceiling allows two
-    // more, so a changed AQE choice passes but a re-run plan or a
-    // sequencing window stage does not
+    // these deliveries run 5, 6 and 6 jobs; each ceiling allows two
+    // more, so a changed AQE choice passes but a re-run plan, a kept
+    // frame or a join stage after the fold does not
     assert(cleanJobs >= 1 && firstJobs >= 1 && replayJobs >= 1)
-    assert(cleanJobs <= 10, s"clean batch ran $cleanJobs jobs")
-    assert(firstJobs <= 11, s"first delivery ran $firstJobs jobs")
-    assert(replayJobs <= 12, s"replay ran $replayJobs jobs")
+    assert(cleanJobs <= 7, s"clean batch ran $cleanJobs jobs")
+    assert(firstJobs <= 8, s"first delivery ran $firstJobs jobs")
+    assert(replayJobs <= 8, s"replay ran $replayJobs jobs")
   }
 
   /** Executed plans of the SQL actions `body` ran. A sentinel query run
@@ -260,6 +265,37 @@ class ConsumerPipelineSpec extends SparkSpec {
         identifying.mkString("\n"))
   }
 
+  test("a warm delivery runs no shuffled or nested-loop join: the only " +
+      "join is the legacy-key broadcast of the prior state") {
+    val dir = Files.createTempDirectory("graft-joins").toString
+    val registry = Seq(TaskDef("process", poisonTask))
+    def deliver(state: String, id: Long) = {
+      import spark.implicits._
+      ConsumerPipeline.multi(cfg, registry, s"$dir/$state",
+        s"$dir/$state-dlq")(spark.sparkContext.parallelize(mixed)
+        .toDF("eventID", "shardId", "partitionKey", "data"), id)
+    }
+    deliver("warm", 1L)
+    deliver("warm", 2L)
+    // a first delivery writing DR and DM letters runs every action; its
+    // replay reads a non-empty prior state, so AQE cannot drop a join
+    // against that state for an empty side
+    val joins = plansDuring { deliver("pinned", 1L); deliver("pinned", 2L) }
+      .flatMap(planNodes).filter(_.isInstanceOf[BaseJoinExec])
+    val shuffledOrLooped = joins.filter {
+      case _: SortMergeJoinExec | _: ShuffledHashJoinExec |
+          _: BroadcastNestedLoopJoinExec | _: CartesianProductExec => true
+      case _ => false
+    }
+    assert(shuffledOrLooped.isEmpty, shuffledOrLooped.mkString("\n"))
+    val others = joins.filterNot {
+      case j: BroadcastHashJoinExec => j.joinType == LeftOuter &&
+        j.rightKeys.exists(_.references.exists(_.name == "_legacyKey"))
+      case _ => false
+    }
+    assert(others.isEmpty, others.mkString("\n"))
+  }
+
   test("a third delivery cycle over the four routes reuses its compiled " +
       "classes (generated code is cached for the life of the JVM)") {
     val root = Files.createTempDirectory("graft-codegen").toString
@@ -277,12 +313,15 @@ class ConsumerPipelineSpec extends SparkSpec {
     val warm = (1 to 2).map(i => cycle(s"$root/c$i"))
     var third: Seq[BatchResult] = Nil
     val n = compiledDuring { third = cycle(s"$root/c3") }
+    info(s"the warm cycle compiled $n classes")
     assert(third === warm.head, "the cycles took different routes")
-    // usually 0. AQE re-plans a delivery from whichever stages finished
-    // first, so now and then a cycle meets a plan variant it has not
-    // compiled yet (3-4 classes seen). At Spark's default cache size of
-    // 100 this cycle compiles 248-283.
-    assert(n <= 24L, s"the warm cycle compiled $n classes")
+    // 0 in each of 12 separate runs once the save ran no join. The
+    // upsert join AQE re-planned (sort-merge to broadcast, from whichever
+    // stages finished first) was one source of plan variants a cycle had
+    // not compiled yet, at 3-4 classes each; the bound leaves room for
+    // one more. At Spark's default cache size of 100 this cycle compiles
+    // 248-283.
+    assert(n <= 4L, s"the warm cycle compiled $n classes")
   }
 
   test("the chain fold runs once per delivery: exact task invocations " +
